@@ -26,6 +26,7 @@ from pyspark.sql.functions import col, lit, pandas_udf
 from pyspark.sql.types import IntegerType
 
 from ..operators.checkpoint import materialize
+from ..operators.skew import fan_out
 
 
 def _planes(dim: int, n_planes: int, seed: int = 4242) -> list[list[float]]:
@@ -41,7 +42,7 @@ def _dot(a, b):
     )
 
 
-def _plane_matrix(dim: int, n_planes: int, quantize: bool = False):
+def plane_matrix(dim: int, n_planes: int, quantize: bool = False):
     """(n_planes, dim) float64 plane matrix; ``quantize`` rounds the
     gaussians to integer-valued doubles (×1000) so plane·vector dots on
     likewise-quantized vectors are exact integers — sign bits then
@@ -83,7 +84,7 @@ def hyperplane_buckets(
     """
     import numpy as np
 
-    P = _plane_matrix(dim, n_planes, quantize_planes)
+    P = plane_matrix(dim, n_planes, quantize_planes)
 
     @pandas_udf(IntegerType())
     def _bucket_udf(vecs: pd.Series) -> pd.Series:
@@ -116,8 +117,6 @@ def ivf_assign(
     """
     import numpy as np
 
-    from .dedup import _fan_out
-
     C = np.asarray(centroids, dtype=np.float64)  # (K, dim)
     cn = np.sqrt((C * C).sum(axis=1))
     cn[cn == 0.0] = 1.0
@@ -133,7 +132,7 @@ def ivf_assign(
         sims = (E @ C.T) / (en[:, None] * cn[None, :])
         return pd.Series(np.argmax(sims, axis=1).astype(np.int32))
 
-    return _fan_out(embeddings).select(
+    return fan_out(embeddings).select(
         col(id_col), _assign_udf(col(vec_col)).alias("list_id"), col(vec_col)
     )
 
@@ -278,7 +277,7 @@ def ann_topk_lsh(
     import numpy as np
 
     dim = len(query_vec)
-    P = _plane_matrix(dim, n_planes, quantize_planes)
+    P = plane_matrix(dim, n_planes, quantize_planes)
     qbucket = int(_bucket_of(np.asarray([query_vec], dtype=np.float64), P)[0])
     probe_buckets = [qbucket] + [qbucket ^ (1 << i) for i in range(min(multiprobe, n_planes))]
 

@@ -36,14 +36,17 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 
 from ..operators.checkpoint import materialize
+from ..operators.skew import fan_out
 
 EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 PHONE_RE = r"\d{3}[-.]\d{3}[-.]\d{4}"
 
 
-def _words(text_col):
+def word_tokens(text_col):
     """Lowercased whitespace tokens, empties dropped (both engines
-    agree on this tokenization: split on \\s+, filter '')."""
+    agree on this tokenization: split on \\s+, filter ''). The one word
+    tokenizer of the dedup, curation and query code; NULL text stays
+    NULL, so callers that need an empty array coalesce first."""
     return F.filter(F.split(F.lower(text_col), r"\s+"), lambda w: w != "")
 
 
@@ -69,7 +72,7 @@ def repetition_stats(
     aggregations get map-side partial combine; the (doc, word) key is
     high-cardinality and unskewed by construction.
     """
-    words = docs.select(col(id_col), F.explode(_words(col(text_col))).alias("word"))
+    words = docs.select(col(id_col), F.explode(word_tokens(col(text_col))).alias("word"))
     wc = words.groupBy(id_col, "word").agg(F.count("*").alias("n"))
     stats = wc.groupBy(id_col).agg(
         F.sum("n").alias("n_words"),
@@ -127,10 +130,8 @@ def ngram_hashes(
     to all cores when the scan under-partitions — the same treatment
     as the signature UDFs.
     """
-    from .dedup import _fan_out
-
-    docs = _fan_out(docs)
-    toks = _words(col(text_col))
+    docs = fan_out(docs)
+    toks = word_tokens(col(text_col))
     grams = F.when(
         F.size(toks) >= n,
         F.transform(
@@ -212,7 +213,7 @@ def pack_sequences(
     global sort exists; at 100 TB raise n_shards to O(cluster cores) —
     shard sizes stay balanced because md5 is uniform.
     """
-    toks = _words(col(text_col))
+    toks = word_tokens(col(text_col))
     key = F.md5(col(id_col).cast("string"))
     base = docs.select(
         col(id_col),
@@ -355,15 +356,13 @@ def duplicate_spans(
     oracle hashing windows with md5 still matches; collision exposure
     documented at ``dedup.XXHASH64_EXACT_SAFE_DISTINCT``).
     """
-    from .dedup import _fan_out
-
-    toks = _words(F.coalesce(col(text_col), lit("")))
+    toks = word_tokens(F.coalesce(col(text_col), lit("")))
     # fan out BEFORE projecting the window-hash transform: a small
     # parquet scan arrives in 1-2 partitions and the per-window hash
     # over every token position is the expensive map stage — without
     # the round-robin exchange it runs on 1-2 of the cluster's cores
     # (no-op whenever the scan is already >= cluster width)
-    base = _fan_out(docs).select(col(id_col), toks.alias("ts")).filter(
+    base = fan_out(docs).select(col(id_col), toks.alias("ts")).filter(
         F.size("ts") >= k
     )
     wins = base.select(
@@ -454,13 +453,11 @@ def remove_duplicate_spans(
     are xxhash64 longs (pure intermediates — collision exposure
     documented at ``dedup.XXHASH64_EXACT_SAFE_DISTINCT``).
     """
-    from .dedup import _fan_out
-
-    toks = _words(F.coalesce(col(text_col), lit("")))
+    toks = word_tokens(F.coalesce(col(text_col), lit("")))
     # fan out before tokenizing (same rationale as duplicate_spans:
     # the tokenize + per-window hash map must not be pinned to the
     # 1-2 partitions a small scan arrives in)
-    base = _fan_out(docs).select(col(id_col), toks.alias("ts")).filter(
+    base = fan_out(docs).select(col(id_col), toks.alias("ts")).filter(
         F.size("ts") > 0
     )
     # xxhash64 window keys (8-byte shuffle key, pure intermediate —
@@ -553,7 +550,7 @@ def chunk_documents(
     if window < 1 or stride < 1 or stride > window:
         raise ValueError("require 1 <= stride <= window")
     base = (
-        docs.select(col(id_col), _words(col(text_col)).alias("t"))
+        docs.select(col(id_col), word_tokens(col(text_col)).alias("t"))
         .withColumn("n", F.size("t"))
         .filter(col("n") >= 1)
     )

@@ -11,11 +11,18 @@ No O(n²) stage exists: candidate generation is linear in corpus size
 + bucket collisions, which is the entire point of LSH banding
 (b bands × r rows ⇒ pairs with Jaccard s collide w.p. 1-(1-s^r)^b).
 
-Everything below is JVM built-ins (md5/conv/array ops) except
-:func:`simhash64`, which is an Arrow-vectorized pandas UDF — the
-documented slow-path escape hatch, used because 64 per-bit counters
-over variable-length token arrays are genuinely awkward as SQL
-expressions.
+Banding, candidate joins, verification and exact collapse are JVM
+built-ins (md5/xxhash64/array ops). Four stages run in Python because
+their inner loops are awkward or ~100x slower as Catalyst
+expressions: the MinHash signatures (:func:`minhash_signatures`), the
+fused signature+banding (:func:`minhash_band_keys`), the per-bucket
+union-find of :func:`verified_forest_edges` and :func:`simhash64`.
+
+Persisted stores (verify token sets, the exact-collapse group table,
+the containment token tables) are registered with
+``operators.checkpoint.own``; the public operators that create them
+are ``owning_entry`` points, so an outermost call releases earlier
+stores and a composition keeps those of the operators it calls.
 
 Determinism: shingle hashes derive from md5 (stable across engines,
 sessions, and partitionings); the k permutations use fixed
@@ -29,7 +36,6 @@ PERM_COEFFS).
 from __future__ import annotations
 
 import random
-import threading
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -37,7 +43,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit, pandas_udf
 from pyspark.sql.types import LongType
 
-from ..operators.checkpoint import materialize
+from ..operators.checkpoint import materialize, own, owning_entry
+from ..operators.skew import fan_out
+from .corpus import word_tokens
 
 # --- 64-bit hash-key collision exposure (VERDICT r12 "What's wrong"
 # #3) --- Several operators re-key pure-intermediate tokens / grams /
@@ -80,26 +88,6 @@ PERM_COEFFS: list[tuple[int, int]] = [
 ]
 
 
-def _fan_out(df: DataFrame) -> DataFrame:
-    """Repartition a DataFrame up to default parallelism before a
-    CPU-bound map stage.
-
-    A small corpus arrives as one parquet file → one scan partition →
-    an expensive pandas UDF pinned to a single core. At real scale the
-    scan already has ≥ parallelism partitions and this is a no-op (no
-    shuffle inserted), so the branch only pays its round-robin
-    exchange when the input genuinely under-partitions the cluster.
-    """
-    try:
-        target = df.sparkSession.sparkContext.defaultParallelism
-        n = df.rdd.getNumPartitions()
-    except Exception:
-        # Spark Connect exposes neither sparkContext nor .rdd; there the
-        # scan's partitioning is opaque, so leave the plan unchanged.
-        return df
-    return df.repartition(target) if n < target else df
-
-
 def minhash_signatures(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 64, n: int = 5
 ) -> DataFrame:
@@ -135,7 +123,7 @@ def minhash_signatures(
         ]
         return pd.Series(out)
 
-    return _fan_out(docs).select(col(id_col), _sig_udf(col(text_col)).alias("signature"))
+    return fan_out(docs).select(col(id_col), _sig_udf(col(text_col)).alias("signature"))
 
 
 def _batch_signatures(texts, A, B, n: int) -> list:
@@ -235,7 +223,7 @@ def minhash_band_keys(
                 {id_col: ids_out, "band": band_out, "band_hash": hash_out}
             )
 
-    return _fan_out(docs.select(id_col, text_col)).mapInPandas(
+    return fan_out(docs.select(id_col, text_col)).mapInPandas(
         _kernel, f"{id_col} {id_ddl}, band int, band_hash string"
     )
 
@@ -319,6 +307,7 @@ def _pairs_from_banded(
     )
 
 
+@owning_entry
 def minhash_near_dups(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -333,22 +322,21 @@ def minhash_near_dups(
     Jaccard ≥ threshold; LSH only bounds the candidate set, so the
     output has no false positives (and recall governed by (k, bands)).
 
-    One-live-pipeline contract (shared with the other dedup entry
-    points): each call evicts the previous call's persisted token
-    store on entry, so materialize (collect/write) this call's result
-    before starting another dedup pipeline — interleaving two lazy
-    pipelines stays CORRECT but recomputes the tokenize/hash map stage
-    on every action (see ``_TOKEN_STORES``). Call
-    :func:`release_token_stores` when done.
+    The verify token store is persisted with ``own`` and lives until
+    the next ``release_owned``: the next registered query, the next
+    outermost dedup call, or an explicit call. Collect or write this
+    result before starting another dedup pipeline; a frame still lazy
+    when its store is released stays correct but recomputes the
+    tokenize/hash map stage on its next action.
     """
     return _verified_pairs(docs, id_col, text_col, threshold, k, bands, "jaccard")
 
 
+@owning_entry
 def exact_collapse(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    persist_stores: list[DataFrame] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Collapse exact duplicates before any pairwise near-dup stage.
 
@@ -376,37 +364,27 @@ def exact_collapse(
     but their pairwise Jaccard is 0/0 = NULL, so the full pair graph
     never links them — star edges must skip those groups to stay
     output-identical.
+
+    The group table is persisted with ``own``: membership, reps and any
+    near-dup stage over the reps all read it, and each would otherwise
+    re-run the full-text md5 scan and group aggregation.
     """
     norm = F.regexp_replace(
         F.lower(F.coalesce(col(text_col), lit(""))), r"\s+", " "
     )
-    has_tokens = (
-        F.size(F.filter(F.split(F.lower(col(text_col)), r"\s+"), lambda x: x != ""))
-        > 0
-    )
+    has_tokens = F.size(word_tokens(col(text_col))) > 0
     keyed = docs.select(
         col(id_col), F.md5(norm).alias("grp_key"), has_tokens.alias("has_tokens")
     )
-    groups = keyed.groupBy("grp_key").agg(
-        F.min(col(id_col)).alias("rep_id"),
-        F.count("*").alias("grp_size"),
-        # group-uniform by construction (same normalized text); min()
-        # just picks the one value without a second pass over docs
-        F.min("has_tokens").alias("has_tokens"),
+    groups = own(
+        keyed.groupBy("grp_key").agg(
+            F.min(col(id_col)).alias("rep_id"),
+            F.count("*").alias("grp_size"),
+            # group-uniform by construction (same normalized text); min()
+            # just picks the one value without a second pass over docs
+            F.min("has_tokens").alias("has_tokens"),
+        )
     )
-    if persist_stores is not None:
-        # The composed near-dup pipelines reference groups from three
-        # plan branches (membership, the signature/band store build,
-        # and the verify token build over reps) — each would re-run
-        # the full-text md5 scan + group aggregation (guide §2.4:
-        # duplicated subtrees). persist (NOT localCheckpoint: keeps
-        # size statistics so the membership and reps joins still
-        # broadcast a small group table — the _verified_pairs stats
-        # lesson) and hand ownership to the caller, who must register
-        # it for the one-live-pipeline eviction AFTER any inner
-        # pipeline's entry eviction has run.
-        groups = groups.persist()
-        persist_stores.append(groups)
     membership = keyed.drop("has_tokens").join(groups, "grp_key").select(
         col(id_col), "rep_id", "grp_size", "has_tokens"
     )
@@ -416,6 +394,7 @@ def exact_collapse(
     return membership, reps
 
 
+@owning_entry
 def minhash_near_dup_star_edges(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -441,15 +420,8 @@ def minhash_near_dup_star_edges(
     at 100 TB. Schema matches minhash_near_dups: (id_a, id_b, jaccard)
     with id_a < id_b (the rep is the group minimum).
     """
-    stores: list[DataFrame] = []
-    membership, reps = exact_collapse(docs, id_col, text_col, persist_stores=stores)
-    # minhash_near_dups' entry eviction runs BEFORE the group store is
-    # registered (it must only drop a PREVIOUS query's stores, not
-    # this composition's); register ours afterwards so the next
-    # pipeline's eviction reclaims it.
+    membership, reps = exact_collapse(docs, id_col, text_col)
     rep_pairs = minhash_near_dups(reps, id_col, text_col, threshold, k, bands)
-    with _TOKEN_STORES_LOCK:
-        _TOKEN_STORES.extend(stores)
     star = (
         membership.filter((col(id_col) != col("rep_id")) & col("has_tokens"))
         .select(
@@ -461,6 +433,7 @@ def minhash_near_dup_star_edges(
     return rep_pairs.select("id_a", "id_b", "jaccard").unionByName(star)
 
 
+@owning_entry
 def verified_forest_edges(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -507,18 +480,13 @@ def verified_forest_edges(
     """
     import numpy as np
 
-    # One-live-pipeline hygiene (same contract as _verified_pairs /
-    # containment): evict the PREVIOUS dedup pipeline's persisted token
-    # store on entry. This pipeline keeps no store of its own, but a
-    # leftover cache from a sibling poisons this call two ways —
-    # storage-memory pressure on the unified manager, and canonical-
-    # plan cache substitution splicing a stats-less InMemoryRelation
-    # into this call's token subtree. Measured at sf0.1: interleaving
+    # An owning entry although it keeps no store of its own: a
+    # sibling's leftover store poisons this call two ways — storage-
+    # memory pressure on the unified manager, and canonical-plan cache
+    # substitution splicing a stats-less InMemoryRelation into this
+    # call's token subtree. Measured at sf0.1: interleaving
     # d_dup_clusters with d_neardup_star_edges ran 5.4-9.0 s per query
-    # with the sibling's store left alive vs 3.1-5.3 s evicted.
-    with _TOKEN_STORES_LOCK:
-        while _TOKEN_STORES:
-            _TOKEN_STORES.pop().unpersist()
+    # with the sibling's store left alive vs 3.1-5.3 s released.
 
     # Fused signature+banding (r13, see minhash_band_keys). Two
     # consumers below (bucket counts + semi join): materialize once so
@@ -536,10 +504,7 @@ def verified_forest_edges(
     toks = docs.select(
         col(id_col),
         F.array_distinct(
-            F.transform(
-                F.filter(F.split(F.lower(col(text_col)), r"\s+"), lambda x: x != ""),
-                lambda x: F.xxhash64(x),
-            )
+            F.transform(word_tokens(col(text_col)), lambda x: F.xxhash64(x))
         ).alias("tokens"),
     )
     rows = multi.join(toks, id_col)
@@ -606,6 +571,7 @@ def verified_forest_edges(
     )
 
 
+@owning_entry
 def minhash_containment_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -637,12 +603,14 @@ def minhash_containment_pairs(
     interest are near-full-length — and the oracle recomputes the
     identical pipeline, so correctness does not ride on recall.
 
-    One-live-pipeline contract: see :func:`minhash_near_dups` —
-    materialize this result before starting another dedup pipeline.
+    Store lifetime as in :func:`minhash_near_dups`: the verify token
+    store is owned until the next ``release_owned``, so collect this
+    result before starting another dedup pipeline.
     """
     return _verified_pairs(docs, id_col, text_col, threshold, k, bands, "containment")
 
 
+@owning_entry
 def containment_prefix_pairs(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -708,12 +676,13 @@ def containment_prefix_pairs(
     rounds down in binary (1−0.9 < 0.1 exactly), which shortened the
     prefix below the theorem's bound and silently broke recall.
 
-    One-live-pipeline contract: see :func:`minhash_near_dups` — entry
-    evicts any previous dedup call's persisted token store, so a pairs
-    frame from an earlier minhash/containment call that has not been
-    materialized yet recomputes its token map stage on its next action
-    (correct results, lost cache). Materialize one pipeline before
-    starting the next; call :func:`release_token_stores` when done.
+    Store lifetime as in :func:`minhash_near_dups`: the flat token
+    table, the ranked table and the verify token arrays are owned
+    until the next ``release_owned``. A pairs frame from an earlier
+    dedup call that is still lazy when this outermost call releases
+    its stores recomputes its token map stage on its next action
+    (correct results, lost cache). Collect one pipeline before
+    starting the next.
     """
     from pyspark.sql import Window
 
@@ -724,24 +693,20 @@ def containment_prefix_pairs(
     if tokens_col is not None:
         token_set = F.array_distinct(col(tokens_col))
     else:
-        token_set = F.array_distinct(
-            F.filter(F.split(F.lower(col(text_col)), r"\s+"), lambda x: x != "")
-        )
+        token_set = F.array_distinct(word_tokens(col(text_col)))
     # fan the tokenize/gram-hash map stage to full width: interpreted
     # higher-order transforms (e.g. per-gram md5 when tokens_col is an
     # n-gram expression) cost ~18 µs/element and a small parquet scan
     # arrives in 1-2 partitions — same treatment as ngram_hashes
-    docs = _fan_out(docs)
+    docs = fan_out(docs)
     toks_flat = docs.select(
         col(id_col).alias("_id"), F.explode(token_set).alias("_tok")
     )
     # The flat token table feeds FOUR plan branches (df counts, sizes,
     # the ranked prefix, the inverted index) — without a persist the
     # tokenize+explode (and any upstream n-gram/md5 work) runs four
-    # times. Same persist-not-checkpoint reasoning as _verified_pairs:
-    # keep statistics so small corpora still broadcast. Registered in
-    # the shared token-store cache for release_token_stores().
-    toks_flat = toks_flat.persist()
+    # times.
+    toks_flat = own(toks_flat)
     dfreq = toks_flat.groupBy("_tok").agg(F.count("*").alias("_df"))
     # ONE window pass computes both the per-doc set size and the
     # rarest-first rank (same _id partitioning — one exchange, two
@@ -753,11 +718,11 @@ def containment_prefix_pairs(
     # expensive post-tokenize stage (guide §2.4: duplicated subtrees).
     w_part = Window.partitionBy("_id")
     w_rank = w_part.orderBy(col("_df").asc(), col("_tok").asc())
-    ranked = (
+    ranked = own(
         toks_flat.join(dfreq, "_tok")
         .withColumn("_sz", F.count("*").over(w_part))
         .withColumn("_rn", F.row_number().over(w_rank))
-    ).persist()
+    )
     prefix = ranked.filter(
         col("_rn")
         <= col("_sz") - F.expr(f"(_sz * {t_permille} + 999) div 1000") + lit(1)
@@ -790,18 +755,11 @@ def containment_prefix_pairs(
     # this groupBy adds NO new shuffle (guide §2.4: two operations
     # keyed the same way share one exchange) and the tokenize/gram
     # map stage runs exactly once per call
-    toks = (
+    toks = own(
         ranked.groupBy("_id")
         .agg(F.collect_list(F.xxhash64(col("_tok"))).alias("tokens"))
         .withColumnRenamed("_id", id_col)
-        .persist()
     )
-    with _TOKEN_STORES_LOCK:
-        while _TOKEN_STORES:
-            _TOKEN_STORES.pop().unpersist()
-        _TOKEN_STORES.append(toks_flat)
-        _TOKEN_STORES.append(ranked)
-        _TOKEN_STORES.append(toks)
     ta = toks.select(col(id_col).alias("id_a"), col("tokens").alias("tok_a"))
     tb = toks.select(col(id_col).alias("id_b"), col("tokens").alias("tok_b"))
     inter = F.size(F.array_intersect("tok_a", "tok_b"))
@@ -812,30 +770,6 @@ def containment_prefix_pairs(
         .select("id_a", "id_b", containment.alias("containment"))
         .filter(col("containment") >= threshold)
     )
-
-
-#: The single live verify-side token cache (see _verified_pairs).
-#: Mutations hold _TOKEN_STORES_LOCK: driver apps routinely run
-#: concurrent actions from multiple threads, and an unguarded
-#: pop/unpersist race could double-unpersist or leak a store.
-#: Interleaving caveat (documented contract): starting a second
-#: dedup pipeline evicts the first's cache, so two lazy pipelines
-#: materialized alternately forfeit the broadcast-vs-SMJ benefit —
-#: correctness survives (Spark recomputes the tokens), only the
-#: cache hit is lost. Materialize one pipeline before starting the
-#: next to keep it.
-_TOKEN_STORES: list[DataFrame] = []
-_TOKEN_STORES_LOCK = threading.Lock()
-
-
-def release_token_stores() -> None:
-    """Unpersist the verify-side token cache the last
-    minhash_near_dups / minhash_containment_pairs call left behind.
-    Call after materializing the returned pairs in long-lived
-    sessions; harmless if nothing is cached. Thread-safe."""
-    with _TOKEN_STORES_LOCK:
-        while _TOKEN_STORES:
-            _TOKEN_STORES.pop().unpersist()
 
 
 def _verified_pairs(
@@ -871,36 +805,19 @@ def _verified_pairs(
     # identical to string tokens (64-bit collisions are ~1e-16 per
     # pair), while the shuffle ships 8-byte longs instead of strings
     # and the per-pair intersection compares longs, not UTF-8.
-    toks = docs.select(
-        col(id_col),
-        F.array_distinct(
-            F.transform(
-                F.filter(F.split(F.lower(col(text_col)), r"\s+"), lambda x: x != ""),
-                lambda x: F.xxhash64(x),
-            )
-        ).alias("tokens"),
+    # Tokenize ONCE: toks feeds the ta and tb join branches. Owned
+    # (persisted, not checkpointed) so a small store broadcasts into
+    # both verify joins, while a corpus-scale one gets the shuffle-on-id
+    # SMJ it needs (at the sf1 rehearsal the SMJ path sorts the
+    # 27M-row candidate list twice just to verify it).
+    toks = own(
+        docs.select(
+            col(id_col),
+            F.array_distinct(
+                F.transform(word_tokens(col(text_col)), lambda x: F.xxhash64(x))
+            ).alias("tokens"),
+        )
     )
-    # Tokenize ONCE via persist(), NOT localCheckpoint: both stop the
-    # scan + split + hash running twice (toks feeds the ta and tb join
-    # branches, and Spark reuses exchanges, not subplans), but a
-    # checkpoint replaces the plan with a stats-less RDD, which forces
-    # the planner into two sort-merge joins of the (potentially huge)
-    # candidate list. persist() keeps the child's size statistics, so
-    # a small token store broadcasts — the verify becomes two map-side
-    # hash joins — while a corpus-scale store still gets the
-    # shuffle-on-id SMJ it needs (at the sf1 rehearsal the SMJ path
-    # sorts the 27M-row candidate list twice just to verify it).
-    # Cache lifetime: persist() has no scope — without cleanup every
-    # minhash_near_dups/containment call would pin another token store
-    # in executor memory for the session lifetime. Keep at most ONE
-    # live store (evict the previous call's on entry); a still-lazy
-    # earlier result just recomputes its tokens — correctness never
-    # rides on the cache. release_token_stores() drops the last one.
-    toks = toks.persist()
-    with _TOKEN_STORES_LOCK:
-        while _TOKEN_STORES:
-            _TOKEN_STORES.pop().unpersist()
-        _TOKEN_STORES.append(toks)
     ta = toks.select(col(id_col).alias("id_a"), col("tokens").alias("tok_a"))
     tb = toks.select(col(id_col).alias("id_b"), col("tokens").alias("tok_b"))
     inter = F.size(F.array_intersect("tok_a", "tok_b"))
@@ -966,7 +883,7 @@ def simhash64(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
     16-bit chunks (any pair within Hamming ≤ 3 of 64 bits shares at
     least one of 4 exact chunks — the standard pigeonhole trick).
     """
-    return _fan_out(docs).select(col(id_col), _simhash64_udf(col(text_col)).alias("simhash"))
+    return fan_out(docs).select(col(id_col), _simhash64_udf(col(text_col)).alias("simhash"))
 
 
 def simhash_near_dups(

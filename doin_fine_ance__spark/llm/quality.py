@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col
 
+from .corpus import word_tokens
+
 _INTERNAL = ("_words", "_tf", "_raw", "_prob", "_pred")
 
 
@@ -38,7 +40,7 @@ def weak_labels_from_stopwords(
     signal labels the extremes, the classifier generalizes from
     co-occurring vocabulary. Same stopword list as t_quality_score.
     """
-    toks = F.filter(F.split(F.lower(col(text_col)), r"\s+"), lambda x: x != "")
+    toks = word_tokens(col(text_col))
     stop = F.array(
         *[F.lit(w) for w in ["the", "a", "an", "and", "or", "of", "to", "in", "is", "it"]]
     )

@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 
 from ..operators.checkpoint import materialize
-from .corpus import _words
+from .corpus import word_tokens
 
 SCALE = 1_000_000
 # round(ln(2) * SCALE) — the one published constant the integer ln needs
@@ -73,7 +73,7 @@ def _ln_fp_int(y: int) -> int:
 def _doc_terms(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(doc, term, tf, doclen) — the inverted-index building block."""
     toks = docs.select(
-        col(id_col).alias("_doc"), F.explode(_words(col(text_col))).alias("_term")
+        col(id_col).alias("_doc"), F.explode(word_tokens(col(text_col))).alias("_term")
     )
     tf = toks.groupBy("_doc", "_term").agg(F.count("*").alias("_tf"))
     dl = tf.groupBy("_doc").agg(F.sum("_tf").alias("_dl"))

@@ -19,9 +19,17 @@ every iteration. Two modes:
 
 Operators take ``checkpoint_mode=None`` (inherit the module default,
 settable once per job) or an explicit ``'local'``/``'reliable'``.
+
+Intermediates that must outlive the call returning a lazy frame over
+them are persisted through :func:`own` instead, which registers them
+with the one owner of their lifetime; see its docstring for when to
+persist and when to :func:`materialize`.
 """
 
 from __future__ import annotations
+
+import functools
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -83,3 +91,62 @@ def ordered(df: DataFrame, *sort_cols: str) -> DataFrame:
     ``df.orderBy(*sort_cols)``.
     """
     return materialize(df).orderBy(*sort_cols)
+
+
+_OWNED: list[DataFrame] = []
+_OWNED_LOCK = threading.Lock()
+_ENTRY = threading.local()
+
+
+def own(df: DataFrame) -> DataFrame:
+    """Persist ``df`` and register it for :func:`release_owned`.
+
+    Use it for an intermediate that several branches of a returned
+    lazy plan read (a token store, a group table): without it each
+    branch re-runs the subtree, because Spark reuses exchanges, not
+    subplans. Persist, unlike :func:`materialize`, keeps the child's
+    size statistics, so a small store still broadcasts into the joins
+    that read it, while a corpus-scale one gets the shuffle join it
+    needs. A localCheckpoint replaces the plan with a stats-less RDD,
+    which forces sort-merge joins; use :func:`materialize` only where
+    lineage must be cut (iterative operators, a self-join whose two
+    branches would each re-run an expensive Python stage).
+
+    The store stays cached until the next :func:`release_owned` — in
+    practice the next registered query or outermost
+    :func:`owning_entry` call — so collect or write the frame built
+    on it first. A frame still lazy when its store is released stays
+    correct; its next action just recomputes the store.
+    """
+    df = df.persist()
+    with _OWNED_LOCK:
+        _OWNED.append(df)
+    return df
+
+
+def release_owned() -> None:
+    """Unpersist every store :func:`own` registered. Thread-safe:
+    driver threads run actions concurrently."""
+    with _OWNED_LOCK:
+        while _OWNED:
+            _OWNED.pop().unpersist()
+
+
+def owning_entry(fn):
+    """Decorate an entry point whose frames read owned stores: the
+    outermost decorated call in a thread releases every store owned so
+    far before running, nested decorated calls do not, so a
+    composition keeps the stores of the operators it calls."""
+
+    @functools.wraps(fn)
+    def entry(*args, **kwargs):
+        depth = getattr(_ENTRY, "depth", 0)
+        if depth == 0:
+            release_owned()
+        _ENTRY.depth = depth + 1
+        try:
+            return fn(*args, **kwargs)
+        finally:
+            _ENTRY.depth = depth
+
+    return entry

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 
 
-def _bucket(j, token, width: int):
+def cms_bucket(j, token, width: int):
     """md5-derived bucket for sketch row ``j`` — identical in DuckDB as
     ``CAST(('0x' || substr(md5(j || ':' || token), 1, 8)) AS UBIGINT)
     % width`` (parity pinned in tests). NULL-parity too (ADVICE r9):
@@ -79,7 +79,7 @@ def cms_build(
     )
     return (
         ex.select(
-            *parts, "j", _bucket(col("j"), col("_tok"), width).alias("bucket"), "_c"
+            *parts, "j", cms_bucket(col("j"), col("_tok"), width).alias("bucket"), "_c"
         )
         .groupBy(*parts, "j", "bucket")
         .agg(F.sum("_c").alias("cell"))
@@ -115,7 +115,7 @@ def cms_estimate(
     and partially-empty probes over-estimated by taking min over only
     the non-empty cells). Every input row survives: out-of-stream
     tokens estimate 0, and NULL tokens estimate 0 (their bucket is
-    NULL, so every probe misses — see :func:`_bucket`).
+    NULL, so every probe misses — see :func:`cms_bucket`).
 
     ``tokens`` rows must be unique: the regroup keys on all candidate
     columns, so duplicate rows collapse to one output row
@@ -131,7 +131,7 @@ def cms_estimate(
             )
     keys = tokens.select(
         "*", F.explode(F.sequence(lit(0), lit(depth - 1))).alias("__cms_j")
-    ).withColumn("__cms_bucket", _bucket(col("__cms_j"), col(token_col), width))
+    ).withColumn("__cms_bucket", cms_bucket(col("__cms_j"), col(token_col), width))
     group_cols = tokens.columns
     cells = cells.select(
         col("j").alias("__cms_j"), col("bucket").alias("__cms_bucket"), "cell"
@@ -171,7 +171,7 @@ def bloom_build(
     cardinality). md5 position hashes, so the identical filter can be
     rebuilt in SQL. NULL items are dropped (ADVICE r9): a NULL has no
     membership identity and must not set bits — the null-propagating
-    position hash (see :func:`_bucket`) backs the same behavior on the
+    position hash (see :func:`cms_bucket`) backs the same behavior on the
     probe side."""
     m = n_words * _BLOOM_BITS_PER_WORD
     ex = (

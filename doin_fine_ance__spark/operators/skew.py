@@ -1,4 +1,4 @@
-"""Skew-aware join: key salting.
+"""Skew-aware join (key salting) and under-partitioned input fan-out.
 
 AQE's skew-join handles most runtime skew (enabled by the session
 factory), but pathological hot keys in a shuffle join — one merchant
@@ -16,6 +16,26 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
+
+
+def fan_out(df: DataFrame) -> DataFrame:
+    """Repartition a DataFrame up to default parallelism before a
+    CPU-bound map stage.
+
+    A small corpus arrives as one parquet file → one scan partition →
+    an expensive pandas UDF pinned to a single core. At real scale the
+    scan already has ≥ parallelism partitions and this is a no-op (no
+    shuffle inserted), so the branch only pays its round-robin
+    exchange when the input genuinely under-partitions the cluster.
+    """
+    try:
+        target = df.sparkSession.sparkContext.defaultParallelism
+        n = df.rdd.getNumPartitions()
+    except Exception:
+        # Spark Connect exposes neither sparkContext nor .rdd; there the
+        # scan's partitioning is opaque, so leave the plan unchanged.
+        return df
+    return df.repartition(target) if n < target else df
 
 
 def salted_join(

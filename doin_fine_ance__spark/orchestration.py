@@ -305,6 +305,7 @@ class LLMPipelineRun:
         """
         from pyspark.sql import functions as F
 
+        from .llm.corpus import word_tokens
         from .llm.quality import (
             quality_filter,
             train_quality_classifier,
@@ -325,7 +326,7 @@ class LLMPipelineRun:
         elif temperature_alpha is not None and "source" in mix.columns:
             mix = temperature_mix(mix, alpha=temperature_alpha).drop("keep_rate")
         if token_budget is not None:
-            toks = F.filter(F.split(F.lower(F.col("text")), r"\s+"), lambda x: x != "")
+            toks = word_tokens(F.col("text"))
             mix = budget_select(
                 mix.withColumn("n_tokens", F.size(toks).cast("bigint")),
                 "n_tokens",

@@ -13,14 +13,19 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..operators.checkpoint import owning_entry
+
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
 
 def query(name: str, oracle: str | None = None):
-    """Register an inventory query (and optionally its DuckDB oracle)."""
+    """Register an inventory query (and optionally its DuckDB oracle).
+    Each call first releases the stores earlier queries own (see
+    ``operators.checkpoint.own``)."""
 
     def deco(fn):
+        fn = owning_entry(fn)
         QUERIES[name] = fn
         if oracle is not None:
             ORACLES[name] = oracle

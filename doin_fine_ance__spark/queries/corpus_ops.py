@@ -29,6 +29,7 @@ from ..llm.corpus import (
     redact_pii,
     repetition_stats,
     stratified_sample,
+    word_tokens,
 )
 from ..sources.testdata import load_table
 from . import query
@@ -213,7 +214,7 @@ def t_token_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..llm.selection import budget_select
 
     d = load_table(spark, sf_dir, "documents", ["doc_id", "text"])
-    toks = F.filter(F.split(F.lower(col("text")), r"\s+"), lambda x: x != "")
+    toks = word_tokens(col("text"))
     stop = F.array([F.lit(w) for w in
                     ["the", "a", "an", "and", "or", "of", "to", "in", "is", "it"]])
     n_stop = F.size(F.filter(toks, lambda x: F.array_contains(stop, x)))
@@ -499,7 +500,7 @@ def t_token_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..llm.selection import token_shards
 
     d = load_table(spark, sf_dir, "documents", ["doc_id", "text"])
-    toks = F.filter(F.split(F.lower(col("text")), r"\s+"), lambda x: x != "")
+    toks = word_tokens(col("text"))
     weighted = d.select("doc_id", F.size(toks).cast("bigint").alias("n_tokens"))
     sharded = token_shards(weighted, "n_tokens", 2000, [col("doc_id")])
     return sharded.select("doc_id", "n_tokens", "shard").orderBy("doc_id")

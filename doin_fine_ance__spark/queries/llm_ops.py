@@ -22,9 +22,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 
-from ..llm.ann import ann_topk_ivf, ann_topk_ivfpq, ann_topk_lsh
+from ..llm.ann import ann_topk_ivf, ann_topk_ivfpq, ann_topk_lsh, plane_matrix
+from ..llm.corpus import word_tokens
 from ..llm.dedup import (
     PERM_COEFFS,
+    containment_prefix_pairs,
     default_cell_cap,
     exact_collapse,
     minhash_containment_pairs,
@@ -35,6 +37,7 @@ from ..llm.dedup import (
     verified_forest_edges,
 )
 from ..operators.checkpoint import materialize, ordered
+from ..operators.skew import fan_out
 from ..sources.testdata import load_table
 from . import query
 
@@ -239,7 +242,7 @@ def t_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = F.greatest(F.length("text"), lit(1))
     tokens = F.filter(F.split(col("text"), r"\s+"), lambda x: x != "")
     stop = F.array([lit(w) for w in ["the", "a", "an", "and", "or", "of", "to", "in", "is", "it"]])
-    lower_tokens = F.filter(F.split(F.lower(col("text")), r"\s+"), lambda x: x != "")
+    lower_tokens = word_tokens(col("text"))
     n_stop = F.size(F.filter(lower_tokens, lambda x: F.array_contains(stop, x)))
     return d.select(
         "doc_id",
@@ -274,7 +277,7 @@ def t_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 def t_lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stopword-vote language ID (deterministic n-gram-free heuristic)."""
     d = load_table(spark, sf_dir, "documents", ["doc_id", "text", "lang"])
-    lower_tokens = F.filter(F.split(F.lower(col("text")), r"\s+"), lambda x: x != "")
+    lower_tokens = word_tokens(col("text"))
 
     def hits(words: list[str]) -> F.Column:
         arr = F.array([lit(w) for w in words])
@@ -352,13 +355,8 @@ def t_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    from ..llm.dedup import _fan_out
-
-    d = _fan_out(load_table(spark, sf_dir, "documents", ["doc_id", "text"]))
-    toks = d.select(
-        "doc_id",
-        F.filter(F.split(F.lower(col("text")), r"\s+"), lambda x: x != "").alias("t"),
-    )
+    d = fan_out(load_table(spark, sf_dir, "documents", ["doc_id", "text"]))
+    toks = d.select("doc_id", word_tokens(col("text")).alias("t"))
     # One ROW per gram position (posexplode), hash computed per row —
     # NOT per-doc nested arrays: Catalyst inlines computed arrays into
     # their explode, re-evaluating every gram hash once per output row
@@ -484,9 +482,7 @@ def d_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents", ["doc_id", "text"])
     toks = d.select(
         "doc_id",
-        F.array_distinct(
-            F.filter(F.split(F.lower(col("text")), r"\s+"), lambda x: x != "")
-        ).alias("tokens"),
+        F.array_distinct(word_tokens(col("text"))).alias("tokens"),
         F.substring(F.lower(col("text")), 1, 16).alias("block_key"),
     )
     a = toks.alias("a")
@@ -575,22 +571,14 @@ def d_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     verifies m-1 (not m²/2) pairs per clique, and the row runs
     un-skipped at sf10.
     """
-    from ..llm.dedup import _TOKEN_STORES, _TOKEN_STORES_LOCK
     from ..operators.graph import dedup_keepers
 
     d = load_table(spark, sf_dir, "documents", ["doc_id", "text"])
-    # persist the exact-collapse group table across this composition's
-    # three consumers (stars, the banded store, the verify tokens);
-    # registered for the one-live-pipeline eviction AFTER the forest
-    # pipeline's entry eviction has run (see exact_collapse docstring)
-    stores: list[DataFrame] = []
-    membership, reps = exact_collapse(d, persist_stores=stores)
+    membership, reps = exact_collapse(d)
     stars = membership.filter(
         (col("doc_id") != col("rep_id")) & col("has_tokens")
     ).select(col("rep_id").alias("id_a"), col("doc_id").alias("id_b"))
     forest = verified_forest_edges(reps, threshold=0.5).select("id_a", "id_b")
-    with _TOKEN_STORES_LOCK:
-        _TOKEN_STORES.extend(stores)
     return dedup_keepers(forest.unionByName(stars), "id_a", "id_b")
 
 
@@ -659,7 +647,7 @@ def t_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject, never a global sort.
     """
     d = load_table(spark, sf_dir, "documents", ["text"])
-    toks = F.filter(F.split(F.lower(col("text")), r"\s+"), lambda x: x != "")
+    toks = word_tokens(col("text"))
     return (
         d.select(F.explode(toks).alias("tok"))
         .groupBy("tok")
@@ -711,11 +699,9 @@ def t_bigram_familiarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import pandas as pd
 
-    from ..llm.dedup import _fan_out
-
     d = load_table(spark, sf_dir, "documents", ["doc_id", "text"])
     norm = F.regexp_replace(F.lower(F.coalesce(col("text"), lit(""))), r"\s+", " ")
-    base = _fan_out(d).select("doc_id", norm.alias("t")).filter(F.length("t") >= 2)
+    base = fan_out(d).select("doc_id", norm.alias("t")).filter(F.length("t") >= 2)
 
     def gram_counts(pdfs):
         # Per-doc bigram COUNTS in one Arrow batch pass — a map-side
@@ -908,15 +894,12 @@ def d_containment_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     Recall evidence vs the banded operator across doc-length ratios:
     CONTAINMENT_QUALITY_r10.json (tools/containment_quality.py).
     """
-    from ..llm.corpus import _words
-    from ..llm.dedup import _fan_out, containment_prefix_pairs
-
     # fan out BEFORE projecting the gram expression: the per-gram hash
     # transform is the expensive map stage, and a projection stays on
     # the scan side of a later repartition — repartitioning first puts
     # the hash work on every core
-    d = _fan_out(load_table(spark, sf_dir, "documents", ["doc_id", "text"]))
-    toks = _words(col("text"))
+    d = fan_out(load_table(spark, sf_dir, "documents", ["doc_id", "text"]))
+    toks = word_tokens(col("text"))
     # Gram identity is xxhash64 of the 3-gram text (was md5 hex): the
     # gram key is a pure intermediate — the output (id_a, id_b,
     # containment) is invariant under any injective re-keying of the
@@ -969,9 +952,7 @@ def d_incremental_neardups(spark: SparkSession, sf_dir: str) -> DataFrame:
     cands = incremental_candidate_pairs(sigs_new, sigs_all)
     toks = d.select(
         col("doc_id"),
-        F.array_distinct(
-            F.filter(F.split(F.lower(col("text")), r"\s+"), lambda x: x != "")
-        ).alias("tokens"),
+        F.array_distinct(word_tokens(col("text"))).alias("tokens"),
     )
     ta = toks.select(col("doc_id").alias("id_a"), col("tokens").alias("tok_a"))
     tb = toks.select(col("doc_id").alias("id_b"), col("tokens").alias("tok_b"))
@@ -1024,13 +1005,11 @@ def _lsh_oracle_sql(dim: int = 64, n_planes: int = 4, multiprobe: int = 2, k: in
     """DuckDB oracle replaying ann_topk_lsh with quantized planes+vectors.
 
     Plane literals are generated from the same seeded gaussians
-    (llm.ann._plane_matrix(quantize=True)); every dot is an exact
+    (llm.ann.plane_matrix(quantize=True)); every dot is an exact
     integer, so sign bits, bucket ids, probes, and cosines reproduce
     bit-for-bit.
     """
-    from ..llm.ann import _plane_matrix
-
-    P = _plane_matrix(dim, n_planes, quantize=True)
+    P = plane_matrix(dim, n_planes, quantize=True)
     plane_lits = [
         "list_value(" + ", ".join(str(int(v)) for v in row) + ")" for row in P
     ]
@@ -1510,14 +1489,13 @@ def mm_flac_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import numpy as np
 
-    from ..llm.dedup import _fan_out
     from ..llm.flac import encode_flac
     from ..llm.multimodal import extract_audio_features
 
     # id-only fan-out BEFORE the encode kernel: a small parquet arrives
     # as one scan partition and would pin ~4 ms/clip of FLAC encoding
     # to a single core
-    d = _fan_out(load_table(spark, sf_dir, "documents", ["doc_id"]))
+    d = fan_out(load_table(spark, sf_dir, "documents", ["doc_id"]))
 
     def synth(batches):
         for pdf in batches:
@@ -1736,11 +1714,10 @@ def mm_mjpeg_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import numpy as np
 
-    from ..llm.dedup import _fan_out
     from ..llm.jpeg import decode_jpeg
     from ..llm.multimodal import MEDIA_SCHEMA, encode_mjpeg_avi, sample_video_frames
 
-    d = _fan_out(
+    d = fan_out(
         load_table(spark, sf_dir, "documents", ["doc_id"]).select(
             "doc_id", F.md5(col("doc_id").cast("string")).alias("hx")
         )
@@ -1985,10 +1962,9 @@ def mm_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import numpy as np
 
-    from ..llm.dedup import _fan_out
     from ..llm.jpeg import decode_jpeg, encode_jpeg
 
-    d = _fan_out(
+    d = fan_out(
         load_table(spark, sf_dir, "documents", ["doc_id"]).select(
             "doc_id", F.md5(col("doc_id").cast("string")).alias("hx")
         )
@@ -2072,10 +2048,9 @@ def mm_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import numpy as np
 
-    from ..llm.dedup import _fan_out
     from ..llm.jpeg import decode_jpeg, encode_jpeg_progressive
 
-    d = _fan_out(
+    d = fan_out(
         load_table(spark, sf_dir, "documents", ["doc_id"]).select(
             "doc_id", F.md5(col("doc_id").cast("string")).alias("hx")
         )
@@ -2197,7 +2172,6 @@ def mm_image_neardups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import numpy as np
 
-    from ..llm.dedup import _fan_out
     from ..llm.multimodal import MEDIA_SCHEMA, encode_png, image_neardup_pairs
 
     d = load_table(spark, sf_dir, "documents", ["doc_id"]).select(
@@ -2230,7 +2204,7 @@ def mm_image_neardups(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             yield pd.DataFrame(rows, columns=MEDIA_SCHEMA.fieldNames())
 
-    media = _fan_out(d).mapInPandas(synth, MEDIA_SCHEMA)
+    media = fan_out(d).mapInPandas(synth, MEDIA_SCHEMA)
     return _ordered(
         image_neardup_pairs(media, max_hamming=6).select(
             col("id_a").cast("long"),
@@ -2356,14 +2330,13 @@ def t_main_text_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     min_good_chars=25 clears the corpus floor (shortest document is
     44 chars at every shipped SF, incl. sf1/sf1-skew).
     """
-    from ..llm.dedup import _fan_out
     from ..sources.warc import extract_main_text
 
     # fan out before the pandas-UDF classifier: the single-file scan
     # arrives in 1-2 partitions, pinning the per-row Python HTML parse
     # to as many cores (guide §2.5 input skew / §4 Python boundary); at
     # real scale the scan is already wide and this is a no-op
-    d = _fan_out(load_table(spark, sf_dir, "documents", ["doc_id", "text"]))
+    d = fan_out(load_table(spark, sf_dir, "documents", ["doc_id", "text"]))
     html = F.concat(
         lit(
             "<html><head><title>t</title><script>var x=1;</script></head>"

@@ -26,9 +26,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 
-from ..llm.corpus import chunk_documents
+from ..llm.corpus import chunk_documents, word_tokens
 from ..operators.graph import pagerank_fixed_point
-from ..operators.sketches import _bucket, cms_build
+from ..operators.sketches import cms_bucket, cms_build, cms_merge
 from ..sources.testdata import load_table
 from . import query
 
@@ -214,10 +214,8 @@ def a_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     both the estimates and the one-sided error itself
     (overestimate >= 0 is a theorem; its magnitude is data).
     """
-    from ..llm.corpus import _words
-
     d = load_table(spark, sf_dir, "documents", ["doc_id", "text"])
-    words = d.select(F.explode(_words(col("text"))).alias("token"))
+    words = d.select(F.explode(word_tokens(col("text"))).alias("token"))
     exact = words.groupBy("token").agg(F.count("*").cast("bigint").alias("exact_count"))
     # r12 optimization (guide §2.3 "aggregate before you shuffle"): the
     # sketch cells are built from the per-token EXACT counts instead of
@@ -233,7 +231,7 @@ def a_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     top = exact.orderBy(F.desc("exact_count"), "token").limit(_CMS_TOPK)
     keys = top.select(
         "*", F.explode(F.sequence(lit(0), lit(_CMS_D - 1))).alias("j")
-    ).withColumn("bucket", _bucket(col("j"), col("token"), _CMS_W))
+    ).withColumn("bucket", cms_bucket(col("j"), col("token"), _CMS_W))
     return (
         keys.join(F.broadcast(cells), ["j", "bucket"])
         .groupBy("token", "exact_count")
@@ -415,8 +413,6 @@ def a_cms_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     answer heavy-hitter queries from a few KB of daily sketch parquet
     instead of a rescan.
     """
-    from ..operators.sketches import _bucket, cms_build, cms_merge
-
     ev = load_table(spark, sf_dir, "events", ["ts", "user_id"]).select(
         F.to_date("ts").alias("day"), "user_id"
     )
@@ -442,7 +438,7 @@ def a_cms_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     top = exact.orderBy(F.desc("exact_count"), "user_id").limit(_RU_TOPK)
     keys = top.select(
         "*", F.explode(F.sequence(lit(0), lit(_RU_D - 1))).alias("j")
-    ).withColumn("bucket", _bucket(col("j"), col("user_id"), _RU_W))
+    ).withColumn("bucket", cms_bucket(col("j"), col("user_id"), _RU_W))
     return (
         keys.join(F.broadcast(cells), ["j", "bucket"])
         .groupBy("user_id", "exact_count")

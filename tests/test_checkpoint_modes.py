@@ -133,3 +133,80 @@ def test_module_default_mode_roundtrip(spark, reliable_dir):
         set_checkpoint_mode("bogus")
     with pytest.raises(ValueError):
         materialize(spark.range(1), "bogus")
+
+
+class _Store:
+    """Stands in for a DataFrame: counts persist/unpersist calls."""
+
+    def __init__(self):
+        self.persists = 0
+        self.unpersists = 0
+
+    def persist(self):
+        self.persists += 1
+        return self
+
+    def unpersist(self):
+        self.unpersists += 1
+        return self
+
+
+def test_owning_entry_releases_only_at_the_outermost_call():
+    from doin_fine_ance__spark.operators.checkpoint import (
+        own,
+        owning_entry,
+        release_owned,
+    )
+
+    release_owned()
+    earlier = own(_Store())
+
+    @owning_entry
+    def inner():
+        return own(_Store())
+
+    @owning_entry
+    def outer():
+        return inner(), own(_Store())
+
+    a, b = outer()
+    assert earlier.unpersists == 1  # outer released what was owned before it
+    assert (a.persists, a.unpersists, b.unpersists) == (1, 0, 0)  # nested kept
+    with pytest.raises(ZeroDivisionError):
+        owning_entry(lambda: 1 / 0)()  # releases a and b, then raises
+    assert (a.unpersists, b.unpersists) == (1, 1)
+    c = inner()  # depth was restored after the exception: outermost again
+    release_owned()
+    assert c.unpersists == 1
+
+
+def test_own_and_release_owned_under_thread_contention():
+    """Threads owning and releasing concurrently: every store is
+    unpersisted exactly once, none is lost or released twice."""
+    import sys
+    import threading
+
+    from doin_fine_ance__spark.operators.checkpoint import own, release_owned
+
+    release_owned()
+    stores = [[_Store() for _ in range(2000)] for _ in range(16)]
+
+    def worker(mine):
+        for i, s in enumerate(mine):
+            own(s)
+            if i % 2:
+                release_owned()
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(m,)) for m in stores]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(interval)
+    release_owned()
+    assert all(s.persists == 1 and s.unpersists == 1 for m in stores for s in m)

@@ -41,6 +41,30 @@ def test_minhash_signature_deterministic(spark):
     assert all(len(sig) == 64 for sig in s1.values())
 
 
+@pytest.mark.parametrize("k,bands", [(64, 16), (32, 5)])
+def test_fused_band_keys_equal_stored_signature_banding(spark, k, bands):
+    """minhash_band_keys (the fused banding _verified_pairs and
+    verified_forest_edges use) must emit exactly the bytes of
+    band_keys over stored minhash_signatures (incremental dedup's
+    path), including a shape where k % bands != 0."""
+    from doin_fine_ance__spark.llm.dedup import band_keys, minhash_band_keys
+
+    extra = spark.createDataFrame(
+        [(900001, ""), (900002, "   "), (900003, None), (900004, "abc"),
+         (900005, "Ünïcode  TEXT\twith\nbreaks")],
+        "doc_id long, text string",
+    )
+    base = load_table(spark, SF, "documents", ["doc_id", "text"]).orderBy("doc_id").limit(40)
+    docs = base.unionByName(extra)
+    fused = {tuple(r) for r in minhash_band_keys(docs, k=k, bands=bands).collect()}
+    stored = {
+        tuple(r)
+        for r in band_keys(minhash_signatures(docs, k=k), bands=bands, k=k).collect()
+    }
+    assert fused == stored
+    assert len(fused) == 45 * bands
+
+
 def test_minhash_lsh_finds_planted_dups(spark):
     docs = _docs_with_dups(spark)
     pairs = minhash_near_dups(docs, threshold=0.7).collect()
@@ -74,15 +98,19 @@ def test_minhash_no_false_positives_vs_exact(spark):
     assert bad == 0
 
 
-@pytest.mark.slow
-def test_star_edges_components_equal_full_pair_graph(spark):
+@pytest.mark.parametrize(
+    "n_base",
+    [pytest.param(12, id="reduced"), pytest.param(40, id="full", marks=pytest.mark.slow)],
+)
+def test_star_edges_components_equal_full_pair_graph(spark, n_base):
     """The star-edge output mode's connected components (and min
     labels) must equal clustering the FULL verified pair graph — the
-    invariance exact_collapse is built on."""
+    invariance exact_collapse is built on. The reduced corpus keeps
+    the guard in the default profile."""
     from doin_fine_ance__spark.llm.dedup import minhash_near_dup_star_edges
     from doin_fine_ance__spark.operators.graph import dedup_keepers
 
-    base = load_table(spark, SF, "documents", ["doc_id", "text"]).limit(40)
+    base = load_table(spark, SF, "documents", ["doc_id", "text"]).limit(n_base)
     # replica clique: 6 exact copies of one doc (quadratic in full mode)
     first = base.orderBy("doc_id").first()
     clique = spark.createDataFrame(
@@ -1057,23 +1085,49 @@ def test_pq_train_small_sample_raises(spark):
 
 def test_minhash_token_store_does_not_accumulate(spark):
     """Repeated near-dup calls must not pin one persisted token store
-    per call for the session lifetime (ADVICE r4): at most one store
-    stays cached, and release_token_stores() drops that too."""
+    per call for the session lifetime (ADVICE r4): the next outermost
+    dedup call releases the previous call's store, and release_owned()
+    drops the last one."""
     from doin_fine_ance__spark.llm import dedup as D
+    from doin_fine_ance__spark.operators import checkpoint as C
 
-    docs = spark.createDataFrame(
-        [(i, " ".join(f"w{i}{j}" for j in range(12))) for i in range(6)],
-        "doc_id long, text string",
-    )
-    D.release_token_stores()
-    D.minhash_near_dups(docs, threshold=0.8).collect()
-    first = D._TOKEN_STORES[-1]
-    assert len(D._TOKEN_STORES) == 1
-    D.minhash_containment_pairs(docs, threshold=0.8).collect()
-    assert len(D._TOKEN_STORES) == 1  # previous store evicted, not stacked
+    def corpus(tag):
+        return spark.createDataFrame(
+            [(i, " ".join(f"{tag}{i}{j}" for j in range(12))) for i in range(6)],
+            "doc_id long, text string",
+        )
+
+    C.release_owned()
+    D.minhash_near_dups(corpus("w"), threshold=0.8).collect()
+    assert len(C._OWNED) == 1  # exactly this call's verify token store
+    first = C._OWNED[0]
+    assert first.storageLevel.useMemory
+    # a different corpus, so the new store's plan cannot alias the first
+    D.minhash_containment_pairs(corpus("v"), threshold=0.8).collect()
+    assert len(C._OWNED) == 1 and C._OWNED[0] is not first  # not stacked
     assert first.storageLevel.useMemory is False  # actually unpersisted
-    D.release_token_stores()
-    assert not D._TOKEN_STORES
+    C.release_owned()
+    assert not C._OWNED
+
+
+def test_dup_clusters_stores_released_at_next_query(spark):
+    """d_dup_clusters leaves its exact-collapse group table cached after
+    the collect; entering another registered query, or release_owned(),
+    empties Spark's cache manager."""
+    from doin_fine_ance__spark.operators.checkpoint import release_owned
+    from doin_fine_ance__spark.queries import load_registry
+
+    queries, _ = load_registry()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    for leave in ("next query", "release_owned"):
+        assert queries["d_dup_clusters"](spark, SF).collect()
+        assert not cache.isEmpty(), leave
+        if leave == "next query":
+            queries["d_exact_dedup"](spark, SF)
+        else:
+            release_owned()
+        assert cache.isEmpty(), leave
 
 
 @pytest.mark.slow
@@ -2018,17 +2072,15 @@ def test_containment_prefix_recall_floor_and_banded_bias(spark):
     sys.path.insert(0, "/root/repo")
     from tools.containment_quality import containment_corpus
 
-    from doin_fine_ance__spark.llm.dedup import (
-        containment_prefix_pairs,
-        release_token_stores,
-    )
+    from doin_fine_ance__spark.llm.dedup import containment_prefix_pairs
+    from doin_fine_ance__spark.operators.checkpoint import release_owned
 
     docs, planted = containment_corpus(
         spark, n_base=120, n_planted_per_ratio=8, vocab_size=4000,
         ratios=(0.05, 0.25, 0.9),
     )
     got = containment_prefix_pairs(docs, threshold=0.9).collect()
-    release_token_stores()
+    release_owned()
     found = {(min(r.id_a, r.id_b), max(r.id_a, r.id_b)) for r in got}
     for p in planted:
         key = (min(p["id_a"], p["id_b"]), max(p["id_a"], p["id_b"]))
@@ -2049,13 +2101,11 @@ def test_containment_prefix_threshold_arithmetic_exact(spark):
     docs = spark.createDataFrame(
         [(0, host), (1, short)], "doc_id long, text string"
     )
-    from doin_fine_ance__spark.llm.dedup import (
-        containment_prefix_pairs,
-        release_token_stores,
-    )
+    from doin_fine_ance__spark.llm.dedup import containment_prefix_pairs
+    from doin_fine_ance__spark.operators.checkpoint import release_owned
 
     rows = containment_prefix_pairs(docs, threshold=0.9).collect()
-    release_token_stores()
+    release_owned()
     assert [(r.id_a, r.id_b, round(r.containment, 6)) for r in rows] == [
         (0, 1, 0.9)
     ]

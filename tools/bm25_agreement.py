@@ -41,10 +41,10 @@ def corpus_vocab(docs) -> list[str]:
     word) — deterministic and guaranteed non-empty retrievals."""
     from pyspark.sql import functions as F
 
-    from doin_fine_ance__spark.llm.corpus import _words
+    from doin_fine_ance__spark.llm.corpus import word_tokens
 
     rows = (
-        docs.select(F.explode(_words(F.col("text"))).alias("w"))
+        docs.select(F.explode(word_tokens(F.col("text"))).alias("w"))
         .groupBy("w")
         .count()
         .orderBy(F.desc("count"), "w")

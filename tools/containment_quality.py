@@ -107,11 +107,12 @@ def measure(spark, threshold: float = 0.9, k: int = 64, bands: int = 16) -> dict
     from pyspark.sql import functions as F
     from pyspark.sql.functions import col
 
+    from doin_fine_ance__spark.llm.corpus import word_tokens
     from doin_fine_ance__spark.llm.dedup import (
         containment_prefix_pairs,
         minhash_containment_pairs,
-        release_token_stores,
     )
+    from doin_fine_ance__spark.operators.checkpoint import release_owned
 
     docs, planted = containment_corpus(spark)
     docs = docs.persist()
@@ -120,9 +121,7 @@ def measure(spark, threshold: float = 0.9, k: int = 64, bands: int = 16) -> dict
     # exact containment of every planted pair (ground-truth gate)
     toks = docs.select(
         col("doc_id"),
-        F.array_distinct(
-            F.filter(F.split(F.lower(col("text")), r"\s+"), lambda x: x != "")
-        ).alias("tokens"),
+        F.array_distinct(word_tokens(col("text"))).alias("tokens"),
     )
     pairs_df = spark.createDataFrame(
         [(p["id_a"], p["id_b"], p["ratio"]) for p in planted],
@@ -158,9 +157,8 @@ def measure(spark, threshold: float = 0.9, k: int = 64, bands: int = 16) -> dict
     banded = found_pairs(
         minhash_containment_pairs(docs, threshold=threshold, k=k, bands=bands)
     )
-    release_token_stores()
     prefix = found_pairs(containment_prefix_pairs(docs, threshold=threshold))
-    release_token_stores()
+    release_owned()
 
     per_ratio = []
     for ratio in RATIOS:

@@ -46,12 +46,13 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import col
 
+from doin_fine_ance__spark.llm.corpus import word_tokens
 from doin_fine_ance__spark.llm.dedup import (
     lsh_candidate_pairs,
     minhash_near_dups,
     minhash_signatures,
-    release_token_stores,
 )
+from doin_fine_ance__spark.operators.checkpoint import release_owned
 from doin_fine_ance__spark.sources.testdata import load_table
 
 
@@ -61,10 +62,7 @@ def _token_sets(docs: DataFrame) -> DataFrame:
     return docs.select(
         col("doc_id"),
         F.array_distinct(
-            F.transform(
-                F.filter(F.split(F.lower(col("text")), r"\s+"), lambda x: x != ""),
-                lambda x: F.xxhash64(x),
-            )
+            F.transform(word_tokens(col("text")), lambda x: F.xxhash64(x))
         ).alias("tokens"),
     )
 
@@ -176,7 +174,7 @@ def measure(
 
     for df in (truth, found, sh_j):
         df.unpersist()
-    release_token_stores()
+    release_owned()
     return {
         "sf_dir": sf_dir,
         "n_docs": n_docs,
@@ -260,7 +258,7 @@ def measure_realistic(
     rep["n_planted_eligible"] = len(eligible)
     rep["corpus"] = {"kind": "realistic-vocab", **corpus_kw}
     docs.unpersist()
-    release_token_stores()
+    release_owned()
     return rep
 
 

@@ -3,7 +3,7 @@
 The scale path for training-data dedup (the north star's first-class
 requirement). Shape of the MinHash pipeline:
 
-  shingle (map) → k minhashes (map) → band keys (map+explode)
+  shingle (map) → k minhashes (map) → band keys (map)
   → bucket groupBy (ONE shuffle on band keys) → within-bucket pair
   join → exact-Jaccard verify on candidates only
 
@@ -11,12 +11,21 @@ No O(n²) stage exists: candidate generation is linear in corpus size
 + bucket collisions, which is the entire point of LSH banding
 (b bands × r rows ⇒ pairs with Jaccard s collide w.p. 1-(1-s^r)^b).
 
-Banding, candidate joins, verification and exact collapse are JVM
-built-ins (md5/xxhash64/array ops). Four stages run in Python because
-their inner loops are awkward or ~100x slower as Catalyst
-expressions: the MinHash signatures (:func:`minhash_signatures`), the
-fused signature+banding (:func:`minhash_band_keys`), the per-bucket
-union-find of :func:`verified_forest_edges` and :func:`simhash64`.
+Candidate joins, verification and exact collapse are JVM built-ins
+(md5/xxhash64/array ops). Five stages run in Python because their
+inner loops are awkward or ~100x slower as Catalyst expressions: the
+MinHash signatures (:func:`minhash_signatures`), the fused
+signature+banding of in-line docs (:func:`minhash_band_keys`), the
+banding of stored signature tables (:func:`band_keys`), the
+per-bucket union-find of :func:`verified_forest_edges` and
+:func:`simhash64`. Both banding stages run the one band-hash kernel,
+:func:`_band_frame`.
+
+Each near-dup concept has one implementation here: banding is
+:func:`_band_frame`, the hashed verify token set is
+:func:`token_set`, the exact verify join is :func:`verify_pairs`,
+and the chunk-bucket Hamming self-join behind SimHash and image aHash
+dedup is :func:`chunk_hamming_pairs`.
 
 Persisted stores (verify token sets, the exact-collapse group table,
 the containment token tables) are registered with
@@ -44,7 +53,7 @@ from pyspark.sql.functions import col, lit, pandas_udf
 from pyspark.sql.types import LongType
 
 from ..operators.checkpoint import materialize, own, owning_entry
-from ..operators.skew import fan_out
+from ..operators.skew import fan_out, shuffle_width
 from .corpus import word_tokens
 
 # --- 64-bit hash-key collision exposure (VERDICT r12 "What's wrong"
@@ -52,8 +61,9 @@ from .corpus import word_tokens
 # windows from md5 hex strings to xxhash64 longs (guide §2.3 "narrower
 # types" — 8-byte shuffle keys instead of 32-char strings):
 # :func:`containment_prefix_pairs` (verify token sets; callers' n-gram
-# keys, e.g. d_containment_prefix), :func:`_verified_pairs` and
-# :func:`verified_forest_edges` (verify token sets), and
+# keys, e.g. d_containment_prefix), :func:`token_set` (the verify
+# token sets of _verified_pairs, verified_forest_edges and
+# d_incremental_neardups), and
 # corpus.duplicate_spans / corpus.remove_duplicate_spans (window keys).
 # The re-keying is injective IN PRACTICE, not injective: among n
 # distinct keys the expected number of colliding unordered pairs is
@@ -109,11 +119,7 @@ def minhash_signatures(
     (fixed seed + crc32), so incremental dedup against a stored
     signature table remains valid.
     """
-    import numpy as np
-
-    coeffs = PERM_COEFFS[:k]
-    A = np.array([a for a, _ in coeffs], dtype=np.uint64).reshape(-1, 1)
-    B = np.array([b for _, b in coeffs], dtype=np.uint64).reshape(-1, 1)
+    A, B = _perm_arrays(k)
 
     @pandas_udf("array<string>")
     def _sig_udf(texts: pd.Series) -> pd.Series:
@@ -124,6 +130,18 @@ def minhash_signatures(
         return pd.Series(out)
 
     return fan_out(docs).select(col(id_col), _sig_udf(col(text_col)).alias("signature"))
+
+
+def _perm_arrays(k: int):
+    """The first k permutation coefficients as (k × 1) uint64 columns
+    (A, B), shaped to broadcast against a (1 × n) row of shingle
+    hashes in :func:`_batch_signatures`."""
+    import numpy as np
+
+    coeffs = PERM_COEFFS[:k]
+    A = np.array([a for a, _ in coeffs], dtype=np.uint64).reshape(-1, 1)
+    B = np.array([b for _, b in coeffs], dtype=np.uint64).reshape(-1, 1)
+    return A, B
 
 
 def _batch_signatures(texts, A, B, n: int) -> list:
@@ -173,6 +191,32 @@ def _batch_signatures(texts, A, B, n: int) -> list:
     return [M[:, idx].min(axis=1) for idx in doc_idx]
 
 
+def _band_frame(id_col: str, ids, signatures, bands: int) -> pd.DataFrame:
+    """The one band-hash kernel: (id, signature slots) → (id, band,
+    band_hash) rows, ``bands`` rows per id. Band bi hashes slots
+    [bi·r, (bi+1)·r) with r = len(signature) // bands:
+    band_hash = md5("|".join(slots)). Equal hash ⇔ equal band slice
+    (modulo md5 collisions), which is the LSH bucket key. Slots are the
+    decimal strings :func:`minhash_signatures` stores; with
+    k % bands != 0 the trailing k - bands·r slots join no band."""
+    import hashlib
+
+    ids_out, band_out, hash_out = [], [], []
+    for did, slots in zip(ids, signatures):
+        r = len(slots) // bands
+        for bi in range(bands):
+            ids_out.append(did)
+            band_out.append(bi)
+            hash_out.append(
+                hashlib.md5("|".join(slots[bi * r : (bi + 1) * r]).encode("utf-8")).hexdigest()
+            )
+    return pd.DataFrame({id_col: ids_out, "band": band_out, "band_hash": hash_out})
+
+
+def _band_schema(df: DataFrame, id_col: str) -> str:
+    return f"{id_col} {df.schema[id_col].dataType.simpleString()}, band int, band_hash string"
+
+
 def minhash_band_keys(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -181,91 +225,51 @@ def minhash_band_keys(
     bands: int = 16,
     n: int = 5,
 ) -> DataFrame:
-    """Fused signature+banding: docs → (id, band, band_hash) in ONE
-    Python stage (r13, VERDICT r12 next-round #7 — measured, then
-    adopted).
-
-    Emits exactly ``band_keys(minhash_signatures(docs))`` — band_hash
-    = md5 of the ``|``-joined r = k/bands signature slots, identical
-    bytes (Python md5 over the same UTF-8 string the JVM expression
-    hashed; probe-verified set-equal at sf0.1) — but the signature
-    array<string> never crosses the Arrow boundary and the 16-way
-    JVM md5/concat/element_at expression chain over exploded rows is
-    gone. Measured at sf0.1: banded frame 1.31 s → 0.58 s (min-of-3,
-    noop). Use for in-line band building; callers that band STORED
-    signature tables (incremental dedup) keep :func:`band_keys`.
+    """Fused signature+banding for in-line docs: docs → (id, band,
+    band_hash) in ONE Python stage. Each Arrow batch is signed with
+    :func:`_batch_signatures` and banded with :func:`_band_frame`, the
+    kernel :func:`band_keys` runs over stored signature tables, so
+    both emit the same bytes as ``band_keys(minhash_signatures(docs))``.
+    The signature array<string> never crosses the Arrow boundary.
+    Measured at sf0.1 against the earlier JVM banding chain: banded
+    frame 1.31 s → 0.58 s (min-of-3, noop).
     """
-    import numpy as np
-
-    coeffs = PERM_COEFFS[:k]
-    A = np.array([a for a, _ in coeffs], dtype=np.uint64).reshape(-1, 1)
-    B = np.array([b for _, b in coeffs], dtype=np.uint64).reshape(-1, 1)
-    r = k // bands
-    id_ddl = docs.schema[id_col].dataType.simpleString()
+    A, B = _perm_arrays(k)
 
     def _kernel(batches):
-        import hashlib
-
         for pdf in batches:
             sigs = _batch_signatures(pdf[text_col], A, B, n)
-            ids_out, band_out, hash_out = [], [], []
-            for did, sig in zip(pdf[id_col], sigs):
-                svals = [str(int(v)) for v in sig]
-                for bi in range(bands):
-                    ids_out.append(did)
-                    band_out.append(bi)
-                    hash_out.append(
-                        hashlib.md5(
-                            "|".join(svals[bi * r : (bi + 1) * r]).encode("utf-8")
-                        ).hexdigest()
-                    )
-            yield pd.DataFrame(
-                {id_col: ids_out, "band": band_out, "band_hash": hash_out}
+            yield _band_frame(
+                id_col, pdf[id_col], ([str(int(v)) for v in sig] for sig in sigs), bands
             )
 
     return fan_out(docs.select(id_col, text_col)).mapInPandas(
-        _kernel, f"{id_col} {id_ddl}, band int, band_hash string"
+        _kernel, _band_schema(docs, id_col)
     )
 
 
-def band_keys(
-    signatures: DataFrame, id_col: str = "doc_id", bands: int = 16, k: int | None = None
-) -> DataFrame:
-    """Map-only banding: (id, band, band_hash) — one row per band.
-
-    band_hash = md5 of the band's r = k/bands signature slots; equal
-    hash ⇔ equal band slice (modulo md5 collisions), which is the LSH
-    bucket key. No shuffle here — callers join on (band, band_hash).
+def band_keys(signatures: DataFrame, id_col: str = "doc_id", bands: int = 16) -> DataFrame:
+    """Map-only banding of a stored (id, signature) table: (id, band,
+    band_hash), one row per band, from the same :func:`_band_frame`
+    kernel as :func:`minhash_band_keys`, run in one ``mapInPandas``
+    stage. r = len(signature) // bands comes from each row, so
+    building the plan runs no job. No shuffle here — callers join on
+    (band, band_hash).
     """
-    if k is None:
-        # fallback probe; callers pass k to avoid the extra job
-        k = signatures.select(F.size("signature")).first()[0]
-    r = k // bands
-    return signatures.select(
-        col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        lit(bi).alias("band"),
-                        F.md5(
-                            F.concat_ws(
-                                "|", *[F.element_at("signature", bi * r + j + 1) for j in range(r)]
-                            )
-                        ).alias("band_hash"),
-                    )
-                    for bi in range(bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select(col(id_col), col("bk.band").alias("band"), col("bk.band_hash").alias("band_hash"))
+
+    def _kernel(batches):
+        for pdf in batches:
+            yield _band_frame(id_col, pdf[id_col], pdf["signature"], bands)
+
+    return signatures.select(id_col, "signature").mapInPandas(
+        _kernel, _band_schema(signatures, id_col)
+    )
 
 
 def lsh_candidate_pairs(
     signatures: DataFrame,
     id_col: str = "doc_id",
     bands: int = 16,
-    k: int | None = None,
     checkpoint_mode: str | None = None,
 ) -> DataFrame:
     """Band the signatures and emit candidate pairs per bucket.
@@ -275,7 +279,7 @@ def lsh_candidate_pairs(
     band hash ⇒ near-identical prefix), so the join is skew-safe; AQE
     splits pathological buckets.
     """
-    banded = band_keys(signatures, id_col, bands, k)
+    banded = band_keys(signatures, id_col, bands)
     return _pairs_from_banded(banded, id_col, checkpoint_mode)
 
 
@@ -501,12 +505,7 @@ def verified_forest_edges(
         .drop("count")
     )
     multi = banded.join(multi_keys, ["band", "band_hash"], "semi")
-    toks = docs.select(
-        col(id_col),
-        F.array_distinct(
-            F.transform(word_tokens(col(text_col)), lambda x: F.xxhash64(x))
-        ).alias("tokens"),
-    )
+    toks = docs.select(col(id_col), token_set(col(text_col)).alias("tokens"))
     rows = multi.join(toks, id_col)
     # Pin forest parallelism (same idiom and rationale as the verify
     # stage in _verified_pairs): the bucketed rows are BYTE-small after
@@ -515,12 +514,11 @@ def verified_forest_edges(
     # union-find stage otherwise lands on a single core (6.9 s → 2.5 s
     # at sf0.1 with the pin). Repartitioning BY THE GROUP KEYS means
     # the groupBy below reuses this exchange — no extra shuffle, just
-    # an explicit width AQE won't coalesce.
-    try:
-        width = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    # an explicit width AQE won't coalesce. A non-numeric width (e.g.
+    # "auto") keeps the planner's choice.
+    width = shuffle_width(docs.sparkSession)
+    if width is not None:
         rows = rows.repartition(width, "band", "band_hash")
-    except (TypeError, ValueError):
-        pass  # non-numeric conf (e.g. "auto"): keep the planner's choice
 
     def _local_forest(pdf: pd.DataFrame) -> pd.DataFrame:
         ids = pdf[id_col].to_numpy()
@@ -691,16 +689,16 @@ def containment_prefix_pairs(
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
 
     if tokens_col is not None:
-        token_set = F.array_distinct(col(tokens_col))
+        tokens = F.array_distinct(col(tokens_col))
     else:
-        token_set = F.array_distinct(word_tokens(col(text_col)))
+        tokens = F.array_distinct(word_tokens(col(text_col)))
     # fan the tokenize/gram-hash map stage to full width: interpreted
     # higher-order transforms (e.g. per-gram md5 when tokens_col is an
     # n-gram expression) cost ~18 µs/element and a small parquet scan
     # arrives in 1-2 partitions — same treatment as ngram_hashes
     docs = fan_out(docs)
     toks_flat = docs.select(
-        col(id_col).alias("_id"), F.explode(token_set).alias("_tok")
+        col(id_col).alias("_id"), F.explode(tokens).alias("_tok")
     )
     # The flat token table feeds FOUR plan branches (df counts, sizes,
     # the ranked prefix, the inverted index) — without a persist the
@@ -748,28 +746,17 @@ def containment_prefix_pairs(
         )
         .distinct()
     )
-    # exact verify on hashed token sets (same idiom as _verified_pairs:
-    # xxhash64 longs intersect identically to strings, ship 8 bytes) —
-    # built from the PERSISTED ranked table, whose cached blocks are
-    # already hash-partitioned by _id from the window exchange, so
-    # this groupBy adds NO new shuffle (guide §2.4: two operations
-    # keyed the same way share one exchange) and the tokenize/gram
-    # map stage runs exactly once per call
+    # exact verify on hashed token sets (xxhash64 longs intersect
+    # identically to strings, ship 8 bytes) — built from the PERSISTED
+    # ranked table, whose cached blocks are already hash-partitioned
+    # by _id from the window exchange, so this groupBy adds NO new
+    # shuffle (guide §2.4: two operations keyed the same way share one
+    # exchange) and the tokenize/gram map stage runs exactly once per
+    # call
     toks = own(
-        ranked.groupBy("_id")
-        .agg(F.collect_list(F.xxhash64(col("_tok"))).alias("tokens"))
-        .withColumnRenamed("_id", id_col)
+        ranked.groupBy("_id").agg(F.collect_list(F.xxhash64(col("_tok"))).alias("tokens"))
     )
-    ta = toks.select(col(id_col).alias("id_a"), col("tokens").alias("tok_a"))
-    tb = toks.select(col(id_col).alias("id_b"), col("tokens").alias("tok_b"))
-    inter = F.size(F.array_intersect("tok_a", "tok_b"))
-    containment = inter.cast("double") / F.least(F.size("tok_a"), F.size("tok_b"))
-    return (
-        cands.join(ta, "id_a")
-        .join(tb, "id_b")
-        .select("id_a", "id_b", containment.alias("containment"))
-        .filter(col("containment") >= threshold)
-    )
+    return verify_pairs(cands, toks, "containment", threshold)
 
 
 def _verified_pairs(
@@ -781,45 +768,56 @@ def _verified_pairs(
     bands: int,
     measure: str,
 ) -> DataFrame:
-    # Fused signature+banding in ONE Python stage (r13): same bytes as
-    # band_keys(minhash_signatures(...)) — see minhash_band_keys — the
-    # wide signature array never crosses Arrow and the 16-way JVM md5
-    # expression chain is gone.
+    # Fused signature+banding in ONE Python stage: the wide signature
+    # array never crosses Arrow (see minhash_band_keys).
     banded = minhash_band_keys(docs, id_col, text_col, k, bands)
     cands = _pairs_from_banded(banded, id_col)
     # Pin verify parallelism: the candidate list is BYTE-small but each
     # row costs an array intersection, and AQE coalesces post-shuffle
     # partitions by bytes — without an explicit width the whole verify
     # stage lands on one core. A numbered repartition is exempt from
-    # AQE coalescing.
-    try:
-        width = int(docs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        # round-robin, NOT by key: a hash repartition on (id_a, id_b) is
-        # optimizer-eliminated as redundant with the distinct's own
-        # partitioning, putting the stage back under AQE coalescing.
+    # AQE coalescing. Round-robin, NOT by key: a hash repartition on
+    # (id_a, id_b) is optimizer-eliminated as redundant with the
+    # distinct's own partitioning, putting the stage back under AQE
+    # coalescing. A non-numeric width (e.g. "auto") keeps the
+    # planner's choice.
+    width = shuffle_width(docs.sparkSession)
+    if width is not None:
         cands = cands.repartition(width)
-    except (TypeError, ValueError):
-        pass  # non-numeric conf (e.g. "auto"): keep the planner's choice
 
-    # Verify on HASHED token sets (xxhash64 → long): set semantics are
-    # identical to string tokens (64-bit collisions are ~1e-16 per
-    # pair), while the shuffle ships 8-byte longs instead of strings
-    # and the per-pair intersection compares longs, not UTF-8.
-    # Tokenize ONCE: toks feeds the ta and tb join branches. Owned
+    # Tokenize ONCE: toks feeds both verify join branches. Owned
     # (persisted, not checkpointed) so a small store broadcasts into
     # both verify joins, while a corpus-scale one gets the shuffle-on-id
     # SMJ it needs (at the sf1 rehearsal the SMJ path sorts the
     # 27M-row candidate list twice just to verify it).
-    toks = own(
-        docs.select(
-            col(id_col),
-            F.array_distinct(
-                F.transform(word_tokens(col(text_col)), lambda x: F.xxhash64(x))
-            ).alias("tokens"),
-        )
-    )
-    ta = toks.select(col(id_col).alias("id_a"), col("tokens").alias("tok_a"))
-    tb = toks.select(col(id_col).alias("id_b"), col("tokens").alias("tok_b"))
+    toks = own(docs.select(col(id_col), token_set(col(text_col)).alias("tokens")))
+    return verify_pairs(cands, toks, measure, threshold)
+
+
+def token_set(text_col):
+    """The verify token set of a text column: distinct xxhash64 longs of
+    its :func:`~llm.corpus.word_tokens`. Set semantics equal those of
+    the string tokens (64-bit collisions are ~1e-16 per pair), while a
+    shuffle ships 8-byte longs instead of strings and an intersection
+    compares longs, not UTF-8. NULL text gives NULL."""
+    return F.array_distinct(F.transform(word_tokens(text_col), lambda x: F.xxhash64(x)))
+
+
+def verify_pairs(
+    cands: DataFrame, toks: DataFrame, measure: str, threshold: float
+) -> DataFrame:
+    """The one exact verify join: candidate pairs (id_a, id_b) joined to
+    a two-column (id, tokens) table on both sides, scored, and kept when
+    the score is ≥ ``threshold``. Returns (id_a, id_b, <measure>).
+
+    ``measure`` is ``"jaccard"`` (|A∩B| / |A∪B|) or ``"containment"``
+    (|A∩B| / min(|A|, |B|)). Token arrays must already be distinct.
+    """
+    if measure not in ("jaccard", "containment"):
+        raise ValueError(f"measure must be 'jaccard' or 'containment', got {measure!r}")
+    tid, tcol = toks.columns
+    ta = toks.select(col(tid).alias("id_a"), col(tcol).alias("tok_a"))
+    tb = toks.select(col(tid).alias("id_b"), col(tcol).alias("tok_b"))
     inter = F.size(F.array_intersect("tok_a", "tok_b"))
     if measure == "containment":
         denom = F.least(F.size("tok_a"), F.size("tok_b"))
@@ -879,9 +877,8 @@ def _simhash64_udf(texts: pd.Series) -> pd.Series:
 def simhash64(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Per-doc 64-bit SimHash fingerprint (vectorized pandas UDF).
 
-    Near-dups have small Hamming distance; pair search buckets on
-    16-bit chunks (any pair within Hamming ≤ 3 of 64 bits shares at
-    least one of 4 exact chunks — the standard pigeonhole trick).
+    Near-dups have small Hamming distance; :func:`simhash_near_dups`
+    finds them with :func:`chunk_hamming_pairs` over 4 16-bit chunks.
     """
     return fan_out(docs).select(col(id_col), _simhash64_udf(col(text_col)).alias("simhash"))
 
@@ -889,32 +886,59 @@ def simhash64(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
 def simhash_near_dups(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", max_hamming: int = 3
 ) -> DataFrame:
-    """SimHash near-dup pairs via 4×16-bit chunk bucketing + Hamming verify."""
-    sigs = simhash64(docs, id_col, text_col)
-    chunks = sigs.select(
+    """SimHash near-dup pairs (id_a, id_b, hamming): 64-bit SimHash
+    fingerprints into :func:`chunk_hamming_pairs` with 4×16-bit chunks,
+    which guarantees recall for ``max_hamming`` ≤ 3 and raises above."""
+    return chunk_hamming_pairs(
+        simhash64(docs, id_col, text_col), id_col, "simhash", chunks=4, max_hamming=max_hamming
+    )
+
+
+def chunk_hamming_pairs(
+    fingerprints: DataFrame, id_col: str, hash_col: str, chunks: int, max_hamming: int
+) -> DataFrame:
+    """The chunk-bucket Hamming join: pairs (id_a, id_b, hamming) with
+    id_a < id_b whose 64-bit ``hash_col`` values differ in at most
+    ``max_hamming`` bits, without comparing all pairs.
+
+    The hash splits into ``chunks`` equal slices of 64 / chunks bits.
+    Two hashes that differ in fewer than ``chunks`` bits cannot differ
+    in every slice (pigeonhole), so a self-join on equal
+    (chunk_idx, chunk) surfaces every qualifying pair, and an exact
+    popcount of the XOR filters the candidates. ``max_hamming`` ≥
+    ``chunks`` would silently lose pairs, so it raises.
+
+    The chunk table is materialized before the self-join: the two join
+    branches are otherwise separate copies of the upstream plan, and
+    the fingerprint kernel (SimHash UDF, image decode + aHash) would
+    run twice. It holds ``chunks`` narrow rows per id — the
+    fingerprint store a production pipeline persists anyway.
+    """
+    width = 64 // chunks
+    if max_hamming >= chunks:
+        raise ValueError(
+            f"{chunks} exact {width}-bit chunks guarantee recall only for "
+            f"max_hamming <= {chunks - 1}; got {max_hamming}"
+        )
+    mask = (1 << width) - 1
+    split = fingerprints.select(
         col(id_col),
-        "simhash",
+        col(hash_col),
         F.explode(
             F.array(
                 *[
                     F.struct(
                         lit(i).alias("chunk_idx"),
-                        F.shiftright(col("simhash"), i * 16).bitwiseAND(lit(0xFFFF)).alias("chunk"),
+                        F.shiftright(col(hash_col), i * width).bitwiseAND(lit(mask)).alias("chunk"),
                     )
-                    for i in range(4)
+                    for i in range(chunks)
                 ]
             )
         ).alias("c"),
-    ).select(col(id_col), "simhash", col("c.chunk_idx"), col("c.chunk"))
-    # Materialize before the self-join: the two join branches are
-    # otherwise separate copies of the whole upstream plan, so the
-    # SimHash UDF would run twice (same idiom and rationale as
-    # lsh_candidate_pairs' banded store). The chunk table is 4 narrow
-    # rows per doc — the signature store an incremental pipeline
-    # persists anyway.
-    chunks = materialize(chunks)
-    a, b = chunks.alias("a"), chunks.alias("b")
-    hamming = F.bit_count(col("a.simhash").bitwiseXOR(col("b.simhash")))
+    ).select(col(id_col), col(hash_col), col("c.chunk_idx"), col("c.chunk"))
+    split = materialize(split)
+    a, b = split.alias("a"), split.alias("b")
+    hamming = F.bit_count(col(f"a.{hash_col}").bitwiseXOR(col(f"b.{hash_col}")))
     return (
         a.join(
             b,
@@ -937,7 +961,6 @@ def incremental_candidate_pairs(
     all_sigs: DataFrame,
     id_col: str = "doc_id",
     bands: int = 16,
-    k: int = 64,
 ) -> DataFrame:
     """Asymmetric LSH candidate join: banded-NEW × banded-(store ∪ new).
 
@@ -948,8 +971,8 @@ def incremental_candidate_pairs(
     emitted as (least, greatest) so a new doc with a lower id than a
     stored doc still pairs (either-side-new contract).
     """
-    banded_new = band_keys(new_sigs, id_col, bands, k=k)
-    banded_all = band_keys(all_sigs, id_col, bands, k=k)
+    banded_new = band_keys(new_sigs, id_col, bands)
+    banded_all = band_keys(all_sigs, id_col, bands)
     new_buckets = banded_new.select("band", "band_hash").distinct()
     touched = banded_all.join(F.broadcast(new_buckets), ["band", "band_hash"], "left_semi")
     n, t = banded_new.alias("n"), touched.alias("t")
@@ -1026,7 +1049,7 @@ def incremental_near_dups(
     else:
         all_sigs = new_sigs
 
-    fresh = incremental_candidate_pairs(new_sigs, all_sigs, id_col, bands, k)
+    fresh = incremental_candidate_pairs(new_sigs, all_sigs, id_col, bands)
 
     sa = all_sigs.select(col(id_col).alias("id_a"), col("signature").alias("sig_a"))
     sb = all_sigs.select(col(id_col).alias("id_b"), col("signature").alias("sig_b"))

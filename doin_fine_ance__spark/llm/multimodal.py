@@ -37,6 +37,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..operators.skew import shuffle_width
+from .dedup import chunk_hamming_pairs
+
 MEDIA_SCHEMA = StructType(
     [
         StructField("media_id", LongType(), False),
@@ -968,13 +971,12 @@ def extract_audio_features(
     if pre_partitioned:
         src = media
     else:
-        try:
-            width = int(
-                media.sparkSession.conf.get("spark.sql.shuffle.partitions")
-            )
-            src = media.repartition(width, "media_id")
-        except (TypeError, ValueError):
-            src = media.repartition("media_id")
+        width = shuffle_width(media.sparkSession)
+        src = (
+            media.repartition(width, "media_id")
+            if width is not None
+            else media.repartition("media_id")
+        )
     return src.mapInPandas(kernel, schema=AUDIO_FEATURES_SCHEMA)
 
 
@@ -1021,66 +1023,15 @@ def image_ahash64(media: DataFrame) -> DataFrame:
 
 
 def image_neardup_pairs(media: DataFrame, max_hamming: int = 6) -> DataFrame:
-    """Perceptual near-duplicate image pairs via aHash + the SimHash
-    pigeonhole machinery, bucketing on EIGHT 8-bit chunks: two 64-bit
-    hashes differing in at most 7 bits cannot differ in all 8 chunks,
-    so any pair within ``max_hamming`` ≤ 7 shares at least one exact
-    chunk and candidates come from 8 chunk-bucket joins — never all
-    pairs — with an exact popcount verify filtering them. (Text
-    SimHash uses 4×16-bit chunks, whose guarantee tops out at
-    Hamming ≤ 3; image aHash wants the looser default 6, which the
-    16-bit chunking silently under-recalled — a 2+2+1+1 bit spread
-    hits every 16-bit chunk but not all eight 8-bit ones.) Raises for
-    ``max_hamming`` > 7 rather than silently dropping recall. Returns
-    (id_a, id_b, hamming). Same scale shape as text SimHash dedup."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import col, lit
-
-    if max_hamming > 7:
-        raise ValueError(
-            "image_neardup_pairs guarantees recall only for max_hamming <= 7 "
-            f"(8 exact 8-bit chunks over a 64-bit hash); got {max_hamming}"
-        )
-    sigs = image_ahash64(media).withColumnRenamed("ahash", "simhash")
-    chunks = sigs.select(
-        col("media_id"),
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        lit(i).alias("chunk_idx"),
-                        F.shiftright(col("simhash"), i * 8)
-                        .bitwiseAND(lit(0xFF))
-                        .alias("chunk"),
-                    )
-                    for i in range(8)
-                ]
-            )
-        ).alias("c"),
-    ).select(col("media_id"), "simhash", col("c.chunk_idx"), col("c.chunk"))
-    # Materialize before the self-join: its two branches are separate
-    # copies of the upstream plan, so the image-decode + aHash kernel
-    # would run twice per invocation (same idiom as the text SimHash
-    # chunk store). 8 narrow rows per image — the fingerprint store a
-    # production pipeline persists anyway; the pixels never recompute.
-    from ..operators.checkpoint import materialize
-
-    chunks = materialize(chunks)
-    a, b = chunks.alias("a"), chunks.alias("b")
-    hamming = F.bit_count(col("a.simhash").bitwiseXOR(col("b.simhash")))
-    return (
-        a.join(
-            b,
-            (col("a.chunk_idx") == col("b.chunk_idx"))
-            & (col("a.chunk") == col("b.chunk"))
-            & (col("a.media_id") < col("b.media_id")),
-        )
-        .select(
-            col("a.media_id").alias("id_a"),
-            col("b.media_id").alias("id_b"),
-            hamming.alias("hamming"),
-        )
-        .filter(col("hamming") <= max_hamming)
-        .distinct()
+    """Perceptual near-duplicate image pairs: aHash fingerprints into
+    :func:`llm.dedup.chunk_hamming_pairs`, the same chunk-bucket
+    Hamming join text SimHash uses, with EIGHT 8-bit chunks. Two 64-bit
+    hashes that differ in at most 7 bits agree on at least one whole
+    chunk, so every pair within ``max_hamming`` ≤ 7 is a candidate and
+    an exact popcount verify filters them. Text SimHash's 4×16-bit
+    chunks only reach Hamming ≤ 3; image aHash wants the looser
+    default 6. ``max_hamming`` ≥ 8 raises instead of silently losing
+    recall. Returns (id_a, id_b, hamming)."""
+    return chunk_hamming_pairs(
+        image_ahash64(media), "media_id", "ahash", chunks=8, max_hamming=max_hamming
     )

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast, col, lit
 
 from ..operators.checkpoint import materialize
+from ..operators.skew import shuffle_width
 
 
 def global_running_sum(
@@ -54,10 +55,7 @@ def global_running_sum(
     """
     spark = df.sparkSession
     if num_partitions is None:
-        try:
-            num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        except (TypeError, ValueError):
-            num_partitions = 32
+        num_partitions = shuffle_width(spark) or 32
     ranged = df.repartitionByRange(num_partitions, *order_cols).withColumn(
         "_pid", F.spark_partition_id()
     )

@@ -38,6 +38,16 @@ def fan_out(df: DataFrame) -> DataFrame:
     return df.repartition(target) if n < target else df
 
 
+def shuffle_width(spark) -> int | None:
+    """The session's ``spark.sql.shuffle.partitions`` as an int, or None
+    when the setting is not a number (e.g. ``"auto"``) and the planner
+    should keep its own choice. The one place the engine reads it."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except (TypeError, ValueError):
+        return None
+
+
 def salted_join(
     big: DataFrame,
     small: DataFrame,

@@ -29,12 +29,16 @@ from ..llm.dedup import (
     containment_prefix_pairs,
     default_cell_cap,
     exact_collapse,
+    incremental_candidate_pairs,
     minhash_containment_pairs,
     minhash_near_dup_star_edges,
     minhash_near_dups,
+    minhash_signatures,
     simhash64,
     simhash_near_dups,
+    token_set,
     verified_forest_edges,
+    verify_pairs,
 )
 from ..operators.checkpoint import materialize, ordered
 from ..operators.skew import fan_out
@@ -944,26 +948,12 @@ def d_incremental_neardups(spark: SparkSession, sf_dir: str) -> DataFrame:
     Proves the either-side-new contract (a new doc with a LOWER id
     than a stored doc still pairs) against SQL, not just pytest.
     """
-    from ..llm.dedup import incremental_candidate_pairs, minhash_signatures
-
     d = load_table(spark, sf_dir, "documents", ["doc_id", "text"])
     sigs_all = minhash_signatures(d)
     sigs_new = minhash_signatures(d.filter(col("doc_id") % 10 == 0))
     cands = incremental_candidate_pairs(sigs_new, sigs_all)
-    toks = d.select(
-        col("doc_id"),
-        F.array_distinct(word_tokens(col("text"))).alias("tokens"),
-    )
-    ta = toks.select(col("doc_id").alias("id_a"), col("tokens").alias("tok_a"))
-    tb = toks.select(col("doc_id").alias("id_b"), col("tokens").alias("tok_b"))
-    inter = F.size(F.array_intersect("tok_a", "tok_b"))
-    union = F.size("tok_a") + F.size("tok_b") - inter
-    return (
-        cands.join(ta, "id_a")
-        .join(tb, "id_b")
-        .select("id_a", "id_b", (inter.cast("double") / union).alias("jaccard"))
-        .filter(col("jaccard") >= 0.7)
-    )
+    toks = d.select(col("doc_id"), token_set(col("text")).alias("tokens"))
+    return verify_pairs(cands, toks, "jaccard", 0.7)
 
 
 @query(

@@ -46,7 +46,11 @@ def test_fused_band_keys_equal_stored_signature_banding(spark, k, bands):
     """minhash_band_keys (the fused banding _verified_pairs and
     verified_forest_edges use) must emit exactly the bytes of
     band_keys over stored minhash_signatures (incremental dedup's
-    path), including a shape where k % bands != 0."""
+    path), including a shape where k % bands != 0. Both run the same
+    band-hash kernel, so both are also checked against a reference
+    computed here with hashlib over the collected signature rows."""
+    import hashlib
+
     from doin_fine_ance__spark.llm.dedup import band_keys, minhash_band_keys
 
     extra = spark.createDataFrame(
@@ -59,10 +63,46 @@ def test_fused_band_keys_equal_stored_signature_banding(spark, k, bands):
     fused = {tuple(r) for r in minhash_band_keys(docs, k=k, bands=bands).collect()}
     stored = {
         tuple(r)
-        for r in band_keys(minhash_signatures(docs, k=k), bands=bands, k=k).collect()
+        for r in band_keys(minhash_signatures(docs, k=k), bands=bands).collect()
     }
     assert fused == stored
     assert len(fused) == 45 * bands
+    r = k // bands
+    reference = {
+        (row.doc_id, bi, hashlib.md5(band.encode()).hexdigest())
+        for row in minhash_signatures(docs, k=k).collect()
+        for bi in range(bands)
+        for band in ["|".join(row.signature[bi * r : (bi + 1) * r])]
+    }
+    assert fused == reference
+
+
+def test_band_keys_plan_runs_no_job(spark):
+    """Building band_keys over a stored signature table schedules no
+    Spark job: r comes from each row inside the banding stage, not
+    from a probe of the first signature at plan-construction time."""
+    from doin_fine_ance__spark.llm.dedup import band_keys
+
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma delta"), (2, "alpha beta gamma delta epsilon")],
+        "doc_id long, text string",
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("band_keys_plan", "build band_keys", False)
+    try:
+        band_keys(minhash_signatures(docs))
+        jobs = len(sc.statusTracker().getJobIdsForGroup("band_keys_plan"))
+    finally:
+        sc.setJobGroup(None, None, False)
+    assert jobs == 0
+
+
+def test_simhash_near_dups_refuses_unrecallable_max_hamming(spark):
+    """Four 16-bit chunks guarantee recall only for Hamming <= 3; a
+    wider max_hamming raises instead of silently dropping pairs."""
+    docs = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="max_hamming <= 3"):
+        simhash_near_dups(docs, max_hamming=4)
 
 
 def test_minhash_lsh_finds_planted_dups(spark):

@@ -173,7 +173,7 @@ def test_lsh_candidates_stay_subquadratic_under_clique(spark):
         .alias("text"),
     )
     sigs = minhash_signatures(docs, k=64)
-    cands = lsh_candidate_pairs(sigs, bands=16, k=64)
+    cands = lsh_candidate_pairs(sigs, bands=16)
     n_cand = cands.count()
     clique_pairs = clique * (clique - 1) // 2
     all_pairs = n * (n - 1) // 2

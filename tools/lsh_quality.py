@@ -46,25 +46,22 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import col
 
-from doin_fine_ance__spark.llm.corpus import word_tokens
 from doin_fine_ance__spark.llm.dedup import (
     lsh_candidate_pairs,
     minhash_near_dups,
     minhash_signatures,
+    token_set,
 )
 from doin_fine_ance__spark.operators.checkpoint import release_owned
+from doin_fine_ance__spark.operators.skew import shuffle_width
 from doin_fine_ance__spark.sources.testdata import load_table
 
 
 def _token_sets(docs: DataFrame) -> DataFrame:
-    """EXACTLY `_verified_pairs`' token expression (hashed whitespace
-    tokens) — the ground truth must share the pipeline's measure."""
-    return docs.select(
-        col("doc_id"),
-        F.array_distinct(
-            F.transform(word_tokens(col("text")), lambda x: F.xxhash64(x))
-        ).alias("tokens"),
-    )
+    """`_verified_pairs`' own token expression (`token_set`: hashed
+    whitespace tokens) — the ground truth must share the pipeline's
+    measure."""
+    return docs.select(col("doc_id"), token_set(col("text")).alias("tokens"))
 
 
 def _shingle_sets(docs: DataFrame, n: int = 5) -> DataFrame:
@@ -94,7 +91,7 @@ def _all_pairs_jaccard(sets_df: DataFrame, set_col: str, out_col: str) -> DataFr
     pairs = a.join(F.broadcast(b), col("id_a") < col("id_b"))
     # spread the quadratic verify over every core (the broadcast
     # nest-loop join inherits the scan's few input partitions)
-    width = int(sets_df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    width = shuffle_width(sets_df.sparkSession) or 32
     return pairs.repartition(width).select(
         "id_a", "id_b", (inter.cast("double") / union).alias(out_col)
     )
@@ -140,7 +137,7 @@ def measure(
     # misses.)
     sh_j = _all_pairs_jaccard(_shingle_sets(docs), "sh", "s").persist()
     cands = lsh_candidate_pairs(
-        minhash_signatures(docs, k=k), bands=bands, k=k
+        minhash_signatures(docs, k=k), bands=bands
     ).withColumn("is_cand", F.lit(1))
     sh_truth = sh_j.filter(col("s") >= threshold)
     n_sh_truth = sh_truth.count()

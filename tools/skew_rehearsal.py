@@ -110,7 +110,7 @@ def lsh_dedup_stats(spark, sf_dir: str, repeat: int) -> dict:
     docs = load_table(spark, sf_dir, "documents", ["doc_id", "text"])
     n_docs = docs.count()
     sigs = minhash_signatures(docs, k=64)
-    n_cands = lsh_candidate_pairs(sigs, bands=16, k=64).count()
+    n_cands = lsh_candidate_pairs(sigs, bands=16).count()
 
     def run():
         minhash_near_dups(

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 
 from ..operators.checkpoint import materialize
+from ..session import local_frame
 from .corpus import word_tokens
 
 SCALE = 1_000_000
@@ -120,7 +121,7 @@ def bm25_topk(
     )
     if avgdl is None:  # empty corpus / all-empty documents
         raise ValueError("corpus has no tokens (empty or all-empty documents)")
-    qt = spark.createDataFrame([(t,) for t in terms], "_term string")
+    qt = local_frame(spark, [(t,) for t in terms], "_term string")
     df_tab = (
         dt.join(F.broadcast(qt), "_term", "left_semi")
         .groupBy("_term")
@@ -219,7 +220,7 @@ def bm25_topk_fp(
     # scored branch each re-ran the tokenize + tf + dl chain.
     dt = materialize(_doc_terms(docs, id_col, text_col))
     n_docs = docs.count()
-    qt = spark.createDataFrame([(t,) for t in terms], "_term string")
+    qt = local_frame(spark, [(t,) for t in terms], "_term string")
     trow = (
         dt.groupBy("_doc")
         .agg(F.first("_dl").alias("_dl"))

@@ -30,6 +30,7 @@ from pyspark.sql.functions import broadcast, col, lit
 
 from ..operators.checkpoint import materialize
 from ..operators.skew import shuffle_width
+from ..session import local_frame
 
 
 def global_running_sum(
@@ -79,7 +80,7 @@ def global_running_sum(
         acc += by_pid[pid]
     if not offsets:
         return df.withColumn(out_col, lit(0).cast("bigint")).limit(0)
-    off_df = spark.createDataFrame(offsets, ["_pid", "_offset"])
+    off_df = local_frame(spark, offsets, "_pid long, _offset long")
     return (
         local.join(broadcast(off_df), "_pid")
         .withColumn(out_col, (col("_local_cum") + col("_offset")).cast("bigint"))

@@ -29,6 +29,7 @@ from pyspark.sql.functions import col, lit
 
 from ..operators.upsert import atomic_overwrite
 from ..schemas import DEFAULT_CONFIDENCE_THRESHOLD, MODEL_REGISTRY
+from ..session import local_frame
 
 
 def load_config(config_paths: list[str] | None = None) -> dict:
@@ -90,7 +91,7 @@ def record_model(
         reason=reason,
         message=message,
     )
-    new_row = spark.createDataFrame([row], schema=MODEL_REGISTRY)
+    new_row = local_frame(spark, [row], MODEL_REGISTRY)
 
     if os.path.exists(registry_path):
         current = spark.read.parquet(registry_path)

@@ -40,7 +40,9 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from ..session import local_frame
 from .upsert import table_write_lock
 
 
@@ -154,8 +156,6 @@ class SnapshotTable:
             # union even when the previous version listed no files (a
             # committed EMPTY table still has a recorded schema)
             if prev is not None and prev.get("schema"):
-                from pyspark.sql.types import StructType
-
                 prev_st = StructType.fromJson(json.loads(prev["schema"]))
                 by_name = {f.name: f for f in schema.fields}
                 fields = [by_name.pop(f.name, f) for f in prev_st.fields]
@@ -246,10 +246,8 @@ class SnapshotTable:
                 # infer a schema from — replay the manifest's recorded
                 # schema, same as the flat branch below (ADVICE r7)
                 if m.get("schema"):
-                    from pyspark.sql.types import StructType
-
-                    return spark.createDataFrame(
-                        [], StructType.fromJson(json.loads(m["schema"]))
+                    return local_frame(
+                        spark, [], StructType.fromJson(json.loads(m["schema"]))
                     )
                 raise SnapshotCorruptionError(
                     f"manifest v{m['version']} of {self.root} has an empty "
@@ -263,10 +261,8 @@ class SnapshotTable:
             # table's schema, so replay it (ADVICE r6). Only manifests
             # predating schema recording are corrupt here.
             if m.get("schema"):
-                from pyspark.sql.types import StructType
-
-                return spark.createDataFrame(
-                    [], StructType.fromJson(json.loads(m["schema"]))
+                return local_frame(
+                    spark, [], StructType.fromJson(json.loads(m["schema"]))
                 )
             raise SnapshotCorruptionError(
                 f"manifest v{m['version']} of {self.root} lists no files "

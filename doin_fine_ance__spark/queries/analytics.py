@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 
+from ..session import local_frame
 from ..sources.testdata import load_table
 from . import query
 
@@ -414,7 +415,8 @@ def j_salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.skew import salted_join
 
     li = load_table(spark, sf_dir, "lineitem", ["l_returnflag", "l_quantity"])
-    dim = spark.createDataFrame(
+    dim = local_frame(
+        spark,
         [("A", "accepted"), ("N", "none"), ("R", "returned")],
         "flag string, flag_label string",
     )
@@ -553,7 +555,8 @@ def j_range_price_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.range_join import range_join
 
     li = load_table(spark, sf_dir, "lineitem", ["l_extendedprice"])
-    bands = spark.createDataFrame(
+    bands = local_frame(
+        spark,
         [
             ("low", 0.0, 20000.0),
             ("mid", 15000.0, 45000.0),

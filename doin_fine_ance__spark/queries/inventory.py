@@ -42,6 +42,7 @@ from ..functions.pg import (
 )
 from ..operators.dedup import latest_wins, reconnection_dedup, rownum_disambiguate
 from ..operators.pagination import paginate
+from ..session import local_frame
 from ..sources.testdata import load_table
 from . import query
 
@@ -519,7 +520,8 @@ def p4_exclusion_patterns_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     1000-executor cluster wants a tiny pattern table handled.
     """
     d = load_table(spark, sf_dir, "documents", ["doc_id", "text", "lang", "source"])
-    patterns = spark.createDataFrame(
+    patterns = local_frame(
+        spark,
         [("%lorem%",), ("%IPSUM DOLOR%",), ("%consectetur%",)], "pattern string"
     )
     joined = d.join(
@@ -570,7 +572,8 @@ def j1_mapping_join_disjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
     no shuffle of the fact side.
     """
     c = load_table(spark, sf_dir, "customer", ["c_custkey", "c_name", "c_nationkey", "c_mktsegment"])
-    mapping = spark.createDataFrame(
+    mapping = local_frame(
+        spark,
         [
             ("BUILDING", None, "Construction"),
             ("AUTOMOBILE", "", "Cars"),

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 
 from ..schemas import CATEGORIES, DEFAULT_CATEGORIES
+from ..session import local_frame
 
 
 class ReservedCategoryError(ValueError):
@@ -26,8 +27,8 @@ def ensure_default_categories(
 ) -> DataFrame:
     """Insert missing defaults (category_service.py:44-50)."""
     now = now or dt.datetime.utcnow()
-    defaults = spark.createDataFrame(
-        [(n, True, True, now) for n in DEFAULT_CATEGORIES], schema=CATEGORIES
+    defaults = local_frame(
+        spark, [(n, True, True, now) for n in DEFAULT_CATEGORIES], CATEGORIES
     )
     if catalog is None:
         return defaults
@@ -55,8 +56,8 @@ def create_category(
             "is_active",
             F.when(col("name") == cleaned, lit(True)).otherwise(col("is_active")),
         )
-    new_row = spark.createDataFrame(
-        [(cleaned, cleaned in DEFAULT_CATEGORIES, True, now)], schema=CATEGORIES
+    new_row = local_frame(
+        spark, [(cleaned, cleaned in DEFAULT_CATEGORIES, True, now)], CATEGORIES
     )
     return catalog.unionByName(new_row)
 

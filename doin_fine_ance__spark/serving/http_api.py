@@ -105,12 +105,13 @@ class ServingApp:
     def _user_categories(self):
         import os
 
+        from ..schemas import USER_CATEGORIES
+        from ..session import local_frame
+
         path = self.wh.path("public", "user_categories")
         if os.path.exists(path):
-            return self.spark.read.parquet(path)
-        from ..schemas import USER_CATEGORIES
-
-        return self.spark.createDataFrame([], schema=USER_CATEGORIES)
+            return self.spark.read.schema(USER_CATEGORIES).parquet(path)
+        return local_frame(self.spark, [], USER_CATEGORIES)
 
     def invalidate(self):
         with self._lock:

@@ -8,12 +8,14 @@ lines 14-35) + a filter/sort/pagination compiler
 
 Serving reads hit *materialized* marts (the reference re-runs a
 5-view-deep chain in Postgres per request — its acknowledged debt,
-TODO.md:12). Unlike the reference's separate COUNT(*) + page queries,
-count and page run as ONE Spark job via ``collect_page_with_total``
-(see ``get_transactions_filtered``): a window ``count(*) OVER ()``
-rides the page scan, and an ``__rn == 1`` sentinel row carries the
-total even when the requested page is past the end — one job per page
-request in every case.
+TODO.md:12). ``get_transactions_filtered`` runs the reference's
+COUNT(*) + page as two actions by default, and that is the route
+``ServingApp.list_transactions`` takes: every list request pays a
+``count`` job before the page is collected. ``single_job=True`` serves
+both through ``collect_page_with_total`` instead: a window
+``count(*) OVER ()`` rides the page scan, and an ``__rn == 1``
+sentinel row carries the total even when the requested page is past
+the end, so such a request costs one job.
 """
 
 from __future__ import annotations
@@ -28,6 +30,7 @@ from pyspark.sql.functions import col, lit
 from ..functions.pg import ilike
 from ..operators.pagination import collect_page_with_total, paginate
 from ..schemas import LOW_CONFIDENCE_THRESHOLD, USER_CATEGORIES
+from ..session import local_frame
 
 # transaction_service.py:196-199 — sort allow-list.
 _ALLOWED_SORTS = {"transacted_date", "prediction_confidence"}
@@ -177,7 +180,7 @@ def bulk_categorize(
         )
         for a in assignments
     ]
-    update = spark.createDataFrame(rows, schema=USER_CATEGORIES)
+    update = local_frame(spark, rows, USER_CATEGORIES)
     # brief lock-wait: concurrent HTTP override writes serialize like
     # Postgres row locks instead of failing the request
     merge_keyed(spark, user_categories_path, update, "transaction_id", timeout=10.0)
@@ -221,7 +224,7 @@ def categorize_transaction(
 
     existing = None
     if os.path.exists(user_categories_path):
-        cur = spark.read.parquet(user_categories_path)
+        cur = spark.read.schema(USER_CATEGORIES).parquet(user_categories_path)
         found = cur.filter(col("transaction_id") == transaction_id).collect()
         existing = found[0] if found else None
 
@@ -245,7 +248,7 @@ def categorize_transaction(
         updated_by,
         now,
     )
-    update = spark.createDataFrame([row], schema=USER_CATEGORIES)
+    update = local_frame(spark, [row], USER_CATEGORIES)
     # brief lock-wait: concurrent HTTP override writes serialize like
     # Postgres row locks instead of failing the request
     merge_keyed(spark, user_categories_path, update, "transaction_id", timeout=10.0)

@@ -8,13 +8,20 @@ The engine runs under two session regimes:
    rebuild those, so every entry point calls
    :func:`doin_fine_ance__spark.compat.ensure_compat` which applies the
    same semantics via runtime-settable confs.
+
+:func:`local_frame` is the one way the engine turns rows held in Python
+into a DataFrame, under either regime.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from .compat import ensure_compat
 
@@ -98,3 +105,41 @@ def get_spark(
     spark = builder.getOrCreate()
     ensure_compat(spark)
     return spark
+
+
+def local_frame(
+    spark: SparkSession, rows: Sequence[Sequence], schema: StructType | str
+) -> DataFrame:
+    """DataFrame over Python-side ``rows`` (tuples in ``schema`` field
+    order), built as a JVM local relation.
+
+    ``spark.createDataFrame(list, schema)`` pickles the rows into a
+    ``parallelize`` RDD, so every action over the frame runs a Spark
+    stage whose tasks go through Python workers. Handing Spark a
+    ``pyarrow.Table`` instead yields a ``LocalRelation``: building and
+    collecting it runs no job, and the optimizer has its size, so a
+    join against it can broadcast. This holds whatever
+    ``spark.sql.execution.arrow.pyspark.enabled`` says.
+
+    ``schema`` is a ``StructType`` or a DDL string. Values are checked
+    against it by Arrow: a row of the wrong width, a wrong type or a
+    null in a non-nullable field raises, as the list path does.
+
+    Timestamp rule: a naive ``datetime`` in a ``TimestampType`` field is
+    read as UTC (the engine's ``utcnow()`` convention), independent of
+    the session and process time zones. The list path read it in the
+    Python process's local zone; the two agree only where that zone is
+    UTC. Aware datetimes keep their instant on both paths.
+    """
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    width = len(arrow_schema)
+    if any(len(r) != width for r in rows):
+        raise ValueError(f"every row must have the schema's {width} fields")
+    columns = zip(*rows) if rows else [()] * width
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema=schema)

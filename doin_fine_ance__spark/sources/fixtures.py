@@ -17,6 +17,7 @@ from decimal import Decimal
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import schemas
+from ..session import local_frame
 
 
 def _d(s: str) -> Decimal:
@@ -98,7 +99,7 @@ def raw_simplefin(spark: SparkSession) -> DataFrame:
         row("TRN-050", "ACT-E", "Checking", "-9.99", "NETFLIX.COM",
             "2024-02-19", "2024-02-20T06:00:00"),
     ]
-    return spark.createDataFrame(rows, schema=schemas.RAW_SIMPLEFIN)
+    return local_frame(spark, rows, schemas.RAW_SIMPLEFIN)
 
 
 def seed_account_mapping_simplefin(spark: SparkSession) -> DataFrame:
@@ -109,12 +110,12 @@ def seed_account_mapping_simplefin(spark: SparkSession) -> DataFrame:
         ("Savings Account", "", "Rainy Day Savings"),
         ("Credit Card", None, "Blue Cash Preferred"),
     ]
-    return spark.createDataFrame(rows, schema=schemas.SEED_ACCOUNT_MAPPING_SIMPLEFIN)
+    return local_frame(spark, rows, schemas.SEED_ACCOUNT_MAPPING_SIMPLEFIN)
 
 
 def seed_transaction_exclusions(spark: SparkSession) -> DataFrame:
     rows = [("%Transfer%",), ("%AUTOPAY PAYMENT%",), ("%Payment Thank You%",)]
-    return spark.createDataFrame(rows, schema=schemas.SEED_TRANSACTION_EXCLUSIONS)
+    return local_frame(spark, rows, schemas.SEED_TRANSACTION_EXCLUSIONS)
 
 
 def raw_historic(spark: SparkSession) -> DataFrame:
@@ -138,7 +139,7 @@ def raw_historic(spark: SparkSession) -> DataFrame:
         # NULL transaction_date
         (None, "UNDATED ROW", _d("-1.00"), "Old Checking", None, None, None, None),
     ]
-    return spark.createDataFrame(rows, schema=schemas.RAW_HISTORIC)
+    return local_frame(spark, rows, schemas.RAW_HISTORIC)
 
 
 def seed_account_mapping_historic(spark: SparkSession) -> DataFrame:
@@ -147,7 +148,7 @@ def seed_account_mapping_historic(spark: SparkSession) -> DataFrame:
         ("Shared Account", "Checking", "Joint Checking", "Sam"),
         ("Shared Account", "Savings", "Joint Savings", "Alex"),
     ]
-    return spark.createDataFrame(rows, schema=schemas.SEED_ACCOUNT_MAPPING_HISTORIC)
+    return local_frame(spark, rows, schemas.SEED_ACCOUNT_MAPPING_HISTORIC)
 
 
 def user_categories(spark: SparkSession) -> DataFrame:
@@ -160,7 +161,7 @@ def user_categories(spark: SparkSession) -> DataFrame:
         ("TRN-033", "Fun!™", None, "vacation", True, True, "alex", ts),
         ("TRN-999", "Miscellaneous", None, "orphan id", True, False, "sam", ts),
     ]
-    return spark.createDataFrame(rows, schema=schemas.USER_CATEGORIES)
+    return local_frame(spark, rows, schemas.USER_CATEGORIES)
 
 
 def predicted_transactions(spark: SparkSession) -> DataFrame:
@@ -174,7 +175,7 @@ def predicted_transactions(spark: SparkSession) -> DataFrame:
         ("TRN-011", "Fees & Charges", Decimal("0.200000"), "20240221_080000", t2),
         ("TRN-050", "Shopping", Decimal("0.450000"), "20240221_080000", t2),
     ]
-    return spark.createDataFrame(rows, schema=schemas.PREDICTIONS)
+    return local_frame(spark, rows, schemas.PREDICTIONS)
 
 
 def write_warehouse_inputs(spark: SparkSession, root: str) -> None:

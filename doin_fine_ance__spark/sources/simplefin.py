@@ -25,6 +25,7 @@ from decimal import Decimal
 from pyspark.sql import DataFrame, SparkSession
 
 from ..schemas import RAW_BALANCES, RAW_SIMPLEFIN
+from ..session import local_frame
 
 MAX_DAYS_PER_REQUEST = 45  # simplefin_api.py:120 (SimpleFIN API cap)
 LOOKBACK_DAYS = 200  # simplefin_api.py:115 (no account supports more)
@@ -209,7 +210,7 @@ def extract_simplefin(
         rows = balances_from_accounts_payload(
             _fetch(first_start, first_end), now, seen_accounts
         )
-        return spark.createDataFrame(rows, schema=RAW_BALANCES)
+        return local_frame(spark, rows, RAW_BALANCES)
 
     seen: set[str] = set()
     rows = []
@@ -217,7 +218,7 @@ def extract_simplefin(
         rows.extend(rows_from_accounts_payload(_fetch(start, end), now, seen))
     if not include_pending:
         rows = [r for r in rows if not r[11]]  # RAW_SIMPLEFIN 'pending' slot
-    return spark.createDataFrame(rows, schema=RAW_SIMPLEFIN)
+    return local_frame(spark, rows, RAW_SIMPLEFIN)
 
 
 def distributed_extract(
@@ -238,7 +239,8 @@ def distributed_extract(
 
     now = now or dt.datetime.utcnow()
     windows = request_windows(now, lookback_days)
-    grid = spark.createDataFrame(
+    grid = local_frame(
+        spark,
         [
             (url, int(s.timestamp()), int(e.timestamp()))
             for url in account_urls

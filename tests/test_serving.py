@@ -20,6 +20,7 @@ from doin_fine_ance__spark.serving import (
     transaction_overlay,
 )
 from doin_fine_ance__spark.serving.categories import ensure_default_categories
+from doin_fine_ance__spark.serving.transactions import bulk_categorize
 from doin_fine_ance__spark.sources import fixtures as FX
 
 
@@ -110,6 +111,36 @@ def test_categorize_upsert_roundtrip(spark, wh):
     assert row.master_category == "Fun!™"
     assert row.notes == "actually fun"
     assert row.validated  # preserved from the first write
+
+
+def _jobs(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group, False)
+    try:
+        fn()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setJobGroup(None, None, False)
+
+
+def test_override_writes_job_counts(spark, tmp_path):
+    """Override writes build their update side as a local relation and
+    read the table with its declared schema: no Python-worker stage per
+    read of the update, and no schema-inference job on the existing-row
+    read. The list-built update cost 7 and 5 jobs."""
+    path = str(tmp_path / "user_categories")
+    FX.user_categories(spark).write.parquet(path)
+    single = _jobs(spark, "categorize_existing", lambda: categorize_transaction(
+        spark, path, "TRN-030", "Groceries", notes="job pin",
+        now=dt.datetime(2024, 3, 12, 10, 0, 0),
+    ))
+    bulk = _jobs(spark, "bulk_categorize", lambda: bulk_categorize(
+        spark, path,
+        [{"transaction_id": "TRN-031", "master_category": "Gas"},
+         {"transaction_id": "TRN-NEW", "master_category": "Gas"}],
+        now=dt.datetime(2024, 3, 12, 11, 0, 0),
+    ))
+    assert (single, bulk) == (4, 3)
 
 
 def test_validated_listing_and_filters(spark, wh):

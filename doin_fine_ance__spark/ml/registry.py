@@ -12,8 +12,11 @@ lookup classifier_predict.py:33-84):
   file_path → None (the reference's third fallback is a legacy pickle
   path, meaningless here).
 
-Single-writer (Dagster serializes training runs) so read-modify-swap
-is race-free, as in the reference.
+The registry is a snapshot table; a record reads the current version
+and commits the flipped-and-extended one under the table lock, so two
+concurrent records both land: the second waits for the lock (up to
+10 s, then raises ``ConcurrentWriteError``) and its base includes the
+first.
 """
 
 from __future__ import annotations
@@ -27,7 +30,7 @@ from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 
-from ..operators.upsert import atomic_overwrite
+from ..operators.snapshot import SnapshotTable
 from ..schemas import DEFAULT_CONFIDENCE_THRESHOLD, MODEL_REGISTRY
 from ..session import local_frame
 
@@ -93,23 +96,24 @@ def record_model(
     )
     new_row = local_frame(spark, [row], MODEL_REGISTRY)
 
-    if os.path.exists(registry_path):
-        current = spark.read.parquet(registry_path)
+    def recorded(current: DataFrame | None) -> DataFrame:
+        if current is None:
+            return new_row
         current = current.withColumn("is_latest", lit(False))
         if status == "trained":
             # a newly trained model takes over activation
             current = current.withColumn("is_active", lit(False))
-        merged = current.unionByName(new_row)
-    else:
-        merged = new_row
-    atomic_overwrite(merged, registry_path)
+        return current.unionByName(new_row)
+
+    SnapshotTable(registry_path).commit_rewrite(spark, recorded, timeout=10.0)
 
 
 def active_model(spark: SparkSession, registry_path: str) -> Row | None:
     """Active-model lookup with fallback (classifier_predict.py:33-60)."""
-    if not os.path.exists(registry_path):
+    table = SnapshotTable(registry_path)
+    if not table.exists():
         return None
-    reg = spark.read.parquet(registry_path)
+    reg = table.read(spark)
     active = (
         reg.filter((col("is_active") == True) & (col("status") == "trained"))  # noqa: E712
         .orderBy(col("training_timestamp").desc())

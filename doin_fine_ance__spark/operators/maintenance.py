@@ -33,6 +33,9 @@ from pyspark.sql import SparkSession
 DEFAULT_SCHEDULE = {"enabled": False, "cron": "0 2 * * *", "retention_days": 7}
 SCHEDULE_FILENAME = "schedule.json"
 SNAPSHOT_PREFIX = "snapshot_"
+# Output file size that compaction and keyed merges aim for: the
+# scan-efficient shape Delta's OPTIMIZE targets.
+TARGET_FILE_BYTES = 128 * 1024 * 1024
 
 
 class BackupError(RuntimeError):
@@ -139,6 +142,11 @@ def apply_retention(backup_dir: str, retention_days: int) -> list[str]:
 # ---------------------------------------------------------------------------
 
 
+def output_files(total_bytes: int, target_file_bytes: int = TARGET_FILE_BYTES) -> int:
+    """How many files ``total_bytes`` of parquet are rewritten into."""
+    return max(1, math.ceil(total_bytes / target_file_bytes))
+
+
 def _parquet_files(d: str) -> list[str]:
     return [f for f in os.listdir(d) if f.endswith(".parquet")]
 
@@ -146,7 +154,7 @@ def _parquet_files(d: str) -> list[str]:
 def compact_table(
     spark: SparkSession,
     path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
+    target_file_bytes: int = TARGET_FILE_BYTES,
     min_files: int = 2,
     zorder: list[str] | None = None,
 ) -> dict[str, int]:
@@ -186,7 +194,7 @@ def compact_table(
         if len(frags) <= min_files:
             continue
         total = sum(os.path.getsize(os.path.join(d, f)) for f in frags)
-        n_out = max(1, math.ceil(total / target_file_bytes))
+        n_out = output_files(total, target_file_bytes)
         df = spark.read.parquet(d)
         if zorder:
             from .zorder import zorder_key
@@ -236,7 +244,7 @@ def compact_table_versioned(
     spark: SparkSession,
     src: str,
     dst: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
+    target_file_bytes: int = TARGET_FILE_BYTES,
     min_files: int = 2,
     zorder: list[str] | None = None,
 ) -> dict[str, int]:
@@ -275,7 +283,7 @@ def compact_table_versioned(
                     shutil.copy2(os.path.join(cur, f), os.path.join(out_dir, f))
             continue
         total = sum(os.path.getsize(os.path.join(cur, f)) for f in frags)
-        n_out = max(1, math.ceil(total / target_file_bytes))
+        n_out = output_files(total, target_file_bytes)
         df = spark.read.parquet(cur)
         if zorder:
             from .zorder import zorder_key

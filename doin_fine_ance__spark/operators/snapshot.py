@@ -1,33 +1,32 @@
-"""Minimal versioned-manifest table: snapshot-isolated reads on parquet.
+"""Versioned-manifest tables: the one layout of every table the engine writes.
 
-`operators/upsert.py`'s stage-and-swap gives writers atomicity on
-filesystems where ``os.rename`` of a directory is atomic — but a
-reader that resolved the table path just before a swap can still list
-the directory mid-rename on filesystems without atomic directory
-moves (object stores), and a long-running reader job whose tasks
-re-list input files mid-query could see the NEW table's files under
-the same path. The reference never faces this because Postgres MVCC
-versions every read (ui/backend/services/transaction_service.py
-leans on it); Delta/Iceberg solve it with a transaction log. This
-module is the smallest honest version of that log (VERDICT r3
-next-round #7):
+The reference never tears a read because Postgres MVCC versions every
+read (ui/backend/services/transaction_service.py leans on it while the
+UI writes overrides); Delta/Iceberg get the same from a transaction
+log. This module is the smallest honest version of that log:
 
 - every commit writes data files into a FRESH immutable directory
   (``data/<uuid>``), then a manifest ``_manifests/v{N}.json`` listing
-  exactly those files, then atomically renames ``_latest.tmp`` →
-  ``_latest`` to publish N;
+  exactly those files and the frame's schema, then atomically renames
+  ``_latest.tmp`` → ``_latest`` to publish N;
 - readers resolve ``_latest`` → manifest → explicit file list and
-  hand that list to ``spark.read.parquet(*files)`` — Spark pins those
-  concrete files for the whole query, so a commit that lands mid-read
-  changes nothing the reader can observe. Old versions stay readable
-  (time travel) until ``vacuum``.
+  hand that list, with the recorded schema, to
+  ``spark.read.schema(S).parquet(*files)``: no schema-inference job,
+  and Spark pins those concrete files for the whole query, so a commit
+  that lands mid-read changes nothing the reader can observe. Old
+  versions stay readable (time travel) until retention or ``vacuum``.
 
-Commits take the same ``table_write_lock`` as the swap path, so the
-two mechanisms compose; single-writer, many-snapshot-readers. At
-100 TB you would use Delta/Iceberg outright — the point here is that
-the engine's write discipline already matches that model, and the
-concurrent read/write test in tests/test_snapshot_table.py proves a
-reader can never see a half-committed table.
+A root that holds plain parquet and no manifest (an external input such
+as the ``public`` loads) reads as plain parquet. The first commit to
+one adopts it: the plain files are the base of that commit, which
+writes ``data/<uuid>`` and publishes v1, and retention deletes the
+plain files once v1 is old enough, like any superseded version.
+
+Commits hold ``operators.upsert.table_write_lock``: single writer,
+many snapshot readers. At 100 TB you would use Delta/Iceberg outright;
+the point here is that the engine's write discipline already matches
+that model, and tests/test_snapshot_table.py proves a reader can never
+see a half-committed table.
 """
 
 from __future__ import annotations
@@ -37,6 +36,7 @@ import os
 import shutil
 import time
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -44,6 +44,20 @@ from pyspark.sql.types import StructType
 
 from ..session import local_frame
 from .upsert import table_write_lock
+
+# A reader pins a version's files when it builds its DataFrame and opens
+# them when its query runs, possibly after newer commits. Serving reads
+# finish within seconds and a full build within a couple of minutes, so
+# each commit deletes the data of versions superseded longer ago than
+# this. The clock starts at the superseding commit, not at a count of
+# versions: two fast writers would otherwise push out a version that a
+# reader still holds.
+RETAIN_SUPERSEDED_S = 600.0
+
+# Root entries of the manifest layout; anything else at the root is
+# plain parquet (a table not yet adopted, or what its first commit
+# superseded).
+_LAYOUT = {"_latest", "_latest.tmp", "_manifests", "data"}
 
 
 class SnapshotCorruptionError(RuntimeError):
@@ -57,14 +71,20 @@ class SnapshotTable:
 
         <root>/
           _latest              # text file: highest committed version
-          _manifests/v{N}.json # {"version", "files", "ts", "rows"?}
+          _manifests/v{N}.json # {"version", "ts", "dir", "files",
+                               #  "partitioned"?, "schema"}
           data/<uuid>/         # immutable per-commit parquet dirs
     """
 
     def __init__(self, root: str):
-        self.root = root
-        self._manifest_dir = os.path.join(root, "_manifests")
-        self._data_dir = os.path.join(root, "data")
+        self.root = os.path.abspath(root)
+        self._manifest_dir = os.path.join(self.root, "_manifests")
+        self._data_dir = os.path.join(self.root, "data")
+
+    def exists(self) -> bool:
+        """True once the table has a published version, or plain
+        parquet for its first commit to adopt."""
+        return self.latest_version() > 0 or bool(self._plain_data())
 
     # ------------------------------------------------------------ write
 
@@ -77,34 +97,33 @@ class SnapshotTable:
         """Commit df as the table's next full-replacement version.
 
         Returns the committed version number. Readers holding any
-        previously published version are unaffected (their files are
-        immutable and not deleted until :meth:`vacuum`).
+        previously published version are unaffected: its files are
+        immutable and stay until retention or :meth:`vacuum`.
 
         With ``partition_by`` the commit directory is hive-partitioned
-        and the manifest records the directory instead of a flat file
-        list — the snapshot guarantee is unchanged (the per-commit
-        directory is immutable; only the published pointer moves) and
-        readers keep partition pruning.
+        and the manifest's ``files`` is empty: readers read the
+        directory, which is just as immutable, and keep partition
+        pruning.
         """
         with table_write_lock(self.root, timeout=timeout):
-            commit_dir = os.path.join(self._data_dir, uuid.uuid4().hex)
-            schema_json = df.schema.json()
-            if partition_by:
-                df.write.mode("overwrite").partitionBy(partition_by).parquet(
-                    commit_dir
-                )
-                return self._publish(
-                    {
-                        "dir": commit_dir,
-                        "partitioned": True,
-                        "files": [],
-                        "schema": schema_json,
-                    }
-                )
-            df.write.mode("overwrite").parquet(commit_dir)
-            return self._publish(
-                {"files": self._list_parquet(commit_dir), "schema": schema_json}
-            )
+            return self._commit(df, partition_by)
+
+    def commit_rewrite(
+        self,
+        spark: SparkSession,
+        rewrite: Callable[[DataFrame | None], DataFrame],
+        timeout: float = 0.0,
+    ) -> int:
+        """Commit ``rewrite(current)`` as the next full-replacement
+        version, where ``current`` is the latest version read under the
+        table lock (None while the table does not exist). A concurrent
+        writer's commit can therefore never be lost: the second writer
+        waits up to ``timeout`` for the lock (then raises
+        :class:`~.upsert.ConcurrentWriteError`) and rewrites on top of
+        the first one's version."""
+        with table_write_lock(self.root, timeout=timeout):
+            current = self.read(spark) if self.exists() else None
+            return self._commit(rewrite(current))
 
     def commit_append(
         self,
@@ -123,8 +142,10 @@ class SnapshotTable:
         one table lock so concurrent appenders can't both insert the
         same key.
         """
+        spark = spark or df.sparkSession
         with table_write_lock(self.root, timeout=timeout):
-            prev_files: list[str] = []
+            if self.latest_version() == 0 and self._plain_data():
+                self._commit(self.read(spark))  # adopt the plain table as v1
             prev: dict | None = None
             if self.latest_version() > 0:
                 prev = self.manifest()
@@ -133,39 +154,47 @@ class SnapshotTable:
                         "commit_append on a partitioned snapshot table is "
                         "not supported — use commit_overwrite per partition"
                     )
-                prev_files = prev["files"]
-            if dedup_key and prev_files:
-                if spark is None:
-                    spark = df.sparkSession
-                existing = (
-                    spark.read.parquet(*prev_files)
-                    .select(dedup_key)
-                    .filter(F.col(dedup_key).isNotNull())
-                )
-                df = df.join(existing, dedup_key, "left_anti")
-            commit_dir = os.path.join(self._data_dir, uuid.uuid4().hex)
-            df.write.mode("overwrite").parquet(commit_dir)
+                if dedup_key:
+                    existing = (
+                        self.read(spark)
+                        .select(dedup_key)
+                        .filter(F.col(dedup_key).isNotNull())
+                    )
+                    df = df.join(existing, dedup_key, "left_anti")
+            body = self._write(df)
             # the manifest schema must describe EVERY file the version
             # lists, not just this append's: union-by-name with the
             # previous version's recorded schema (prev column order
             # first, genuinely-new columns appended; a re-typed column
             # takes the newest type). Catalog views derive their column
             # list from this (ADVICE r7 — commit-dir names are uuids,
-            # so no dir listing is temporal).
-            schema = df.schema
-            # union even when the previous version listed no files (a
-            # committed EMPTY table still has a recorded schema)
-            if prev is not None and prev.get("schema"):
-                prev_st = StructType.fromJson(json.loads(prev["schema"]))
-                by_name = {f.name: f for f in schema.fields}
-                fields = [by_name.pop(f.name, f) for f in prev_st.fields]
-                schema = StructType(fields + list(by_name.values()))
-            return self._publish(
-                {
-                    "files": prev_files + self._list_parquet(commit_dir),
-                    "schema": schema.json(),
-                }
-            )
+            # so no dir listing is temporal). A committed EMPTY table
+            # still has a recorded schema, so this unions with it too.
+            if prev is not None:
+                body["files"] = prev["files"] + body["files"]
+                prev_st = self.schema()
+                if prev_st is not None:
+                    by_name = {f.name: f for f in df.schema.fields}
+                    fields = [by_name.pop(f.name, f) for f in prev_st.fields]
+                    body["schema"] = StructType(fields + list(by_name.values())).json()
+            return self._publish(body)
+
+    def _commit(self, df: DataFrame, partition_by: str | None = None) -> int:
+        """Publish df as the next full-replacement version. Caller holds
+        the table lock."""
+        return self._publish(self._write(df, partition_by))
+
+    def _write(self, df: DataFrame, partition_by: str | None = None) -> dict:
+        """Write df to a fresh commit dir; returns its manifest body."""
+        commit_dir = os.path.join(self._data_dir, uuid.uuid4().hex)
+        body = {"dir": commit_dir, "files": [], "schema": df.schema.json()}
+        if partition_by:
+            df.write.mode("overwrite").partitionBy(partition_by).parquet(commit_dir)
+            body["partitioned"] = True
+        else:
+            df.write.mode("overwrite").parquet(commit_dir)
+            body["files"] = self._list_parquet(commit_dir)
+        return body
 
     @staticmethod
     def _list_parquet(commit_dir: str) -> list[str]:
@@ -176,12 +205,13 @@ class SnapshotTable:
         )
 
     def _publish(self, body: dict) -> int:
-        """Write manifest v(N+1) then atomically move the ``_latest``
-        pointer — the commit point. Caller holds the table lock."""
+        """Write manifest v(N+1), atomically move the ``_latest``
+        pointer — the commit point — then apply retention. Caller
+        holds the table lock."""
         os.makedirs(self._manifest_dir, exist_ok=True)
         version = self.latest_version() + 1
         manifest = {"version": version, "ts": time.time(), **body}
-        mpath = os.path.join(self._manifest_dir, f"v{version:06d}.json")
+        mpath = self._manifest_path(version)
         tmp = mpath + ".tmp"
         with open(tmp, "w") as f:
             json.dump(manifest, f)
@@ -193,6 +223,7 @@ class SnapshotTable:
         with open(ltmp, "w") as f:
             f.write(str(version))
         os.rename(ltmp, os.path.join(self.root, "_latest"))
+        self._retain()
         return version
 
     # ------------------------------------------------------------- read
@@ -214,7 +245,7 @@ class SnapshotTable:
             version = self.latest_version()
         if version <= 0:
             raise FileNotFoundError(f"snapshot table {self.root} has no commits")
-        mpath = os.path.join(self._manifest_dir, f"v{version:06d}.json")
+        mpath = self._manifest_path(version)
         try:
             with open(mpath) as f:
                 return json.load(f)
@@ -223,84 +254,162 @@ class SnapshotTable:
         except (json.JSONDecodeError, OSError) as e:
             raise SnapshotCorruptionError(f"unreadable manifest {mpath}") from e
 
+    def schema(self, version: int | None = None) -> StructType | None:
+        """The schema the version's commit recorded (None only for
+        manifests written before schemas were recorded)."""
+        recorded = self.manifest(version).get("schema")
+        return StructType.fromJson(json.loads(recorded)) if recorded else None
+
+    def commit_dirs(self, version: int | None = None) -> list[str]:
+        """The commit dirs that hold the version's data: the distinct
+        dirs of its files, or its partitioned commit dir if any part
+        file was written there. Empty for a committed empty table (AQE
+        can coalesce an empty write to zero part files)."""
+        m = self.manifest(version)
+        if not m.get("partitioned"):
+            return sorted({os.path.dirname(p) for p in m["files"]})
+        return [m["dir"]] if _parquet_under([m["dir"]]) else []
+
+    def size_bytes(self, version: int | None = None) -> int:
+        """Bytes of parquet the version holds (latest by default; the
+        plain files while the table is not yet adopted)."""
+        if version is None and self.latest_version() == 0:
+            files = _parquet_under(self._plain_data())
+        else:
+            m = self.manifest(version)
+            files = _parquet_under([m["dir"]]) if m.get("partitioned") else m["files"]
+        return sum(os.path.getsize(f) for f in files)
+
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
         """Read a pinned snapshot (latest by default; older = time travel).
 
-        The returned DataFrame's scan is bound to the manifest's
-        explicit file list — concurrent commits cannot change what
-        this query reads.
+        The scan is bound to the manifest's explicit files (or its
+        immutable partitioned commit dir) and typed by the recorded
+        schema, so it runs no inference job and concurrent commits
+        cannot change what this query reads. A table not yet adopted
+        reads as plain parquet, listing only its own entries: an
+        adopting commit's ``data/<uuid>`` may already exist before it
+        publishes v1, and must not be read alongside the plain files.
         """
+        if version is None:
+            version = self.latest_version()
+            plain = self._plain_data() if version == 0 else []
+            if plain:
+                return spark.read.option("basePath", self.root).parquet(*plain)
         m = self.manifest(version)
-        if m.get("partitioned"):
-            # the per-commit dir is immutable, so a directory read is
-            # just as pinned as a file-list read — and keeps hive
-            # partition pruning
-            has_data = any(
-                f.endswith(".parquet")
-                for _, _, fs in os.walk(m["dir"])
-                for f in fs
-            )
-            if not has_data:
-                # committed EMPTY partitioned table: AQE can coalesce
-                # the write to zero part files, so there is nothing to
-                # infer a schema from — replay the manifest's recorded
-                # schema, same as the flat branch below (ADVICE r7)
-                if m.get("schema"):
-                    return local_frame(
-                        spark, [], StructType.fromJson(json.loads(m["schema"]))
-                    )
-                raise SnapshotCorruptionError(
-                    f"manifest v{m['version']} of {self.root} has an empty "
-                    "partitioned commit dir and records no schema"
-                )
-            return spark.read.parquet(m["dir"])
-        if not m["files"]:
-            # A legitimately committed EMPTY table: AQE may coalesce an
-            # empty write to zero part files, leaving nothing on disk
-            # to infer from — the manifest's recorded schema is the
-            # table's schema, so replay it (ADVICE r6). Only manifests
-            # predating schema recording are corrupt here.
-            if m.get("schema"):
-                return local_frame(
-                    spark, [], StructType.fromJson(json.loads(m["schema"]))
-                )
+        schema = self.schema(version)
+        paths = self.commit_dirs(version) if m.get("partitioned") else m["files"]
+        if paths:
+            return (spark.read.schema(schema) if schema else spark.read).parquet(*paths)
+        if schema is None:
             raise SnapshotCorruptionError(
-                f"manifest v{m['version']} of {self.root} lists no files "
+                f"manifest v{m['version']} of {self.root} lists no data "
                 "and records no schema"
             )
-        return spark.read.parquet(*m["files"])
+        # a committed EMPTY table: nothing on disk to read, so the
+        # recorded schema is the table (ADVICE r6/r7)
+        return local_frame(spark, [], schema)
 
     # ---------------------------------------------------------- maintain
 
     def vacuum(self, keep_last: int = 2) -> list[int]:
         """Drop manifests+data older than the newest ``keep_last``
-        versions. Returns the removed version numbers. Callers choose a
-        retention long enough for in-flight readers to finish (same
-        contract as Delta's VACUUM)."""
+        versions, and the plain files an adopting commit superseded.
+        Returns the removed version numbers. Callers choose a retention
+        long enough for in-flight readers to finish (same contract as
+        Delta's VACUUM). A table without a manifest is left alone."""
         with table_write_lock(self.root):
             latest = self.latest_version()
-            removed = []
-            keep_files: set[str] = set()
-            versions = sorted(
-                int(f[1:-5])
-                for f in os.listdir(self._manifest_dir)
-                if f.startswith("v") and f.endswith(".json")
-            ) if os.path.isdir(self._manifest_dir) else []
-            def commit_dirs(v: int) -> set[str]:
-                m = self.manifest(v)
-                if m.get("partitioned"):
-                    return {m["dir"]}
-                return {os.path.dirname(p) for p in m["files"]}
+            if latest == 0:
+                return []
+            expired = [
+                v for v in self._versions() if v <= latest - max(keep_last, 1)
+            ]
+            self._remove(expired, plain=True)
+            return expired
 
-            for v in versions:
-                if v > latest - keep_last:
-                    keep_files.update(commit_dirs(v))
-            for v in versions:
-                if v <= latest - keep_last:
-                    for d in commit_dirs(v) - keep_files:
+    def _retain(self) -> None:
+        """Delete the data of versions superseded more than
+        RETAIN_SUPERSEDED_S ago. Caller holds the lock, after a publish."""
+        cutoff = time.time() - RETAIN_SUPERSEDED_S
+        versions = self._versions()
+        expired = []
+        for v, successor in zip(versions, versions[1:]):
+            if self.manifest(successor)["ts"] >= cutoff:
+                break
+            expired.append(v)
+        # the plain files were superseded no later than the oldest
+        # manifest still on disk
+        self._remove(expired, plain=self.manifest(versions[0])["ts"] < cutoff)
+
+    def _remove(self, expired: list[int], plain: bool) -> None:
+        """Delete the manifests of ``expired`` (the oldest versions) and
+        the commit dirs no newer version lists; with ``plain``, also the
+        superseded plain files at the root. Only paths under ``data/``
+        and plain root entries are ever removed, never the root."""
+        if expired:
+            # files reach a later version only through a chain of
+            # appends, so a dir some newer version still lists is
+            # listed by the oldest one kept
+            kept = self._dirs(self._versions()[len(expired)])
+            for v in expired:
+                for d in self._dirs(v) - kept:
+                    if os.path.dirname(d) == self._data_dir:
                         shutil.rmtree(d, ignore_errors=True)
-                    os.remove(
-                        os.path.join(self._manifest_dir, f"v{v:06d}.json")
-                    )
-                    removed.append(v)
-            return removed
+                os.remove(self._manifest_path(v))
+        if plain:
+            for p in self._plain_entries():
+                if os.path.isdir(p):
+                    shutil.rmtree(p, ignore_errors=True)
+                else:
+                    os.remove(p)
+
+    def _dirs(self, version: int) -> set[str]:
+        m = self.manifest(version)
+        dirs = {os.path.dirname(p) for p in m["files"]}
+        return dirs | {m["dir"]} if m.get("dir") else dirs
+
+    def _versions(self) -> list[int]:
+        if not os.path.isdir(self._manifest_dir):
+            return []
+        return sorted(
+            int(f[1:-5])
+            for f in os.listdir(self._manifest_dir)
+            if f.startswith("v") and f.endswith(".json")
+        )
+
+    def _manifest_path(self, version: int) -> str:
+        return os.path.join(self._manifest_dir, f"v{version:06d}.json")
+
+    def _plain_entries(self) -> list[str]:
+        if not os.path.isdir(self.root):
+            return []
+        return [
+            os.path.join(self.root, e)
+            for e in sorted(os.listdir(self.root))
+            if e not in _LAYOUT
+        ]
+
+    def _plain_data(self) -> list[str]:
+        """The plain entries Spark would read: part files and ``k=v``
+        partition dirs, not ``_SUCCESS`` or ``.crc`` side files."""
+        return [
+            p for p in self._plain_entries()
+            if not os.path.basename(p).startswith(("_", "."))
+        ]
+
+
+def _parquet_under(paths: list[str]) -> list[str]:
+    """The parquet files at or below ``paths`` (files or dirs)."""
+    found = []
+    for p in paths:
+        if os.path.isdir(p):
+            found += [
+                os.path.join(d, f)
+                for d, _, fs in os.walk(p)
+                for f in fs
+                if f.endswith(".parquet")
+            ]
+        elif p.endswith(".parquet"):
+            found.append(p)
+    return found

@@ -1,22 +1,19 @@
-"""Keyed upsert/merge machinery on plain Parquet.
+"""Keyed upsert and the table write lock.
 
 The reference upserts three ways (SURVEY §2.1/§2.10): DELETE-then-
 append for predictions (classifier_predict.py:149-170), single-row
 MERGE-style writes for user overrides (transaction_service.py:78-126),
 and insert-only incremental append (fct_validated_trxns.sql). Without
-Delta jars in this environment, MERGE is emulated as
-anti-join + union + atomic directory swap — the classic pure-Parquet
-CDC pattern. The write is staged to a temp dir and renamed so readers
-never see a half-written table. For PROVABLE snapshot isolation (a
-reader pinned to a version while a writer commits, incl. filesystems
-without atomic directory rename), layer `operators/snapshot.py`'s
-versioned manifest on top — it takes this module's table_write_lock,
-so the two compose.
+Delta jars in this environment, MERGE is emulated as anti-join + union,
+committed as the next version of an ``operators/snapshot.py`` manifest
+table: the read of the current version, the merge and the publish all
+hold :func:`table_write_lock`, and readers pin whole versions, so a
+read that overlaps a merge sees the version before it or the one after.
+Insert-only appends are ``SnapshotTable.commit_append(dedup_key=)``.
 
-Scale note: upsert rewrites the table; on a date-partitioned 100 TB
-layout you'd restrict the rewrite to partitions containing matched
-keys (dynamic partition overwrite) — ``merge_keyed(partition_col=)``
-does exactly that.
+Scale note: a merge rewrites the table; on a date-partitioned 100 TB
+layout you would restrict the rewrite to the partitions holding matched
+keys (dynamic partition overwrite).
 """
 
 from __future__ import annotations
@@ -25,10 +22,11 @@ import contextlib
 import os
 import shutil
 import time
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .maintenance import output_files
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -40,11 +38,11 @@ def table_write_lock(path: str, timeout: float = 0.0, poll: float = 0.05):
     """Single-writer mutual exclusion for one parquet table path.
 
     The reference gets this guarantee from Postgres transactions
-    (ui/backend/services/transaction_service.py:78-126); plain-parquet
-    stage-and-swap is atomic per rename but NOT per read-modify-write —
-    two simultaneous ``merge_keyed`` runs could each read the old
-    table and the second swap would silently drop the first's rows.
-    This lock makes the second writer fail loudly instead.
+    (ui/backend/services/transaction_service.py:78-126); a manifest
+    publish is atomic per rename but NOT per read-modify-write — two
+    simultaneous ``merge_keyed`` runs could each read the old version
+    and the second commit would silently drop the first's rows. This
+    lock makes the second writer wait (``timeout``) or fail loudly.
 
     Mechanism: ``os.mkdir`` of ``<path>__lock`` (atomic on POSIX
     local/NFS filesystems — the warehouse layout this repo targets in
@@ -82,101 +80,58 @@ def table_write_lock(path: str, timeout: float = 0.0, poll: float = 0.05):
         shutil.rmtree(lock_dir, ignore_errors=True)
 
 
-def _overwrite_swap(df: DataFrame, path: str) -> None:
-    """Stage-and-swap write; caller must hold the table lock."""
-    staging = f"{path}__stage_{uuid.uuid4().hex[:8]}"
-    df.write.mode("overwrite").parquet(staging)
-    backup = f"{path}__old_{uuid.uuid4().hex[:8]}"
-    if os.path.exists(path):
-        os.rename(path, backup)
-    os.rename(staging, path)
-    if os.path.exists(backup):
-        shutil.rmtree(backup)
-
-
-def atomic_overwrite(df: DataFrame, path: str, timeout: float = 0.0) -> None:
-    """Write df as parquet to `path` via stage-and-swap (no torn reads).
-
-    Raises :class:`ConcurrentWriteError` if another writer holds the
-    table lock (after ``timeout`` seconds of polling).
-    """
-    with table_write_lock(path, timeout=timeout):
-        _overwrite_swap(df, path)
-
-
 def merge_keyed(
     spark: SparkSession,
     path: str,
     updates: DataFrame,
     key: str,
-    partition_col: str | None = None,
     timeout: float = 0.0,
 ) -> None:
-    """Upsert `updates` into the parquet table at `path` on `key`.
+    """Upsert `updates` into the table at `path` on `key`.
 
     Equivalent of the reference's DELETE WHERE id = ANY(...) + append
     (classifier_predict.py:149-170): one row per key survives, updates
-    win. With `partition_col`, only partitions containing matched keys
-    are rewritten (plus new-key partitions) — the 100 TB-friendly path.
+    win. Columns of the table that `updates` does not carry keep the
+    existing row's value (null for a new key), like an ``UPDATE SET``
+    of just the given columns.
 
-    The whole read-merge-swap holds the table lock: two concurrent
-    merges would otherwise both read the pre-merge table and the
-    loser's rows would vanish. The second writer raises
-    :class:`ConcurrentWriteError` (after ``timeout`` s of polling).
+    The read of the current version, the merge and the commit hold the
+    table lock, so a concurrent merge can never be lost: the second
+    writer waits up to ``timeout`` s for the lock, then raises
+    :class:`ConcurrentWriteError`. The rows kept from the current
+    version are written as ``output_files`` of its bytes, so repeated
+    small merges do not fragment the table. ``updates`` built from
+    Python rows (a local relation) join them in that one pass; an ``updates``
+    computed on the cluster keeps its own partitions, so its work is
+    not squeezed into those few tasks.
     """
-    with table_write_lock(path, timeout=timeout):
-        _merge_keyed_locked(spark, path, updates, key, partition_col)
+    from .snapshot import SnapshotTable
 
+    table = SnapshotTable(path)
+    local = updates.isLocal()
 
-def _merge_keyed_locked(
-    spark: SparkSession,
-    path: str,
-    updates: DataFrame,
-    key: str,
-    partition_col: str | None,
-) -> None:
-    if not os.path.exists(path):
-        writer = updates.write.mode("overwrite")
-        if partition_col:
-            writer = writer.partitionBy(partition_col)
-        writer.parquet(path)
-        return
+    def merged(current: DataFrame | None) -> DataFrame:
+        if current is None:
+            return updates
+        keys = updates.select(key)
+        new = updates
+        missing = [c for c in current.columns if c not in updates.columns]
+        if missing:
+            # the matched rows' other columns: each column is non-null
+            # on at most one side of the union. For local-relation updates
+            # this is one single-partition pass (no exchange, so no
+            # extra job).
+            old = current.join(keys, key, "left_semi").select(key, *missing)
+            both = updates.unionByName(old, allowMissingColumns=True)
+            new = (both.coalesce(1) if local else both).groupBy(key).agg(
+                *[F.first(c, ignorenulls=True).alias(c)
+                  for c in current.columns if c != key]
+            )
+        kept = current.join(keys, key, "left_anti")
+        n = output_files(table.size_bytes())
+        new = new.select(*current.columns)
+        if local:
+            return kept.unionByName(new).coalesce(n)
+        return kept.coalesce(n).unionByName(new)
 
-    current = spark.read.parquet(path)
-    if partition_col:
-        touched = [
-            r[0]
-            for r in updates.select(partition_col).distinct().collect()
-        ]
-        untouched = current.filter(~F.col(partition_col).isin(touched))
-        touched_cur = current.filter(F.col(partition_col).isin(touched))
-        kept = touched_cur.join(updates.select(key), key, "left_anti")
-        merged = untouched.unionByName(kept).unionByName(
-            updates.select(*current.columns)
-        )
-    else:
-        kept = current.join(updates.select(key), key, "left_anti")
-        merged = kept.unionByName(updates.select(*current.columns))
-    _overwrite_swap(merged, path)
-
-
-def insert_only_append(
-    spark: SparkSession, path: str, incoming: DataFrame, key: str,
-    timeout: float = 0.0,
-) -> None:
-    """Append only rows whose key is absent (fct_validated_trxns I1).
-
-    Existing rows are never modified — the reference's documented
-    insert-only incremental semantics. The existing-key read and the
-    append hold the table lock (a concurrent appender could otherwise
-    insert the same key twice past the anti-join).
-    """
-    with table_write_lock(path, timeout=timeout):
-        if not os.path.exists(path):
-            incoming.write.mode("overwrite").parquet(path)
-            return
-        existing_ids = spark.read.parquet(path).select(key).filter(
-            F.col(key).isNotNull()
-        )
-        fresh = incoming.join(existing_ids, key, "left_anti")
-        fresh.write.mode("append").parquet(path)
+    table.commit_rewrite(spark, merged, timeout=timeout)

@@ -1,13 +1,15 @@
 """Topological materializer for the model DAG (replaces dbt build).
 
 ``build(warehouse, full_refresh=...)`` walks the model graph in
-dependency order and materializes every model as a parquet table under
+dependency order and commits every model as a new version of a
+versioned-manifest table (``operators/snapshot.py``) under
 ``<root>/<schema>/<table>`` (the Postgres two-schema namespacing kept
 as a path convention: ``public`` for raw/user state, ``analytics`` for
-models). The reference materializes all models as views and re-runs
-the chain per read (TODO.md:12 flags that as debt); we materialize
-eagerly — the only sane default at 100 TB — and marts are
-date-partitioned by month(transacted_date).
+models), so serving reads during a build see whole versions. The
+reference materializes all models as views and re-runs the chain per
+read (TODO.md:12 flags that as debt); we materialize eagerly — the
+only sane default at 100 TB — and marts are date-partitioned by
+month(transacted_date).
 
 ``fct_validated_trxns`` keeps its dbt incremental contract
 (fct_validated_trxns.sql:1-19): full refresh overwrites from the
@@ -22,56 +24,45 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.upsert import atomic_overwrite, insert_only_append
+from ..operators.snapshot import SnapshotCorruptionError, SnapshotTable
 from . import models as M
 
 
 class Warehouse:
     """Path-convention catalog over a warehouse root directory.
 
-    ``snapshot=True`` (VERDICT r4 #5 / r5 #5) switches every table the
-    warehouse WRITES to the versioned-manifest layout of
-    :class:`~..operators.snapshot.SnapshotTable`: builds commit
-    immutable per-version directories + a manifest, reads resolve the
-    published manifest and pin its exact files for the whole query —
-    so a serving read concurrent with a full-refresh build returns the
-    complete pre-build snapshot, never a half-written or post-swap
-    table. Default (False) keeps rename-swap semantics. Reads fall
-    back to plain parquet for tables without a manifest (externally
-    loaded ``public`` inputs), so the two layouts coexist in one root.
+    Every table the warehouse writes is a
+    :class:`~..operators.snapshot.SnapshotTable`: a commit writes an
+    immutable per-version directory plus a manifest, and a read pins
+    the published version's files, typed by its recorded schema, for
+    the whole query. A serving read concurrent with a build or an
+    override write therefore returns one complete version, never a
+    half-written one. Tables without a manifest (externally loaded
+    ``public`` inputs, the landing zone) read as plain parquet, and the
+    first commit to one adopts it.
     """
 
-    def __init__(self, spark: SparkSession, root: str, snapshot: bool = False):
+    def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        self.snapshot = snapshot
 
     def path(self, schema: str, table: str) -> str:
         return os.path.join(self.root, schema, table)
 
-    def _snap(self, schema: str, table: str) -> "SnapshotTable":
-        from ..operators.snapshot import SnapshotTable
-
+    def _table(self, schema: str, table: str) -> SnapshotTable:
         return SnapshotTable(self.path(schema, table))
 
-    def _has_manifest(self, schema: str, table: str) -> bool:
-        return os.path.exists(os.path.join(self.path(schema, table), "_latest"))
-
     def exists(self, schema: str, table: str) -> bool:
-        if self._has_manifest(schema, table):
-            return self._snap(schema, table).latest_version() > 0
-        return os.path.exists(self.path(schema, table))
+        return self._table(schema, table).exists()
 
     def read(self, schema: str, table: str) -> DataFrame:
-        if self._has_manifest(schema, table):
-            return self._snap(schema, table).read(self.spark)
-        return self.spark.read.parquet(self.path(schema, table))
+        return self._table(schema, table).read(self.spark)
 
     def _reregister_if_registered(self, schema: str, table: str) -> None:
         """A catalog entry for a snapshot table binds to the commit
         dirs of the version current at registration; a rebuild
         publishes NEW dirs, so a registered entry keeps serving the
-        pre-rebuild snapshot until vacuum deletes it out from under
+        pre-rebuild snapshot until retention deletes it out from under
         the reader. Re-point it at commit time (VERDICT r7 #8) —
         contract: a registered table always serves the latest
         published version."""
@@ -85,24 +76,14 @@ class Warehouse:
     def write(
         self, df: DataFrame, schema: str, table: str, partition_by: str | None = None
     ) -> None:
-        os.makedirs(os.path.join(self.root, schema), exist_ok=True)
-        if self.snapshot:
-            self._snap(schema, table).commit_overwrite(df, partition_by=partition_by)
-            self._reregister_if_registered(schema, table)
-        elif partition_by:
-            # partitioned overwrite: plain write (no swap needed at build
-            # cadence, and partition dirs keep pruning cheap for readers)
-            df.write.mode("overwrite").partitionBy(partition_by).parquet(
-                self.path(schema, table)
-            )
-        else:
-            atomic_overwrite(df, self.path(schema, table))
+        self._table(schema, table).commit_overwrite(df, partition_by=partition_by)
+        self._reregister_if_registered(schema, table)
 
     def vacuum(self, schema: str, table: str, keep_last: int = 2) -> list[int]:
-        """Retention for snapshot tables: drop manifests + data dirs
-        older than the newest ``keep_last`` versions (no-op for tables
-        without a manifest). Choose a retention long enough for
-        in-flight readers — same contract as Delta's VACUUM.
+        """Drop manifests + data dirs older than the newest
+        ``keep_last`` versions (no-op for tables without a manifest).
+        Choose a retention long enough for in-flight readers — same
+        contract as Delta's VACUUM.
 
         A catalog entry made by :func:`register_sql_catalog` points at
         the commit dirs of the manifest that was CURRENT at
@@ -111,34 +92,17 @@ class Warehouse:
         (ADVICE r6). So if the table is registered in the session
         catalog, it is re-registered against the latest manifest here,
         after the vacuum."""
-        if not self._has_manifest(schema, table):
-            return []
-        removed = self._snap(schema, table).vacuum(keep_last=keep_last)
+        removed = self._table(schema, table).vacuum(keep_last=keep_last)
         self._reregister_if_registered(schema, table)
         return removed
 
     def append_insert_only(
         self, df: DataFrame, schema: str, table: str, key: str
     ) -> None:
-        """Insert-only append (rows with an existing key are dropped);
-        a new manifest version in snapshot mode, a locked read+append
-        otherwise."""
-        os.makedirs(os.path.join(self.root, schema), exist_ok=True)
-        if self.snapshot:
-            self._snap(schema, table).commit_append(
-                df, dedup_key=key, spark=self.spark
-            )
-            self._reregister_if_registered(schema, table)
-        else:
-            insert_only_append(self.spark, self.path(schema, table), df, key)
-
-    def compact(self, schema: str, table: str, **kwargs) -> dict[str, int]:
-        """S8: OPTIMIZE-analog small-file compaction of one table —
-        incremental appends fragment partitions; this rewrites each
-        fragmented partition to ~128 MB files (operators/maintenance.py)."""
-        from ..operators.maintenance import compact_table
-
-        return compact_table(self.spark, self.path(schema, table), **kwargs)
+        """Insert-only append (rows with an existing key are dropped),
+        committed as a new manifest version."""
+        self._table(schema, table).commit_append(df, dedup_key=key, spark=self.spark)
+        self._reregister_if_registered(schema, table)
 
 
 def _month_col(df: DataFrame) -> DataFrame:
@@ -323,56 +287,35 @@ def _register_table(
             f"refusing to register table at path with quote/backslash: {table_dir!r}"
         )
     fq = f"`{schema}`.`{table}`"
-    if os.path.exists(os.path.join(table_dir, "_latest")):
+    snap = SnapshotTable(table_dir)
+    if snap.latest_version() > 0:
         # versioned-manifest table: register the CURRENT published
         # version. The catalog entry is a point-in-time binding to
-        # that version's commit dirs — unlike the swap layout (whose
-        # location survives rebuilds). Warehouse.write/
+        # that version's commit dirs. Warehouse.write/
         # append_insert_only/vacuum re-register registered tables at
         # commit time (VERDICT r7 #8); only a commit made directly
         # through SnapshotTable, bypassing the Warehouse, leaves a
         # stale binding until this is re-run.
-        from ..operators.snapshot import SnapshotTable
-
-        m = SnapshotTable(table_dir).manifest()
-        if m.get("partitioned"):
-            # an empty partitioned commit has nothing to infer a
-            # schema from (AQE can coalesce to zero part files) —
-            # route it to the typed empty-view branch below, same as
-            # the flat case (ADVICE r7)
-            has_data = any(
-                f.endswith(".parquet")
-                for _, _, fs in os.walk(m["dir"])
-                for f in fs
-            )
-            dirs = [m["dir"]] if has_data else []
-        else:
-            dirs = sorted({os.path.dirname(p) for p in m["files"]})
+        version = snap.latest_version()
+        dirs, st = snap.commit_dirs(version), snap.schema(version)
         if any("'" in d or "\\" in d for d in dirs):
             raise ValueError(
                 f"refusing to register snapshot commit dir with quote/backslash under {table_dir!r}"
             )
+        if st is None and len(dirs) != 1:
+            raise SnapshotCorruptionError(
+                f"manifest v{version} of {table_dir} spans {len(dirs)} "
+                "commit dirs and records no schema"
+            )
         _drop_catalog_entry(spark, fq)
         if len(dirs) == 1:
             spark.sql(f"CREATE TABLE {fq} USING PARQUET LOCATION '{dirs[0]}'")
-            if m.get("partitioned"):
+            if snap.manifest(version).get("partitioned"):
                 spark.sql(f"ALTER TABLE {fq} RECOVER PARTITIONS")
         elif not dirs:
             # empty committed table: a zero-row view typed from the
             # manifest's recorded schema (a permanent view can't
             # reference a temp view, so build it as literal casts)
-            import json as _json
-
-            from pyspark.sql.types import StructType
-
-            from ..operators.snapshot import SnapshotCorruptionError
-
-            if not m.get("schema"):
-                raise SnapshotCorruptionError(
-                    f"manifest v{m['version']} of {table_dir} lists no "
-                    "files and records no schema"
-                )
-            st = StructType.fromJson(_json.loads(m["schema"]))
             sel = ", ".join(
                 f"CAST(NULL AS {f.dataType.simpleString()}) AS {_quote_col(f.name)}"
                 for f in st.fields
@@ -391,20 +334,10 @@ def _register_table(
             # reading "the newest dir" would pick an arbitrary commit
             # (ADVICE r7). Columns a given commit predates are
             # NULL-filled at their recorded type.
-            import json as _json
-
-            from pyspark.sql.types import StructType
-
-            if m.get("schema"):
-                st = StructType.fromJson(_json.loads(m["schema"]))
-                types = {f.name: f.dataType.simpleString() for f in st.fields}
-                cols = [f.name for f in st.fields]
-            else:  # pre-schema-recording manifest: legacy fallback
-                cols = spark.read.parquet(dirs[-1]).columns
-                types = {}
+            types = {f.name: f.dataType.simpleString() for f in st.fields}
             selects = []
             for d in dirs:
-                have = set(spark.read.parquet(d).columns) if types else set(cols)
+                have = set(spark.read.parquet(d).columns)
                 # Present columns are cast to the manifest's recorded
                 # type too (ADVICE r8): commit_append supports re-typing
                 # ("a re-typed column takes the newest type"), so an old
@@ -413,14 +346,8 @@ def _register_table(
                 # the recorded schema) would decide the view's type, and
                 # ANSI coercion settings could reject the union outright.
                 sel = ", ".join(
-                    (
-                        f"CAST({_quote_col(c)} AS {types[c]}) AS {_quote_col(c)}"
-                        if c in types
-                        else _quote_col(c)
-                    )
-                    if c in have
-                    else f"CAST(NULL AS {types[c]}) AS {_quote_col(c)}"
-                    for c in cols
+                    f"CAST({_quote_col(c) if c in have else 'NULL'} AS {t}) AS {_quote_col(c)}"
+                    for c, t in types.items()
                 )
                 selects.append(f"SELECT {sel} FROM parquet.`{d}`")
             spark.sql(f"CREATE OR REPLACE VIEW {fq} AS {' UNION ALL '.join(selects)}")
@@ -454,13 +381,15 @@ def register_sql_catalog(wh: Warehouse) -> list[str]:
     after a rebuild re-points and re-discovers partitions. Returns the
     fully-qualified names registered.
 
-    Snapshot-layout note (ADVICE r6 / VERDICT r7 #8): entries for
-    manifest tables bind to the commit dirs of the version current at
+    Entries for the warehouse's own tables (every one is a manifest
+    table) bind to the commit dirs of the version current at
     registration, and every Warehouse commit path (``write``,
     ``append_insert_only``, ``vacuum``) re-registers registered tables
     so the entry always serves the latest published version. Commits
-    made directly through ``SnapshotTable`` bypass that; re-run this
-    afterwards.
+    made directly through ``SnapshotTable`` (``merge_keyed``,
+    ``record_model``) bypass that; re-run this afterwards. Tables
+    without a manifest (plain ``public`` inputs) register at their
+    directory.
     """
     spark = wh.spark
     registered: list[str] = []

@@ -79,6 +79,12 @@ class ServingApp:
     read-your-writes contract the reference gets from querying
     Postgres views per request, without re-running the join chain
     when nothing changed.
+
+    Every table is read through the warehouse, which pins one published
+    version per read: an override write commits a new version of
+    ``public.user_categories``, and the version a concurrent read (or
+    the cached overlay) holds stays on disk until retention expires it,
+    so reads and writes from concurrent requests never tear each other.
     """
 
     def __init__(self, spark: SparkSession, warehouse_root: str):
@@ -103,14 +109,11 @@ class ServingApp:
             return self._overlay
 
     def _user_categories(self):
-        import os
-
         from ..schemas import USER_CATEGORIES
         from ..session import local_frame
 
-        path = self.wh.path("public", "user_categories")
-        if os.path.exists(path):
-            return self.spark.read.schema(USER_CATEGORIES).parquet(path)
+        if self.wh.exists("public", "user_categories"):
+            return self.wh.read("public", "user_categories")
         return local_frame(self.spark, [], USER_CATEGORIES)
 
     def invalidate(self):
@@ -242,13 +245,11 @@ class ServingApp:
         )]
 
     def categories(self) -> list:
-        import os
-
         from .categories import ensure_default_categories, get_active_category_names
 
-        path = self.wh.path("public", "categories")
         catalog = (
-            self.spark.read.parquet(path) if os.path.exists(path) else None
+            self.wh.read("public", "categories")
+            if self.wh.exists("public", "categories") else None
         )
         return get_active_category_names(ensure_default_categories(self.spark, catalog))
 
@@ -258,24 +259,18 @@ class ServingApp:
         return _rows(connection_health(self.wh.read("public", "simplefin")))
 
     def metrics_history(self) -> dict:
-        import os
-
         from ..ml.registry import registry_metrics_view
 
-        path = self.wh.path("analytics", "model_registry")
-        if not os.path.exists(path):
+        if not self.wh.exists("analytics", "model_registry"):
             return {"history": []}
-        view = registry_metrics_view(self.spark.read.parquet(path))
+        view = registry_metrics_view(self.wh.read("analytics", "model_registry"))
         return {"history": _rows(view.orderBy("training_timestamp"))}
 
     def training_status(self) -> dict:
-        import os
-
-        path = self.wh.path("analytics", "model_registry")
-        if not os.path.exists(path):
+        if not self.wh.exists("analytics", "model_registry"):
             return {"status": "never_trained", "model_version": None}
         latest = _rows(
-            self.spark.read.parquet(path)
+            self.wh.read("analytics", "model_registry")
             .filter("is_latest")
             .select("model_version", "status", "training_timestamp")
             .limit(1)

@@ -26,6 +26,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
+from pyspark.sql.types import StructType
 
 from ..functions.pg import ilike
 from ..operators.pagination import collect_page_with_total, paginate
@@ -215,40 +216,36 @@ def categorize_transaction(
 ) -> None:
     """Create-or-update one user override row, keyed on transaction_id
     (transaction_service.py:78-126). None-valued optional fields keep
-    the existing value on update / default false on insert.
+    the existing value on update and are null on insert, which every
+    reader takes as false (the overlay coalesces the two flags).
+
+    The update carries only the given fields, and ``merge_keyed`` joins
+    the rest from the version it reads under the table lock, so two
+    concurrent writes to one id (a validate PUT and a notes PUT) both
+    land instead of the later one restoring the earlier one's base.
     """
+    from ..operators.snapshot import SnapshotTable
     from ..operators.upsert import merge_keyed
 
-    now = now or dt.datetime.utcnow()
-    import os
-
-    existing = None
-    if os.path.exists(user_categories_path):
-        cur = spark.read.schema(USER_CATEGORIES).parquet(user_categories_path)
-        found = cur.filter(col("transaction_id") == transaction_id).collect()
-        existing = found[0] if found else None
-
-    def keep(new_val, old_val, default):
-        if new_val is not None:
-            return new_val
-        return old_val if existing is not None else default
-
-    row = (
-        transaction_id,
-        master_category,
-        source_category if source_category is not None
-        else (existing.source_category if existing else None),
-        keep(notes, existing.notes if existing else None, None),
-        keep(validated, existing.validated if existing else None, False),
-        keep(
-            exclude_from_forecast,
-            existing.exclude_from_forecast if existing else None,
-            False,
-        ),
-        updated_by,
-        now,
+    if not SnapshotTable(user_categories_path).exists():
+        # a partial update cannot create the table: commit its typed
+        # empty shape first (a no-op merge if another writer got there)
+        empty = local_frame(spark, [], USER_CATEGORIES)
+        merge_keyed(spark, user_categories_path, empty, "transaction_id", timeout=10.0)
+    given = {
+        "transaction_id": transaction_id,
+        "master_category": master_category,
+        "source_category": source_category,
+        "notes": notes,
+        "validated": validated,
+        "exclude_from_forecast": exclude_from_forecast,
+        "updated_by": updated_by,
+        "updated_at": now or dt.datetime.utcnow(),
+    }
+    fields = [f for f in USER_CATEGORIES.fields if given[f.name] is not None]
+    update = local_frame(
+        spark, [tuple(given[f.name] for f in fields)], StructType(fields)
     )
-    update = local_frame(spark, [row], USER_CATEGORIES)
     # brief lock-wait: concurrent HTTP override writes serialize like
     # Postgres row locks instead of failing the request
     merge_keyed(spark, user_categories_path, update, "transaction_id", timeout=10.0)

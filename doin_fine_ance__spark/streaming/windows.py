@@ -261,10 +261,11 @@ def stream_upsert_sink(
     checkpoint_dir: str | None = None,
 ):
     """foreachBatch keyed-merge sink: each micro-batch upserts its rows
-    into the parquet table (exactly-once per key under retries because
-    the merge is idempotent — a replayed epoch re-merges the same keyed
-    rows to the same end state). Pass ``checkpoint_dir`` to make the
-    stream restartable from its committed offset."""
+    into the snapshot table at ``path`` (read it back with
+    ``SnapshotTable(path).read``), exactly-once per key under retries
+    because the merge is idempotent — a replayed epoch re-merges the
+    same keyed rows to the same end state. Pass ``checkpoint_dir`` to
+    make the stream restartable from its committed offset."""
     from ..operators.upsert import merge_keyed
 
     def _sink(batch_df: DataFrame, epoch_id: int) -> None:

@@ -3,20 +3,19 @@
 It must hold the same values as ``spark.createDataFrame(list, schema)``
 under either Arrow setting, keep the schema of an empty frame, run no
 Spark job to build and collect, and read naive datetimes as UTC. A keyed
-merge whose update side is such a frame keeps a bounded file layout.
+merge keeps a bounded file layout.
 """
 
 from __future__ import annotations
 
 import calendar
 import datetime as dt
-import glob
 import inspect
-import os
 
 import pytest
 from pyspark.sql import functions as F
 
+from doin_fine_ance__spark.operators.snapshot import SnapshotTable
 from doin_fine_ance__spark.operators.upsert import merge_keyed
 from doin_fine_ance__spark.schemas import USER_CATEGORIES
 from doin_fine_ance__spark.session import local_frame
@@ -112,25 +111,51 @@ def test_malformed_rows_raise(spark):
 
 
 def test_merged_layout_stays_bounded(spark, tmp_path):
-    """With a local-relation update side the anti-join broadcasts and
-    the merge keeps the scan's file splits instead of a shuffle's. The
-    scan packs small files into at most default-parallelism splits, and
-    a one-row update adds one file, so the count cycles within that
-    bound (4-5 files on 4 cores, 6-9 on 8) instead of growing by one per
-    write."""
+    """A keyed merge writes its version as ``output_files`` of the
+    current version's bytes (one file per 128 MB), not one file per
+    scan split, so single-row merges onto a small table leave every
+    version in one file instead of cycling through 4-9."""
     path = str(tmp_path / "t")
     schema = "k string, v long"
     merge_keyed(spark, path, local_frame(spark, [(f"k{i:03d}", i) for i in range(300)], schema), "k")
+    table = SnapshotTable(path)
     files, updates = {}, {}
     for w in range(1, 41):
         # odd writes update an existing key, even writes insert a new one
         key = f"k{(w * 37) % 300:03d}" if w % 2 else f"new{w}"
         updates[key] = -w
         merge_keyed(spark, path, local_frame(spark, [(key, -w)], schema), "k")
-        files[w] = len(glob.glob(os.path.join(path, "*.parquet")))
-    bound = spark.sparkContext.defaultParallelism + 1
+        files[w] = len(table.manifest()["files"])
     assert max(files[w] for w in range(31, 41)) <= max(files[w] for w in range(1, 11)), files
-    assert max(files.values()) <= bound, files
-    out = spark.read.parquet(path)
+    assert max(files.values()) <= 1, files
+    out = table.read(spark)
     assert out.count() == out.select("k").distinct().count() == 320
     assert {r.k: r.v for r in out.filter("v < 0").collect()} == updates
+
+
+def test_merge_under_a_root_with_url_escaped_characters(spark, tmp_path):
+    """Spark reports file paths as URIs, percent-encoding a space, ``#``
+    or ``%``; the merge sizes the current version from the manifest's
+    plain paths, so such a warehouse root merges like any other."""
+    path = str(tmp_path / "ware house #1 %20" / "t")
+    schema = "k string, v long"
+    merge_keyed(spark, path, local_frame(spark, [(f"k{i}", i) for i in range(10)], schema), "k")
+    merge_keyed(spark, path, local_frame(spark, [("k3", -3), ("new", -1)], schema), "k")
+    out = SnapshotTable(path).read(spark)
+    assert out.count() == 11
+    assert {r.k: r.v for r in out.filter("v < 0").collect()} == {"k3": -3, "new": -1}
+
+
+def test_cluster_computed_updates_keep_their_partitions(spark, tmp_path):
+    """Only the rows kept from the current version are bounded to
+    ``output_files``; an update computed on the cluster is written by
+    its own tasks, not squeezed into that one."""
+    path = str(tmp_path / "t")
+    merge_keyed(spark, path, local_frame(spark, [(f"k{i}", i) for i in range(300)], "k string, v long"), "k")
+    updates = spark.range(0, 400, numPartitions=4).selectExpr("concat('k', id) AS k", "-id AS v")
+    merge_keyed(spark, path, updates, "k")
+    table = SnapshotTable(path)
+    assert len(table.manifest()["files"]) == 1 + 4
+    out = table.read(spark)
+    assert out.count() == out.select("k").distinct().count() == 400
+    assert out.filter("v > 0").count() == 0

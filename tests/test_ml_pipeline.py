@@ -20,6 +20,7 @@ from doin_fine_ance__spark.ml.registry import (
     record_model,
     registry_metrics_view,
 )
+from doin_fine_ance__spark.operators.snapshot import SnapshotTable
 from doin_fine_ance__spark.operators.upsert import merge_keyed
 from doin_fine_ance__spark.schemas import NUMERICAL_FEATURES
 
@@ -143,7 +144,7 @@ def test_registry_lifecycle(spark, tmp_path):
         spark, path, "20240302_120000", "skipped", dt.datetime(2024, 3, 2, 12),
         reason="insufficient_data", message="only 3 rows",
     )
-    reg = spark.read.parquet(path)
+    reg = SnapshotTable(path).read(spark)
     rows = {r.model_version: r for r in reg.collect()}
     # skipped run is latest attempt but the trained model stays active
     assert rows["20240302_120000"].is_latest and not rows["20240302_120000"].is_active
@@ -157,10 +158,10 @@ def test_registry_lifecycle(spark, tmp_path):
     )
     act2 = active_model(spark, path)
     assert act2.model_version == "20240303_120000"
-    reg2 = {r.model_version: r for r in spark.read.parquet(path).collect()}
+    reg2 = {r.model_version: r for r in SnapshotTable(path).read(spark).collect()}
     assert not reg2["20240301_120000"].is_active
     # metrics read-back precedence: denormalized col first, JSON fallback
-    mv = registry_metrics_view(spark.read.parquet(path))
+    mv = registry_metrics_view(SnapshotTable(path).read(spark))
     acc = {r.model_version: r.accuracy for r in mv.collect()}
     assert acc["20240301_120000"] == pytest.approx(0.9)
 
@@ -172,13 +173,13 @@ def test_prediction_merge_sink(spark, trained, tmp_path):
     merge_keyed(spark, path, p1.select(
         "transaction_id", "predicted_master_category", "prediction_confidence",
         "model_version", "prediction_timestamp"), "transaction_id")
-    assert spark.read.parquet(path).count() == 30
+    assert SnapshotTable(path).read(spark).count() == 30
     # re-predict with a newer model version: still one row per id, updated
     p2 = predict_categories(trained.model, df, "v2", 0.4, now=dt.datetime(2024, 3, 3))
     merge_keyed(spark, path, p2.select(
         "transaction_id", "predicted_master_category", "prediction_confidence",
         "model_version", "prediction_timestamp"), "transaction_id")
-    final = spark.read.parquet(path)
+    final = SnapshotTable(path).read(spark)
     assert final.count() == 30
     assert final.filter("model_version = 'v2'").count() == 30
 

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from doin_fine_ance__spark.operators.dedup import latest_wins, reconnection_dedup
 from doin_fine_ance__spark.operators.skew import salted_join
+from doin_fine_ance__spark.operators.snapshot import SnapshotTable
 
 
 def test_salted_join_matches_plain_join(spark):
@@ -125,13 +126,13 @@ def test_streaming_upsert_sink(spark, tmp_path):
         q.processAllAvailable()
         first = {
             (str(r.window_start), r.event_type): r.n
-            for r in spark.read.parquet(out_path).collect()
+            for r in SnapshotTable(out_path).read(spark).collect()
         }
         assert list(first.values()) == [2]
         # a second batch UPDATES the same window's row (merge, not append)
         drop([(3, "2024-01-01 10:02:00", "a", 3.0)], "b2")
         q.processAllAvailable()
-        final = spark.read.parquet(out_path).collect()
+        final = SnapshotTable(out_path).read(spark).collect()
         assert len(final) == 1 and final[0].n == 3
     finally:
         q.stop()
@@ -161,7 +162,7 @@ def test_bulk_categorize_and_by_id(spark, tmp_path):
         ],
         now=dt.datetime(2024, 3, 2),
     )
-    rows = {r.transaction_id: r for r in spark.read.parquet(path).collect()}
+    rows = {r.transaction_id: r for r in SnapshotTable(path).read(spark).collect()}
     assert len(rows) == 3
     assert rows["T1"].master_category == "Transportation"
     assert rows["T3"].notes == "march"
@@ -461,7 +462,7 @@ def test_streaming_upsert_sink_restart_exactly_once(spark, tmp_path):
     finally:
         q2.stop()
 
-    rows = spark.read.parquet(out_path).collect()
+    rows = SnapshotTable(out_path).read(spark).collect()
     # one row per (window, type) key — restart merged, never duplicated
     assert len(rows) == 1
     assert rows[0].n == 3 and rows[0].event_type == "a"

@@ -13,6 +13,7 @@ from doin_fine_ance__spark.orchestration import (
     RetrainDebouncer,
     as_dagster_definitions,
 )
+from doin_fine_ance__spark.plans.build import Warehouse
 from doin_fine_ance__spark.sources import fixtures as FX
 
 NOW = dt.datetime(2024, 3, 15, 12, 0, 0)
@@ -57,10 +58,11 @@ def test_pipeline_run_end_to_end(spark, tmp_path):
     # 12-ish validated rows < 50 → training skipped but recorded
     assert results["train"] == "skipped"
     assert results["predict"] == "skipped (no active model)"
-    reg = spark.read.parquet(str(tmp_path / "analytics" / "model_registry"))
+    wh = Warehouse(spark, root)
+    reg = wh.read("analytics", "model_registry")
     assert reg.filter("status = 'skipped' and is_latest").count() == 1
     # ingested rows flowed through staging into the marts
-    unc = spark.read.parquet(str(tmp_path / "analytics" / "fct_trxns_uncategorized"))
+    unc = wh.read("analytics", "fct_trxns_uncategorized")
     assert unc.filter("description = 'SAFEWAY RUN'").count() == 5
 
 

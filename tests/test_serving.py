@@ -93,19 +93,19 @@ def test_pagination_disjoint_and_ordered(overlay):
 
 def test_categorize_upsert_roundtrip(spark, wh):
     path = wh.path("public", "user_categories")
-    before = spark.read.parquet(path).count()
+    before = wh.read("public", "user_categories").count()
     categorize_transaction(
         spark, path, "TRN-002", "Transportation", validated=True,
         now=dt.datetime(2024, 3, 10, 10, 0, 0),
     )
-    after = spark.read.parquet(path)
+    after = wh.read("public", "user_categories")
     assert after.count() == before + 1
     # update the same id: no row growth, category changes
     categorize_transaction(
         spark, path, "TRN-002", "Fun!™", notes="actually fun",
         now=dt.datetime(2024, 3, 11, 10, 0, 0),
     )
-    final = spark.read.parquet(path)
+    final = wh.read("public", "user_categories")
     assert final.count() == before + 1
     row = final.filter("transaction_id = 'TRN-002'").collect()[0]
     assert row.master_category == "Fun!™"
@@ -124,10 +124,13 @@ def _jobs(spark, group, fn):
 
 
 def test_override_writes_job_counts(spark, tmp_path):
-    """Override writes build their update side as a local relation and
-    read the table with its declared schema: no Python-worker stage per
-    read of the update, and no schema-inference job on the existing-row
-    read. The list-built update cost 7 and 5 jobs."""
+    """Override writes build their update side as a local relation,
+    resolve the existing row inside the merge (no separate collect),
+    and read the manifest table with its recorded schema. The single
+    write pays one schema-inference job, because its table starts as
+    plain parquet; the bulk write runs on the manifest it published.
+    A separate existing-row collect and an inferring merge read cost
+    4 and 3 jobs; the list-built update, 7 and 5."""
     path = str(tmp_path / "user_categories")
     FX.user_categories(spark).write.parquet(path)
     single = _jobs(spark, "categorize_existing", lambda: categorize_transaction(
@@ -140,7 +143,53 @@ def test_override_writes_job_counts(spark, tmp_path):
          {"transaction_id": "TRN-NEW", "master_category": "Gas"}],
         now=dt.datetime(2024, 3, 12, 11, 0, 0),
     ))
-    assert (single, bulk) == (4, 3)
+    assert (single, bulk) == (3, 2)
+
+
+def test_serving_reads_survive_concurrent_writes(spark, tmp_path):
+    """One thread reads lists through the route table while another
+    posts override writes: every read sees one whole version of the
+    overrides table, so none fails, and the writes are read back."""
+    import threading
+
+    from doin_fine_ance__spark.serving.http_api import ServingApp
+
+    root = str(tmp_path / "wh")
+    FX.write_warehouse_inputs(spark, root)
+    build(Warehouse(spark, root), full_refresh=True)
+    app = ServingApp(spark, root)
+    ids = [t["transaction_id"] for t in
+           app.route("GET", "/api/transactions", {"limit": ["100"]}, {})["transactions"]]
+    written: dict[str, str] = {}
+    errors: list[BaseException] = []
+    reads = [0]
+    done = threading.Event()
+
+    def reader():
+        try:
+            while not done.is_set():
+                app.route("GET", "/api/transactions", {"limit": ["20"]}, {})
+                app.route("GET", "/api/validated", {}, {})
+                reads[0] += 1
+        except BaseException as e:  # noqa: BLE001 — surfaced below
+            errors.append(e)
+
+    t = threading.Thread(target=reader)
+    t.start()
+    try:
+        for i in range(20):
+            txn_id, category = ids[i % len(ids)], f"Category {i}"
+            app.route("POST", f"/api/transactions/{txn_id}/categorize", {},
+                      {"master_category": category})
+            written[txn_id] = category
+    finally:
+        done.set()
+        t.join(timeout=120)
+    assert not errors, errors
+    assert reads[0] > 0
+    for txn_id, category in written.items():
+        got = app.route("GET", f"/api/transactions/{txn_id}", {}, {})
+        assert (got["master_category"], got["validated"]) == (category, True)
 
 
 def test_validated_listing_and_filters(spark, wh):

@@ -177,3 +177,113 @@ def test_append_after_empty_overwrite_keeps_recorded_schema_union(spark, tmp_pat
 
     st = StructType.fromJson(_json.loads(t.manifest()["schema"]))
     assert [f.name for f in st.fields] == ["id", "label"]
+
+
+@pytest.fixture()
+def clock(monkeypatch):
+    """A settable clock for the snapshot module's commit timestamps."""
+    import types
+
+    from doin_fine_ance__spark.operators import snapshot
+
+    now = [1_000_000.0]
+    monkeypatch.setattr(snapshot, "time", types.SimpleNamespace(time=lambda: now[0]))
+    return now
+
+
+def test_commit_deletes_versions_superseded_past_retention(spark, tmp_path, clock):
+    import os
+
+    from doin_fine_ance__spark.operators.snapshot import RETAIN_SUPERSEDED_S
+
+    t = SnapshotTable(str(tmp_path / "tbl"))
+    start = clock[0]
+    dirs = {}
+    for gen in (1, 2, 3):  # published at start, +60 s, +120 s
+        v = t.commit_overwrite(_gen_df(spark, gen, 10 * gen))
+        dirs[v] = t.manifest(v)["dir"]
+        clock[0] += 60
+    # v1 was superseded at +60 s and is now past retention; v2 was
+    # superseded at +120 s and is not
+    clock[0] = start + 60 + RETAIN_SUPERSEDED_S + 1
+    assert t.commit_overwrite(_gen_df(spark, 4, 40)) == 4
+    assert not os.path.exists(dirs[1])
+    with pytest.raises(FileNotFoundError):
+        t.manifest(1)
+    assert all(os.path.isdir(dirs[v]) for v in (2, 3))
+    assert [t.read(spark, v).count() for v in (2, 3, 4)] == [20, 30, 40]
+    assert sorted(os.listdir(os.path.join(t.root, "data"))) == sorted(
+        os.path.basename(t.manifest(v)["dir"]) for v in (2, 3, 4)
+    )
+
+
+def test_adopted_plain_files_follow_the_retention_rule(spark, tmp_path, clock):
+    """The first commit to a plain parquet table reads it as the base
+    and publishes v1 under data/; the plain files it superseded stay
+    readable by pinned readers until retention deletes them."""
+    import os
+
+    from doin_fine_ance__spark.operators.snapshot import RETAIN_SUPERSEDED_S
+    from doin_fine_ance__spark.operators.upsert import merge_keyed
+
+    root = str(tmp_path / "plain")
+    _gen_df(spark, 0, 50).write.parquet(root)
+    plain = sorted(os.listdir(root))
+    t = SnapshotTable(root)
+    assert t.exists() and t.latest_version() == 0
+    pinned = t.read(spark)
+    assert pinned.count() == 50
+
+    merge_keyed(spark, root, _gen_df(spark, 1, 5), "id")
+    assert t.latest_version() == 1
+    assert sorted(t.read(spark).groupBy("gen").count().collect()) == [(0, 45), (1, 5)]
+    assert os.path.dirname(t.manifest()["files"][0]) == t.manifest()["dir"]
+    assert set(plain) <= set(os.listdir(root))  # superseded, not yet expired
+    assert pinned.count() == 50
+
+    clock[0] += RETAIN_SUPERSEDED_S + 1
+    merge_keyed(spark, root, _gen_df(spark, 2, 1), "id")
+    assert sorted(os.listdir(root)) == ["_latest", "_manifests", "data"]
+    assert t.read(spark).count() == 50
+
+
+def test_root_survives_vacuum_after_adoption(spark, tmp_path):
+    import os
+
+    root = str(tmp_path / "plain")
+    _gen_df(spark, 0, 20).write.parquet(root)
+    t = SnapshotTable(root)
+    t.commit_append(_gen_df(spark, 1, 30).filter("id >= 20"), dedup_key="id")
+    assert t.latest_version() == 2  # v1 adopts the plain rows, v2 appends
+    assert t.vacuum(keep_last=1) == [1]
+    assert sorted(os.listdir(root)) == ["_latest", "_manifests", "data"]
+    assert t.vacuum(keep_last=1) == []
+    assert os.path.isdir(root)
+    assert sorted(t.read(spark).groupBy("gen").count().collect()) == [(0, 20), (1, 10)]
+
+
+@pytest.mark.parametrize("partitioned", [False, True])
+def test_plain_read_ignores_an_unpublished_adopting_commit(spark, tmp_path, partitioned):
+    """Between an adopting commit's data write and its publish, the
+    table still reads as plain parquet: only the plain entries, never
+    the commit dir already sitting under data/ (which, next to plain
+    partition dirs, made the whole-root listing fail)."""
+    import os
+    import shutil
+
+    root = str(tmp_path / "plain")
+    w = _gen_df(spark, 0, 20).withColumn("p", F.col("id") % 2).write
+    (w.partitionBy("p") if partitioned else w).parquet(root)
+    t = SnapshotTable(root)
+    plain_bytes = sum(
+        os.path.getsize(os.path.join(d, f))
+        for d, _, fs in os.walk(root) for f in fs if f.endswith(".parquet")
+    )
+    # what an adopting commit leaves before it renames _latest
+    staged = os.path.join(root, "data", "0" * 32)
+    shutil.copytree(root, staged, ignore=shutil.ignore_patterns("data"))
+    assert t.latest_version() == 0
+    out = t.read(spark)
+    assert out.count() == 20
+    assert sorted(out.groupBy("p").count().collect()) == [(0, 10), (1, 10)]
+    assert t.size_bytes() == plain_bytes

@@ -1,10 +1,11 @@
-"""Snapshot-mode warehouse (VERDICT r4 #5 / r5 #5): builds commit
-versioned manifests, reads pin the published version — a serving read
-concurrent with a full-refresh build must return the complete
-PRE-build snapshot, never a torn or post-swap table."""
+"""The warehouse's one table layout (VERDICT r4 #5 / r5 #5): builds
+commit versioned manifests, reads pin the published version — a serving
+read concurrent with a full-refresh build must return the complete
+PRE-build snapshot, never a torn or post-build table."""
 
 from __future__ import annotations
 
+import hashlib
 import os
 import threading
 
@@ -19,7 +20,7 @@ from doin_fine_ance__spark.sources import fixtures as FX
 def snap_wh(spark, tmp_path):
     root = str(tmp_path / "wh")
     FX.write_warehouse_inputs(spark, root)
-    wh = Warehouse(spark, root, snapshot=True)
+    wh = Warehouse(spark, root)
     build(wh, full_refresh=True)
     return wh
 
@@ -31,22 +32,33 @@ def _shrink_inputs(spark, root: str) -> None:
     raw.write.mode("overwrite").parquet(f"{root}/public/simplefin")
 
 
+# (rows, sha256 of the newline-joined sorted row reprs, first 16 hex
+# digits) per model of a full-refresh build over the fixture inputs,
+# captured from the stage-and-swap layout the manifest layout replaced
+SWAP_BUILD_ROWS = {
+    "stg_simplefin": (11, "7afbc7eda6a11f99"),
+    "stg_historic_trxns": (7, "4e6e551ab0160def"),
+    "int_trxns": (18, "1cbf8415237af605"),
+    "int_trxns_features": (18, "c0f50c9c8ca1007f"),
+    "fct_trxns_categorized": (3, "831a2d827fef24bd"),
+    "stg_user_validated_categories": (4, "d12d7dbc5089c542"),
+    "fct_validated_trxns": (7, "a6b0cfad06e13017"),
+    "fct_trxns_uncategorized": (12, "c48bda684605ee23"),
+    "fct_trxns_with_predictions": (12, "ec04b1edf3fd40f1"),
+}
+
+
 @pytest.mark.slow
-def test_snapshot_build_matches_swap_build(spark, tmp_path, snap_wh):
-    """Same model outputs whichever layout materializes them."""
-    plain_root = str(tmp_path / "plain")
-    FX.write_warehouse_inputs(spark, plain_root)
-    plain = Warehouse(spark, plain_root)
-    counts_plain = build(plain, full_refresh=True)
-    for table in counts_plain:
-        snap_rows = sorted(
+def test_snapshot_build_matches_swap_build(snap_wh):
+    """Same model outputs as the swap layout built from the same inputs."""
+    got = {}
+    for table in SWAP_BUILD_ROWS:
+        rows = sorted(
             map(repr, snap_wh.read("analytics", table).drop("_month").collect())
         )
-        plain_rows = sorted(
-            map(repr, plain.read("analytics", table).drop("_month").collect())
-        )
-        assert snap_rows == plain_rows, table
-    # and the snapshot layout really is manifest-addressed
+        got[table] = (len(rows), hashlib.sha256("\n".join(rows).encode()).hexdigest()[:16])
+    assert got == SWAP_BUILD_ROWS
+    # and the layout really is manifest-addressed
     assert os.path.exists(
         os.path.join(snap_wh.path("analytics", "fct_validated_trxns"), "_latest")
     )
@@ -234,7 +246,7 @@ def test_catalog_view_over_append_manifest_unions_by_name(spark, tmp_path):
     st.commit_append(
         spark.createDataFrame([("c", 3)], "label string, id bigint")
     )
-    wh = Warehouse(spark, root, snapshot=True)
+    wh = Warehouse(spark, root)
     assert "analytics.applog" in register_sql_catalog(wh)
     got = {
         (r["id"], r["label"])
@@ -312,7 +324,7 @@ def test_catalog_view_append_schema_evolution_nullfills(spark, tmp_path):
 
     mschema = StructType.fromJson(_json.loads(st.manifest()["schema"]))
     assert [f.name for f in mschema.fields] == ["id", "label", "score"]
-    wh = Warehouse(spark, root, snapshot=True)
+    wh = Warehouse(spark, root)
     assert "analytics.evolving" in register_sql_catalog(wh)
     got = {
         (r["id"], r["label"], r["score"])
@@ -336,7 +348,7 @@ def test_register_empty_partitioned_snapshot_table(spark, tmp_path):
         spark.createDataFrame([], "id bigint, label string, day date"),
         partition_by="day",
     )
-    wh = Warehouse(spark, root, snapshot=True)
+    wh = Warehouse(spark, root)
     assert "analytics.emptypart" in register_sql_catalog(wh)
     df = spark.sql("SELECT id, label, day FROM analytics.emptypart")
     assert df.count() == 0
@@ -371,7 +383,7 @@ def test_catalog_view_casts_retyped_columns_to_manifest_type(spark, tmp_path):
         "id": "bigint",
         "val": "bigint",
     }
-    wh = Warehouse(spark, root, snapshot=True)
+    wh = Warehouse(spark, root)
     assert "analytics.retyped" in register_sql_catalog(wh)
     df = spark.sql("SELECT id, val FROM analytics.retyped")
     # the view serves the RECORDED type, not the union-coerced one

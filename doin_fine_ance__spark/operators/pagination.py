@@ -1,4 +1,4 @@
-"""Sorted pagination (LIMIT/OFFSET) and exact counts.
+"""Sorted pagination (LIMIT/OFFSET) and a page with its exact total.
 
 The reference serves two paginated list endpoints with allow-listed
 sort columns and COUNT(*)+page queries (SURVEY.md §2.6,
@@ -6,33 +6,37 @@ transaction_service.py:196-213, validated_transactions.py:107-128).
 Spark DataFrames have ``limit`` but no offset, so offset pagination is
 ``row_number`` over the *total* sort order (caller must make it total —
 include a unique key as final tiebreak) filtered to
-``(offset, offset+limit]``.
+``(offset, offset+limit]``. :func:`collect_page_with_total` serves the
+reference's two queries as one action: the total rides the same window.
 
-Scale note: the window is un-partitioned, which serializes on one
-reducer — correct but only sane because pages are capped (reference
-caps at 1k/10k rows). For deep pagination at 100 TB, keyset pagination
-(WHERE sort_key > last_seen ORDER BY .. LIMIT n) is the right call and
-is what `paginate(.., keyset_after=..)` provides.
+Scale note: the window is un-partitioned, so every row of the filtered
+frame is sorted on one reducer. That is correct, and cheap only because
+serving frames are one household's marts and pages are capped (the
+reference caps at 1k/10k rows); a frame too large for one task needs a
+partitioned sort and a different total, not this operator.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
+class Page(NamedTuple):
+    """One collected page (rows as dicts) and the exact total of the
+    frame it was cut from."""
+
+    total_count: int
+    rows: list[dict]
+
+
 def paginate(
-    df: DataFrame,
-    order: Sequence[Column],
-    limit: int,
-    offset: int = 0,
-    keyset_after: Column | None = None,
+    df: DataFrame, order: Sequence[Column], limit: int, offset: int = 0
 ) -> DataFrame:
     """Return one page of `df` under a total `order`."""
-    if keyset_after is not None:
-        return df.filter(keyset_after).orderBy(*order).limit(limit)
     if offset == 0:
         return df.orderBy(*order).limit(limit)
     w = Window.orderBy(*order)
@@ -43,60 +47,22 @@ def paginate(
     )
 
 
-def count_and_page(
-    df: DataFrame, order: Sequence[Column], limit: int, offset: int = 0
-) -> tuple[int, DataFrame]:
-    """The reference's two-query pattern: total COUNT(*) plus one page."""
-    return df.count(), paginate(df, order, limit, offset)
-
-
-def page_with_total(
-    df: DataFrame,
-    order: Sequence[Column],
-    limit: int,
-    offset: int = 0,
-    total_col: str = "__total",
-) -> DataFrame:
-    """Single-pass page + total: every page row carries the filtered
-    total in ``total_col``.
-
-    The reference issues COUNT(*) and the page as two queries
-    (transaction_service.py:205-213) — two full scans of the filtered
-    set. The row-number pagination already pays one global sort pass;
-    an unbounded ``count(*) OVER ()`` rides the SAME window exchange,
-    so one action serves both ("one job per page request"). At 100 TB
-    this halves the serving read amplification.
-
-    Caveat: a page past the end collects zero rows and therefore no
-    total — callers fall back to ``df.count()`` for that (rare) case,
-    or use :func:`collect_page_with_total`, which closes it.
-    """
-    w = Window.orderBy(*order)
-    wt = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .withColumn(total_col, F.count(F.lit(1)).over(wt))
-        .filter((F.col("__rn") > offset) & (F.col("__rn") <= offset + limit))
-        .drop("__rn")
-    )
-
-
 def collect_page_with_total(
     df: DataFrame,
     order: Sequence[Column],
     limit: int,
     offset: int = 0,
-) -> tuple[int, list[dict]]:
-    """One page + exact filtered total in exactly ONE job, always.
+) -> Page:
+    """One page + the exact total of `df` under a total `order`, in one
+    action.
 
-    Same single window pass as :func:`page_with_total`, but the filter
-    additionally keeps the ``__rn == 1`` row as a total-bearing
-    sentinel, so a page requested past the end still returns the total
-    without a second ``df.count()`` job (the caveat VERDICT r3 flagged
-    on the serving path). An empty input collects nothing and is
-    total=0 by definition — still no second job.
+    An unbounded ``count(*) OVER ()`` rides the ``row_number`` window's
+    exchange, so the total costs no second scan of `df`. The filter
+    also keeps the ``__rn == 1`` row as a total-bearing sentinel, so a
+    page requested past the end still returns the total; an empty input
+    collects nothing and is total=0 by definition.
 
-    Returns ``(total, page_rows)`` with helper columns stripped.
+    Returns the :class:`Page` with helper columns stripped.
     """
     w = Window.orderBy(*order)
     wt = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
@@ -109,11 +75,10 @@ def collect_page_with_total(
         .collect()
     )
     if not rows:
-        return 0, []
-    total = int(rows[0][tc])
+        return Page(0, [])
     page = [
         {k: v for k, v in r.asDict().items() if k not in (rn, tc)}
         for r in rows
         if offset < r[rn] <= offset + limit
     ]
-    return total, page
+    return Page(int(rows[0][tc]), page)

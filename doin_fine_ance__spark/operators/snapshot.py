@@ -7,14 +7,15 @@ log. This module is the smallest honest version of that log:
 
 - every commit writes data files into a FRESH immutable directory
   (``data/<uuid>``), then a manifest ``_manifests/v{N}.json`` listing
-  exactly those files and the frame's schema, then atomically renames
-  ``_latest.tmp`` → ``_latest`` to publish N;
+  exactly those files (relative to the table root, so a copied or
+  restored root reads its own files) and the frame's schema, then
+  atomically renames ``_latest.tmp`` → ``_latest`` to publish N;
 - readers resolve ``_latest`` → manifest → explicit file list and
   hand that list, with the recorded schema, to
   ``spark.read.schema(S).parquet(*files)``: no schema-inference job,
   and Spark pins those concrete files for the whole query, so a commit
   that lands mid-read changes nothing the reader can observe. Old
-  versions stay readable (time travel) until retention or ``vacuum``.
+  versions stay readable (time travel) until retention deletes them.
 
 A root that holds plain parquet and no manifest (an external input such
 as the ``public`` loads) reads as plain parquet. The first commit to
@@ -72,7 +73,9 @@ class SnapshotTable:
         <root>/
           _latest              # text file: highest committed version
           _manifests/v{N}.json # {"version", "ts", "dir", "files",
-                               #  "partitioned"?, "schema"}
+                               #  "partitioned"?, "schema"}; paths
+                               #  relative to the root (absolute in
+                               #  manifests of older commits)
           data/<uuid>/         # immutable per-commit parquet dirs
     """
 
@@ -98,7 +101,7 @@ class SnapshotTable:
 
         Returns the committed version number. Readers holding any
         previously published version are unaffected: its files are
-        immutable and stay until retention or :meth:`vacuum`.
+        immutable and stay until retention deletes them.
 
         With ``partition_by`` the commit directory is hive-partitioned
         and the manifest's ``files`` is empty: readers read the
@@ -186,23 +189,20 @@ class SnapshotTable:
 
     def _write(self, df: DataFrame, partition_by: str | None = None) -> dict:
         """Write df to a fresh commit dir; returns its manifest body."""
-        commit_dir = os.path.join(self._data_dir, uuid.uuid4().hex)
-        body = {"dir": commit_dir, "files": [], "schema": df.schema.json()}
+        rel = os.path.join("data", uuid.uuid4().hex)
+        commit_dir = self._abs(rel)
+        body = {"dir": rel, "files": [], "schema": df.schema.json()}
         if partition_by:
             df.write.mode("overwrite").partitionBy(partition_by).parquet(commit_dir)
             body["partitioned"] = True
         else:
             df.write.mode("overwrite").parquet(commit_dir)
-            body["files"] = self._list_parquet(commit_dir)
+            body["files"] = sorted(
+                os.path.join(rel, f)
+                for f in os.listdir(commit_dir)
+                if f.endswith(".parquet")
+            )
         return body
-
-    @staticmethod
-    def _list_parquet(commit_dir: str) -> list[str]:
-        return sorted(
-            os.path.join(commit_dir, f)
-            for f in os.listdir(commit_dir)
-            if f.endswith(".parquet")
-        )
 
     def _publish(self, body: dict) -> int:
         """Write manifest v(N+1), atomically move the ``_latest``
@@ -260,6 +260,11 @@ class SnapshotTable:
         recorded = self.manifest(version).get("schema")
         return StructType.fromJson(json.loads(recorded)) if recorded else None
 
+    def files(self, version: int | None = None) -> list[str]:
+        """The absolute paths of the version's parquet files (empty for
+        a partitioned version, which is read by its commit dir)."""
+        return [self._abs(p) for p in self.manifest(version)["files"]]
+
     def commit_dirs(self, version: int | None = None) -> list[str]:
         """The commit dirs that hold the version's data: the distinct
         dirs of its files, or its partitioned commit dir if any part
@@ -267,8 +272,9 @@ class SnapshotTable:
         can coalesce an empty write to zero part files)."""
         m = self.manifest(version)
         if not m.get("partitioned"):
-            return sorted({os.path.dirname(p) for p in m["files"]})
-        return [m["dir"]] if _parquet_under([m["dir"]]) else []
+            return sorted({os.path.dirname(p) for p in self.files(version)})
+        d = self._abs(m["dir"])
+        return [d] if _parquet_under([d]) else []
 
     def size_bytes(self, version: int | None = None) -> int:
         """Bytes of parquet the version holds (latest by default; the
@@ -277,7 +283,8 @@ class SnapshotTable:
             files = _parquet_under(self._plain_data())
         else:
             m = self.manifest(version)
-            files = _parquet_under([m["dir"]]) if m.get("partitioned") else m["files"]
+            partitioned = m.get("partitioned")
+            files = _parquet_under([self._abs(m["dir"])]) if partitioned else self.files(version)
         return sum(os.path.getsize(f) for f in files)
 
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
@@ -298,7 +305,7 @@ class SnapshotTable:
                 return spark.read.option("basePath", self.root).parquet(*plain)
         m = self.manifest(version)
         schema = self.schema(version)
-        paths = self.commit_dirs(version) if m.get("partitioned") else m["files"]
+        paths = self.commit_dirs(version) if m.get("partitioned") else self.files(version)
         if paths:
             return (spark.read.schema(schema) if schema else spark.read).parquet(*paths)
         if schema is None:
@@ -312,25 +319,13 @@ class SnapshotTable:
 
     # ---------------------------------------------------------- maintain
 
-    def vacuum(self, keep_last: int = 2) -> list[int]:
-        """Drop manifests+data older than the newest ``keep_last``
-        versions, and the plain files an adopting commit superseded.
-        Returns the removed version numbers. Callers choose a retention
-        long enough for in-flight readers to finish (same contract as
-        Delta's VACUUM). A table without a manifest is left alone."""
-        with table_write_lock(self.root):
-            latest = self.latest_version()
-            if latest == 0:
-                return []
-            expired = [
-                v for v in self._versions() if v <= latest - max(keep_last, 1)
-            ]
-            self._remove(expired, plain=True)
-            return expired
-
     def _retain(self) -> None:
         """Delete the data of versions superseded more than
-        RETAIN_SUPERSEDED_S ago. Caller holds the lock, after a publish."""
+        RETAIN_SUPERSEDED_S ago: their manifests, the commit dirs no
+        newer version lists, and the plain files an adopting commit
+        superseded. Only paths under ``data/`` and plain root entries
+        are ever removed, never the root. Caller holds the lock, after
+        a publish."""
         cutoff = time.time() - RETAIN_SUPERSEDED_S
         versions = self._versions()
         expired = []
@@ -339,25 +334,19 @@ class SnapshotTable:
                 break
             expired.append(v)
         # the plain files were superseded no later than the oldest
-        # manifest still on disk
-        self._remove(expired, plain=self.manifest(versions[0])["ts"] < cutoff)
-
-    def _remove(self, expired: list[int], plain: bool) -> None:
-        """Delete the manifests of ``expired`` (the oldest versions) and
-        the commit dirs no newer version lists; with ``plain``, also the
-        superseded plain files at the root. Only paths under ``data/``
-        and plain root entries are ever removed, never the root."""
+        # manifest on disk
+        plain_expired = self.manifest(versions[0])["ts"] < cutoff
         if expired:
             # files reach a later version only through a chain of
             # appends, so a dir some newer version still lists is
             # listed by the oldest one kept
-            kept = self._dirs(self._versions()[len(expired)])
+            kept = self._dirs(versions[len(expired)])
             for v in expired:
                 for d in self._dirs(v) - kept:
                     if os.path.dirname(d) == self._data_dir:
                         shutil.rmtree(d, ignore_errors=True)
                 os.remove(self._manifest_path(v))
-        if plain:
+        if plain_expired:
             for p in self._plain_entries():
                 if os.path.isdir(p):
                     shutil.rmtree(p, ignore_errors=True)
@@ -366,8 +355,13 @@ class SnapshotTable:
 
     def _dirs(self, version: int) -> set[str]:
         m = self.manifest(version)
-        dirs = {os.path.dirname(p) for p in m["files"]}
-        return dirs | {m["dir"]} if m.get("dir") else dirs
+        dirs = {os.path.dirname(p) for p in self.files(version)}
+        return dirs | {self._abs(m["dir"])} if m.get("dir") else dirs
+
+    def _abs(self, path: str) -> str:
+        """A manifest path resolved against the root (``os.path.join``
+        keeps an absolute one as it is)."""
+        return os.path.join(self.root, path)
 
     def _versions(self) -> list[int]:
         if not os.path.isdir(self._manifest_dir):

@@ -23,7 +23,7 @@ import os
 import shutil
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .maintenance import output_files
@@ -86,6 +86,7 @@ def merge_keyed(
     updates: DataFrame,
     key: str,
     timeout: float = 0.0,
+    insert_only: tuple[str, ...] = (),
 ) -> None:
     """Upsert `updates` into the table at `path` on `key`.
 
@@ -93,7 +94,10 @@ def merge_keyed(
     (classifier_predict.py:149-170): one row per key survives, updates
     win. Columns of the table that `updates` does not carry keep the
     existing row's value (null for a new key), like an ``UPDATE SET``
-    of just the given columns.
+    of just the given columns. The ``insert_only`` columns of `updates`
+    are the values for new keys only: a matched key keeps its existing
+    non-null value, like ``INSERT .. ON CONFLICT`` leaving them out of
+    its ``DO UPDATE SET``.
 
     The read of the current version, the merge and the commit hold the
     table lock, so a concurrent merge can never be lost: the second
@@ -115,17 +119,27 @@ def merge_keyed(
             return updates
         keys = updates.select(key)
         new = updates
-        missing = [c for c in current.columns if c not in updates.columns]
-        if missing:
-            # the matched rows' other columns: each column is non-null
-            # on at most one side of the union. For local-relation updates
-            # this is one single-partition pass (no exchange, so no
-            # extra job).
-            old = current.join(keys, key, "left_semi").select(key, *missing)
+        # the columns whose matched-row value decides the merged row;
+        # the insert-only ones are renamed so both values reach the agg
+        old_of = {c: c for c in current.columns if c not in updates.columns}
+        old_of.update({c: f"__old_{c}" for c in insert_only})
+        if old_of:
+            # each column is non-null on at most one side of the union.
+            # For local-relation updates this is one single-partition
+            # pass (no exchange, so no extra job).
+            old = current.join(keys, key, "left_semi").select(
+                key, *[F.col(c).alias(o) for c, o in old_of.items()]
+            )
             both = updates.unionByName(old, allowMissingColumns=True)
+
+            def value(c: str) -> Column:
+                first = F.first(old_of.get(c, c), ignorenulls=True)
+                if c in insert_only:
+                    first = F.coalesce(first, F.first(c, ignorenulls=True))
+                return first.alias(c)
+
             new = (both.coalesce(1) if local else both).groupBy(key).agg(
-                *[F.first(c, ignorenulls=True).alias(c)
-                  for c in current.columns if c != key]
+                *[value(c) for c in current.columns if c != key]
             )
         kept = current.join(keys, key, "left_anti")
         n = output_files(table.size_bytes())

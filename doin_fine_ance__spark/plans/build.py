@@ -79,23 +79,6 @@ class Warehouse:
         self._table(schema, table).commit_overwrite(df, partition_by=partition_by)
         self._reregister_if_registered(schema, table)
 
-    def vacuum(self, schema: str, table: str, keep_last: int = 2) -> list[int]:
-        """Drop manifests + data dirs older than the newest
-        ``keep_last`` versions (no-op for tables without a manifest).
-        Choose a retention long enough for in-flight readers — same
-        contract as Delta's VACUUM.
-
-        A catalog entry made by :func:`register_sql_catalog` points at
-        the commit dirs of the manifest that was CURRENT at
-        registration time; if the table has been rebuilt since, this
-        vacuum would delete exactly those dirs and break catalog reads
-        (ADVICE r6). So if the table is registered in the session
-        catalog, it is re-registered against the latest manifest here,
-        after the vacuum."""
-        removed = self._table(schema, table).vacuum(keep_last=keep_last)
-        self._reregister_if_registered(schema, table)
-        return removed
-
     def append_insert_only(
         self, df: DataFrame, schema: str, table: str, key: str
     ) -> None:
@@ -292,7 +275,7 @@ def _register_table(
         # versioned-manifest table: register the CURRENT published
         # version. The catalog entry is a point-in-time binding to
         # that version's commit dirs. Warehouse.write/
-        # append_insert_only/vacuum re-register registered tables at
+        # append_insert_only re-register registered tables at
         # commit time (VERDICT r7 #8); only a commit made directly
         # through SnapshotTable, bypassing the Warehouse, leaves a
         # stale binding until this is re-run.
@@ -384,7 +367,7 @@ def register_sql_catalog(wh: Warehouse) -> list[str]:
     Entries for the warehouse's own tables (every one is a manifest
     table) bind to the commit dirs of the version current at
     registration, and every Warehouse commit path (``write``,
-    ``append_insert_only``, ``vacuum``) re-registers registered tables
+    ``append_insert_only``) re-registers registered tables
     so the entry always serves the latest published version. Commits
     made directly through ``SnapshotTable`` (``merge_keyed``,
     ``record_model``) bypass that; re-run this afterwards. Tables

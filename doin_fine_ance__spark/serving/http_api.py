@@ -8,10 +8,11 @@ functions the query inventory tests (`serving/transactions.py`,
 
 Scope note: this is the *interactive* read/override surface — small
 result pages over materialized marts, single-row or small-batch
-override writes. The Spark work per request is a filter + top-k page
-on a cached overlay DataFrame; the HTTP layer only translates query
-strings and JSON bodies. Swapping in FastAPI/uvicorn is a handler
-rename, not a redesign.
+override writes. The Spark work per list request is a filter plus one
+window pass (over a cached overlay DataFrame for transactions), which
+yields the page and its total in one action; the HTTP layer only
+translates query strings and JSON bodies. Swapping in FastAPI/uvicorn
+is a handler rename, not a redesign.
 
 Routes (mirroring the reference paths):
 
@@ -55,14 +56,17 @@ def _jsonable(v):
     return v
 
 
+def _json_rows(rows) -> list[dict]:
+    return [{k: _jsonable(v) for k, v in r.items()} for r in rows]
+
+
 def _rows(df) -> list[dict]:
-    if isinstance(df, list):  # pre-collected single-job page
-        return [
-            {k: _jsonable(v) for k, v in
-             (r if isinstance(r, dict) else r.asDict()).items()}
-            for r in df
-        ]
-    return [{k: _jsonable(v) for k, v in r.asDict().items()} for r in df.collect()]
+    return _json_rows(r.asDict() for r in df.collect())
+
+
+def _page(page) -> dict:
+    """A list endpoint's body from its collected :class:`Page`."""
+    return {"total_count": page.total_count, "transactions": _json_rows(page.rows)}
 
 
 class HttpError(Exception):
@@ -78,7 +82,9 @@ class ServingApp:
     between requests; any write invalidates it — the same
     read-your-writes contract the reference gets from querying
     Postgres views per request, without re-running the join chain
-    when nothing changed.
+    when nothing changed. Both list endpoints collect their page and
+    total in one action (``operators.pagination.collect_page_with_total``),
+    where the reference runs COUNT(*) and the page as two queries.
 
     Every table is read through the warehouse, which pins one published
     version per read: an override write commits a new version of
@@ -127,7 +133,7 @@ class ServingApp:
     def list_transactions(self, q: dict) -> dict:
         from .transactions import get_transactions_filtered
 
-        page = get_transactions_filtered(
+        return _page(get_transactions_filtered(
             self.overlay(),
             limit=int(q.get("limit", ["100"])[0]),
             offset=int(q.get("offset", ["0"])[0]),
@@ -137,11 +143,7 @@ class ServingApp:
             == "true",
             sort_by=q.get("sort_by", [None])[0],
             sort_order=q.get("sort_order", ["desc"])[0],
-        )
-        return {
-            "total_count": page.total_count,
-            "transactions": _rows(page.transactions),
-        }
+        ))
 
     def get_transaction(self, txn_id: str) -> dict:
         from .transactions import get_transaction_by_id
@@ -182,9 +184,11 @@ class ServingApp:
         if required_key not in body:
             raise HttpError(400, f"{required_key} is required")
         existing = self.get_transaction(txn_id)  # 404s if unknown
-        # user_categories.master_category is NOT NULL; an uncategorized
-        # transaction being validated falls back to its prediction (or
-        # the reserved UNCERTAIN), same precedence as the overlay read.
+        # user_categories.master_category is NOT NULL: a transaction with
+        # no override yet takes its overlay category, else its prediction
+        # (or the reserved UNCERTAIN). An existing override keeps its own
+        # category, resolved inside the locked merge, so a categorize
+        # that commits after the read above is not reverted.
         category = (
             existing["master_category"]
             or existing["predicted_master_category"]
@@ -197,6 +201,7 @@ class ServingApp:
             master_category=category,
             **{field: body[required_key]},
             updated_by=body.get("updated_by", "api"),
+            keep_category=True,
         )
         self.invalidate()
         return {"status": "success", "transaction_id": txn_id}
@@ -221,7 +226,7 @@ class ServingApp:
     def list_validated(self, q: dict) -> dict:
         from .validated import list_validated_transactions
 
-        page = list_validated_transactions(
+        return _page(list_validated_transactions(
             self.wh.read("analytics", "fct_validated_trxns"),
             self._user_categories(),
             limit=int(q.get("limit", ["100"])[0]),
@@ -231,11 +236,7 @@ class ServingApp:
             category=q.get("category", [None])[0],
             account_name_filter=q.get("account_name", [None])[0],
             description_search=q.get("search", [None])[0],
-        )
-        return {
-            "total_count": page.total_count,
-            "transactions": _rows(page.transactions),
-        }
+        ))
 
     def validated_categories(self) -> list:
         from .validated import distinct_validated_categories

@@ -8,20 +8,16 @@ lines 14-35) + a filter/sort/pagination compiler
 
 Serving reads hit *materialized* marts (the reference re-runs a
 5-view-deep chain in Postgres per request — its acknowledged debt,
-TODO.md:12). ``get_transactions_filtered`` runs the reference's
-COUNT(*) + page as two actions by default, and that is the route
-``ServingApp.list_transactions`` takes: every list request pays a
-``count`` job before the page is collected. ``single_job=True`` serves
-both through ``collect_page_with_total`` instead: a window
-``count(*) OVER ()`` rides the page scan, and an ``__rn == 1``
-sentinel row carries the total even when the requested page is past
-the end, so such a request costs one job.
+TODO.md:12). ``get_transactions_filtered`` serves the reference's
+COUNT(*) + page as one action through ``collect_page_with_total``: a
+window ``count(*) OVER ()`` rides the page's ``row_number`` exchange,
+and an ``__rn == 1`` sentinel row carries the total even when the
+requested page is past the end.
 """
 
 from __future__ import annotations
 
 import datetime as dt
-from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -29,7 +25,7 @@ from pyspark.sql.functions import col, lit
 from pyspark.sql.types import StructType
 
 from ..functions.pg import ilike
-from ..operators.pagination import collect_page_with_total, paginate
+from ..operators.pagination import Page, collect_page_with_total
 from ..schemas import LOW_CONFIDENCE_THRESHOLD, USER_CATEGORIES
 from ..session import local_frame
 
@@ -86,14 +82,6 @@ def _view_mode_predicate(view_mode: str | None) -> Column:
     return lit(True)
 
 
-@dataclass
-class TransactionPage:
-    total_count: int
-    # a DataFrame (lazy, two-action path) or pre-collected Rows
-    # (single-job path); http_api._rows handles both
-    transactions: DataFrame | list
-
-
 def get_transactions_filtered(
     overlay: DataFrame,
     limit: int = 100,
@@ -104,13 +92,12 @@ def get_transactions_filtered(
     low_confidence_threshold: float = LOW_CONFIDENCE_THRESHOLD,
     sort_by: str | None = None,
     sort_order: str = "desc",
-    single_job: bool = False,
-) -> TransactionPage:
+) -> Page:
     """Filter/sort/page compiler (transaction_service.py:137-215).
 
     Reproduces the reference exactly: allow-listed sort columns with
     ``NULLS LAST`` in both directions, ILIKE search, low-confidence
-    exclusion only in predicted mode, COUNT(*) + page as two actions.
+    exclusion only in predicted mode, COUNT(*) + page (here one action).
     A transaction_id tiebreak makes pagination total-ordered (Postgres
     leaves ties unspecified; an engine serving pages must not).
     """
@@ -134,16 +121,7 @@ def get_transactions_filtered(
     )
     order = [direction, col("transaction_id").asc()]
 
-    if single_job:
-        # one action serves page + total, INCLUDING past-the-end pages
-        # (the rn==1 sentinel carries the total when the page is empty)
-        total, slim = collect_page_with_total(
-            filtered, order, limit=limit, offset=offset
-        )
-        return TransactionPage(total_count=total, transactions=slim)
-    total = filtered.count()
-    page = paginate(filtered, order, limit=limit, offset=offset)
-    return TransactionPage(total_count=total, transactions=page)
+    return collect_page_with_total(filtered, order, limit=limit, offset=offset)
 
 
 def get_transaction_by_id(overlay: DataFrame, transaction_id: str) -> DataFrame:
@@ -213,6 +191,7 @@ def categorize_transaction(
     exclude_from_forecast: bool | None = None,
     updated_by: str = "system",
     now: dt.datetime | None = None,
+    keep_category: bool = False,
 ) -> None:
     """Create-or-update one user override row, keyed on transaction_id
     (transaction_service.py:78-126). None-valued optional fields keep
@@ -223,6 +202,10 @@ def categorize_transaction(
     the rest from the version it reads under the table lock, so two
     concurrent writes to one id (a validate PUT and a notes PUT) both
     land instead of the later one restoring the earlier one's base.
+    With ``keep_category``, ``master_category`` is the category of a
+    new override only: an existing override keeps its own, read under
+    the same lock, so a field write never reverts a concurrent
+    categorize.
     """
     from ..operators.snapshot import SnapshotTable
     from ..operators.upsert import merge_keyed
@@ -248,4 +231,7 @@ def categorize_transaction(
     )
     # brief lock-wait: concurrent HTTP override writes serialize like
     # Postgres row locks instead of failing the request
-    merge_keyed(spark, user_categories_path, update, "transaction_id", timeout=10.0)
+    merge_keyed(
+        spark, user_categories_path, update, "transaction_id", timeout=10.0,
+        insert_only=("master_category",) if keep_category else (),
+    )

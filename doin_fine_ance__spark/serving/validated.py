@@ -9,14 +9,12 @@ last, DESC puts nulls first, and we must mirror that).
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 
 from ..functions.pg import ilike, pg_asc, pg_desc
-from ..operators.pagination import paginate
+from ..operators.pagination import Page, collect_page_with_total
 
 # validated_transactions.py:66-71.
 _ALLOWED_SORTS = {
@@ -30,12 +28,6 @@ _ALLOWED_SORTS = {
 }
 
 
-@dataclass
-class ValidatedPage:
-    total_count: int
-    transactions: DataFrame
-
-
 def list_validated_transactions(
     fct_validated_trxns: DataFrame,
     user_categories: DataFrame,
@@ -46,7 +38,9 @@ def list_validated_transactions(
     category: str | None = None,
     account_name_filter: str | None = None,
     description_search: str | None = None,
-) -> ValidatedPage:
+) -> Page:
+    """Filtered, sorted page + total in one action
+    (validated_transactions.py:40-128)."""
     limit = min(limit, 10000)  # validated_transactions.py:55 cap
     v = fct_validated_trxns.alias("v")
     uc = user_categories.alias("uc")
@@ -81,10 +75,7 @@ def list_validated_transactions(
     direction = pg_asc(sort_col) if sort_order.lower() == "asc" else pg_desc(sort_col)
     order = [direction, col("transaction_id").asc()]
 
-    total = filtered.count()
-    return ValidatedPage(
-        total_count=total, transactions=paginate(filtered, order, limit, offset)
-    )
+    return collect_page_with_total(filtered, order, limit, offset)
 
 
 def distinct_validated_categories(fct_validated_trxns: DataFrame) -> DataFrame:

@@ -18,3 +18,17 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMOKE
+
+
+@pytest.fixture()
+def clock(monkeypatch):
+    """A settable clock for the snapshot module's commit timestamps and
+    retention, starting at the real time."""
+    import time
+    import types
+
+    from doin_fine_ance__spark.operators import snapshot
+
+    now = [time.time()]
+    monkeypatch.setattr(snapshot, "time", types.SimpleNamespace(time=lambda: now[0]))
+    return now

@@ -210,6 +210,36 @@ def test_interleaved_override_writes_keep_both_fields(spark, tmp_path, monkeypat
     ]
 
 
+def test_field_write_keeps_a_category_committed_while_it_waits(spark, tmp_path, monkeypatch):
+    """A validate PUT reads the transaction, then is held inside the
+    merge until a categorize to "Rent" commits. Its category is only
+    the fallback for a transaction without an override, so the
+    merge keeps "Rent" and sets the flag."""
+    from doin_fine_ance__spark.operators import upsert
+    from doin_fine_ance__spark.plans.build import Warehouse, build
+    from doin_fine_ance__spark.serving.http_api import ServingApp
+    from doin_fine_ance__spark.sources import fixtures as FX
+
+    root = str(tmp_path / "wh")
+    FX.write_warehouse_inputs(spark, root)
+    build(Warehouse(spark, root), full_refresh=True)
+    app = ServingApp(spark, root)
+    listed = app.route("GET", "/api/transactions", {"limit": ["1"]}, {})["transactions"]
+    txn = listed[0]["transaction_id"]
+    assert listed[0]["master_category"] != "Rent"
+    wrap, a_waiting, b_done = _interleave("writer-a")
+    monkeypatch.setattr(upsert, "merge_keyed", wrap(upsert.merge_keyed))
+    _run_interleaved(
+        a_waiting, b_done,
+        lambda: app.route("PUT", f"/api/transactions/{txn}/validate", {},
+                          {"validated": True}),
+        lambda: app.route("POST", f"/api/transactions/{txn}/categorize", {},
+                          {"master_category": "Rent", "validated": False}),
+    )
+    got = app.route("GET", f"/api/transactions/{txn}", {}, {})
+    assert (got["master_category"], got["validated"]) == ("Rent", True)
+
+
 def test_interleaved_model_records_keep_both_rows(spark, tmp_path, monkeypatch):
     """Two registry records, forced to interleave the same way: the
     later commit's base must include the earlier one's row, and the

@@ -86,6 +86,31 @@ def test_snapshot_export_restore_round_trip(spark, tmp_path):
     assert spark.read.parquet(os.path.join(wh, "marts", "t1")).count() == 100
 
 
+def test_exported_snapshot_reads_its_own_merged_tables(spark, tmp_path):
+    """A merged manifest table in an exported snapshot reads the
+    snapshot's files: the export still reads once the source is gone."""
+    import datetime as dt
+    import shutil
+
+    from doin_fine_ance__spark.plans.build import Warehouse
+    from doin_fine_ance__spark.serving.transactions import categorize_transaction
+    from doin_fine_ance__spark.sources import fixtures as FX
+
+    wh = str(tmp_path / "warehouse")
+    live = Warehouse(spark, wh)
+    FX.user_categories(spark).write.parquet(live.path("public", "user_categories"))
+    categorize_transaction(
+        spark, live.path("public", "user_categories"), "TRN-002", "Rent",
+        now=dt.datetime(2024, 3, 10, 10, 0, 0),
+    )
+    expected = sorted(map(repr, live.read("public", "user_categories").collect()))
+
+    snap = mnt.export_snapshot(wh, str(tmp_path / "backups"))
+    shutil.rmtree(wh)
+    got = Warehouse(spark, snap).read("public", "user_categories").collect()
+    assert sorted(map(repr, got)) == expected
+
+
 def test_snapshot_errors(tmp_path):
     import pytest
 

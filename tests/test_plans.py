@@ -238,28 +238,40 @@ def test_q12_dual_conditional_sums_one_aggregate(spark):
     assert plan.count("HashAggregate") >= 2, plan[:3000]
 
 
-def test_page_with_total_single_pass_plan_and_values(spark):
+def test_collect_page_with_total_single_pass_plan_and_values(spark, monkeypatch):
     """Single-job serving page (VERDICT r2 next-round #7): the total
     rides the same global-sort window pass as the row-number, so one
     action answers a page request — vs COUNT(*) + page as two."""
+    from pyspark.sql import DataFrame
     from pyspark.sql import functions as F
 
     from doin_fine_ance__spark.operators.pagination import (
-        count_and_page,
-        page_with_total,
+        collect_page_with_total,
+        paginate,
     )
 
     df = spark.range(500).withColumn("v", (F.col("id") * 7) % 113)
     order = [F.col("v").asc(), F.col("id").asc()]
 
-    paged = page_with_total(df, order, limit=20, offset=40)
-    rows = paged.collect()
-    total_2q, page_2q = count_and_page(df, order, limit=20, offset=40)
-    assert [r["__total"] for r in rows] == [500] * 20
+    # capture the frame the operator collects, to inspect its plan
+    collected: list[DataFrame] = []
+    real_collect = type(df).collect
+
+    def spy(self):
+        collected.append(self)
+        return real_collect(self)
+
+    monkeypatch.setattr(type(df), "collect", spy)
+    total, rows = collect_page_with_total(df, order, limit=20, offset=40)
+    monkeypatch.undo()
+    (paged,) = collected
+    total_2q = df.count()
+    page_2q = paginate(df, order, limit=20, offset=40).collect()
+    assert total == total_2q == 500
     assert [(r["id"], r["v"]) for r in rows] == [
-        (r["id"], r["v"]) for r in page_2q.collect()
+        (r["id"], r["v"]) for r in page_2q
     ]
-    assert total_2q == 500
+    assert all(set(r) == {"id", "v"} for r in rows)
 
     # plan: both window functions share ONE Window node over ONE
     # exchange — a second Exchange/Window would mean the total is a
@@ -275,12 +287,12 @@ def test_page_with_total_single_pass_plan_and_values(spark):
     # job accounting: the single-pass page costs strictly fewer Spark
     # jobs than the reference's count+page pair
     sc = spark.sparkContext
-    sc.setJobGroup("single_job_page", "one-pass page", False)
-    page_with_total(df, order, limit=20, offset=40).collect()
-    jobs_single = len(sc.statusTracker().getJobIdsForGroup("single_job_page"))
+    sc.setJobGroup("one_action_page", "one-pass page", False)
+    collect_page_with_total(df, order, limit=20, offset=40)
+    jobs_single = len(sc.statusTracker().getJobIdsForGroup("one_action_page"))
     sc.setJobGroup("two_query_page", "count + page", False)
-    t, p = count_and_page(df, order, limit=20, offset=40)
-    p.collect()
+    df.count()
+    paginate(df, order, limit=20, offset=40).collect()
     jobs_two = len(sc.statusTracker().getJobIdsForGroup("two_query_page"))
     sc.setJobGroup(None, None, False)
     assert jobs_single < jobs_two, (jobs_single, jobs_two)

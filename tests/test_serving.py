@@ -43,20 +43,20 @@ def overlay(spark, wh):
 
 def test_view_mode_unvalidated_predicted(overlay):
     page = get_transactions_filtered(overlay, view_mode="unvalidated_predicted")
-    rows = page.transactions.collect()
+    rows = page.rows
     assert page.total_count == len(rows) > 0
     for r in rows:
-        assert not r.validated
-        assert r.predicted_master_category not in (None, "UNCERTAIN")
+        assert not r["validated"]
+        assert r["predicted_master_category"] not in (None, "UNCERTAIN")
 
 
 def test_view_mode_unvalidated_unpredicted(overlay):
     rows = get_transactions_filtered(
         overlay, view_mode="unvalidated_unpredicted"
-    ).transactions.collect()
+    ).rows
     assert rows
     for r in rows:
-        assert r.predicted_master_category in (None, "UNCERTAIN")
+        assert r["predicted_master_category"] in (None, "UNCERTAIN")
 
 
 def test_low_confidence_exclusion(overlay):
@@ -66,28 +66,29 @@ def test_low_confidence_exclusion(overlay):
     )
     # TRN-011 (0.20) drops below the 0.35 threshold
     assert excl.total_count < base.total_count
-    for r in excl.transactions.collect():
-        assert r.prediction_confidence is None or float(r.prediction_confidence) >= 0.35
+    for r in excl.rows:
+        conf = r["prediction_confidence"]
+        assert conf is None or float(conf) >= 0.35
 
 
 def test_description_search_ilike(overlay):
     page = get_transactions_filtered(overlay, description_search="metro")
-    rows = page.transactions.collect()
-    assert rows and all("METRO" in r.description.upper() for r in rows)
+    rows = page.rows
+    assert rows and all("METRO" in r["description"].upper() for r in rows)
 
 
 def test_sort_allowlist_falls_back(overlay):
     page = get_transactions_filtered(overlay, sort_by="evil; DROP TABLE", limit=5)
-    dates = [r.transacted_date for r in page.transactions.collect()]
+    dates = [r["transacted_date"] for r in page.rows]
     non_null = [d for d in dates if d is not None]
     assert non_null == sorted(non_null, reverse=True)  # default transacted_date DESC
 
 
 def test_pagination_disjoint_and_ordered(overlay):
-    p1 = get_transactions_filtered(overlay, limit=3, offset=0).transactions.collect()
-    p2 = get_transactions_filtered(overlay, limit=3, offset=3).transactions.collect()
-    ids1 = {r.transaction_id for r in p1}
-    ids2 = {r.transaction_id for r in p2}
+    p1 = get_transactions_filtered(overlay, limit=3, offset=0).rows
+    p2 = get_transactions_filtered(overlay, limit=3, offset=3).rows
+    ids1 = {r["transaction_id"] for r in p1}
+    ids2 = {r["transaction_id"] for r in p2}
     assert ids1.isdisjoint(ids2)
 
 
@@ -146,6 +147,43 @@ def test_override_writes_job_counts(spark, tmp_path):
     assert (single, bulk) == (3, 2)
 
 
+def test_list_routes_job_counts(spark, tmp_path):
+    """Each list request collects its page and total in one action: a
+    window pass (its exchange and its result stage, 2 jobs) over the
+    warm cached overlay, the same at offset 0, mid-list and past the
+    end. The validated list also reads its mart and the overrides
+    table: 4 jobs while that table is the seeded plain parquet (one
+    schema-inference job), 3 once an override write has committed it
+    as a manifest table. With a separate count() action the list cost
+    3 jobs (4 past the end) and the validated list 6 and 5."""
+    from doin_fine_ance__spark.serving.http_api import ServingApp
+
+    root = str(tmp_path / "wh")
+    FX.write_warehouse_inputs(spark, root)
+    build(Warehouse(spark, root), full_refresh=True)
+    app = ServingApp(spark, root)
+
+    def validated(group):
+        return _jobs(spark, group, lambda: app.route(
+            "GET", "/api/validated", {"limit": ["2"], "offset": ["2"]}, {}
+        ))
+
+    assert validated("validated_plain_overrides") == 4
+    ids = [t["transaction_id"] for t in
+           app.route("GET", "/api/transactions", {}, {})["transactions"]]
+    app.route("POST", f"/api/transactions/{ids[0]}/categorize", {},
+              {"master_category": "Groceries"})
+    assert validated("validated_manifest_overrides") == 3
+    app.route("GET", "/api/transactions", {}, {})  # warm the overlay cache
+    counts = {
+        offset: _jobs(spark, f"list_offset_{offset}", lambda o=offset: app.route(
+            "GET", "/api/transactions", {"limit": ["3"], "offset": [str(o)]}, {}
+        ))
+        for offset in (0, 3, 10_000)
+    }
+    assert counts == {0: 2, 3: 2, 10_000: 2}
+
+
 def test_serving_reads_survive_concurrent_writes(spark, tmp_path):
     """One thread reads lists through the route table while another
     posts override writes: every read sees one whole version of the
@@ -196,11 +234,11 @@ def test_validated_listing_and_filters(spark, wh):
     val = wh.read("analytics", "fct_validated_trxns")
     uc = wh.read("public", "user_categories")
     page = list_validated_transactions(val, uc, category="Groceries")
-    rows = page.transactions.collect()
-    assert rows and all(r.master_category == "Groceries" for r in rows)
+    rows = page.rows
+    assert rows and all(r["master_category"] == "Groceries" for r in rows)
     # exclude_from_forecast overlay: TRN-033 flagged true in fixtures
-    all_rows = list_validated_transactions(val, uc, limit=100).transactions.collect()
-    flags = {r.transaction_id: r.exclude_from_forecast for r in all_rows}
+    all_rows = list_validated_transactions(val, uc, limit=100).rows
+    flags = {r["transaction_id"]: r["exclude_from_forecast"] for r in all_rows}
     assert flags.get("TRN-033") is True
     cats = [r.master_category for r in distinct_validated_categories(val).collect()]
     assert cats == sorted(cats)
@@ -235,24 +273,32 @@ def test_connection_health_rollup(spark, wh):
     assert "Savings Account" in names
 
 
-def test_single_job_page_matches_two_action_page(overlay):
-    two = get_transactions_filtered(overlay, limit=10, offset=3)
-    one = get_transactions_filtered(overlay, limit=10, offset=3, single_job=True)
-    assert one.total_count == two.total_count
-    ids_two = [r["transaction_id"] for r in two.transactions.collect()]
-    ids_one = [r["transaction_id"] for r in one.transactions]
-    assert ids_one == ids_two
-    assert all("__total" not in r for r in one.transactions)
+def _reference_page(overlay, limit, offset):
+    """The reference's two queries, inline: COUNT(*) of the filtered
+    set and its offset page under the list's default order."""
+    from pyspark.sql import functions as F
+
+    from doin_fine_ance__spark.operators.pagination import paginate
+
+    order = [F.col("transacted_date").desc_nulls_last(), F.col("transaction_id").asc()]
+    page = paginate(overlay, order, limit=limit, offset=offset).collect()
+    return overlay.count(), [r["transaction_id"] for r in page]
 
 
-def test_single_job_page_past_the_end_still_returns_total(overlay):
+def test_list_page_matches_count_and_offset_reference(overlay):
+    got = get_transactions_filtered(overlay, limit=10, offset=3)
+    total, ids = _reference_page(overlay, limit=10, offset=3)
+    assert got.total_count == total
+    assert [r["transaction_id"] for r in got.rows] == ids
+    assert all("__total" not in r and "__rn" not in r for r in got.rows)
+
+
+def test_list_page_past_the_end_still_returns_total(overlay):
     # the rn==1 sentinel carries the total; no second count() job
-    two = get_transactions_filtered(overlay, limit=10, offset=10_000)
-    one = get_transactions_filtered(
-        overlay, limit=10, offset=10_000, single_job=True
-    )
-    assert one.total_count == two.total_count > 0
-    assert one.transactions == []
+    got = get_transactions_filtered(overlay, limit=10, offset=10_000)
+    total, ids = _reference_page(overlay, limit=10, offset=10_000)
+    assert got.total_count == total > 0
+    assert got.rows == [] == ids
 
 
 def test_collect_page_with_total_edges(spark):

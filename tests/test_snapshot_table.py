@@ -1,6 +1,7 @@
 """Snapshot-manifest table (VERDICT r3 next-round #7): a reader must
 NEVER observe a half-committed table, even with a writer committing
-concurrently; old versions stay readable (time travel) until vacuum."""
+concurrently; old versions stay readable (time travel) until commit-time
+retention deletes them."""
 
 from __future__ import annotations
 
@@ -68,15 +69,25 @@ def test_snapshot_pinned_across_concurrent_commit(spark, tmp_path):
     assert t.read(spark).count() == 999  # fresh resolve sees latest
 
 
-def test_time_travel_and_vacuum(spark, tmp_path):
+def test_time_travel_and_vacuum(spark, tmp_path, clock):
+    """Old versions read back until a commit past the retention window
+    deletes them; the version it just superseded stays."""
+    import os
+
+    from doin_fine_ance__spark.operators.snapshot import RETAIN_SUPERSEDED_S
+
     t = SnapshotTable(str(tmp_path / "tbl"))
-    for gen in (1, 2, 3, 4):
+    for gen in (1, 2, 3):
         t.commit_overwrite(_gen_df(spark, gen, 10 * gen))
     assert t.read(spark, 2).count() == 20
-    removed = t.vacuum(keep_last=2)
-    assert removed == [1, 2]
+    clock[0] += RETAIN_SUPERSEDED_S + 1
+    assert t.commit_overwrite(_gen_df(spark, 4, 40)) == 4
     with pytest.raises(FileNotFoundError):
         t.manifest(2)
+    assert sorted(os.listdir(os.path.join(t.root, "_manifests"))) == [
+        "v000003.json", "v000004.json"
+    ]
+    assert t.read(spark, 3).count() == 30
     assert t.read(spark, 4).count() == 40
     assert t.latest_version() == 4
 
@@ -179,18 +190,6 @@ def test_append_after_empty_overwrite_keeps_recorded_schema_union(spark, tmp_pat
     assert [f.name for f in st.fields] == ["id", "label"]
 
 
-@pytest.fixture()
-def clock(monkeypatch):
-    """A settable clock for the snapshot module's commit timestamps."""
-    import types
-
-    from doin_fine_ance__spark.operators import snapshot
-
-    now = [1_000_000.0]
-    monkeypatch.setattr(snapshot, "time", types.SimpleNamespace(time=lambda: now[0]))
-    return now
-
-
 def test_commit_deletes_versions_superseded_past_retention(spark, tmp_path, clock):
     import os
 
@@ -201,7 +200,7 @@ def test_commit_deletes_versions_superseded_past_retention(spark, tmp_path, cloc
     dirs = {}
     for gen in (1, 2, 3):  # published at start, +60 s, +120 s
         v = t.commit_overwrite(_gen_df(spark, gen, 10 * gen))
-        dirs[v] = t.manifest(v)["dir"]
+        (dirs[v],) = t.commit_dirs(v)
         clock[0] += 60
     # v1 was superseded at +60 s and is now past retention; v2 was
     # superseded at +120 s and is not
@@ -247,17 +246,25 @@ def test_adopted_plain_files_follow_the_retention_rule(spark, tmp_path, clock):
     assert t.read(spark).count() == 50
 
 
-def test_root_survives_vacuum_after_adoption(spark, tmp_path):
+def test_root_survives_vacuum_after_adoption(spark, tmp_path, clock):
+    """Retention after an adopting append deletes the superseded plain
+    files and manifests, never the root or a dir a newer version lists."""
     import os
+
+    from doin_fine_ance__spark.operators.snapshot import RETAIN_SUPERSEDED_S
 
     root = str(tmp_path / "plain")
     _gen_df(spark, 0, 20).write.parquet(root)
     t = SnapshotTable(root)
     t.commit_append(_gen_df(spark, 1, 30).filter("id >= 20"), dedup_key="id")
     assert t.latest_version() == 2  # v1 adopts the plain rows, v2 appends
-    assert t.vacuum(keep_last=1) == [1]
-    assert sorted(os.listdir(root)) == ["_latest", "_manifests", "data"]
-    assert t.vacuum(keep_last=1) == []
+    for v in (3, 4):
+        # past retention, a re-append of existing keys expires v(N-2)
+        clock[0] += RETAIN_SUPERSEDED_S + 1
+        assert t.commit_append(_gen_df(spark, 2, 30), dedup_key="id") == v
+        assert sorted(os.listdir(root)) == ["_latest", "_manifests", "data"]
+        with pytest.raises(FileNotFoundError):
+            t.manifest(v - 2)
     assert os.path.isdir(root)
     assert sorted(t.read(spark).groupBy("gen").count().collect()) == [(0, 20), (1, 10)]
 
@@ -287,3 +294,33 @@ def test_plain_read_ignores_an_unpublished_adopting_commit(spark, tmp_path, part
     assert out.count() == 20
     assert sorted(out.groupBy("p").count().collect()) == [(0, 10), (1, 10)]
     assert t.size_bytes() == plain_bytes
+
+
+def test_manifest_paths_are_relative_to_the_root(spark, tmp_path):
+    """A copy of a table root reads its own files, also once the source
+    is gone; a manifest that records absolute paths still reads."""
+    import json
+    import os
+    import shutil
+
+    src = str(tmp_path / "src")
+    t = SnapshotTable(src)
+    t.commit_overwrite(_gen_df(spark, 1, 10))
+    t.commit_append(_gen_df(spark, 2, 5))
+    assert not any(os.path.isabs(p) for p in t.manifest()["files"])
+
+    copy = str(tmp_path / "copy")
+    shutil.copytree(src, copy)
+    shutil.rmtree(src)
+    c = SnapshotTable(copy)
+    assert sorted(c.read(spark).groupBy("gen").count().collect()) == [(1, 10), (2, 5)]
+    assert all(f.startswith(c.root + os.sep) for f in c.files())
+
+    # a manifest written with absolute paths
+    m = c.manifest()
+    m["files"] = [os.path.join(c.root, p) for p in m["files"]]
+    m["dir"] = os.path.join(c.root, m["dir"])
+    with open(os.path.join(c.root, "_manifests", "v000002.json"), "w") as f:
+        json.dump(m, f)
+    assert c.read(spark).count() == 15
+    assert c.size_bytes() == sum(os.path.getsize(f) for f in c.files())

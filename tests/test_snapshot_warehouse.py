@@ -196,16 +196,22 @@ def test_register_sql_catalog_on_snapshot_warehouse(spark, snap_wh):
 
 
 @pytest.mark.slow
-def test_warehouse_vacuum_drops_old_versions_keeps_current(spark, snap_wh):
-    """Retention through the warehouse: after two rebuilds, vacuum
-    keeps the newest version readable and removes older commit dirs;
-    plain-parquet tables are a no-op."""
+def test_rebuild_past_retention_drops_old_versions_keeps_current(spark, snap_wh, clock):
+    """Retention through the warehouse: a rebuild committed past the
+    retention window deletes the versions superseded before it, keeps
+    the one it just superseded, and the current version reads back;
+    plain-parquet inputs are never committed or deleted."""
     import glob
 
-    from doin_fine_ance__spark.operators.snapshot import SnapshotTable
+    from doin_fine_ance__spark.operators.snapshot import (
+        RETAIN_SUPERSEDED_S,
+        SnapshotTable,
+    )
 
+    expected = sorted(map(repr, snap_wh.read("analytics", "fct_validated_trxns").collect()))
     _shrink_inputs(spark, snap_wh.root)
     build(snap_wh, full_refresh=True)
+    clock[0] += RETAIN_SUPERSEDED_S + 1
     FX.raw_simplefin(spark).write.mode("overwrite").parquet(
         f"{snap_wh.root}/public/simplefin"
     )
@@ -215,18 +221,20 @@ def test_warehouse_vacuum_drops_old_versions_keeps_current(spark, snap_wh):
     st = SnapshotTable(table_root)
     latest = st.latest_version()
     assert latest >= 3
-    before = sorted(map(repr, snap_wh.read("analytics", "fct_validated_trxns").collect()))
-
-    removed = snap_wh.vacuum("analytics", "fct_validated_trxns", keep_last=1)
-    assert removed and max(removed) == latest - 1
-    # current version still reads bit-identically
+    # the current version reads bit-identically to the first build of
+    # the same inputs
     after = sorted(map(repr, snap_wh.read("analytics", "fct_validated_trxns").collect()))
-    assert after == before
-    # exactly the live version's commit dirs remain
-    live_dirs = {p.rsplit("/", 1)[0] for p in st.manifest()["files"]}
+    assert after == expected
+    # exactly the live version's and its predecessor's commit dirs remain
+    assert sorted(os.listdir(os.path.join(table_root, "_manifests"))) == [
+        f"v{v:06d}.json" for v in (latest - 1, latest)
+    ]
+    live_dirs = set(st.commit_dirs(latest)) | set(st.commit_dirs(latest - 1))
     assert set(glob.glob(f"{table_root}/data/*")) == live_dirs
-    # plain-parquet (non-manifest) tables: no-op
-    assert snap_wh.vacuum("public", "simplefin") == []
+    # plain-parquet (non-manifest) inputs: never committed, never deleted
+    simplefin = snap_wh.path("public", "simplefin")
+    assert SnapshotTable(simplefin).latest_version() == 0
+    assert snap_wh.read("public", "simplefin").count() == FX.raw_simplefin(spark).count()
 
 
 def test_catalog_view_over_append_manifest_unions_by_name(spark, tmp_path):
@@ -256,39 +264,27 @@ def test_catalog_view_over_append_manifest_unions_by_name(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_vacuum_reregisters_catalog_entry_after_rebuild(spark, snap_wh):
-    """ADVICE r6: a catalog entry binds to the commit dirs current at
-    registration; rebuild + vacuum deletes those dirs. Warehouse.vacuum
-    must re-point registered tables so catalog reads keep working."""
-    register_sql_catalog(snap_wh)
-    _shrink_inputs(spark, snap_wh.root)
-    build(snap_wh, full_refresh=True)
-    removed = snap_wh.vacuum("analytics", "fct_validated_trxns", keep_last=1)
-    assert removed  # the pre-rebuild version really was dropped
-    n_sql = spark.sql(
-        "SELECT count(*) AS c FROM analytics.fct_validated_trxns"
-    ).first()["c"]
-    assert n_sql == snap_wh.read("analytics", "fct_validated_trxns").count()
-
-
-@pytest.mark.slow
-def test_rebuild_repoints_registered_catalog_entry_without_vacuum(spark, snap_wh):
+def test_rebuild_repoints_registered_catalog_entry_past_retention(spark, snap_wh, clock):
     """VERDICT r7 #8 contract: a REGISTERED snapshot table always
-    serves the latest published version — the rebuild commit itself
-    re-points the catalog entry; no vacuum needed."""
-    from doin_fine_ance__spark.operators.snapshot import SnapshotTable
+    serves the latest published version — each rebuild commit itself
+    re-points the catalog entry, so a rebuild whose retention deletes
+    the commit dirs the entry first bound to leaves catalog reads
+    working."""
+    from doin_fine_ance__spark.operators.snapshot import (
+        RETAIN_SUPERSEDED_S,
+        SnapshotTable,
+    )
 
     register_sql_catalog(snap_wh)
+    st = SnapshotTable(snap_wh.path("analytics", "fct_validated_trxns"))
+    first_dirs = st.commit_dirs()
+    assert first_dirs
     _shrink_inputs(spark, snap_wh.root)
     build(snap_wh, full_refresh=True)
-    # vacuum through SnapshotTable DIRECTLY — unlike Warehouse.vacuum
-    # it does not re-register, so the pre-rebuild commit dirs the
-    # entry originally bound to are really gone: the query below only
-    # works if the rebuild commit itself re-pointed the entry
-    removed = SnapshotTable(
-        snap_wh.path("analytics", "fct_validated_trxns")
-    ).vacuum(keep_last=1)
-    assert removed
+    clock[0] += RETAIN_SUPERSEDED_S + 1
+    build(snap_wh, full_refresh=True)
+    # the pre-rebuild version really was dropped
+    assert not any(os.path.exists(d) for d in first_dirs)
     n_sql = spark.sql(
         "SELECT count(*) AS c FROM analytics.fct_validated_trxns"
     ).first()["c"]

@@ -1099,12 +1099,15 @@ class IvfIndex:
             return results
 
     def vacuum(self, timeout: float = 0.0) -> list[str]:
-        """Remove data dirs superseded by a rebuild (kept on disk so
-        in-flight readers of the old published pair finish; same
-        retention contract as ``SnapshotTable.vacuum``). Returns the
-        removed dir names. ``timeout`` waits for the writer lock like
-        the other writer methods (ADVICE r8) — a vacuum contending
-        with a nightly append can wait instead of raising."""
+        """Remove every data dir but the live one, at once: the dirs a
+        rebuild or :meth:`compact` superseded stay on disk until this
+        runs, and nothing here tracks their readers or their age. A
+        reader that resolved the previous ``centroids.json`` still reads
+        its old dir, so callers run this only after readers of the
+        previous meta have drained. Returns the removed dir names.
+        ``timeout`` waits for the writer lock like the other writer
+        methods — a vacuum contending with a nightly append can wait
+        instead of raising."""
         import os
         import shutil
 

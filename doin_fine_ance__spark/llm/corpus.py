@@ -289,10 +289,7 @@ def segment_dedup(
     # reuses exchanges, not subplans, so materialize the segmentation
     # once (the stream is ~len/seg_tokens rows, 10x smaller than the
     # token stream).
-    try:
-        chunks = materialize(chunks)
-    except Exception:
-        pass  # Spark Connect without checkpoint support: correct, just slower
+    chunks = materialize(chunks)
     seen = chunks.groupBy("chunk").agg(F.count_distinct(col(id_col)).alias("n_docs"))
     marked = chunks.join(seen, "chunk").withColumn("dropped", col("n_docs") > max_docs)
     kept_struct = F.when(~col("dropped"), F.struct("chunk_idx", "chunk"))

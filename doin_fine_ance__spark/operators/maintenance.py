@@ -10,12 +10,18 @@ Engine analogs of the reference's ops machinery:
   :func:`apply_retention` is the same mtime sweep
   (backup_service.py:74-84) over snapshot directories.
 - :func:`compact_table` is the OPTIMIZE/Z-ORDER-adjacent story the
-  reference gets from Postgres indexes (init_db.py:79-130): incremental
-  appends leave many small files per partition; compaction rewrites
-  each partition to few large files (atomic stage-and-swap), restoring
-  scan efficiency for the transaction_id-keyed lookups. At 100 TB this
-  runs per-partition (only partitions breaching the small-file
-  threshold are rewritten), never whole-table.
+  reference gets from Postgres indexes (init_db.py:79-130): appends
+  leave a manifest table's files spread across many small commit dirs;
+  compaction rewrites the latest version into few large files and
+  commits that as the next version through
+  ``SnapshotTable.commit_rewrite``, the way Delta's OPTIMIZE is a
+  transaction-log commit, restoring scan efficiency for the
+  transaction_id-keyed lookups. Readers of older versions are never
+  disturbed, so there is nothing to swap and nothing to repair after a
+  crash: an unpublished rewrite is just an unreferenced commit dir.
+- :func:`compact_table_versioned` compacts a plain parquet tree into a
+  fresh copy for callers that own their own pointer
+  (``IvfIndex.compact``).
 """
 
 from __future__ import annotations
@@ -28,7 +34,7 @@ import shutil
 import uuid
 from pathlib import Path
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_SCHEDULE = {"enabled": False, "cron": "0 2 * * *", "retention_days": 7}
 SCHEDULE_FILENAME = "schedule.json"
@@ -147,97 +153,67 @@ def output_files(total_bytes: int, target_file_bytes: int = TARGET_FILE_BYTES) -
     return max(1, math.ceil(total_bytes / target_file_bytes))
 
 
-def _parquet_files(d: str) -> list[str]:
-    return [f for f in os.listdir(d) if f.endswith(".parquet")]
+def _layout(df: DataFrame, n_out: int, zorder: list[str] | None) -> DataFrame:
+    """``df`` laid out as ``n_out`` output files: coalesced, or with
+    ``zorder`` range-partitioned and sorted on the Morton code of those
+    columns."""
+    if not zorder:
+        return df.coalesce(n_out)
+    from .zorder import zorder_key
+
+    return (
+        df.withColumn("_z", zorder_key(df, zorder))
+        .repartitionByRange(n_out, "_z")
+        .sortWithinPartitions("_z")
+        .drop("_z")
+    )
 
 
 def compact_table(
     spark: SparkSession,
     path: str,
     target_file_bytes: int = TARGET_FILE_BYTES,
-    min_files: int = 2,
     zorder: list[str] | None = None,
-) -> dict[str, int]:
-    """Rewrite small-file partitions into few large files.
+) -> int | None:
+    """Rewrite a manifest table's latest version into few large files,
+    committed as its next version (the OPTIMIZE analog).
 
-    Walks the table: unpartitioned tables compact in place; HIVE-style
-    partition directories (``col=value``) compact independently, and
-    only directories with more than ``min_files`` fragments are
-    rewritten — untouched partitions keep their files. Staging and
-    backup dirs are ``_``-prefixed (invisible to Spark's partition
-    discovery), so a concurrent reader sees the old or the new
-    complete file set — except in the instant between the two swap
-    renames, where the partition is briefly absent; run under the
-    table's writer lock / a maintenance window if readers must never
-    observe that. File count per rewrite = ceil(bytes /
-    target_file_bytes), i.e. ~128 MB output files — the scan-efficient
-    shape Delta's OPTIMIZE targets.
+    Appends fragment a table across commit dirs, one set of small files
+    per commit. Under the table lock the latest version is sized and
+    rewritten as ``output_files(size)`` files of ~``target_file_bytes``
+    (the scan-efficient shape Delta's OPTIMIZE targets). Nothing is
+    committed when the version already holds no more files than that.
+    Readers pinned to an older version, and time travel, keep its files
+    until commit-time retention removes them.
 
-    ``zorder=[cols]`` additionally clusters each rewrite by the Morton
+    ``zorder=[cols]`` additionally clusters the rewrite by the Morton
     code of those columns (``OPTIMIZE ... ZORDER BY`` analog): output
     files are range-partitioned + sorted on the interleaved-bit key,
     so every file carries a tight min/max bounding box over ALL listed
     columns and point/range lookups skip most files (the parquet-lake
     replacement for the reference's btree indexes, init_db.py:79-130).
 
-    Returns {relative_partition_path: files_after} for rewritten dirs.
+    Raises ``ValueError`` on a root with no manifest (an external input
+    such as the landing zone, which keeps taking plain appends a
+    manifest would hide) and on a partitioned version (only
+    ``commit_overwrite`` writes those). Returns the committed version,
+    or None when nothing was committed.
     """
-    results: dict[str, int] = {}
-    leaf_dirs: list[str] = []
-    for cur, dirs, files in os.walk(path):
-        if "_stage_" in cur or "_old_" in cur:
-            continue
-        if any(f.endswith(".parquet") for f in files):
-            leaf_dirs.append(cur)
-    for d in leaf_dirs:
-        frags = _parquet_files(d)
-        if len(frags) <= min_files:
-            continue
-        total = sum(os.path.getsize(os.path.join(d, f)) for f in frags)
-        n_out = output_files(total, target_file_bytes)
-        df = spark.read.parquet(d)
-        if zorder:
-            from .zorder import zorder_key
+    from .snapshot import SnapshotTable
 
-            df = (
-                df.withColumn("_z", zorder_key(df, zorder))
-                .repartitionByRange(n_out, "_z")
-                .sortWithinPartitions("_z")
-                .drop("_z")
-            )
-        else:
-            df = df.coalesce(n_out)
-        # staging/backup live in d's PARENT dir with an underscore
-        # prefix: for a hive leaf (parent is inside the table) Spark's
-        # partition discovery ignores `_`-prefixed dirs, so a
-        # concurrent reader can never pick the half-written stage up
-        # as a bogus partition value; for an unpartitioned table
-        # (d == path) the parent is outside the table root entirely
-        # (ADVICE r7). The swap itself is two renames — a reader
-        # listing in exactly that instant can miss the partition, so
-        # strict readers compact under the table's writer lock /
-        # maintenance window.
-        parent = os.path.dirname(d)
-        staging = os.path.join(parent, f"_stage_{uuid.uuid4().hex[:8]}")
-        df.write.mode("overwrite").parquet(staging)
-        token = uuid.uuid4().hex[:8]
-        backup = os.path.join(parent, f"_old_{token}")
-        # Origin marker BEFORE the first rename (ADVICE r8): if the
-        # process dies between the two swap renames, the partition's
-        # data survives only in the `_old_` dir, which partition
-        # discovery skips — the marker records which destination the
-        # backup belongs to so :func:`repair_compaction` can restore
-        # it. Written first so no crash point leaves an unattributable
-        # backup; a marker with no backup dir is just stale.
-        marker = backup + ".origin"
-        with open(marker, "w") as f:
-            f.write(os.path.relpath(d, path))
-        os.rename(d, backup)
-        os.rename(staging, d)
-        shutil.rmtree(backup)
-        os.unlink(marker)
-        results[os.path.relpath(d, path)] = len(_parquet_files(d))
-    return results
+    table = SnapshotTable(path)
+    if table.latest_version() == 0:
+        raise ValueError(f"compact_table needs a manifest table; {path} has none")
+
+    def rewrite(current: DataFrame) -> DataFrame | None:
+        if table.manifest().get("partitioned"):
+            raise ValueError(f"compact_table does not rewrite partitioned versions: {path}")
+        n_out = output_files(table.size_bytes(), target_file_bytes)
+        if len(table.files()) <= n_out:
+            return None
+        return _layout(current, n_out, zorder)
+
+    return table.commit_rewrite(spark, rewrite)
 
 
 def compact_table_versioned(
@@ -248,27 +224,20 @@ def compact_table_versioned(
     min_files: int = 2,
     zorder: list[str] | None = None,
 ) -> dict[str, int]:
-    """Reader-safe compaction (VERDICT r8 #6): build a COMPLETE
-    compacted copy of the table at ``dst`` instead of swapping
-    partitions in place — fragmented leaf dirs are rewritten to
-    ~``target_file_bytes`` files, already-compact leaves are
+    """Build a COMPLETE compacted copy of the plain parquet tree ``src``
+    at ``dst``: leaf dirs with more than ``min_files`` files are
+    rewritten to ~``target_file_bytes`` files, the other leaves are
     HARD-LINKED file-by-file (O(files), no data copied; falls back to
     a real copy across filesystems). The caller publishes ``dst``
     atomically (``IvfIndex.compact`` republishes ``centroids.json``,
     the same pointer swap rebuild uses), so a concurrent reader sees
-    the old complete tree or the new complete tree — never the
-    absent-partition instant :func:`compact_table`'s two-rename swap
-    has. On an object store the hard link becomes a server-side
-    metadata copy. Returns {relative_partition_path: files_after} for
-    REWRITTEN dirs (linked dirs are not listed, same contract as
-    compact_table)."""
+    the old complete tree or the new complete tree. On an object store
+    the hard link becomes a server-side metadata copy. Returns
+    {relative_partition_path: files_after} for REWRITTEN dirs."""
     results: dict[str, int] = {}
     if os.path.exists(dst):
         raise ValueError(f"versioned compaction target already exists: {dst}")
-    for cur, dirs, files in os.walk(src):
-        dirs[:] = [
-            x for x in dirs if not x.startswith(("_stage_", "_old_"))
-        ]
+    for cur, _, files in os.walk(src):
         frags = [f for f in files if f.endswith(".parquet")]
         if not frags:
             continue
@@ -284,84 +253,6 @@ def compact_table_versioned(
             continue
         total = sum(os.path.getsize(os.path.join(cur, f)) for f in frags)
         n_out = output_files(total, target_file_bytes)
-        df = spark.read.parquet(cur)
-        if zorder:
-            from .zorder import zorder_key
-
-            df = (
-                df.withColumn("_z", zorder_key(df, zorder))
-                .repartitionByRange(n_out, "_z")
-                .sortWithinPartitions("_z")
-                .drop("_z")
-            )
-        else:
-            df = df.coalesce(n_out)
-        df.write.mode("overwrite").parquet(out_dir)
-        results[rel] = len(_parquet_files(out_dir))
+        _layout(spark.read.parquet(cur), n_out, zorder).write.mode("overwrite").parquet(out_dir)
+        results[rel] = sum(f.endswith(".parquet") for f in os.listdir(out_dir))
     return results
-
-
-def repair_compaction(path: str) -> dict[str, list[str]]:
-    """Recover from a :func:`compact_table` crash (ADVICE r8).
-
-    Idempotent sweep over the table tree; call before reads after an
-    unclean shutdown (or from a scheduled janitor). Handles every
-    crash window of the stage-mark-swap sequence:
-
-    - ``_old_<hex>`` dir whose ``.origin`` destination is MISSING →
-      the crash hit between the two swap renames; the backup IS the
-      partition — rename it back (``restored``).
-    - ``_old_<hex>`` dir whose destination exists → the swap finished
-      but cleanup didn't; the backup is superseded — delete it
-      (``removed``).
-    - stale ``.origin`` markers and ``_stage_`` dirs → the crash hit
-      before the swap started (the partition is intact) or after it
-      finished; delete (``removed``).
-
-    Returns ``{"restored": [...], "removed": [...]}`` (paths relative
-    to ``path``).
-    """
-    restored: list[str] = []
-    removed: list[str] = []
-    for cur, dirs, files in os.walk(path, topdown=True):
-        # don't descend into backup/staging trees themselves
-        dirs[:] = [x for x in dirs if not x.startswith(("_old_", "_stage_"))]
-        for name in sorted(os.listdir(cur)):
-            full = os.path.join(cur, name)
-            if name.startswith("_old_") and os.path.isdir(full):
-                marker = full + ".origin"
-                dest = None
-                if os.path.exists(marker):
-                    with open(marker) as f:
-                        rel = f.read().strip()
-                    if rel and not os.path.isabs(rel) and ".." not in rel.split(os.sep):
-                        dest = os.path.join(path, rel)
-                if dest is not None and not os.path.exists(dest):
-                    os.makedirs(os.path.dirname(dest), exist_ok=True)
-                    os.rename(full, dest)
-                    os.unlink(marker)
-                    restored.append(os.path.relpath(dest, path))
-                else:
-                    # destination present (swap completed) or marker
-                    # missing/invalid with nothing to restore onto:
-                    # pre-marker-era backups stay untouched unless
-                    # their data is demonstrably superseded
-                    if dest is not None or os.path.exists(marker):
-                        shutil.rmtree(full)
-                        if os.path.exists(marker):
-                            os.unlink(marker)
-                        removed.append(os.path.relpath(full, path))
-            elif name.startswith("_old_") and name.endswith(".origin"):
-                # the dir branch above may have consumed this marker
-                # already (the listing was snapshotted before repairs)
-                if os.path.exists(full) and not os.path.isdir(
-                    full[: -len(".origin")]
-                ):
-                    os.unlink(full)  # marker without its backup: stale
-                    removed.append(os.path.relpath(full, path))
-            elif name.startswith("_stage_") and os.path.isdir(full):
-                # staging is incomplete or superseded in every window
-                # (the origin dir is either intact or restored above)
-                shutil.rmtree(full)
-                removed.append(os.path.relpath(full, path))
-    return {"restored": restored, "removed": removed}

@@ -8,6 +8,8 @@ Spark DataFrames have ``limit`` but no offset, so offset pagination is
 include a unique key as final tiebreak) filtered to
 ``(offset, offset+limit]``. :func:`collect_page_with_total` serves the
 reference's two queries as one action: the total rides the same window.
+That action runs 2 Spark jobs, the window's exchange and then the
+result stage.
 
 Scale note: the window is un-partitioned, so every row of the filtered
 frame is sorted on one reducer. That is correct, and cheap only because
@@ -54,13 +56,13 @@ def collect_page_with_total(
     offset: int = 0,
 ) -> Page:
     """One page + the exact total of `df` under a total `order`, in one
-    action.
+    action of 2 Spark jobs: the window's exchange, then the result stage.
 
     An unbounded ``count(*) OVER ()`` rides the ``row_number`` window's
-    exchange, so the total costs no second scan of `df`. The filter
-    also keeps the ``__rn == 1`` row as a total-bearing sentinel, so a
-    page requested past the end still returns the total; an empty input
-    collects nothing and is total=0 by definition.
+    exchange, so the total costs no second scan of `df` and no third
+    job. The filter also keeps the ``__rn == 1`` row as a total-bearing
+    sentinel, so a page requested past the end still returns the total;
+    an empty input collects nothing and is total=0 by definition.
 
     Returns the :class:`Page` with helper columns stripped.
     """

@@ -114,19 +114,21 @@ class SnapshotTable:
     def commit_rewrite(
         self,
         spark: SparkSession,
-        rewrite: Callable[[DataFrame | None], DataFrame],
+        rewrite: Callable[[DataFrame | None], DataFrame | None],
         timeout: float = 0.0,
-    ) -> int:
+    ) -> int | None:
         """Commit ``rewrite(current)`` as the next full-replacement
         version, where ``current`` is the latest version read under the
         table lock (None while the table does not exist). A concurrent
         writer's commit can therefore never be lost: the second writer
         waits up to ``timeout`` for the lock (then raises
         :class:`~.upsert.ConcurrentWriteError`) and rewrites on top of
-        the first one's version."""
+        the first one's version. Returns the committed version, or None
+        when ``rewrite`` returns None: nothing is committed."""
         with table_write_lock(self.root, timeout=timeout):
             current = self.read(spark) if self.exists() else None
-            return self._commit(rewrite(current))
+            df = rewrite(current)
+            return None if df is None else self._commit(df)
 
     def commit_append(
         self,

@@ -731,10 +731,7 @@ def t_bigram_familiarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     dg = base.mapInPandas(gram_counts, "doc_id long, g string, cnt long")
     # dg feeds BOTH the vocab build and the scoring join; materialize it
     # once (463k rows at sf0.1 vs the 1.48M-row raw bigram stream).
-    try:
-        dg = dg.localCheckpoint(eager=True)
-    except Exception:
-        pass  # Spark Connect without checkpoint support: correct, just slower
+    dg = materialize(dg)
     vocab = dg.groupBy("g").agg(F.sum("cnt").alias("c"))
     return (
         dg.join(F.broadcast(vocab), "g")

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import col, lit
 
+from ..operators.checkpoint import materialize
 from ..sources.testdata import load_table
 from . import query
 
@@ -303,7 +304,7 @@ def q15_top_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15 shape: an aggregate view joined against its own global
     MAX — the scalar-subquery-over-a-view pattern.
 
-    The revenue view computes once (localCheckpoint) and feeds both
+    The revenue view computes once (``materialize``) and feeds both
     the scalar MAX (a 1-row broadcast) and the equality filter; without
     the materialization Spark would execute the 3-month scan+agg twice
     (exchange reuse does not cover two different consumers of the same
@@ -315,10 +316,7 @@ def q15_top_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     rev = li.groupBy(col("l_suppkey").alias("supplier_no")).agg(
         F.sum(_dec("l_extendedprice") * (lit(1) - _dec("l_discount"))).cast("double").alias("total_revenue")
     )
-    try:
-        rev = rev.localCheckpoint(eager=True)
-    except Exception:
-        pass  # Spark Connect without checkpoint support: correct, just slower
+    rev = materialize(rev)
     top = rev.agg(F.max("total_revenue").alias("max_revenue"))
     s = load_table(spark, sf_dir, "supplier", ["s_suppkey", "s_name"])
     return (
@@ -407,10 +405,7 @@ def q21_waiting_supplier_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     li = load_table(spark, sf_dir, "lineitem", ["l_orderkey", "l_suppkey", "l_returnflag"])
     fli = li.join(o, li.l_orderkey == o.o_orderkey).select("l_orderkey", "l_suppkey", "l_returnflag")
-    try:
-        fli = fli.localCheckpoint(eager=True)  # feeds l1, l2 and l3
-    except Exception:
-        pass  # Spark Connect without checkpoint support: correct, just slower
+    fli = materialize(fli)  # feeds l1, l2 and l3
     l1 = fli.filter(col("l_returnflag") == "R").select("l_orderkey", "l_suppkey").distinct()
     l2 = fli.select(col("l_orderkey").alias("o2"), col("l_suppkey").alias("s2"))
     l3 = (
@@ -637,10 +632,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_partkey", "l_suppkey")
         .agg(F.min(_dec("l_extendedprice")).alias("cost_dec"))
     )
-    try:
-        cost = cost.localCheckpoint(eager=True)  # feeds minc AND the final join
-    except Exception:
-        pass  # Spark Connect without checkpoint support: correct, just slower
+    cost = materialize(cost)  # feeds minc AND the final join
     minc = cost.groupBy(col("l_partkey").alias("mk")).agg(F.min("cost_dec").alias("min_cost"))
     return (
         cost.join(
@@ -766,10 +758,7 @@ def q20_dominant_supplier_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_partkey", "l_suppkey")
         .agg(F.sum("l_quantity").alias("pair_qty"))
     )
-    try:
-        pairs = pairs.localCheckpoint(eager=True)  # feeds part_tot AND qual
-    except Exception:
-        pass  # Spark Connect without checkpoint support: correct, just slower
+    pairs = materialize(pairs)  # feeds part_tot AND qual
     part_tot = pairs.groupBy(col("l_partkey").alias("tk")).agg(
         F.sum("pair_qty").alias("part_qty"),
         F.count("*").alias("n_pairs"),

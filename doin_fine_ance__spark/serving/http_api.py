@@ -10,7 +10,8 @@ Scope note: this is the *interactive* read/override surface — small
 result pages over materialized marts, single-row or small-batch
 override writes. The Spark work per list request is a filter plus one
 window pass (over a cached overlay DataFrame for transactions), which
-yields the page and its total in one action; the HTTP layer only
+yields the page and its total in one action of 2 Spark jobs (the
+window's exchange, then the result stage); the HTTP layer only
 translates query strings and JSON bodies. Swapping in FastAPI/uvicorn
 is a handler rename, not a redesign.
 
@@ -84,7 +85,9 @@ class ServingApp:
     Postgres views per request, without re-running the join chain
     when nothing changed. Both list endpoints collect their page and
     total in one action (``operators.pagination.collect_page_with_total``),
-    where the reference runs COUNT(*) and the page as two queries.
+    where the reference runs COUNT(*) and the page as two queries. That
+    action is 2 Spark jobs, the window's exchange and the result stage;
+    the validated list adds the reads of its mart and overrides.
 
     Every table is read through the warehouse, which pins one published
     version per read: an override write commits a new version of

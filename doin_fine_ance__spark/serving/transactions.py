@@ -12,7 +12,8 @@ TODO.md:12). ``get_transactions_filtered`` serves the reference's
 COUNT(*) + page as one action through ``collect_page_with_total``: a
 window ``count(*) OVER ()`` rides the page's ``row_number`` exchange,
 and an ``__rn == 1`` sentinel row carries the total even when the
-requested page is past the end.
+requested page is past the end. The action runs 2 Spark jobs, the
+window's exchange and then the result stage.
 """
 
 from __future__ import annotations
@@ -97,7 +98,8 @@ def get_transactions_filtered(
 
     Reproduces the reference exactly: allow-listed sort columns with
     ``NULLS LAST`` in both directions, ILIKE search, low-confidence
-    exclusion only in predicted mode, COUNT(*) + page (here one action).
+    exclusion only in predicted mode, COUNT(*) + page (here one action
+    of 2 Spark jobs).
     A transaction_id tiebreak makes pagination total-ordered (Postgres
     leaves ties unspecified; an engine serving pages must not).
     """

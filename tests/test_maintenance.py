@@ -9,6 +9,7 @@ import os
 import time
 
 from doin_fine_ance__spark.operators import maintenance as mnt
+from doin_fine_ance__spark.operators.snapshot import SnapshotTable
 
 
 # --- schedule state (test_backup_service.py:14-36) -----------------------
@@ -123,40 +124,101 @@ def test_snapshot_errors(tmp_path):
 # --- compaction (S8, OPTIMIZE analog) -------------------------------------
 
 
+def _sorted_rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
 def test_compact_table_partitioned(spark, tmp_path):
+    """Eight appends of 4-partition frames leave the table's files
+    spread over eight commit dirs; compaction commits them as one
+    ~target-size file, with the same data."""
     path = str(tmp_path / "t")
-    # 8 appends x 4 shuffle partitions -> many small files per partition
+    table = SnapshotTable(path)
     for i in range(8):
-        (
+        table.commit_append(
             spark.range(i * 100, (i + 1) * 100)
             .selectExpr("id", "CAST(id % 2 AS STRING) AS p")
             .repartition(4)
-            .write.mode("append")
-            .partitionBy("p")
-            .parquet(path)
         )
-    before = {
-        d: len([f for f in os.listdir(os.path.join(path, d)) if f.endswith(".parquet")])
-        for d in ("p=0", "p=1")
-    }
-    assert all(n >= 8 for n in before.values())
+    assert len(table.files()) >= 8
+    assert len(table.commit_dirs()) == 8
 
-    results = mnt.compact_table(spark, path)
+    version = mnt.compact_table(spark, path)
 
-    assert set(results) == {"p=0", "p=1"}
-    for d in ("p=0", "p=1"):
-        n = len([f for f in os.listdir(os.path.join(path, d)) if f.endswith(".parquet")])
-        assert n == 1  # tiny data -> single ~target-size file
+    assert version == table.latest_version() == 9
+    assert len(table.files()) == 1  # tiny data -> single ~target-size file
     # data identical after compaction
-    back = spark.read.parquet(path)
+    back = table.read(spark)
     assert back.count() == 800
     assert back.selectExpr("sum(id)").first()[0] == sum(range(800))
+    assert back.groupBy("p").count().count() == 2
 
 
 def test_compact_table_skips_already_compact(spark, tmp_path):
     path = str(tmp_path / "t")
-    spark.range(100).coalesce(1).write.parquet(path)
-    assert mnt.compact_table(spark, path) == {}
+    table = SnapshotTable(path)
+    table.commit_overwrite(spark.range(100).coalesce(1))
+    assert mnt.compact_table(spark, path) is None
+    assert table.latest_version() == 1
+
+
+def test_compact_table_commits_appends_as_one_readable_version(spark, tmp_path):
+    """A 4-file overwrite plus three appends spreads one table over four
+    commit dirs. Compaction commits the rows as ``output_files(size)``
+    files, and every earlier version still reads back its own rows:
+    its files are untouched until retention expires them."""
+    path = str(tmp_path / "t")
+    table = SnapshotTable(path)
+    table.commit_overwrite(spark.range(0, 400).repartition(4))
+    for i in range(1, 4):
+        table.commit_append(spark.range(i * 1000, i * 1000 + 50).repartition(2))
+    before = {v: _sorted_rows(table.read(spark, v)) for v in range(1, 5)}
+    size = table.size_bytes()
+    assert len(table.files()) > mnt.output_files(size)
+
+    version = mnt.compact_table(spark, path)
+
+    assert _sorted_rows(table.read(spark)) == before[4]
+    assert version == 5 == table.latest_version()
+    assert len(table.files()) == mnt.output_files(size)
+    for v, rows in before.items():
+        assert _sorted_rows(table.read(spark, v)) == rows
+
+
+def test_compact_table_refuses_a_root_without_manifest(spark, tmp_path):
+    """A plain parquet root is an external input that keeps taking
+    plain appends; compaction leaves it exactly as it is."""
+    import pytest
+
+    path = str(tmp_path / "plain")
+    for i in range(3):
+        spark.range(i * 10, (i + 1) * 10).repartition(2).write.mode("append").parquet(path)
+
+    def listing():
+        return sorted(
+            (os.path.relpath(os.path.join(d, f), path), os.path.getsize(os.path.join(d, f)))
+            for d, _, fs in os.walk(path)
+            for f in fs
+        )
+
+    before = listing()
+    with pytest.raises(ValueError, match="manifest"):
+        mnt.compact_table(spark, path)
+    assert listing() == before
+
+
+def test_compact_table_refuses_a_partitioned_version(spark, tmp_path):
+    import pytest
+
+    path = str(tmp_path / "t")
+    table = SnapshotTable(path)
+    table.commit_overwrite(
+        spark.range(100).selectExpr("id", "CAST(id % 2 AS STRING) AS p").repartition(4),
+        partition_by="p",
+    )
+    with pytest.raises(ValueError, match="partitioned"):
+        mnt.compact_table(spark, path)
+    assert table.latest_version() == 1
 
 
 def test_compact_table_zorder_skips_files_on_both_columns(spark, tmp_path):
@@ -173,17 +235,14 @@ def test_compact_table_zorder_skips_files_on_both_columns(spark, tmp_path):
         (F.col("id") * 7919 % 1000).alias("a"),
         (F.col("id") * 104729 % 1000).alias("b"),
     )
-    df.repartition(24).write.mode("overwrite").parquet(path)
+    table = SnapshotTable(path)
+    table.commit_overwrite(df.repartition(24))
     before = df.count()
 
-    out = mnt.compact_table(
-        spark, path, target_file_bytes=40_000, min_files=2, zorder=["a", "b"]
-    )
-    assert out  # the rewrite happened
+    out = mnt.compact_table(spark, path, target_file_bytes=40_000, zorder=["a", "b"])
+    assert out == 2  # the rewrite happened
 
-    files = [
-        os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")
-    ]
+    files = table.files()
     assert len(files) >= 4
 
     def covering(colname, value):
@@ -204,100 +263,9 @@ def test_compact_table_zorder_skips_files_on_both_columns(spark, tmp_path):
     assert covering("a", 5) <= len(files) // 2
     assert covering("b", 5) <= len(files) // 2
     # data survives the rewrite intact
-    after = spark.read.parquet(path)
+    after = table.read(spark)
     assert after.count() == before
     assert after.agg(F.sum("id")).first()[0] == sum(range(40000))
-
-
-def _leaf_files(path, d):
-    p = os.path.join(path, d)
-    return [f for f in os.listdir(p) if f.endswith(".parquet")]
-
-
-def test_repair_compaction_restores_orphaned_backup(spark, tmp_path):
-    """ADVICE r8: if the process dies between compact_table's two swap
-    renames, the partition survives only in the `_old_` backup dir —
-    the origin marker lets repair_compaction rename it back instead of
-    readers silently seeing the partition as empty."""
-    path = str(tmp_path / "t")
-    for i in range(4):
-        (
-            spark.range(i * 50, (i + 1) * 50)
-            .selectExpr("id", "CAST(id % 2 AS STRING) AS p")
-            .repartition(3)
-            .write.mode("append")
-            .partitionBy("p")
-            .parquet(path)
-        )
-    total = spark.read.parquet(path).count()
-
-    # simulate the crash window: stage written, d renamed to backup,
-    # process dies before rename(staging, d)
-    d = os.path.join(path, "p=0")
-    staging = os.path.join(path, "_stage_deadbeef")
-    spark.read.parquet(d).coalesce(1).write.parquet(staging)
-    marker = os.path.join(path, "_old_cafe0001.origin")
-    with open(marker, "w") as f:
-        f.write("p=0")
-    os.rename(d, os.path.join(path, "_old_cafe0001"))
-    # the partition is now invisible to discovery
-    assert spark.read.parquet(path).count() < total
-
-    out = mnt.repair_compaction(path)
-    assert out["restored"] == ["p=0"]
-    assert "_stage_deadbeef" in out["removed"]
-    assert not os.path.exists(marker)
-    assert spark.read.parquet(path).count() == total
-
-
-def test_repair_compaction_drops_superseded_backup_and_stale_marker(
-    spark, tmp_path
-):
-    """Crash AFTER the swap completed (cleanup missed): the backup's
-    destination exists, so the backup and marker are superseded litter;
-    a marker with no backup dir (crash before the first rename) is
-    stale on its own. Repair is idempotent."""
-    path = str(tmp_path / "t")
-    spark.range(100).selectExpr(
-        "id", "CAST(id % 2 AS STRING) AS p"
-    ).write.partitionBy("p").parquet(path)
-    total = spark.read.parquet(path).count()
-
-    # superseded backup: destination p=1 exists and holds the real data
-    backup = os.path.join(path, "_old_feed0001")
-    os.makedirs(backup)
-    with open(os.path.join(path, "_old_feed0001.origin"), "w") as f:
-        f.write("p=1")
-    # stale marker with no backup dir at all
-    with open(os.path.join(path, "_old_feed0002.origin"), "w") as f:
-        f.write("p=0")
-
-    out = mnt.repair_compaction(path)
-    assert sorted(out["removed"]) == [
-        "_old_feed0001",
-        "_old_feed0002.origin",
-    ]
-    assert out["restored"] == []
-    assert spark.read.parquet(path).count() == total
-    # idempotent: a second sweep finds nothing
-    assert mnt.repair_compaction(path) == {"restored": [], "removed": []}
-
-
-def test_compact_table_writes_and_clears_origin_marker(spark, tmp_path):
-    """The happy path leaves no markers or backup dirs behind."""
-    path = str(tmp_path / "t")
-    for i in range(4):
-        spark.range(i * 50, (i + 1) * 50).repartition(3).write.mode(
-            "append"
-        ).parquet(path)
-    assert mnt.compact_table(spark, path)
-    leftovers = [
-        n
-        for n in os.listdir(os.path.dirname(path)) + os.listdir(path)
-        if n.startswith(("_old_", "_stage_"))
-    ]
-    assert leftovers == []
-    assert spark.read.parquet(path).count() == 200
 
 
 def test_compact_table_versioned_rewrites_and_links(spark, tmp_path):

@@ -1053,7 +1053,7 @@ class IvfIndex:
 
     # --------------------------------------------------------- maintain
 
-    def compact(self, spark, timeout: float = 0.0, **kwargs) -> dict:
+    def compact(self, spark, timeout: float = 0.0) -> dict:
         """OPTIMIZE-analog for the index: every :meth:`append` adds new
         files to the touched cells, so a nightly-append index
         fragments into many small parquet files per partition.
@@ -1074,22 +1074,21 @@ class IvfIndex:
         import os
         import uuid
 
-        from ..operators.maintenance import compact_table_versioned
+        from ..operators.maintenance import FRAGMENT_FILES, compact_table_versioned
         from ..operators.upsert import table_write_lock
 
         with table_write_lock(self.root, timeout=timeout):
             meta = self._meta()
             src = self._data_path(meta)
-            min_files = kwargs.get("min_files", 2)
             fragmented = any(
-                sum(f.endswith(".parquet") for f in fs) > min_files
+                sum(f.endswith(".parquet") for f in fs) > FRAGMENT_FILES
                 for _, _, fs in os.walk(src)
             )
             if not fragmented:  # nothing to do: don't churn a new dir
                 return {}
             data_dir = f"data_{uuid.uuid4().hex[:8]}"
             results = compact_table_versioned(
-                spark, src, os.path.join(self.root, data_dir), **kwargs
+                spark, src, os.path.join(self.root, data_dir)
             )
             meta["data_dir"] = data_dir
             tmp = self._meta_path + ".tmp"

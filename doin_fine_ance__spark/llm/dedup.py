@@ -270,22 +270,20 @@ def lsh_candidate_pairs(
     signatures: DataFrame,
     id_col: str = "doc_id",
     bands: int = 16,
-    checkpoint_mode: str | None = None,
 ) -> DataFrame:
     """Band the signatures and emit candidate pairs per bucket.
 
     One shuffle on (band index, band hash); within-bucket self-join with
     ``id_a < id_b`` dedup. Bucket sizes are bounded in practice (equal
     band hash ⇒ near-identical prefix), so the join is skew-safe; AQE
-    splits pathological buckets.
+    splits pathological buckets. The band keys are checkpointed once
+    before the join (see :func:`_pairs_from_banded`).
     """
     banded = band_keys(signatures, id_col, bands)
-    return _pairs_from_banded(banded, id_col, checkpoint_mode)
+    return _pairs_from_banded(banded, id_col)
 
 
-def _pairs_from_banded(
-    banded: DataFrame, id_col: str, checkpoint_mode: str | None = None
-) -> DataFrame:
+def _pairs_from_banded(banded: DataFrame, id_col: str) -> DataFrame:
     """Within-bucket candidate self-join over a (id, band, band_hash)
     frame: distinct (id_a, id_b) with id_a < id_b.
 
@@ -295,8 +293,10 @@ def _pairs_from_banded(
     arbitrary subplans — without this the signatures compute twice.
     At corpus scale this materialization is the signature/band store
     you would persist anyway (incremental dedup reads exactly it).
+    The checkpoint is reliable when the session has a checkpoint
+    directory, local otherwise (:func:`materialize`).
     """
-    banded = materialize(banded, checkpoint_mode)
+    banded = materialize(banded)
     a = banded.alias("a")
     b = banded.alias("b")
     return (
@@ -445,7 +445,6 @@ def verified_forest_edges(
     threshold: float = 0.7,
     k: int = 64,
     bands: int = 16,
-    checkpoint_mode: str | None = None,
 ) -> DataFrame:
     """Per-bucket verified spanning forests: exact clustering semantics
     with LINEAR edge output on near-dup cliques.
@@ -495,9 +494,10 @@ def verified_forest_edges(
     # Fused signature+banding (r13, see minhash_band_keys). Two
     # consumers below (bucket counts + semi join): materialize once so
     # the signature stage doesn't run twice (same idiom and rationale
-    # as _pairs_from_banded).
+    # as _pairs_from_banded, reliable when the session has a checkpoint
+    # directory, local otherwise).
     banded = minhash_band_keys(docs, id_col, text_col, k, bands)
-    banded = materialize(banded, checkpoint_mode)
+    banded = materialize(banded)
     multi_keys = (
         banded.groupBy("band", "band_hash")
         .count()
@@ -1000,7 +1000,6 @@ def incremental_near_dups(
     threshold: float = 0.7,
     k: int = 64,
     bands: int = 16,
-    checkpoint_mode: str | None = None,
     store_epoch: int | None = None,
 ) -> DataFrame:
     """Incremental MinHash dedup against a persistent signature table.
@@ -1024,6 +1023,9 @@ def incremental_near_dups(
 
     Determinism: signatures depend only on (text, seed), so the store
     can be rebuilt or extended in any order and matching is stable.
+
+    The pairs are checkpointed before the store write (reliable when
+    the session has a checkpoint directory, local otherwise).
 
     ``store_epoch`` (streaming recovery contract): when set, the
     batch's signatures are written to ``epoch=<n>/`` with OVERWRITE
@@ -1071,7 +1073,7 @@ def incremental_near_dups(
 
     # write the store AFTER the read plan is fixed (parquet re-list
     # would otherwise see the new files mid-query on some filesystems)
-    out = materialize(out, checkpoint_mode)
+    out = materialize(out)
     if store_epoch is not None:
         new_sigs.write.mode("overwrite").parquet(
             os.path.join(signature_store, f"epoch={int(store_epoch)}")

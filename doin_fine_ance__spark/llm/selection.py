@@ -39,7 +39,6 @@ def global_running_sum(
     order_cols: list,
     out_col: str = "running_total",
     num_partitions: int | None = None,
-    checkpoint_mode: str | None = None,
 ) -> DataFrame:
     """Inclusive running sum of ``weight_col`` in the total order given
     by ``order_cols`` — distributed two-pass prefix sum.
@@ -68,8 +67,9 @@ def global_running_sum(
     local = ranged.withColumn("_local_cum", F.sum(weight_col).over(w))
     # The per-partition totals materialize `local` once; checkpoint so
     # the main branch below reuses it instead of recomputing the
-    # upstream plan (Spark reuses exchanges, not subplans).
-    local = materialize(local, checkpoint_mode)
+    # upstream plan (Spark reuses exchanges, not subplans). Reliable
+    # when the session has a checkpoint directory, local otherwise.
+    local = materialize(local)
     totals = (
         local.groupBy("_pid").agg(F.max("_local_cum").alias("_total")).collect()
     )

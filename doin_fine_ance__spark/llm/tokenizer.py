@@ -175,7 +175,6 @@ def bpe_train(
     docs: DataFrame,
     num_merges: int,
     text_col: str = "text",
-    checkpoint_mode: str | None = None,
     max_batch: int = 64,
     _stats: dict | None = None,
 ) -> list[tuple[str, str]]:
@@ -186,9 +185,11 @@ def bpe_train(
     :func:`_select_merge_batch` for the proof). ``max_batch=1``
     recovers the one-merge-per-job shape. ``_stats`` (test seam)
     records ``pair_count_jobs`` vs ``merges`` so the scheduling win is
-    assertable."""
+    assertable. The symbol table is re-checkpointed after every batch
+    by :func:`materialize`: reliable when the session has a checkpoint
+    directory, local otherwise."""
     wc = word_counts(docs, text_col)
-    table = materialize(_initial_symbols(wc), checkpoint_mode)
+    table = materialize(_initial_symbols(wc))
     # exact symbol vocabulary, maintained driver-side: initial symbols
     # from one tiny job (≤ charset × 2 rows), every later symbol is a
     # merge this driver performed
@@ -226,8 +227,7 @@ def bpe_train(
         table = materialize(
             table.select(
                 _merge_batch_udf(batch)(col("symbols")).alias("symbols"), "count"
-            ),
-            checkpoint_mode,
+            )
         )
     if _stats is not None:
         _stats["pair_count_jobs"] = jobs

@@ -1,24 +1,25 @@
-"""Checkpoint-mode policy for iterative / self-joining operators.
+"""Checkpoint policy for iterative / self-joining operators.
 
 The dedup, connected-components, and prefix-sum operators must
 materialize intermediates (band stores, symmetrized edge lists,
 per-round labels): without it Spark re-executes the upstream plan
-every iteration. Two modes:
+every iteration. :func:`materialize` is the one place that cuts
+lineage, and the session's checkpoint directory is the one setting:
 
-- ``local`` (default): ``DataFrame.localCheckpoint(eager=True)`` —
-  blocks live on executors with lineage truncated. Right call on
-  local[*] and for short jobs: no distributed-FS round trip. BUT an
-  executor loss discards its blocks and, with lineage gone, the job
-  dies — on a real cluster a mid-iteration executor failure kills a
-  CC/dedup run (VERDICT r2 "What's missing" #3).
-- ``reliable``: ``DataFrame.checkpoint(eager=True)`` to the
-  directory registered via ``set_checkpoint_mode`` /
-  ``SparkContext.setCheckpointDir`` (HDFS/S3 on a cluster).
-  Executor loss recovers by re-reading the checkpoint files; the
-  cost is one write+read of the materialized data per checkpoint.
+- with a directory (``SparkContext.setCheckpointDir`` or the
+  ``spark.checkpoint.dir`` conf at start-up; HDFS/S3 on a cluster):
+  ``DataFrame.checkpoint(eager=True)`` writes reliable checkpoint
+  files there. Executor loss recovers by re-reading them; the cost is
+  one write+read of the materialized data per checkpoint.
+- without one: ``DataFrame.localCheckpoint(eager=True)`` — blocks
+  live on executors with lineage truncated. Right call on local[*]
+  and for short jobs: no distributed-FS round trip, but an executor
+  loss discards its blocks and, with lineage gone, the job dies.
 
-Operators take ``checkpoint_mode=None`` (inherit the module default,
-settable once per job) or an explicit ``'local'``/``'reliable'``.
+A session with no SparkContext (Spark Connect) always takes the local
+checkpoint and, where the server does not support it, falls back to
+the lazy frame: correct, just slower. On a classic session a failed
+checkpoint raises.
 
 Intermediates that must outlive the call returning a lazy frame over
 them are persisted through :func:`own` instead, which registers them
@@ -31,46 +32,23 @@ from __future__ import annotations
 import functools
 import threading
 
-from pyspark.sql import DataFrame, SparkSession
-
-_MODE = "local"
-_VALID = ("local", "reliable")
+from pyspark.sql import DataFrame
 
 
-def set_checkpoint_mode(
-    mode: str,
-    spark: SparkSession | None = None,
-    checkpoint_dir: str | None = None,
-) -> None:
-    """Set the process-wide default mode; for ``reliable`` also
-    register ``checkpoint_dir`` with the SparkContext (required before
-    the first reliable checkpoint unless already configured)."""
-    global _MODE
-    if mode not in _VALID:
-        raise ValueError(f"checkpoint mode must be one of {_VALID}, got {mode!r}")
-    if mode == "reliable" and checkpoint_dir is not None:
-        if spark is None:
-            raise ValueError("set_checkpoint_mode('reliable', dir=...) needs spark")
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
-    _MODE = mode
-
-
-def checkpoint_mode() -> str:
-    return _MODE
-
-
-def materialize(df: DataFrame, mode: str | None = None) -> DataFrame:
-    """Cut lineage and materialize ``df`` per the active mode."""
-    mode = mode or _MODE
-    if mode not in _VALID:
-        raise ValueError(f"checkpoint mode must be one of {_VALID}, got {mode!r}")
-    if mode == "reliable":
-        return df.checkpoint(eager=True)
+def materialize(df: DataFrame) -> DataFrame:
+    """Cut lineage and materialize ``df``: a reliable checkpoint when
+    the session has a checkpoint directory, a local one otherwise."""
     try:
-        return df.localCheckpoint(eager=True)
+        sc = df.sparkSession.sparkContext
     except Exception:
-        # Spark Connect without checkpoint support: correct, just slower.
-        return df
+        # Spark Connect has no SparkContext and may not checkpoint.
+        try:
+            return df.localCheckpoint(eager=True)
+        except Exception:
+            return df
+    if sc.getCheckpointDir():
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)
 
 
 def ordered(df: DataFrame, *sort_cols: str) -> DataFrame:

@@ -29,7 +29,7 @@ Implementation, two phases:
    make it O(log diameter), the same round bound as
    large-star/small-star (Kiveris et al., "Connected Components in
    MapReduce") with simpler join primitives. Lineage is truncated
-   with localCheckpoint each round (without it the plan doubles per
+   with a checkpoint each round (without it the plan doubles per
    iteration and the driver OOMs planning by ~iter 20).
 
 Iteration parallelism is sized to the GRAPH, not the cluster: after
@@ -110,7 +110,6 @@ def connected_components(
     dst: str = "dst",
     max_iter: int = 50,
     edges_per_partition: int = 4_000_000,
-    checkpoint_mode: str | None = None,
 ) -> DataFrame:
     """Return (node, component) where component = min node id reachable.
 
@@ -125,6 +124,11 @@ def connected_components(
     whose per-round scheduling cost dwarfs the data at small scale) is
     skipped entirely; tests pin the at-scale iterative path by passing
     a tiny value.
+
+    Every intermediate goes through :func:`materialize`: a reliable
+    checkpoint when the session has a checkpoint directory (so an
+    executor loss mid-iteration re-reads files instead of killing the
+    run), a local one otherwise.
     """
     # Phase 1 consumes the RAW edge list: a union-find unions {a, b}
     # regardless of edge direction, so symmetrizing before contraction
@@ -140,7 +144,7 @@ def connected_components(
     # contraction, and without lineage truncation the whole upstream
     # edge-generation plan (e.g. the MinHash candidate join feeding
     # d_dup_clusters) re-executes per downstream job.
-    raw = materialize(raw, checkpoint_mode)
+    raw = materialize(raw)
     # Size contraction parallelism to the graph (see module docstring);
     # a sparse pair graph collapses to 1 partition.
     n_edges = raw.count()
@@ -158,9 +162,7 @@ def connected_components(
         # the iterative phase (each round costs several join/agg jobs
         # of pure scheduling overhead at this size). Checkpoint so
         # downstream actions don't re-run the contraction.
-        return materialize(
-            stars.select("node", col("nbr").alias("component")), checkpoint_mode
-        )
+        return materialize(stars.select("node", col("nbr").alias("component")))
     sym = (
         stars.select(
             F.explode(
@@ -173,9 +175,9 @@ def connected_components(
         .select("e.node", "e.nbr")
         .distinct()
     )
-    sym = materialize(sym, checkpoint_mode)
+    sym = materialize(sym)
     labels = sym.select("node").distinct().withColumn("component", col("node"))
-    labels = materialize(labels, checkpoint_mode)
+    labels = materialize(labels)
     # labels only ever DECREASE (least of own + neighbor minima), so the
     # label sum is a strictly decreasing convergence witness — one cheap
     # agg per iteration instead of a join-and-count diff.
@@ -209,8 +211,7 @@ def connected_components(
                 F.least(
                     col("component"), F.coalesce(col("jump_comp"), col("component"))
                 ).alias("component"),
-            ),
-            checkpoint_mode,
+            )
         )
         new_sum = labels.agg(F.sum("component")).first()[0]
         if new_sum == prev_sum:

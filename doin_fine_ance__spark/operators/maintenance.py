@@ -42,6 +42,10 @@ SNAPSHOT_PREFIX = "snapshot_"
 # Output file size that compaction and keyed merges aim for: the
 # scan-efficient shape Delta's OPTIMIZE targets.
 TARGET_FILE_BYTES = 128 * 1024 * 1024
+#: a plain parquet leaf dir holding more files than this is fragmented
+#: (:func:`compact_table_versioned` rewrites it, ``IvfIndex.compact``
+#: skips an index with none)
+FRAGMENT_FILES = 2
 
 
 class BackupError(RuntimeError):
@@ -153,22 +157,6 @@ def output_files(total_bytes: int, target_file_bytes: int = TARGET_FILE_BYTES) -
     return max(1, math.ceil(total_bytes / target_file_bytes))
 
 
-def _layout(df: DataFrame, n_out: int, zorder: list[str] | None) -> DataFrame:
-    """``df`` laid out as ``n_out`` output files: coalesced, or with
-    ``zorder`` range-partitioned and sorted on the Morton code of those
-    columns."""
-    if not zorder:
-        return df.coalesce(n_out)
-    from .zorder import zorder_key
-
-    return (
-        df.withColumn("_z", zorder_key(df, zorder))
-        .repartitionByRange(n_out, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-    )
-
-
 def compact_table(
     spark: SparkSession,
     path: str,
@@ -211,7 +199,16 @@ def compact_table(
         n_out = output_files(table.size_bytes(), target_file_bytes)
         if len(table.files()) <= n_out:
             return None
-        return _layout(current, n_out, zorder)
+        if not zorder:
+            return current.coalesce(n_out)
+        from .zorder import zorder_key
+
+        return (
+            current.withColumn("_z", zorder_key(current, zorder))
+            .repartitionByRange(n_out, "_z")
+            .sortWithinPartitions("_z")
+            .drop("_z")
+        )
 
     return table.commit_rewrite(spark, rewrite)
 
@@ -220,13 +217,10 @@ def compact_table_versioned(
     spark: SparkSession,
     src: str,
     dst: str,
-    target_file_bytes: int = TARGET_FILE_BYTES,
-    min_files: int = 2,
-    zorder: list[str] | None = None,
 ) -> dict[str, int]:
     """Build a COMPLETE compacted copy of the plain parquet tree ``src``
-    at ``dst``: leaf dirs with more than ``min_files`` files are
-    rewritten to ~``target_file_bytes`` files, the other leaves are
+    at ``dst``: leaf dirs with more than ``FRAGMENT_FILES`` files are
+    rewritten to ``output_files(size)`` files, the other leaves are
     HARD-LINKED file-by-file (O(files), no data copied; falls back to
     a real copy across filesystems). The caller publishes ``dst``
     atomically (``IvfIndex.compact`` republishes ``centroids.json``,
@@ -243,7 +237,7 @@ def compact_table_versioned(
             continue
         rel = os.path.relpath(cur, src)
         out_dir = dst if rel == "." else os.path.join(dst, rel)
-        if len(frags) <= min_files:
+        if len(frags) <= FRAGMENT_FILES:
             os.makedirs(out_dir, exist_ok=True)
             for f in frags:
                 try:
@@ -252,7 +246,8 @@ def compact_table_versioned(
                     shutil.copy2(os.path.join(cur, f), os.path.join(out_dir, f))
             continue
         total = sum(os.path.getsize(os.path.join(cur, f)) for f in frags)
-        n_out = output_files(total, target_file_bytes)
-        _layout(spark.read.parquet(cur), n_out, zorder).write.mode("overwrite").parquet(out_dir)
+        spark.read.parquet(cur).coalesce(output_files(total)).write.mode(
+            "overwrite"
+        ).parquet(out_dir)
         results[rel] = sum(f.endswith(".parquet") for f in os.listdir(out_dir))
     return results

@@ -1,10 +1,14 @@
-"""Reliable-vs-local checkpoint modes for iterative operators
-(VERDICT r2 next-round #4).
+"""Checkpoint policy for iterative operators: :func:`materialize`
+writes a reliable checkpoint when the session has a checkpoint
+directory and a local one otherwise.
 
-``local`` is the default (executor-memory blocks, right for
-local[*]); ``reliable`` writes RDD checkpoint files under the
-registered checkpoint dir so a cluster run survives executor loss
-mid-iteration. Both must produce identical results.
+Without a directory, blocks live in executor memory (right for
+local[*]); with one, RDD checkpoint files land under it so a cluster
+run survives executor loss mid-iteration. Both must produce identical
+results. Tests take the reliable path through the ``reliable_dir``
+fixture (requested mid-test to compare against a local run first); it
+unsets the directory again on teardown, so every other test keeps the
+local path.
 """
 
 from __future__ import annotations
@@ -14,54 +18,77 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from doin_fine_ance__spark.operators.checkpoint import (
-    checkpoint_mode,
-    materialize,
-    set_checkpoint_mode,
-)
+from doin_fine_ance__spark.operators.checkpoint import materialize
 from doin_fine_ance__spark.operators.graph import connected_components
 
 
 @pytest.fixture
 def reliable_dir(spark, tmp_path):
+    sc = spark.sparkContext
+    assert sc.getCheckpointDir() is None
     d = str(tmp_path / "rdd-checkpoints")
-    spark.sparkContext.setCheckpointDir(d)
+    sc.setCheckpointDir(d)
     yield d
+    getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.empty())
+    assert sc.getCheckpointDir() is None
 
 
-def _edges(spark):
-    # two components: {1,2,3,4} chained, {10,11}
-    return spark.createDataFrame(
+def _checkpoint_files(d):
+    return [f for _, _, files in os.walk(d) for f in files]
+
+
+def test_reliable_mode_writes_checkpoint_files(spark, request):
+    df = spark.range(100).withColumn("v", F.col("id") * 2)
+    local = materialize(df)
+    assert local.count() == 100
+    rdd = local._jdf.queryExecution().analyzed().rdd()
+    assert rdd.isLocallyCheckpointed() and rdd.getCheckpointFile().isEmpty()
+
+    d = request.getfixturevalue("reliable_dir")
+    reliable = materialize(df)
+    assert reliable.count() == 100
+    rdd = reliable._jdf.queryExecution().analyzed().rdd()
+    assert not rdd.isLocallyCheckpointed()
+    assert os.path.basename(d) in rdd.getCheckpointFile().get()
+    assert _checkpoint_files(d), "reliable materialize produced no checkpoint files"
+
+
+def test_materialize_raises_a_failed_checkpoint(spark):
+    """A job failure inside the checkpoint surfaces from materialize
+    instead of handing back the lazy frame, whose next action would
+    re-run the failing stage with lineage still uncut."""
+
+    @F.udf("long")
+    def boom(x):
+        raise RuntimeError("checkpoint stage failed")
+
+    with pytest.raises(Exception, match="checkpoint stage failed"):
+        materialize(spark.range(3).select(boom("id").alias("x")))
+
+
+def _components(spark):
+    # two components: {1,2,3,4} chained, {10,11}; tiny
+    # edges_per_partition forces the ITERATIVE phase, where the
+    # per-round checkpoints actually run
+    edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11)], ["src", "dst"]
     )
+    return {
+        tuple(r)
+        for r in connected_components(edges, edges_per_partition=1).collect()
+    }
 
 
 @pytest.mark.slow
-def test_cc_local_vs_reliable_identical(spark, reliable_dir):
-    expected = {(1, 1), (2, 1), (3, 1), (4, 1), (10, 10), (11, 10)}
-    for mode in ("local", "reliable"):
-        # tiny edges_per_partition forces the ITERATIVE phase, where
-        # the per-round checkpoints actually run in the chosen mode
-        got = {
-            tuple(r)
-            for r in connected_components(
-                _edges(spark), edges_per_partition=1, checkpoint_mode=mode
-            ).collect()
-        }
-        assert got == expected, mode
+def test_cc_local_vs_reliable_identical(spark, request):
+    local = _components(spark)
+    d = request.getfixturevalue("reliable_dir")
+    assert _components(spark) == local
+    assert local == {(1, 1), (2, 1), (3, 1), (4, 1), (10, 10), (11, 10)}
+    assert _checkpoint_files(d)
 
 
-def test_reliable_mode_writes_checkpoint_files(spark, reliable_dir):
-    df = spark.range(100).withColumn("v", F.col("id") * 2)
-    out = materialize(df, "reliable")
-    assert out.count() == 100
-    found = [
-        f for root, _, files in os.walk(reliable_dir) for f in files
-    ]
-    assert found, "reliable materialize produced no checkpoint files"
-
-
-def test_lsh_and_running_sum_both_modes(spark, reliable_dir, tmp_path):
+def _lsh_and_running_sum(spark):
     from doin_fine_ance__spark.llm.dedup import (
         lsh_candidate_pairs,
         minhash_signatures,
@@ -76,63 +103,49 @@ def test_lsh_and_running_sum_both_modes(spark, reliable_dir, tmp_path):
         ],
         ["doc_id", "text"],
     )
-    sigs = minhash_signatures(docs)
-    results = {}
-    for mode in ("local", "reliable"):
-        pairs = {
-            tuple(r)
-            for r in lsh_candidate_pairs(sigs, checkpoint_mode=mode)
-            .select("id_a", "id_b")
-            .collect()
-        }
-        rs = {
-            tuple(r)
-            for r in global_running_sum(
-                spark.createDataFrame(
-                    [(1, 10), (2, 20), (3, 30)], ["k", "w"]
-                ),
-                "w",
-                ["k"],
-                checkpoint_mode=mode,
-            ).collect()
-        }
-        results[mode] = (pairs, rs)
-    assert results["local"] == results["reliable"]
-    assert (1, 2) in results["local"][0]
+    pairs = {
+        tuple(r)
+        for r in lsh_candidate_pairs(minhash_signatures(docs))
+        .select("id_a", "id_b")
+        .collect()
+    }
+    rs = {
+        tuple(r)
+        for r in global_running_sum(
+            spark.createDataFrame([(1, 10), (2, 20), (3, 30)], ["k", "w"]),
+            "w",
+            ["k"],
+        ).collect()
+    }
+    return pairs, rs
+
+
+def test_lsh_and_running_sum_both_modes(spark, request):
+    local = _lsh_and_running_sum(spark)
+    d = request.getfixturevalue("reliable_dir")
+    assert _lsh_and_running_sum(spark) == local
+    assert (1, 2) in local[0]
+    assert local[1] == {(1, 10, 10), (2, 20, 30), (3, 30, 60)}
+    assert _checkpoint_files(d)
+
+
+def _incremental_pairs(spark, store):
+    from doin_fine_ance__spark.llm.dedup import incremental_near_dups
+
+    text = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    batch1 = spark.createDataFrame([(1, text)], ["doc_id", "text"])
+    batch2 = spark.createDataFrame([(2, text)], ["doc_id", "text"])
+    incremental_near_dups(spark, batch1, store).count()
+    pairs = incremental_near_dups(spark, batch2, store).collect()
+    return {(r.id_a, r.id_b) for r in pairs}
 
 
 @pytest.mark.slow
-def test_incremental_near_dups_reliable(spark, reliable_dir, tmp_path):
-    from doin_fine_ance__spark.llm.dedup import incremental_near_dups
-
-    store = str(tmp_path / "sigstore")
-    batch1 = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta eta theta iota kappa")],
-        ["doc_id", "text"],
-    )
-    batch2 = spark.createDataFrame(
-        [(2, "alpha beta gamma delta epsilon zeta eta theta iota kappa")],
-        ["doc_id", "text"],
-    )
-    incremental_near_dups(spark, batch1, store, checkpoint_mode="reliable").count()
-    pairs = incremental_near_dups(
-        spark, batch2, store, checkpoint_mode="reliable"
-    ).collect()
-    assert {(r.id_a, r.id_b) for r in pairs} == {(1, 2)}
-
-
-def test_module_default_mode_roundtrip(spark, reliable_dir):
-    assert checkpoint_mode() == "local"
-    try:
-        set_checkpoint_mode("reliable", spark, reliable_dir)
-        assert checkpoint_mode() == "reliable"
-        assert materialize(spark.range(5)).count() == 5
-    finally:
-        set_checkpoint_mode("local")
-    with pytest.raises(ValueError):
-        set_checkpoint_mode("bogus")
-    with pytest.raises(ValueError):
-        materialize(spark.range(1), "bogus")
+def test_incremental_near_dups_reliable(spark, request, tmp_path):
+    assert _incremental_pairs(spark, str(tmp_path / "store-local")) == {(1, 2)}
+    d = request.getfixturevalue("reliable_dir")
+    assert _incremental_pairs(spark, str(tmp_path / "store-reliable")) == {(1, 2)}
+    assert _checkpoint_files(d)
 
 
 class _Store:

@@ -1,8 +1,9 @@
 """Tooling guard: the engine cuts lineage only through
-``operators.checkpoint.materialize``, which picks the checkpoint kind
-from the active mode (local or reliable) and holds the one Spark Connect
-fallback. A direct ``localCheckpoint`` or ``checkpoint`` call elsewhere
-ignores the mode, and its own fallback can swallow a failed reliable
+``operators.checkpoint.materialize``, which takes a reliable checkpoint
+when the session has a checkpoint directory and a local one otherwise,
+and holds the one fallback for sessions with no SparkContext (Spark
+Connect). A direct ``localCheckpoint`` or ``checkpoint`` call elsewhere
+ignores the directory, and its own fallback can swallow a failed
 checkpoint."""
 
 from __future__ import annotations
@@ -41,8 +42,8 @@ def test_checkpoint_calls_only_in_materialize():
 def test_guard_flags_checkpoint_calls_outside_owner(tmp_path):
     (tmp_path / "pkg" / "operators").mkdir(parents=True)
     (tmp_path / "pkg" / "operators" / "checkpoint.py").write_text(
-        "def materialize(df, mode):\n"
-        "    if mode == 'reliable':\n"
+        "def materialize(df):\n"
+        "    if df.sparkSession.sparkContext.getCheckpointDir():\n"
         "        return df.checkpoint(eager=True)\n"
         "    return df.localCheckpoint(eager=True)\n"
     )

@@ -1316,7 +1316,7 @@ def test_ivf_index_build_probe_append_stats(spark, tmp_path):
             "vec_id long, embedding array<double>",
         ))
     before = [r["vec_id"] for r in idx.topk(spark, q, k=5, nprobe=8).collect()]
-    rewritten = idx.compact(spark, min_files=2)
+    rewritten = idx.compact(spark)
     assert rewritten  # at least the planted cell was fragmented
     after = [r["vec_id"] for r in idx.topk(spark, q, k=5, nprobe=8).collect()]
     assert after == before
@@ -1381,7 +1381,7 @@ def test_ivf_append_during_compact_serializes_no_lost_vectors(
 
     def do_compact():
         try:
-            idx.compact(spark, min_files=2)
+            idx.compact(spark)
         except Exception as e:  # pragma: no cover - surfaced below
             errs.append(e)
 
@@ -1838,7 +1838,7 @@ def test_ivf_compact_is_reader_safe(spark, tmp_path, monkeypatch):
     t = threading.Thread(target=reader)
     t.start()
     try:
-        rewritten = idx.compact(spark, min_files=2)
+        rewritten = idx.compact(spark)
     finally:
         time.sleep(0.3)  # a few post-publish reads
         stop.set()

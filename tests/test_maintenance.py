@@ -285,7 +285,7 @@ def test_compact_table_versioned_rewrites_and_links(spark, tmp_path):
         "id", "CAST(1 AS STRING) AS p"
     ).coalesce(1).write.mode("append").partitionBy("p").parquet(src)
     dst = str(tmp_path / "t_v2")
-    out = mnt.compact_table_versioned(spark, src, dst, min_files=2)
+    out = mnt.compact_table_versioned(spark, src, dst)
     assert set(out) == {"p=0"}  # only the fragmented leaf is listed
     assert spark.read.parquet(dst).count() == 300
     # linked leaf shares inodes with the source (no data copied)
@@ -306,7 +306,7 @@ def test_compact_table_versioned_rewrites_and_links(spark, tmp_path):
             "append"
         ).parquet(flat)
     flat2 = str(tmp_path / "flat_v2")
-    out2 = mnt.compact_table_versioned(spark, flat, flat2, min_files=2)
+    out2 = mnt.compact_table_versioned(spark, flat, flat2)
     assert set(out2) == {"."}
     assert spark.read.parquet(flat2).count() == 30
     assert len([f for f in os.listdir(flat2) if f.endswith(".parquet")]) == 1

@@ -4,6 +4,12 @@ noop sink, min-of-N, per-query gc + JVM System.gc between queries) so
 per-change before/after numbers are directly comparable to the full
 bench without paying its 72-query wall time.
 
+Each repeat also runs in its own job group, and the MIN job count over
+the repeats is reported next to the min time (the fixed-latency tax
+meter: a job costs ~0.2 s of pure scheduling at sf0.1; the count is
+deterministic per plan, and the min guards against a stray concurrent
+job landing in the group).
+
 Usage: python tools/minibench.py q1_pricing_summary d_exact_dedup ...
        [--repeat 3] [--sf-dir /root/testdata/sf0.1] [--out FILE]
 """
@@ -57,16 +63,22 @@ def main() -> None:
         ).save()
     gc.collect()
 
+    sc = spark.sparkContext
     timings: dict[str, float] = {}
+    jobs: dict[str, int] = {}
     for name in args.names:
-        spark.sparkContext.setJobDescription(f"minibench: {name}")
-        best = None
-        for _ in range(args.repeat):
+        best = n_jobs = None
+        for i in range(args.repeat):
+            group = f"minibench-{name}-{i}"
+            sc.setJobGroup(group, f"minibench: {name}")
             t0 = time.perf_counter()
             df = queries[name](spark, args.sf_dir)
             df.write.format("noop").mode("overwrite").save()
             dt = time.perf_counter() - t0
+            sc.setJobGroup(None, None)
+            n = len(sc.statusTracker().getJobIdsForGroup(group))
             best = dt if best is None else min(best, dt)
+            n_jobs = n if n_jobs is None else min(n_jobs, n)
             del df
             gc.collect()
         try:
@@ -74,12 +86,12 @@ def main() -> None:
         except Exception:
             pass
         timings[name] = round(best, 4)
-        print(f"{name:40s} {best:7.3f}s", flush=True)
-    spark.sparkContext.setJobDescription(None)
+        jobs[name] = n_jobs
+        print(f"{name:40s} {best:7.3f}s  jobs={n_jobs}", flush=True)
     if args.out:
         with open(args.out, "w") as f:
             json.dump({"sf_dir": args.sf_dir, "repeat": args.repeat,
-                       "queries": timings}, f, indent=1)
+                       "queries": timings, "jobs": jobs}, f, indent=1)
             f.write("\n")
     spark.stop()
 

@@ -20,6 +20,7 @@ import json
 import os
 import sys
 import time
+from typing import NamedTuple
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -117,127 +118,163 @@ HEADLINE = [
 ]
 
 
-def run_bench(spark, queries, sf_dir: str) -> dict:
+TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
+          "lineitem", "events", "documents", "embeddings"]
 
-    # warm the JVM + parquet footers + Python/Arrow worker pool once so
-    # per-query numbers measure the query, not session startup. The
-    # UDF warmup must run FULL-WIDTH (noop sink, not limit(1)): limit(1)
-    # forks exactly one Python worker, leaving the first wide pandas-UDF
-    # query to pay the other 31 forks + Arrow init inside its timing.
+
+def warm_up(spark, queries, sf_dir: str, names) -> list[str]:
+    """Warm the session once so per-query timings measure the query,
+    not session startup; return the names whose warm-up run failed.
+
+    The JVM, the parquet footers and the Python/Arrow worker pool warm
+    first. The UDF warmup must run FULL-WIDTH (noop sink, not
+    limit(1)): limit(1) forks exactly one Python worker, leaving the
+    first wide pandas-UDF query to pay the other forks + Arrow init
+    inside its timing.
+
+    Then, JMH-style, every query in ``names`` runs once at the tiny
+    ``$SPARK_GRAFT_WARMUP_DIR`` SF (default sf0.001; skipped when it is
+    ``sf_dir`` itself). The plans are structurally identical, so this
+    compiles all whole-stage-codegen units, JITs the hot JVM paths and
+    exercises every pandas-UDF code path once — a cold JVM otherwise
+    pays ~40s of first-execution compilation spread across the timed
+    sf0.1 queries (measured: 102s cold vs ~60s steady on identical
+    code). A query that fails here runs COLD in the timed loop, so it
+    is returned (and printed to stderr) to keep its timing
+    identifiable as unwarmed; the warm-up itself never fails the run.
+    """
+    from doin_fine_ance__spark.sources.testdata import load_table
+
     queries["a6_count_total"](spark, sf_dir).collect()
     queries["t_simhash_fingerprints"](spark, sf_dir).write.format("noop").mode(
         "overwrite"
     ).save()
-    from doin_fine_ance__spark.sources.testdata import load_table
-
-    for t in ["region", "nation", "customer", "supplier", "part", "orders",
-              "lineitem", "events", "documents", "embeddings"]:
+    for t in TABLES:
         load_table(spark, sf_dir, t).count()
 
-    # JMH-style warmup: run EVERY headline query once at a tiny SF
-    # before the timed loop. The plans are structurally identical, so
-    # this compiles all whole-stage-codegen units, JITs the hot JVM
-    # paths, and exercises every pandas-UDF code path once — a cold
-    # JVM otherwise pays ~40s of first-execution compilation spread
-    # across the timed sf0.1 queries (measured: 102s cold vs ~60s
-    # steady on identical code). The timed numbers then measure the
-    # queries, not the JIT.
     warm_dir = os.environ.get("SPARK_GRAFT_WARMUP_DIR", "/root/testdata/sf0.001")
     cold: list[str] = []
     if os.path.isdir(warm_dir) and os.path.realpath(warm_dir) != os.path.realpath(sf_dir):
-        for name in HEADLINE:
-            fn = queries.get(name)
-            if fn is None:
-                continue
+        for name in names:
             try:
-                fn(spark, warm_dir).write.format("noop").mode("overwrite").save()
-            except Exception as e:  # warmup must never fail the bench, but
-                # a query that errors here runs COLD in the timed loop —
-                # record it so its timing is identifiable as unwarmed.
+                queries[name](spark, warm_dir).write.format("noop").mode(
+                    "overwrite").save()
+            except Exception as e:
                 cold.append(name)
                 print(f"# warmup failed for {name}: {type(e).__name__}: {e}",
                       file=sys.stderr)
         gc.collect()
+    return cold
 
-    # Each query is timed REPEAT times (fresh plan each time — re-executing
-    # the same DataFrame would reuse shuffle outputs and under-report) and
-    # the minimum is recorded: this box shows CPU-steal bursts from a noisy
-    # neighbor (~15 cpu-s jumps in /proc/stat concurrent with individual
-    # query spikes), and min-of-N is the standard steal-robust estimator
-    # (hyperfine/JMH practice). Set SPARK_GRAFT_BENCH_REPEAT=1 for the
-    # old single-shot behavior. Measured variance envelope
-    # (BENCH_VARIANCE_r10.json): six back-to-back runs of one unchanged
-    # sub-4s query at a single HEAD spanned 1.27-3.53 s (2.8x), so
-    # round-over-round per-query deltas inside ~2.8x on short queries
-    # are attributable to steal even after min-of-2.
-    # Default raised 2 → 3 in round 13 (VERDICT r12 next-round #8): the
-    # r11/r12 driver captures both showed uniform ~1.2x inflation on
-    # UNTOUCHED queries under box contention; min-of-3 halves that
-    # inflation tail for one extra repeat of wall time. Methodology
-    # (noop sink, fresh plan per repeat, min) is unchanged.
+
+class Timing(NamedTuple):
+    """Min wall seconds and min Spark job count over the repeats that
+    finished (None when none did), and the error that stopped the
+    repeats early (None when all ran)."""
+
+    sec: float | None
+    jobs: int | None
+    error: str | None
+
+
+def timed(spark, build, repeat: int, label: str) -> Timing:
+    """Run ``build()`` ``repeat`` times, each a FRESH plan (re-executing
+    one DataFrame would reuse its shuffle outputs and under-report)
+    sunk through the noop format, and keep the minimum time and job
+    count.
+
+    Sink through noop, NOT count(): under count() Catalyst prunes
+    deterministic projected columns, so map-only queries (pandas UDF
+    fingerprints, wide feature projections) would be timed as
+    near-empty scans. noop materializes every output column.
+
+    Min-of-N is the steal-robust estimator (hyperfine/JMH practice): on
+    a shared host, CPU-steal bursts from noisy neighbors coincide with
+    individual query spikes. Measured variance envelope
+    (BENCH_VARIANCE_r10.json): six back-to-back runs of one unchanged
+    sub-4s query spanned 1.27-3.53 s (2.8x), so per-query deltas
+    inside ~2.8x on short queries are attributable to steal even after
+    min-of-2.
+
+    Each repeat runs in its own job group ``<label>-<i>``; the job
+    count is the fixed-latency tax meter (a job costs ~0.2 s of pure
+    scheduling at sf0.1), deterministic per plan, and its min guards
+    against a stray concurrent job landing in the group.
+
+    A failing repeat stops the loop and is returned as ``error`` next
+    to the best of the repeats before it, so one query never loses a
+    whole run's timings (the r11 sf10 first attempt died wholesale on
+    a d_dup_clusters executor OOM).
+    """
+    sc = spark.sparkContext
+    best = jobs = error = None
+    for i in range(repeat):
+        group = f"{label}-{i}"
+        sc.setJobGroup(group, label)
+        try:
+            t0 = time.perf_counter()
+            df = build()
+            df.write.format("noop").mode("overwrite").save()
+            dt = time.perf_counter() - t0
+        except Exception as e:
+            error = f"{type(e).__name__}: {str(e)[:200]}"
+            break
+        finally:
+            sc.setJobGroup(None, None)
+        n = len(sc.statusTracker().getJobIdsForGroup(group))
+        best = dt if best is None else min(best, dt)
+        jobs = n if jobs is None else min(jobs, n)
+        # Drop this repeat's checkpoint blocks NOW: they are only
+        # unpersisted after Python GC releases the DataFrame and the
+        # JVM ContextCleaner notices — left alone they accumulate in the
+        # local block manager and turn into full-GC stalls attributed to
+        # whatever runs later.
+        del df
+        gc.collect()
+    # Release the JVM-side shuffle files too (untimed): the
+    # ContextCleaner acts on JVM GC, and waiting for its periodic sweep
+    # lets dead shuffle files pile up on the tmpfs scratch dir across a
+    # long run — the sf10 OOM story in session.py.
+    try:
+        sc._jvm.System.gc()
+    except Exception:
+        pass
+    return Timing(best, jobs, error)
+
+
+def run_bench(spark, queries, sf_dir: str) -> dict:
+    """Warm up, then time every HEADLINE query min-of-N at ``sf_dir``.
+
+    ``$SPARK_GRAFT_BENCH_REPEAT`` sets N (default 3: the r11/r12
+    captures showed uniform ~1.2x inflation on UNTOUCHED queries under
+    box contention, and min-of-3 halves that tail for one extra repeat
+    of wall time). ``$SPARK_GRAFT_BENCH_SKIP`` is a comma-separated
+    list of names to exclude — the sf10 rehearsal excludes
+    d_dup_clusters, whose verified pair graph is inherently quadratic
+    in the planted replica-clique and cannot fit one box; skips are
+    recorded in the result, never silent.
+    """
     repeat = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEAT", "3")))
-    # Comma-separated query names to exclude from this run — the sf10
-    # rehearsal excludes d_dup_clusters, whose verified pair graph is
-    # inherently quadratic in the planted replica-clique (~1.4B edges
-    # at sf10, 100x sf1's 14.1M) and cannot fit one 24g-heap box; see
-    # the query docstring for the scale analysis. Skips are recorded
-    # in the result so an excluded query is visible, never silent.
     skip = {
         s for s in os.environ.get("SPARK_GRAFT_BENCH_SKIP", "").split(",") if s
     }
+    names = [n for n in HEADLINE if n in queries and n not in skip]
+    cold = warm_up(spark, queries, sf_dir, names)
     timings: dict[str, float] = {}
+    jobs: dict[str, int] = {}
     errors: dict[str, str] = {}
-    for name in HEADLINE:
-        fn = queries.get(name)
-        if fn is None or name in skip:
-            continue
-        best = None
-        try:
-            for _ in range(repeat):
-                t0 = time.perf_counter()
-                df = fn(spark, sf_dir)
-                # Sink through noop, NOT count(): under count() Catalyst
-                # prunes deterministic projected columns, so map-only
-                # queries (pandas UDF fingerprints, wide feature
-                # projections) would be timed as near-empty scans. noop
-                # materializes every output column.
-                df.write.format("noop").mode("overwrite").save()
-                dt = time.perf_counter() - t0
-                best = dt if best is None else min(best, dt)
-                # Drop this query's localCheckpoint blocks NOW: they are
-                # only unpersisted after Python GC releases the DataFrame
-                # and the JVM ContextCleaner notices — left alone they
-                # accumulate in the local block manager across queries and
-                # turn into full-GC stalls attributed to whatever query
-                # runs later.
-                del df
-                gc.collect()
-        except Exception as e:  # one query must not lose the whole run's
-            # timings (the r11 sf10 first attempt died wholesale on a
-            # d_dup_clusters executor OOM); record the failure visibly
-            # and move on — though after an executor-killing OOM the
-            # remaining queries may fail fast with session errors.
-            errors[name] = f"{type(e).__name__}: {str(e)[:200]}"
-            print(f"# bench query {name} failed: {errors[name]}",
-                  file=sys.stderr)
-            if best is not None:
-                # A later repeat failed after an earlier one succeeded:
-                # keep the measured best (min-of-<repeat so far>) rather
-                # than discarding a valid timing; the errors entry stays
-                # so the partial provenance is visible.
-                timings[name] = round(best, 4)
-            continue
-        # Release the finished query's JVM-side shuffle files NOW
-        # (untimed, between queries): the ContextCleaner acts on JVM
-        # GC, and waiting for the periodic sweep lets dead shuffle
-        # files pile up on the tmpfs scratch dir across a 68-query
-        # run — the sf10 OOM story in session.py. System.gc on a 24g
-        # heap costs well under a second here.
-        try:
-            spark.sparkContext._jvm.System.gc()
-        except Exception:
-            pass
-        timings[name] = round(best, 4)
+    for name in names:
+        fn = queries[name]
+        t = timed(spark, lambda: fn(spark, sf_dir), repeat, f"bench-{name}")
+        if t.error:
+            # after an executor-killing OOM the remaining queries may
+            # fail fast with session errors; each is recorded visibly
+            errors[name] = t.error
+            print(f"# bench query {name} failed: {t.error}", file=sys.stderr)
+        if t.sec is not None:
+            # a partial min-of-<repeats so far> is kept next to its error
+            timings[name] = round(t.sec, 4)
+            jobs[name] = t.jobs
     total = round(sum(timings.values()), 4)
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "").replace(
         "skew", "") or 0.1)
@@ -247,6 +284,7 @@ def run_bench(spark, queries, sf_dir: str) -> dict:
         "unit": "sec",
         "queries": timings,
         "sf": sf,
+        "jobs": jobs,
         **({"cold_unwarmed": cold} if cold else {}),
         **({"skipped": sorted(skip)} if skip else {}),
         **({"errors": errors} if errors else {}),

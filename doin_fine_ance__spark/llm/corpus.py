@@ -318,6 +318,10 @@ def duplicate_spans(
     min_docs: int = 2,
 ) -> DataFrame:
     """Sliding k-token duplicated-span statistics per document.
+    Precondition: ``id_col`` is unique per row. With a repeated id the
+    per-row ``n_windows`` joins a per-id aggregate, so each such row's
+    ``n_dup_windows`` sums the duplicated windows of every row of the
+    id and ``dup_ratio`` can exceed 1.0; deduplicate ids first.
 
     The overlapping-window counterpart of :func:`segment_dedup`: Lee
     et al. 2022 ("Deduplicating Training Data Makes Language Models
@@ -410,6 +414,10 @@ def remove_duplicate_spans(
     emit_text: bool = False,
 ) -> DataFrame:
     """Span surgery: cut every cross-document duplicated k-token span.
+    Precondition: ``id_col`` is unique per row. With a repeated id,
+    every row sharing it is cut at the duplicated positions of all of
+    them, and a span shared only by those rows counts as one document's
+    and is kept; deduplicate ids first.
 
     The removal half of Lee et al. 2022 (:func:`duplicate_spans` is
     the measurement half): a token position is REMOVED when any

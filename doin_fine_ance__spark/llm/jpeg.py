@@ -42,6 +42,7 @@ bit-exact stability, not PNG-style identity.
 
 from __future__ import annotations
 
+import functools
 import struct
 
 # --------------------------------------------------------------- tables
@@ -136,6 +137,7 @@ AC_CHROMA_VALS = [
 ]
 
 
+@functools.cache
 def _dct_matrix():
     """The 8×8 orthonormal DCT-II basis C: DCT = C @ X @ C.T,
     IDCT = C.T @ Y @ C (T.81 A.3.3 in exact float64 matrix form)."""
@@ -144,6 +146,7 @@ def _dct_matrix():
     k = np.arange(8)
     C = np.cos((2 * k[None, :] + 1) * k[:, None] * np.pi / 16) / 2.0
     C[0, :] /= np.sqrt(2)
+    C.flags.writeable = False  # cached: every caller shares this array
     return C
 
 
@@ -176,80 +179,60 @@ def _canonical_codes(bits, vals):
 
 # The standard tables and the DCT basis are fixed constants — building
 # them per image dominated small-image encode/decode cost (measured
-# ~2.4 ms/image before memoization on the mm_jpeg_roundtrip path).
-_STD_ENC_TABLES = None
-_DEC_TABLE_CACHE: dict = {}
-_DCT_C = None
+# ~2.4 ms/image before memoization on the mm_jpeg_roundtrip path), so
+# each builder below is cached per process.
 
 
+@functools.cache
 def _std_enc_tables():
-    global _STD_ENC_TABLES
-    if _STD_ENC_TABLES is None:
-        _STD_ENC_TABLES = (
-            [_canonical_codes(DC_LUMA_BITS, DC_LUMA_VALS),
-             _canonical_codes(DC_CHROMA_BITS, DC_CHROMA_VALS)],
-            [_canonical_codes(AC_LUMA_BITS, AC_LUMA_VALS),
-             _canonical_codes(AC_CHROMA_BITS, AC_CHROMA_VALS)],
-        )
-    return _STD_ENC_TABLES
+    return (
+        [_canonical_codes(DC_LUMA_BITS, DC_LUMA_VALS),
+         _canonical_codes(DC_CHROMA_BITS, DC_CHROMA_VALS)],
+        [_canonical_codes(AC_LUMA_BITS, AC_LUMA_VALS),
+         _canonical_codes(AC_CHROMA_BITS, AC_CHROMA_VALS)],
+    )
 
 
-def _dct_c():
-    global _DCT_C
-    if _DCT_C is None:
-        _DCT_C = _dct_matrix()
-    return _DCT_C
-
-
-_QT_CACHE: dict = {}
-_DHT_SEG_CACHE: dict = {}
-_ZZ = None
-
-
+@functools.cache
 def _zz_index():
-    global _ZZ
-    if _ZZ is None:
-        import numpy as np
+    import numpy as np
 
-        _ZZ = np.asarray(ZIGZAG)
-    return _ZZ
+    zz = np.asarray(ZIGZAG)
+    zz.flags.writeable = False
+    return zz
 
 
+@functools.cache
 def _quality_tables(quality: int):
     """quality → (scaled [luma, chroma] tables, their DQT segment bytes)
-    — memoized: tiny-image encode paid these per call (the DQT bytes
+    — cached: tiny-image encode paid these per call (the DQT bytes
     alone were 128 int() conversions per image on the MJPEG mux path)."""
-    hit = _QT_CACHE.get(quality)
-    if hit is None:
-        qt = [_quality_scaled(QUANT_LUMA, quality),
-              _quality_scaled(QUANT_CHROMA, quality)]
-        for t in qt:
-            t.flags.writeable = False
-        segs = []
-        for t in range(2):
-            segs.append(
-                b"\xff\xdb" + struct.pack(">H", 67) + bytes([t])
-                + bytes(int(qt[t][z]) for z in ZIGZAG)
-            )
-        hit = _QT_CACHE[quality] = (qt, segs)
-    return hit
+    qt = [_quality_scaled(QUANT_LUMA, quality),
+          _quality_scaled(QUANT_CHROMA, quality)]
+    for t in qt:
+        t.flags.writeable = False
+    segs = []
+    for t in range(2):
+        segs.append(
+            b"\xff\xdb" + struct.pack(">H", 67) + bytes([t])
+            + bytes(int(qt[t][z]) for z in ZIGZAG)
+        )
+    return qt, segs
 
 
+@functools.cache
 def _std_dht_segments(gray: bool) -> bytes:
-    """The Annex-K DHT marker segments (constant bytes) — memoized."""
-    seg = _DHT_SEG_CACHE.get(gray)
-    if seg is None:
-        tables = [(0x00, DC_LUMA_BITS, DC_LUMA_VALS),
-                  (0x10, AC_LUMA_BITS, AC_LUMA_VALS)]
-        if not gray:
-            tables += [(0x01, DC_CHROMA_BITS, DC_CHROMA_VALS),
-                       (0x11, AC_CHROMA_BITS, AC_CHROMA_VALS)]
-        out = bytearray()
-        for tc, bits, vals in tables:
-            out += b"\xff\xc4" + struct.pack(">H", 19 + len(vals)) + bytes([tc])
-            out += bytes(bits) + bytes(vals)
-        seg = _DHT_SEG_CACHE[gray] = bytes(out)
-    return seg
+    """The Annex-K DHT marker segments (constant bytes)."""
+    tables = [(0x00, DC_LUMA_BITS, DC_LUMA_VALS),
+              (0x10, AC_LUMA_BITS, AC_LUMA_VALS)]
+    if not gray:
+        tables += [(0x01, DC_CHROMA_BITS, DC_CHROMA_VALS),
+                   (0x11, AC_CHROMA_BITS, AC_CHROMA_VALS)]
+    out = bytearray()
+    for tc, bits, vals in tables:
+        out += b"\xff\xc4" + struct.pack(">H", 19 + len(vals)) + bytes([tc])
+        out += bytes(bits) + bytes(vals)
+    return bytes(out)
 
 
 class _BitWriter:
@@ -403,7 +386,7 @@ def _encode_preamble(arr, quality: int, subsampling: str):
     samp = [(2, 2), (1, 1), (1, 1)] if sub else [(1, 1)] * len(planes)
 
     qt = _quality_tables(quality)[0]
-    C = _dct_c()
+    C = _dct_matrix()
     zz = _zz_index()
 
     hmax = max(s[0] for s in samp)
@@ -903,6 +886,14 @@ class _BitReader:
         return (self.acc >> (self.nbits - 16)) & 0xFFFF
 
 
+# Decode tables are cached by their (BITS, HUFFVAL) bytes. Streams with
+# the standard tables share one entry, but an encoder's optimized tables
+# differ per image, so the cache is bounded: an entry is two 64 KiB
+# LUTs, and 64 of them cap one Python worker at 8 MiB.
+DECODE_TABLES_CACHED = 64
+
+
+@functools.lru_cache(maxsize=DECODE_TABLES_CACHED)
 def _decode_tables(bits, vals):
     """(BITS, HUFFVAL) → 16-bit-peek LUT ``(lut_len, lut_sym)``.
 
@@ -997,11 +988,7 @@ def decode_jpeg(data: bytes):
                 bits = tuple(seg[i + 1 : i + 17])
                 n = sum(bits)
                 vals = tuple(seg[i + 17 : i + 17 + n])
-                key = (bits, vals)
-                tab = _DEC_TABLE_CACHE.get(key)
-                if tab is None:
-                    tab = _DEC_TABLE_CACHE[key] = _decode_tables(bits, vals)
-                huff[(tc, th)] = tab
+                huff[(tc, th)] = _decode_tables(bits, vals)
                 i += 17 + n
         elif marker in (0xC0, 0xC1, 0xC2):  # SOF0/1 baseline, SOF2 progressive
             prec, h, w, nc = struct.unpack_from(">BHHB", seg, 0)
@@ -1149,7 +1136,7 @@ def _idct_planes(comps, qt) -> None:
     pixel-equality tests)."""
     import numpy as np
 
-    C = _dct_c()
+    C = _dct_matrix()
     zz = _zz_index()
     for c in comps:
         q = qt.get(c["tq"])

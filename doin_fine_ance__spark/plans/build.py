@@ -58,6 +58,10 @@ class Warehouse:
     def read(self, schema: str, table: str) -> DataFrame:
         return self._table(schema, table).read(self.spark)
 
+    def latest_version(self, schema: str, table: str) -> int:
+        """The table's published version, 0 before its first commit."""
+        return self._table(schema, table).latest_version()
+
     def _reregister_if_registered(self, schema: str, table: str) -> None:
         """A catalog entry for a snapshot table binds to the commit
         dirs of the version current at registration; a rebuild

@@ -76,11 +76,18 @@ class HttpError(Exception):
         self.status = status
 
 
+# the overlay's input tables, whose published versions key its cache
+_OVERLAY_INPUTS = (("analytics", "fct_trxns_with_predictions"),
+                   ("public", "user_categories"))
+
+
 class ServingApp:
     """Route table + overlay cache over a warehouse root.
 
     The overlay (marts ⟕ user overrides) is built lazily and cached
-    between requests; any write invalidates it — the same
+    between requests, keyed on the published versions of its two
+    input tables: a commit to either, from this app's writes or from
+    anywhere else, rebuilds it on the next read — the same
     read-your-writes contract the reference gets from querying
     Postgres views per request, without re-running the join chain
     when nothing changed. Both list endpoints collect their page and
@@ -102,19 +109,31 @@ class ServingApp:
         self.spark = spark
         self.wh = Warehouse(spark, warehouse_root)
         self._overlay = None
+        self._overlay_key = None
         self._lock = threading.Lock()
 
     # -- data access -------------------------------------------------
 
     def overlay(self):
+        """The cached overlay, rebuilt when either input table has
+        published a version since it was built — so a build, a predict
+        or another server process's write shows on the next read, not
+        only this app's own writes (which call :meth:`invalidate`)."""
         from .transactions import transaction_overlay
 
         with self._lock:
+            # read before the build: a commit landing mid-build leaves
+            # the key behind the data, which costs one extra rebuild
+            key = tuple(self.wh.latest_version(*t) for t in _OVERLAY_INPUTS)
+            if self._overlay is not None and key != self._overlay_key:
+                self._overlay.unpersist()
+                self._overlay = None
             if self._overlay is None:
                 self._overlay = transaction_overlay(
                     self.wh.read("analytics", "fct_trxns_with_predictions"),
                     self._user_categories(),
                 ).cache()
+                self._overlay_key = key
             return self._overlay
 
     def _user_categories(self):

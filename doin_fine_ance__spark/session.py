@@ -33,22 +33,19 @@ def default_parallelism() -> int:
 def get_spark(
     app_name: str = "doin-fine-ance-spark",
     cpus: int | None = None,
-    shuffle_partitions: int | None = None,
-    extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults.
 
-    Local mode uses ``local[cpus]``; shuffle partitions default to the
+    Local mode uses ``local[cpus]``, and shuffle partitions are the
     core count (the 200 default over-parallelizes local runs and
     under-parallelizes large clusters — on a real cluster AQE coalesces
     upward from this anyway).
     """
     cpus = cpus or default_parallelism()
-    shuffle = shuffle_partitions or cpus
-    builder = (
+    spark = (
         SparkSession.builder.appName(app_name)
         .master(os.environ.get("SPARK_MASTER", f"local[{cpus}]"))
-        .config("spark.sql.shuffle.partitions", str(shuffle))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -85,10 +82,7 @@ def get_spark(
         # bench before the kernel OOM-killed the JVM. A tight periodic
         # GC keeps scratch bounded by the WORKING set, not the session
         # history; the minor-GC cost is noise next to any real query.
-        .config(
-            "spark.cleaner.periodicGC.interval",
-            os.environ.get("SPARK_GRAFT_PERIODIC_GC", "2min"),
-        )
+        .config("spark.cleaner.periodicGC.interval", "2min")
         # One BLAS thread per Python worker (see package __init__ —
         # each worker is one task slot; self-threading BLAS pools
         # oversubscribe and spin). executorEnv carries the pin to
@@ -99,10 +93,8 @@ def get_spark(
                 os.environ.get("OMP_NUM_THREADS", "1"))
         .config("spark.executorEnv.MKL_NUM_THREADS",
                 os.environ.get("MKL_NUM_THREADS", "1"))
+        .getOrCreate()
     )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
     ensure_compat(spark)
     return spark
 

@@ -184,6 +184,39 @@ def test_list_routes_job_counts(spark, tmp_path):
     assert counts == {0: 2, 3: 2, 10_000: 2}
 
 
+def test_overlay_follows_commits_made_outside_the_app(spark, tmp_path):
+    """A commit that never reaches the app's own write handlers (a
+    build or predict rewriting the marts, another server process's
+    override write) shows on the app's next read, as it does on a
+    fresh app's."""
+    from pyspark.sql import functions as F
+
+    from doin_fine_ance__spark.serving.http_api import ServingApp
+
+    root = str(tmp_path / "wh")
+    FX.write_warehouse_inputs(spark, root)
+    w = Warehouse(spark, root)
+    build(w, full_refresh=True)
+    app = ServingApp(spark, root)
+    first = app.route("GET", "/api/transactions", {"limit": ["100"]}, {})
+    total = first["total_count"]
+    dropped = first["transactions"][0]["transaction_id"]
+
+    marts = w.read("analytics", "fct_trxns_with_predictions")
+    w.write(marts.filter(F.col("transaction_id") != dropped),
+            "analytics", "fct_trxns_with_predictions")
+    fresh = ServingApp(spark, root).route("GET", "/api/transactions", {}, {})
+    assert fresh["total_count"] == total - 1
+    assert app.route("GET", "/api/transactions", {}, {})["total_count"] == total - 1
+
+    target = first["transactions"][1]["transaction_id"]
+    ServingApp(spark, root).route(
+        "POST", f"/api/transactions/{target}/categorize", {},
+        {"master_category": "Rent"})
+    got = app.route("GET", f"/api/transactions/{target}", {}, {})
+    assert (got["master_category"], got["validated"]) == ("Rent", True)
+
+
 def test_serving_reads_survive_concurrent_writes(spark, tmp_path):
     """One thread reads lists through the route table while another
     posts override writes: every read sees one whole version of the

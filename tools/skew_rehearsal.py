@@ -32,24 +32,20 @@ Usage:
 from __future__ import annotations
 
 import argparse
-import gc
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import timed  # noqa: E402
 
-def _timed(thunk, repeat: int) -> float:
-    best = None
-    for _ in range(repeat):
-        t0 = time.perf_counter()
-        thunk()
-        dt = time.perf_counter() - t0
-        best = dt if best is None else min(best, dt)
-        gc.collect()
-    return round(best, 3)
+
+def _timed(spark, build, repeat: int, label: str) -> float:
+    t = timed(spark, build, repeat, label)
+    if t.error:
+        raise RuntimeError(f"{label}: {t.error}")
+    return round(t.sec, 3)
 
 
 def hot_join_seconds(spark, sf_dir: str, mode: str, repeat: int) -> float:
@@ -71,10 +67,10 @@ def hot_join_seconds(spark, sf_dir: str, mode: str, repeat: int) -> float:
             )
         else:  # broadcast
             j = li.join(F.broadcast(sup), li["l_suppkey"] == sup["s_suppkey"])
-        (j.groupBy("s_name")
-         .agg(F.sum(F.col("l_quantity") * F.col("l_extendedprice")).alias("v"),
-              F.count("*").alias("n"))
-         .write.format("noop").mode("overwrite").save())
+        return j.groupBy("s_name").agg(
+            F.sum(F.col("l_quantity") * F.col("l_extendedprice")).alias("v"),
+            F.count("*").alias("n"),
+        )
 
     conf = spark.conf
     saved = {
@@ -92,8 +88,8 @@ def hot_join_seconds(spark, sf_dir: str, mode: str, repeat: int) -> float:
             conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         if mode == "plain":
             conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-        run()  # warm plan/codegen for this shape once
-        return _timed(run, repeat)
+        run().write.format("noop").mode("overwrite").save()  # warm this shape once
+        return _timed(spark, run, repeat, f"skew-join-{mode}")
     finally:
         for k, v in saved.items():
             conf.set(k, v)
@@ -113,12 +109,12 @@ def lsh_dedup_stats(spark, sf_dir: str, repeat: int) -> dict:
     n_cands = lsh_candidate_pairs(sigs, bands=16).count()
 
     def run():
-        minhash_near_dups(
+        return minhash_near_dups(
             load_table(spark, sf_dir, "documents", ["doc_id", "text"]),
             threshold=0.5,
-        ).write.format("noop").mode("overwrite").save()
+        )
 
-    sec = _timed(run, repeat)
+    sec = _timed(spark, run, repeat, "skew-lsh-dedup")
     n_pairs = (
         minhash_near_dups(docs, threshold=0.5).count()
     )

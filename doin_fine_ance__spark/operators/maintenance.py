@@ -182,8 +182,7 @@ def compact_table(
     replacement for the reference's btree indexes, init_db.py:79-130).
 
     Raises ``ValueError`` on a root with no manifest (an external input
-    such as the landing zone, which keeps taking plain appends a
-    manifest would hide) and on a partitioned version (only
+    not yet adopted by a commit) and on a partitioned version (only
     ``commit_overwrite`` writes those). Returns the committed version,
     or None when nothing was committed.
     """

@@ -17,11 +17,12 @@ log. This module is the smallest honest version of that log:
   that lands mid-read changes nothing the reader can observe. Old
   versions stay readable (time travel) until retention deletes them.
 
-A root that holds plain parquet and no manifest (an external input such
-as the ``public`` loads) reads as plain parquet. The first commit to
-one adopts it: the plain files are the base of that commit, which
-writes ``data/<uuid>`` and publishes v1, and retention deletes the
-plain files once v1 is old enough, like any superseded version.
+A root that holds plain parquet and no manifest (an external input
+loaded into ``public`` by something other than the engine, such as the
+seed tables) reads as plain parquet. The first commit to one adopts
+it: the plain files are the base of that commit, which writes
+``data/<uuid>`` and publishes v1, and retention deletes the plain
+files once v1 is old enough, like any superseded version.
 
 Commits hold ``operators.upsert.table_write_lock``: single writer,
 many snapshot readers. At 100 TB you would use Delta/Iceberg outright;

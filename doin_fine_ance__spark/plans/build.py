@@ -38,8 +38,10 @@ class Warehouse:
     the whole query. A serving read concurrent with a build or an
     override write therefore returns one complete version, never a
     half-written one. Tables without a manifest (externally loaded
-    ``public`` inputs, the landing zone) read as plain parquet, and the
-    first commit to one adopts it.
+    ``public`` inputs such as the seed tables) read as plain parquet,
+    and the first commit to one adopts it. The SimpleFIN landing table
+    is a manifest table: ``sources.simplefin.append_to_landing``
+    commits each ingest as an append version.
     """
 
     def __init__(self, spark: SparkSession, root: str):

@@ -15,10 +15,24 @@ window's exchange, then the result stage); the HTTP layer only
 translates query strings and JSON bodies. Swapping in FastAPI/uvicorn
 is a handler rename, not a redesign.
 
+Reads recompute only when an input moved. ``ServingApp`` keeps one
+memo, keyed on the published versions of each value's input tables:
+the cached overlay (marts ⟕ overrides), the DataFrames of the marts
+and the overrides table, and the collected rows of every route that
+reads no user-written table — predicted categories
+(``analytics.fct_trxns_with_predictions``), validated categories
+(``analytics.fct_validated_trxns``), the category catalog
+(``public.categories``), connection health (``public.simplefin``),
+metrics history and training status (``analytics.model_registry``).
+Such a route runs no Spark job until one of its tables publishes a new
+version. A table not yet adopted as a manifest table (plain parquet,
+or no table at all) keys as version 0, so a plain rewrite of it is not
+seen until its first commit.
+
 Routes (mirroring the reference paths):
 
   GET  /api/transactions                      list + total_count
-  GET  /api/transactions/categories/list      distinct predicted cats
+  GET  /api/transactions/categories/list      distinct predicted cats (memoized)
   GET  /api/transactions/{id}                 single transaction
   POST /api/transactions/{id}/categorize      override upsert
   PUT  /api/transactions/{id}/validate        validated flag
@@ -26,22 +40,23 @@ Routes (mirroring the reference paths):
   PUT  /api/transactions/{id}/exclude-from-forecast
   POST /api/transactions/bulk-validate        one keyed merge
   GET  /api/validated                         validated list + count
-  GET  /api/validated/categories/list         distinct validated cats
-  GET  /api/categories                        active catalog names
-  GET  /api/control-center/connection-health  health rollup
-  GET  /api/model-metrics/metrics/history     registry metrics view
-  GET  /api/model-metrics/training-status     latest registry row
+  GET  /api/validated/categories/list         distinct validated cats (memoized)
+  GET  /api/categories                        active catalog names (memoized)
+  GET  /api/control-center/connection-health  health rollup (memoized)
+  GET  /api/model-metrics/metrics/history     registry metrics view (memoized)
+  GET  /api/model-metrics/training-status     latest registry row (memoized)
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import re
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def _jsonable(v):
@@ -76,30 +91,69 @@ class HttpError(Exception):
         self.status = status
 
 
-# the overlay's input tables, whose published versions key its cache
-_OVERLAY_INPUTS = (("analytics", "fct_trxns_with_predictions"),
-                   ("public", "user_categories"))
+_MART = ("analytics", "fct_trxns_with_predictions")
+_VALIDATED = ("analytics", "fct_validated_trxns")
+_OVERRIDES = ("public", "user_categories")
+
+
+def _memoized(*inputs: tuple[str, str]):
+    """Serve the decorated no-argument method's value from the app's
+    memo until one of ``inputs`` (``(schema, table)`` pairs) publishes
+    a new version; the memo entry is named after the method."""
+
+    def wrap(fn):
+        @functools.wraps(fn)
+        def memoized(self):
+            return self._memo_get(fn.__name__, inputs, lambda: fn(self))
+
+        return memoized
+
+    return wrap
+
+
+def _release(value) -> None:
+    if isinstance(value, DataFrame) and value.is_cached:
+        value.unpersist()
 
 
 class ServingApp:
-    """Route table + overlay cache over a warehouse root.
+    """Route table + version-keyed memo over a warehouse root.
 
-    The overlay (marts ⟕ user overrides) is built lazily and cached
-    between requests, keyed on the published versions of its two
-    input tables: a commit to either, from this app's writes or from
-    anywhere else, rebuilds it on the next read — the same
-    read-your-writes contract the reference gets from querying
-    Postgres views per request, without re-running the join chain
-    when nothing changed. Both list endpoints collect their page and
-    total in one action (``operators.pagination.collect_page_with_total``),
-    where the reference runs COUNT(*) and the page as two queries. That
-    action is 2 Spark jobs, the window's exchange and the result stage;
-    the validated list adds the reads of its mart and overrides.
+    The memo maps a name to (the ``latest_version`` of each of its
+    input tables, the value), at most one value per name. The key is
+    read before the value is computed, so a commit landing mid-compute
+    leaves the key behind the value and costs one extra recompute,
+    never a stale read. A changed key recomputes the value and releases
+    the old one (a cached DataFrame is unpersisted). A commit from
+    anywhere — this app's writes, a build, a predict, another server
+    process — therefore shows on the next read: the read-your-writes
+    contract the reference gets from querying Postgres views per
+    request, without re-running the join chain when nothing changed.
+    A table not yet adopted as a manifest table keys as version 0.
+
+    Memo entries: the cached overlay (marts ⟕ user overrides, keyed on
+    both); the DataFrames of ``fct_trxns_with_predictions``,
+    ``fct_validated_trxns`` and ``user_categories``, each on its own
+    version, so a request plans no file listing of a version it has
+    seen; and the collected rows of the routes that read no
+    user-written table (predicted and validated categories, the
+    category catalog, connection health, metrics history, training
+    status), keyed by route name, never by request parameters.
+    Predicted categories read the mart, not the overlay: the overlay is
+    a left join on a unique key, so its predicted categories are the
+    mart's. Writes through this app call :meth:`invalidate` to release
+    the overlay at once.
+
+    Both list endpoints collect their page and total in one action
+    (``operators.pagination.collect_page_with_total``), where the
+    reference runs COUNT(*) and the page as two queries. That action
+    is 2 Spark jobs, the window's exchange and the result stage; the
+    validated list adds the join with the overrides table.
 
     Every table is read through the warehouse, which pins one published
     version per read: an override write commits a new version of
     ``public.user_categories``, and the version a concurrent read (or
-    the cached overlay) holds stays on disk until retention expires it,
+    a memoized value) holds stays on disk until retention expires it,
     so reads and writes from concurrent requests never tear each other.
     """
 
@@ -108,47 +162,59 @@ class ServingApp:
 
         self.spark = spark
         self.wh = Warehouse(spark, warehouse_root)
-        self._overlay = None
-        self._overlay_key = None
+        self._memo: dict[str, tuple[tuple[int, ...], object]] = {}
         self._lock = threading.Lock()
 
     # -- data access -------------------------------------------------
 
+    def _memo_get(self, name: str, inputs, compute):
+        key = tuple(self.wh.latest_version(*t) for t in inputs)
+        entry = self._memo.get(name)
+        if entry is not None and entry[0] == key:
+            return entry[1]
+        value = compute()
+        with self._lock:
+            old = self._memo.get(name)
+            self._memo[name] = (key, value)
+        if old is not None:
+            _release(old[1])
+        return value
+
+    @property
+    def _overlay(self):
+        """The memoized overlay, None before the first read and after
+        :meth:`invalidate` (its key is checked only by :meth:`overlay`)."""
+        entry = self._memo.get("overlay")
+        return entry and entry[1]
+
+    @_memoized(_MART, _OVERRIDES)
     def overlay(self):
         """The cached overlay, rebuilt when either input table has
-        published a version since it was built — so a build, a predict
-        or another server process's write shows on the next read, not
-        only this app's own writes (which call :meth:`invalidate`)."""
+        published a version since it was built."""
         from .transactions import transaction_overlay
 
-        with self._lock:
-            # read before the build: a commit landing mid-build leaves
-            # the key behind the data, which costs one extra rebuild
-            key = tuple(self.wh.latest_version(*t) for t in _OVERLAY_INPUTS)
-            if self._overlay is not None and key != self._overlay_key:
-                self._overlay.unpersist()
-                self._overlay = None
-            if self._overlay is None:
-                self._overlay = transaction_overlay(
-                    self.wh.read("analytics", "fct_trxns_with_predictions"),
-                    self._user_categories(),
-                ).cache()
-                self._overlay_key = key
-            return self._overlay
+        return transaction_overlay(self._read(*_MART), self._user_categories()).cache()
+
+    def _read(self, schema: str, table: str):
+        """The table's DataFrame, memoized on its version."""
+        return self._memo_get(f"{schema}.{table}", [(schema, table)],
+                              lambda: self.wh.read(schema, table))
 
     def _user_categories(self):
         from ..schemas import USER_CATEGORIES
         from ..session import local_frame
 
-        if self.wh.exists("public", "user_categories"):
-            return self.wh.read("public", "user_categories")
+        if self.wh.exists(*_OVERRIDES):
+            return self._read(*_OVERRIDES)
         return local_frame(self.spark, [], USER_CATEGORIES)
 
     def invalidate(self):
+        """Release the overlay after this app's own override write,
+        instead of at the next read's key check."""
         with self._lock:
-            if self._overlay is not None:
-                self._overlay.unpersist()
-            self._overlay = None
+            entry = self._memo.pop("overlay", None)
+        if entry is not None:
+            _release(entry[1])
 
     # -- handlers ----------------------------------------------------
 
@@ -175,11 +241,12 @@ class ServingApp:
             raise HttpError(404, f"transaction {txn_id} not found")
         return rows[0]
 
+    @_memoized(_MART)
     def predicted_categories(self) -> list:
         from .transactions import distinct_predicted_categories
 
         return [r["predicted_master_category"]
-                for r in _rows(distinct_predicted_categories(self.overlay()))]
+                for r in _rows(distinct_predicted_categories(self._read(*_MART)))]
 
     def categorize(self, txn_id: str, body: dict) -> dict:
         from .transactions import categorize_transaction
@@ -188,7 +255,7 @@ class ServingApp:
             raise HttpError(400, "master_category is required")
         categorize_transaction(
             self.spark,
-            self.wh.path("public", "user_categories"),
+            self.wh.path(*_OVERRIDES),
             txn_id,
             master_category=body["master_category"],
             source_category=body.get("source_category"),
@@ -218,7 +285,7 @@ class ServingApp:
         )
         categorize_transaction(
             self.spark,
-            self.wh.path("public", "user_categories"),
+            self.wh.path(*_OVERRIDES),
             txn_id,
             master_category=category,
             **{field: body[required_key]},
@@ -239,7 +306,7 @@ class ServingApp:
                 raise HttpError(400, "each assignment needs transaction_id and master_category")
             a.setdefault("validated", True)
         n = bulk_categorize(
-            self.spark, self.wh.path("public", "user_categories"), assignments,
+            self.spark, self.wh.path(*_OVERRIDES), assignments,
             updated_by=body.get("updated_by", "api"),
         )
         self.invalidate()
@@ -249,7 +316,7 @@ class ServingApp:
         from .validated import list_validated_transactions
 
         return _page(list_validated_transactions(
-            self.wh.read("analytics", "fct_validated_trxns"),
+            self._read(*_VALIDATED),
             self._user_categories(),
             limit=int(q.get("limit", ["100"])[0]),
             offset=int(q.get("offset", ["0"])[0]),
@@ -260,13 +327,15 @@ class ServingApp:
             description_search=q.get("search", [None])[0],
         ))
 
+    @_memoized(_VALIDATED)
     def validated_categories(self) -> list:
         from .validated import distinct_validated_categories
 
         return [r["master_category"] for r in _rows(
-            distinct_validated_categories(self.wh.read("analytics", "fct_validated_trxns"))
+            distinct_validated_categories(self._read(*_VALIDATED))
         )]
 
+    @_memoized(("public", "categories"))
     def categories(self) -> list:
         from .categories import ensure_default_categories, get_active_category_names
 
@@ -276,11 +345,13 @@ class ServingApp:
         )
         return get_active_category_names(ensure_default_categories(self.spark, catalog))
 
+    @_memoized(("public", "simplefin"))
     def connection_health(self) -> list:
         from .control_center import connection_health
 
         return _rows(connection_health(self.wh.read("public", "simplefin")))
 
+    @_memoized(("analytics", "model_registry"))
     def metrics_history(self) -> dict:
         from ..ml.registry import registry_metrics_view
 
@@ -289,6 +360,7 @@ class ServingApp:
         view = registry_metrics_view(self.wh.read("analytics", "model_registry"))
         return {"history": _rows(view.orderBy("training_timestamp"))}
 
+    @_memoized(("analytics", "model_registry"))
     def training_status(self) -> dict:
         if not self.wh.exists("analytics", "model_registry"):
             return {"status": "never_trained", "model_version": None}

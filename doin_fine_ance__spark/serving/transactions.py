@@ -168,11 +168,14 @@ def bulk_categorize(
     return len(rows)
 
 
-def distinct_predicted_categories(overlay: DataFrame) -> DataFrame:
+def distinct_predicted_categories(transactions: DataFrame) -> DataFrame:
     """DISTINCT predicted categories excluding the reserved UNCERTAIN
-    (category_service.py:25-31 / validated_transactions.py:179-188)."""
+    (category_service.py:25-31 / validated_transactions.py:179-188).
+    ``transactions`` is the predictions mart or the overlay, which
+    left-joins overrides to it on a unique key and so holds the same
+    predicted categories."""
     return (
-        overlay.filter(
+        transactions.filter(
             col("predicted_master_category").isNotNull()
             & (col("predicted_master_category") != "UNCERTAIN")
         )

@@ -23,7 +23,9 @@ from dataclasses import dataclass, field
 from decimal import Decimal
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
+from ..operators.snapshot import SnapshotTable
 from ..schemas import RAW_BALANCES, RAW_SIMPLEFIN
 from ..session import local_frame
 
@@ -265,6 +267,22 @@ def distributed_extract(
 
 
 def append_to_landing(df: DataFrame, path: str) -> None:
-    """S3: raw append into the landing zone (repo.py:29-47's to_sql append),
-    partitioned by import_date for time-based pruning and retention."""
-    df.write.mode("append").partitionBy("import_date").parquet(path)
+    """S3: raw append into the landing zone (repo.py:29-47's to_sql
+    append), committed as one version of the landing manifest table
+    (``operators/snapshot.py``).
+
+    A read pins one published version, so it never sees a half-written
+    append, and it reads with the recorded schema (no inference job).
+    A daily ingest's rows share one ``import_date``, so each commit's
+    files hold a single date, and their parquet min/max statistics let
+    a filter on ``import_date`` skip them. A landing root written
+    before as plain parquet partitioned by ``import_date`` is adopted
+    first: its rows are committed as v1, with the date that partition
+    inference gives ``import_date`` cast back to ``RAW_SIMPLEFIN``'s
+    string, so old and new files agree on one schema.
+    """
+    table = SnapshotTable(path)
+    if table.latest_version() == 0 and table.exists():
+        table.commit_rewrite(df.sparkSession, lambda legacy: legacy.select(
+            *[F.col(f.name).cast(f.dataType) for f in RAW_SIMPLEFIN.fields]))
+    table.commit_append(df)

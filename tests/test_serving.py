@@ -217,6 +217,92 @@ def test_overlay_follows_commits_made_outside_the_app(spark, tmp_path):
     assert (got["master_category"], got["validated"]) == ("Rent", True)
 
 
+@pytest.fixture(scope="module")
+def built_root(spark, tmp_path_factory):
+    """A built fixture warehouse that tests copy before writing to it
+    (manifests record paths relative to the table root)."""
+    root = str(tmp_path_factory.mktemp("built") / "wh")
+    FX.write_warehouse_inputs(spark, root)
+    build(Warehouse(spark, root), full_refresh=True)
+    return root
+
+
+def _app_over_copy(spark, built_root, tmp_path):
+    import shutil
+
+    from doin_fine_ance__spark.serving.http_api import ServingApp
+
+    root = str(tmp_path / "wh")
+    shutil.copytree(built_root, root)
+    return ServingApp(spark, root)
+
+
+HEALTH = "/api/control-center/connection-health"
+PREDICTED = "/api/transactions/categories/list"
+
+
+def test_memoized_routes_run_no_jobs_until_an_input_moves(spark, built_root, tmp_path):
+    """Connection health and predicted categories read no user-written
+    table: a repeated call returns the memoized rows without a Spark
+    job, and an override write (which moves only the overrides table)
+    leaves predicted categories memoized."""
+    app = _app_over_copy(spark, built_root, tmp_path)
+    health = app.route("GET", HEALTH, {}, {})
+    predicted = app.route("GET", PREDICTED, {}, {})
+    assert health and predicted
+    assert _jobs(spark, "health_again", lambda: app.route("GET", HEALTH, {}, {})) == 0
+    assert _jobs(spark, "predicted_again", lambda: app.route("GET", PREDICTED, {}, {})) == 0
+    tid = app.route("GET", "/api/transactions", {}, {})["transactions"][0]["transaction_id"]
+    app.route("POST", f"/api/transactions/{tid}/categorize", {}, {"master_category": "Rent"})
+    after_write = []
+    assert _jobs(spark, "predicted_after_write", lambda: after_write.append(
+        app.route("GET", PREDICTED, {}, {}))) == 0
+    assert after_write == [predicted]
+
+
+def test_health_follows_a_landing_append(spark, built_root, tmp_path):
+    """An ingest commits a landing version, so the same app's next
+    health call shows the new account."""
+    from doin_fine_ance__spark.schemas import RAW_SIMPLEFIN
+    from doin_fine_ance__spark.session import local_frame
+    from doin_fine_ance__spark.sources.simplefin import append_to_landing
+
+    app = _app_over_copy(spark, built_root, tmp_path)
+    before = app.route("GET", HEALTH, {}, {})
+    assert "New Card Co" not in {r["institution_name"] for r in before}
+    row = ("TRN-900", "ACT-NEW", "Rewards Card", "card.example", "New Card Co", None,
+           1709200000, "2024-02-29T00:00:00", 1709200000, "2024-02-29", "NEW CARD ROW",
+           False, "2024-03-01T06:00:00", "2024-03-01", None)
+    append_to_landing(local_frame(spark, [row], RAW_SIMPLEFIN),
+                      app.wh.path("public", "simplefin"))
+    after = app.route("GET", HEALTH, {}, {})
+    assert len(after) == len(before) + 1
+    new = [r for r in after if r["institution_name"] == "New Card Co"]
+    assert [(r["account_name"], r["transaction_count"]) for r in new] == [("Rewards Card", 1)]
+
+
+def test_predicted_categories_follow_a_mart_commit(spark, built_root, tmp_path):
+    """A build or predict commits the marts outside the app; the same
+    app's next categories call shows a new predicted category, as a
+    fresh app's does."""
+    from pyspark.sql import functions as F
+
+    from doin_fine_ance__spark.serving.http_api import ServingApp
+
+    app = _app_over_copy(spark, built_root, tmp_path)
+    before = app.route("GET", PREDICTED, {}, {})
+    assert "Pets" not in before
+    marts = app.wh.read("analytics", "fct_trxns_with_predictions")
+    first = marts.orderBy("transaction_id").first()["transaction_id"]
+    app.wh.write(marts.withColumn("predicted_master_category", F.when(
+        F.col("transaction_id") == first, F.lit("Pets")
+    ).otherwise(F.col("predicted_master_category"))),
+        "analytics", "fct_trxns_with_predictions")
+    fresh = ServingApp(spark, app.wh.root).route("GET", PREDICTED, {}, {})
+    assert "Pets" in fresh
+    assert app.route("GET", PREDICTED, {}, {}) == fresh
+
+
 def test_serving_reads_survive_concurrent_writes(spark, tmp_path):
     """One thread reads lists through the route table while another
     posts override writes: every read sees one whole version of the

@@ -174,14 +174,47 @@ def test_extract_balances_only(spark):
     assert rows["ACT-1"].import_date == NOW.date().isoformat()
 
 
-def test_append_to_landing_partitioned(spark, tmp_path):
+def test_append_to_landing_commits_versions(spark, tmp_path):
+    from doin_fine_ance__spark.operators.snapshot import SnapshotTable
+
     df = extract_simplefin(spark, lambda s, e: _payload(1), now=NOW)
     path = str(tmp_path / "landing")
-    append_to_landing(df, path)
-    append_to_landing(df, path)  # raw zone is append-only: duplicates land
-    back = spark.read.parquet(path)
+    table = SnapshotTable(path)
+    # raw zone is append-only: duplicates land, one version per append
+    versions = []
+    for _ in range(2):
+        append_to_landing(df, path)
+        versions.append(table.latest_version())
+    assert versions == [1, 2]
+    back = table.read(spark)
     assert back.count() == 2 * df.count()
-    # import_date partition dir exists (time-pruned reads at scale)
-    import os
+    assert back.schema == df.schema
 
-    assert any(d.startswith("import_date=") for d in os.listdir(path))
+
+def test_append_to_landing_adopts_a_hive_partitioned_root(spark, tmp_path):
+    """A landing root written as plain parquet partitioned by
+    import_date reads that column back as a date (partition inference).
+    The first append adopts it with the column cast back to the string
+    RAW_SIMPLEFIN declares, so the old and new files read together
+    under one recorded schema."""
+    from pyspark.sql.types import DateType
+
+    from doin_fine_ance__spark.operators.snapshot import SnapshotTable
+    from doin_fine_ance__spark.schemas import RAW_SIMPLEFIN
+
+    path = str(tmp_path / "landing")
+    old = extract_simplefin(spark, lambda s, e: _payload(1), now=NOW - dt.timedelta(days=1))
+    old.write.partitionBy("import_date").parquet(path)
+    assert spark.read.parquet(path).schema["import_date"].dataType == DateType()
+    new = extract_simplefin(spark, lambda s, e: _payload(2), now=NOW)
+    append_to_landing(new, path)
+
+    table = SnapshotTable(path)
+    assert table.latest_version() == 2  # v1 adopts, v2 appends
+    assert table.schema() == RAW_SIMPLEFIN
+    back = table.read(spark)
+    assert back.schema == RAW_SIMPLEFIN
+    want = sorted(map(repr, old.unionByName(new).collect()))
+    assert sorted(map(repr, back.collect())) == want
+    dates = {r.import_date for r in back.select("import_date").distinct().collect()}
+    assert dates == {(NOW - dt.timedelta(days=1)).date().isoformat(), NOW.date().isoformat()}

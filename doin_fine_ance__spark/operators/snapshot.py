@@ -21,8 +21,10 @@ A root that holds plain parquet and no manifest (an external input
 loaded into ``public`` by something other than the engine, such as the
 seed tables) reads as plain parquet. The first commit to one adopts
 it: the plain files are the base of that commit, which writes
-``data/<uuid>`` and publishes v1, and retention deletes the plain
-files once v1 is old enough, like any superseded version.
+``data/<uuid>`` and publishes v1 (an append first types the columns
+the plain table shares with the appended frame as the frame has them),
+and retention deletes the plain files once v1 is old enough, like any
+superseded version.
 
 Commits hold ``operators.upsert.table_write_lock``: single writer,
 many snapshot readers. At 100 TB you would use Delta/Iceberg outright;
@@ -151,7 +153,7 @@ class SnapshotTable:
         spark = spark or df.sparkSession
         with table_write_lock(self.root, timeout=timeout):
             if self.latest_version() == 0 and self._plain_data():
-                self._commit(self.read(spark))  # adopt the plain table as v1
+                self._commit(self._adopted_as(spark, df))  # adopt the plain table as v1
             prev: dict | None = None
             if self.latest_version() > 0:
                 prev = self.manifest()
@@ -184,6 +186,20 @@ class SnapshotTable:
                     fields = [by_name.pop(f.name, f) for f in prev_st.fields]
                     body["schema"] = StructType(fields + list(by_name.values())).json()
             return self._publish(body)
+
+    def _adopted_as(self, spark: SparkSession, df: DataFrame) -> DataFrame:
+        """The plain table, with each column it shares with ``df`` cast
+        to df's type and put in df's order. Partition inference types a
+        hive partition column from its directory names (a date, say,
+        where the appended frame has a string), and the append's schema
+        union takes the newest type, so without the cast that type
+        would be recorded over files holding the inferred one."""
+        plain = self.read(spark)
+        shared = [f for f in df.schema.fields if f.name in plain.columns]
+        return plain.select(
+            *[F.col(f.name).cast(f.dataType) for f in shared],
+            *[c for c in plain.columns if c not in df.columns],
+        )
 
     def _commit(self, df: DataFrame, partition_by: str | None = None) -> int:
         """Publish df as the next full-replacement version. Caller holds

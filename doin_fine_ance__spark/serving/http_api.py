@@ -21,13 +21,15 @@ the cached overlay (marts ⟕ overrides), the DataFrames of the marts
 and the overrides table, and the collected rows of every route that
 reads no user-written table — predicted categories
 (``analytics.fct_trxns_with_predictions``), validated categories
-(``analytics.fct_validated_trxns``), the category catalog
-(``public.categories``), connection health (``public.simplefin``),
-metrics history and training status (``analytics.model_registry``).
-Such a route runs no Spark job until one of its tables publishes a new
-version. A table not yet adopted as a manifest table (plain parquet,
-or no table at all) keys as version 0, so a plain rewrite of it is not
-seen until its first commit.
+(``analytics.fct_validated_trxns``), connection health
+(``public.simplefin``), metrics history and training status
+(``analytics.model_registry``). Such a route runs no Spark job until
+one of its tables publishes a new version. A table not yet adopted as
+a manifest table (plain parquet, or no table at all) keys as version
+0, so a plain rewrite of it is not seen until its first commit. The
+category catalog is read on every request: ``public.categories`` is
+loaded from outside the engine and never committed, so its version
+would stay 0 and a reloaded catalog would never show.
 
 Routes (mirroring the reference paths):
 
@@ -41,7 +43,7 @@ Routes (mirroring the reference paths):
   POST /api/transactions/bulk-validate        one keyed merge
   GET  /api/validated                         validated list + count
   GET  /api/validated/categories/list         distinct validated cats (memoized)
-  GET  /api/categories                        active catalog names (memoized)
+  GET  /api/categories                        active catalog names
   GET  /api/control-center/connection-health  health rollup (memoized)
   GET  /api/model-metrics/metrics/history     registry metrics view (memoized)
   GET  /api/model-metrics/training-status     latest registry row (memoized)
@@ -124,7 +126,9 @@ class ServingApp:
     read before the value is computed, so a commit landing mid-compute
     leaves the key behind the value and costs one extra recompute,
     never a stale read. A changed key recomputes the value and releases
-    the old one (a cached DataFrame is unpersisted). A commit from
+    the old one (a cached DataFrame is unpersisted). The check, the
+    compute and the store hold one lock, so concurrent requests that
+    miss the same entry compute it once. A commit from
     anywhere — this app's writes, a build, a predict, another server
     process — therefore shows on the next read: the read-your-writes
     contract the reference gets from querying Postgres views per
@@ -136,9 +140,9 @@ class ServingApp:
     ``fct_validated_trxns`` and ``user_categories``, each on its own
     version, so a request plans no file listing of a version it has
     seen; and the collected rows of the routes that read no
-    user-written table (predicted and validated categories, the
-    category catalog, connection health, metrics history, training
-    status), keyed by route name, never by request parameters.
+    user-written table (predicted and validated categories,
+    connection health, metrics history, training status), keyed by
+    route name, never by request parameters.
     Predicted categories read the mart, not the overlay: the overlay is
     a left join on a unique key, so its predicted categories are the
     mart's. Writes through this app call :meth:`invalidate` to release
@@ -163,22 +167,22 @@ class ServingApp:
         self.spark = spark
         self.wh = Warehouse(spark, warehouse_root)
         self._memo: dict[str, tuple[tuple[int, ...], object]] = {}
-        self._lock = threading.Lock()
+        # re-entrant: the overlay's compute reads memoized tables
+        self._lock = threading.RLock()
 
     # -- data access -------------------------------------------------
 
     def _memo_get(self, name: str, inputs, compute):
-        key = tuple(self.wh.latest_version(*t) for t in inputs)
-        entry = self._memo.get(name)
-        if entry is not None and entry[0] == key:
-            return entry[1]
-        value = compute()
         with self._lock:
+            key = tuple(self.wh.latest_version(*t) for t in inputs)
             old = self._memo.get(name)
+            if old is not None and old[0] == key:
+                return old[1]
+            value = compute()
             self._memo[name] = (key, value)
-        if old is not None:
-            _release(old[1])
-        return value
+            if old is not None:
+                _release(old[1])
+            return value
 
     @property
     def _overlay(self):
@@ -335,7 +339,6 @@ class ServingApp:
             distinct_validated_categories(self._read(*_VALIDATED))
         )]
 
-    @_memoized(("public", "categories"))
     def categories(self) -> list:
         from .categories import ensure_default_categories, get_active_category_names
 

@@ -23,7 +23,6 @@ from dataclasses import dataclass, field
 from decimal import Decimal
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..operators.snapshot import SnapshotTable
 from ..schemas import RAW_BALANCES, RAW_SIMPLEFIN
@@ -277,12 +276,6 @@ def append_to_landing(df: DataFrame, path: str) -> None:
     files hold a single date, and their parquet min/max statistics let
     a filter on ``import_date`` skip them. A landing root written
     before as plain parquet partitioned by ``import_date`` is adopted
-    first: its rows are committed as v1, with the date that partition
-    inference gives ``import_date`` cast back to ``RAW_SIMPLEFIN``'s
-    string, so old and new files agree on one schema.
+    by the first append, which types its columns as ``df`` has them.
     """
-    table = SnapshotTable(path)
-    if table.latest_version() == 0 and table.exists():
-        table.commit_rewrite(df.sparkSession, lambda legacy: legacy.select(
-            *[F.col(f.name).cast(f.dataType) for f in RAW_SIMPLEFIN.fields]))
-    table.commit_append(df)
+    SnapshotTable(path).commit_append(df)

@@ -303,6 +303,63 @@ def test_predicted_categories_follow_a_mart_commit(spark, built_root, tmp_path):
     assert app.route("GET", PREDICTED, {}, {}) == fresh
 
 
+def test_concurrent_cold_overlay_reads_build_once(spark, built_root, tmp_path, monkeypatch):
+    """Two requests that miss the cold overlay at once share one build:
+    the second waits for the first's entry instead of building (and
+    caching) its own and then releasing a value the first still uses."""
+    import threading
+    import time
+
+    from doin_fine_ance__spark.serving import http_api, transactions
+
+    app = _app_over_copy(spark, built_root, tmp_path)
+    builds, released = [], []
+    build_overlay = transactions.transaction_overlay
+
+    def slow_build(*args):
+        builds.append(1)
+        time.sleep(0.5)  # both requests arrive inside the build
+        return build_overlay(*args)
+
+    monkeypatch.setattr(transactions, "transaction_overlay", slow_build)
+    monkeypatch.setattr(http_api, "_release", released.append)
+    start = threading.Barrier(2)
+    got = []
+
+    def read():
+        start.wait()
+        got.append(app.overlay())
+
+    threads = [threading.Thread(target=read) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert len(builds) == 1 and released == []
+    assert got[0] is got[1]
+
+
+def test_catalog_follows_an_external_reload(spark, built_root, tmp_path):
+    """public.categories is loaded from outside the engine as plain
+    parquet, which publishes no version: the same app shows a reloaded
+    catalog on its next request."""
+    from doin_fine_ance__spark.schemas import CATEGORIES
+    from doin_fine_ance__spark.session import local_frame
+
+    app = _app_over_copy(spark, built_root, tmp_path)
+    path = app.wh.path("public", "categories")
+
+    def load(name):
+        catalog = local_frame(spark, [(name, False, True, None)], CATEGORIES)
+        catalog.write.mode("overwrite").parquet(path)
+
+    load("Pets")
+    assert "Pets" in app.route("GET", "/api/categories", {}, {})
+    load("Llamas")
+    after = app.route("GET", "/api/categories", {}, {})
+    assert "Llamas" in after and "Pets" not in after
+
+
 def test_serving_reads_survive_concurrent_writes(spark, tmp_path):
     """One thread reads lists through the route table while another
     posts override writes: every read sees one whole version of the

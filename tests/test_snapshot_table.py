@@ -269,6 +269,22 @@ def test_root_survives_vacuum_after_adoption(spark, tmp_path, clock):
     assert sorted(t.read(spark).groupBy("gen").count().collect()) == [(0, 20), (1, 10)]
 
 
+def test_append_adopts_a_hive_root_with_the_frame_types(spark, tmp_path):
+    """Partition inference types a hive root's ``d=2024-01-01`` column
+    as a date; an append whose ``d`` is a string adopts the plain rows
+    with ``d`` cast to string, so the recorded schema describes every
+    file the version lists and the table reads back whole."""
+    root = str(tmp_path / "plain")
+    spark.createDataFrame([("a", "2024-01-01")], "x string, d string") \
+        .write.partitionBy("d").parquet(root)
+    t = SnapshotTable(root)
+    assert t.read(spark).schema["d"].dataType.typeName() == "date"
+    t.commit_append(spark.createDataFrame([("b", "2024-01-02")], "x string, d string"))
+    assert t.latest_version() == 2
+    assert t.schema().simpleString() == "struct<x:string,d:string>"
+    assert sorted(t.read(spark).collect()) == [("a", "2024-01-01"), ("b", "2024-01-02")]
+
+
 @pytest.mark.parametrize("partitioned", [False, True])
 def test_plain_read_ignores_an_unpublished_adopting_commit(spark, tmp_path, partitioned):
     """Between an adopting commit's data write and its publish, the

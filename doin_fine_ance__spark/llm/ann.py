@@ -1,14 +1,31 @@
 """Approximate nearest neighbor search over embedding columns.
 
-Two tiers (SURVEY §7 phase 6 / north star):
+Brute-force cosine top-k (queries/llm_ops.py::s_cosine_topk_bruteforce,
+oracle-checked) is the correctness baseline. This module holds the
+scale paths (SURVEY §7 phase 6 / north star):
 
-- brute-force cosine top-k — the correctness baseline
-  (queries/llm_ops.py::s_cosine_topk_bruteforce, oracle-checked);
-- random-hyperplane LSH buckets — the scale path: each vector maps to
-  a small bit-signature bucket; a query probes only its bucket
-  (optionally ± multiprobe flips), turning a full-corpus scan into a
-  bucket lookup. At 100 TB the bucketed table is written
-  partitioned-by-bucket so a probe is a partition-pruned read.
+- random-hyperplane LSH (:func:`ann_topk_lsh`): each vector maps to a
+  small bit-signature bucket; a query probes its bucket plus
+  single-bit flips, and no index is trained;
+- IVF-flat (:func:`ann_topk_ivf`): vectors are assigned to their
+  nearest centroid cell (:func:`ivf_assign`, centroids from
+  :func:`kmeans_fit`); a query scores only its ``nprobe`` nearest
+  cells;
+- product quantization (:func:`pq_train`, :func:`pq_encode`,
+  :func:`pq_topk`): m small codes per vector, scored by
+  asymmetric-distance lookups, with an optional exact rerank;
+- IVF-PQ (:func:`ann_topk_ivfpq`): the two combined, one shot;
+- :class:`IvfIndex`: the persisted IVF or IVF-PQ index, written
+  ``partitionBy('list_id')`` so a probe is a partition-pruned read,
+  with incremental append against frozen centroids.
+
+Each step of these cascades has one implementation here, shared by
+the one-shot functions and :class:`IvfIndex`: the seedless sample
+(:func:`_sample`, :func:`_stride`), the probe ranking (:func:`_probe`),
+the nearest-centroid argmax (:func:`_nearest_centroid`), the PQ block
+encoder (:func:`_pq_codes`), the ADC table and rerank tail
+(:func:`_adc_table`, :func:`_adc_rerank`) and the zero-norm-guarded
+cosine top-k (:func:`_cosine_topk`).
 
 Hyperplanes are deterministic (random.Random(4242) gaussians), so
 bucket assignments are stable across runs — signatures can be
@@ -19,6 +36,7 @@ from __future__ import annotations
 
 import random
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -34,7 +52,9 @@ def _planes(dim: int, n_planes: int, seed: int = 4242) -> list[list[float]]:
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
 
 
-def _dot(a, b):
+def dot(a, b):
+    """Dot product of two array columns as a JVM ``aggregate`` over
+    ``zip_with``, each element cast to double."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         lit(0.0),
@@ -48,26 +68,74 @@ def plane_matrix(dim: int, n_planes: int, quantize: bool = False):
     likewise-quantized vectors are exact integers — sign bits then
     reproduce bit-for-bit in any engine/accumulation order (the same
     ×1000 trick the cosine oracles use)."""
-    import numpy as np
-
     P = np.array(_planes(dim, n_planes), dtype=np.float64)
     return np.round(P * 1000.0) if quantize else P
 
 
 def _bucket_of(vectors, P):
     """numpy (n, dim) × plane matrix → int bucket ids (sign bits packed)."""
-    import numpy as np
-
     signs = (vectors @ P.T) >= 0  # (n, n_planes)
     weights = (1 << np.arange(P.shape[0])).astype(np.int64)
     return (signs @ weights).astype(np.int32)
+
+
+def _sample(embeddings: DataFrame, order, n_rows: int, id_col: str, vec_col: str):
+    """The first ``n_rows`` vectors in ``order`` (a tuple of sort
+    columns), collected as float lists: the bounded, seedless sample
+    every centroid init and PQ training set is drawn from."""
+    rows = embeddings.orderBy(*order).select(id_col, vec_col).limit(n_rows).collect()
+    return [[float(x) for x in r[vec_col]] for r in rows]
+
+
+def _stride(vectors: list, n_centroids: int) -> list:
+    """Every ``len/n``-th vector, ``n`` of them: the deterministic
+    centroid init."""
+    step = max(len(vectors) // n_centroids, 1)
+    return vectors[::step][:n_centroids]
+
+
+def _probe(centroids: list, query_vec: list[float], nprobe: int) -> list[int]:
+    """Ids of the ``nprobe`` cells whose centroids are nearest the query
+    by cosine, ties to the lower id. Plain Python floats on purpose: a
+    numpy matmul may sum in another order, and near-ties on
+    unquantized vectors would then reorder the probes."""
+
+    def pysim(c: list[float]) -> float:
+        d = sum(a * b for a, b in zip(query_vec, c))
+        nq = sum(a * a for a in query_vec) ** 0.5
+        nc = sum(a * a for a in c) ** 0.5
+        return d / (nq * nc) if nq and nc else 0.0
+
+    return sorted(range(len(centroids)), key=lambda i: -pysim(centroids[i]))[:nprobe]
+
+
+def _cosine_topk(
+    candidates: DataFrame,
+    query_vec: list[float],
+    k: int,
+    id_col: str,
+    vec_col: str,
+    cell_col: str,
+) -> DataFrame:
+    """(id, cell_col, cosine) of the ``k`` candidates nearest the query,
+    ties to the lower id. Zero-norm vectors are dropped first: their
+    cosine is 0/0, which raises ``DIVIDE_BY_ZERO`` under ANSI and is a
+    NaN otherwise — and Spark sorts NaN as the largest double, so one
+    zero vector would head every descending top-k (ADVICE r7). The
+    oracles apply the same predicate."""
+    qarr = F.array(*[lit(float(v)) for v in query_vec])
+    qnorm = sum(v * v for v in query_vec) ** 0.5
+    norm = F.sqrt(dot(col(vec_col), col(vec_col)))
+    scored = candidates.filter(norm > 0).select(
+        id_col, cell_col, (dot(col(vec_col), qarr) / (norm * lit(qnorm))).alias("cosine")
+    )
+    return scored.orderBy(col("cosine").desc(), col(id_col)).limit(k)
 
 
 def hyperplane_buckets(
     embeddings: DataFrame,
     dim: int,
     n_planes: int = 12,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
     quantize_planes: bool = False,
 ) -> DataFrame:
@@ -82,8 +150,6 @@ def hyperplane_buckets(
     (:func:`ann_topk_lsh`), so corpus and query bucketing agree
     bit-for-bit.
     """
-    import numpy as np
-
     P = plane_matrix(dim, n_planes, quantize_planes)
 
     @pandas_udf(IntegerType())
@@ -92,6 +158,21 @@ def hyperplane_buckets(
         return pd.Series(_bucket_of(E, P))
 
     return embeddings.withColumn("bucket", _bucket_udf(col(vec_col)))
+
+
+def _nearest_centroid(X, centroids):
+    """numpy cosine-argmax cell ids of the (n, dim) vectors ``X``:
+    ``dot / (||x|| * ||c||)`` in the SQL oracle's operation order, ties
+    to the lowest cell id (the oracle's ``row_number`` order), and a
+    zero norm counts as 1. On quantized integer-valued vectors every
+    dot is exact, so assignments reproduce bit-for-bit in any engine."""
+    C = np.asarray(centroids, dtype=np.float64)  # (K, dim)
+    cn = np.sqrt((C * C).sum(axis=1))
+    cn[cn == 0.0] = 1.0
+    en = np.sqrt((X * X).sum(axis=1))
+    en[en == 0.0] = 1.0
+    sims = (X @ C.T) / (en[:, None] * cn[None, :])
+    return np.argmax(sims, axis=1)
 
 
 def ivf_assign(
@@ -104,33 +185,23 @@ def ivf_assign(
 
     Index-build path, map-only and Arrow-vectorized: the (K, dim)
     centroid matrix ships once in the UDF closure and each Arrow batch
-    is one (batch × K) numpy matmul + argmax. The earlier JVM
-    formulation broadcast-joined K centroid ROWS onto every vector
-    (K× row explosion) and scored each pair with interpreted
-    aggregate/zip_with folds — a constant-factor drag exactly where an
-    index build spends its time. Tie-break (equal cosine → lowest
-    list_id) matches the SQL oracle's ``row_number`` ordering, and on
-    quantized integer-valued vectors every dot is exact, so
-    assignments reproduce bit-for-bit in any engine. On a real cluster
+    is one (batch × K) numpy matmul + argmax (:func:`_nearest_centroid`,
+    which :meth:`IvfIndex.build` also calls driver-side for residuals).
+    The earlier JVM formulation broadcast-joined K centroid ROWS onto
+    every vector (K× row explosion) and scored each pair with
+    interpreted aggregate/zip_with folds — a constant-factor drag
+    exactly where an index build spends its time. On a real cluster
     the assigned table is written ``partitionBy('list_id')`` once and
     probes are partition-pruned reads.
     """
-    import numpy as np
-
-    C = np.asarray(centroids, dtype=np.float64)  # (K, dim)
-    cn = np.sqrt((C * C).sum(axis=1))
-    cn[cn == 0.0] = 1.0
+    C = np.asarray(centroids, dtype=np.float64)
 
     @pandas_udf(IntegerType())
     def _assign_udf(vecs: pd.Series) -> pd.Series:
         if len(vecs) == 0:
             return pd.Series([], dtype="int32")
         E = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
-        en = np.sqrt((E * E).sum(axis=1))
-        en[en == 0.0] = 1.0
-        # dot / (||v|| * ||c||): same operation order as the SQL oracle
-        sims = (E @ C.T) / (en[:, None] * cn[None, :])
-        return pd.Series(np.argmax(sims, axis=1).astype(np.int32))
+        return pd.Series(_nearest_centroid(E, C).astype(np.int32))
 
     return fan_out(embeddings).select(
         col(id_col), _assign_udf(col(vec_col)).alias("list_id"), col(vec_col)
@@ -146,8 +217,9 @@ def kmeans_fit(
 ) -> list[list[float]]:
     """Distributed Lloyd's k-means over an embedding column.
 
-    The real IVF index build (the deterministic-sample init in
-    :func:`ann_topk_ivf` is the cheap stand-in). Each iteration:
+    Init = every n/k-th of the first ``8k`` vectors by id (seedless,
+    engine-stable); ``iters=0`` returns that init, which is what
+    :func:`ann_topk_ivf` uses by default. Each iteration:
 
     1. assign: map-only vectorized cosine argmax (:func:`ivf_assign`);
     2. update: ``posexplode`` the vectors → partial-agg ``SUM``/count
@@ -159,17 +231,9 @@ def kmeans_fit(
     Empty cells keep their previous centroid. On quantized
     (integer-valued) vectors every partial sum is exact, so the fit is
     deterministic under any partitioning; the mean's single division
-    is the only rounding. Init = every n/k-th vector by id (seedless,
-    engine-stable).
+    is the only rounding.
     """
-    sample = (
-        embeddings.orderBy(id_col)
-        .select(id_col, vec_col)
-        .limit(max(k * 8, k))
-        .collect()
-    )
-    step = max(len(sample) // k, 1)
-    centroids = [[float(x) for x in row[vec_col]] for row in sample[::step][:k]]
+    centroids = _stride(_sample(embeddings, (id_col,), k * 8, id_col, vec_col), k)
 
     for _ in range(iters):
         assigned = ivf_assign(embeddings, centroids, id_col, vec_col)
@@ -205,56 +269,21 @@ def ann_topk_ivf(
 ) -> DataFrame:
     """IVF-flat ANN: probe the `nprobe` centroid cells nearest the query.
 
-    Default centroids are a deterministic corpus sample (every
-    ``n/K``-th vector by ``id_col``) — stable across runs, enough for
-    the recall targets the tests pin AND SQL-reproducible for the
-    oracle. Pass ``kmeans_iters > 0`` to refine them with distributed
-    Lloyd's iterations (:func:`kmeans_fit`) — the production index
-    build. Complements the hyperplane-LSH tier: IVF adapts to the data
-    distribution (cells follow density), LSH is data-independent (no
-    index build).
+    Centroids come from :func:`kmeans_fit` with ``kmeans_iters``
+    Lloyd's iterations. The default 0 keeps its deterministic init
+    (every ``n/K``-th of the first ``8K`` vectors by ``id_col``) —
+    stable across runs, enough for the recall targets the tests pin
+    AND SQL-reproducible for the oracle. Complements the
+    hyperplane-LSH tier: IVF adapts to the data distribution (cells
+    follow density), LSH is data-independent (no index build).
+    Returns (id, list_id, cosine); zero-norm vectors are not scored.
     """
-    if kmeans_iters > 0:
-        centroids = kmeans_fit(
-            embeddings, n_centroids, kmeans_iters, id_col, vec_col
-        )
-    else:
-        sample = (
-            embeddings.orderBy(id_col)
-            .select(id_col, vec_col)
-            .limit(max(n_centroids * 8, n_centroids))
-            .collect()
-        )
-        step = max(len(sample) // n_centroids, 1)
-        centroids = [
-            [float(x) for x in row[vec_col]] for row in sample[::step][:n_centroids]
-        ]
-
-    def pysim(c: list[float]) -> float:
-        d = sum(a * b for a, b in zip(query_vec, c))
-        nq = sum(a * a for a in query_vec) ** 0.5
-        nc = sum(a * a for a in c) ** 0.5
-        return d / (nq * nc) if nq and nc else 0.0
-
-    probes = sorted(range(len(centroids)), key=lambda i: -pysim(centroids[i]))[:nprobe]
-
+    centroids = kmeans_fit(embeddings, n_centroids, kmeans_iters, id_col, vec_col)
+    probes = _probe(centroids, query_vec, nprobe)
     assigned = ivf_assign(embeddings, centroids, id_col, vec_col)
-    qarr = F.array(*[lit(float(v)) for v in query_vec])
-    qnorm = sum(v * v for v in query_vec) ** 0.5
-    # zero-norm vectors score 0/0 = NaN, which Spark sorts as the
-    # largest double — one zero vector would head every descending
-    # top-k (ADVICE r7); the oracle applies the same predicate
-    scored = assigned.filter(col("list_id").isin(probes)).filter(
-        F.sqrt(_dot(col(vec_col), col(vec_col))) > 0
-    ).select(
-        id_col,
-        "list_id",
-        (
-            _dot(col(vec_col), qarr)
-            / (F.sqrt(_dot(col(vec_col), col(vec_col))) * lit(qnorm))
-        ).alias("cosine"),
+    return _cosine_topk(
+        assigned.filter(col("list_id").isin(probes)), query_vec, k, id_col, vec_col, "list_id"
     )
-    return scored.orderBy(col("cosine").desc(), col(id_col)).limit(k)
 
 
 def ann_topk_lsh(
@@ -272,29 +301,18 @@ def ann_topk_lsh(
 
     The candidate set is the union of 1 + multiprobe buckets — constant
     work per query regardless of corpus size once the bucketed table is
-    partition-pruned.
+    partition-pruned. Returns (id, bucket, cosine); zero-norm vectors
+    (all sign bits set, so bucket ``2^n_planes − 1``) are not scored.
     """
-    import numpy as np
-
     dim = len(query_vec)
     P = plane_matrix(dim, n_planes, quantize_planes)
     qbucket = int(_bucket_of(np.asarray([query_vec], dtype=np.float64), P)[0])
     probe_buckets = [qbucket] + [qbucket ^ (1 << i) for i in range(min(multiprobe, n_planes))]
 
-    bucketed = hyperplane_buckets(
-        embeddings, dim, n_planes, id_col, vec_col, quantize_planes
+    bucketed = hyperplane_buckets(embeddings, dim, n_planes, vec_col, quantize_planes)
+    return _cosine_topk(
+        bucketed.filter(col("bucket").isin(probe_buckets)), query_vec, k, id_col, vec_col, "bucket"
     )
-    qarr = F.array(*[lit(float(v)) for v in query_vec])
-    qnorm = sum(v * v for v in query_vec) ** 0.5
-    scored = bucketed.filter(col("bucket").isin(probe_buckets)).select(
-        id_col,
-        "bucket",
-        (
-            _dot(col(vec_col), qarr)
-            / (F.sqrt(_dot(col(vec_col), col(vec_col))) * lit(qnorm))
-        ).alias("cosine"),
-    )
-    return scored.orderBy(col("cosine").desc(), col(id_col)).limit(k)
 
 
 # ---------------------------------------------------------------------------
@@ -327,8 +345,6 @@ def pq_train(
     """Train m per-block codebooks of k centroids each (numpy Lloyd's,
     L2, deterministic every-nth init on an ``orderBy(id)`` sample).
     Returns an (m, k, dim/m) float64 ndarray. dim must divide by m."""
-    import numpy as np
-
     import hashlib
 
     rows = (
@@ -356,14 +372,12 @@ def pq_train(
 def _pq_fit(X, m: int, k: int, iters: int):
     """numpy Lloyd's over the m subvector blocks of a (n, dim) sample.
 
-    The training core shared by :func:`pq_train` (raw vectors) and
-    :class:`IvfIndex`'s PQ path (cell residuals). ``iters=0`` keeps the
-    init codebooks (the first k sample rows' subvectors) — on
-    integer-valued quantized vectors that degenerate-but-deterministic
-    state is exactly SQL-replayable, which the oracle-backed
-    ``s_cosine_topk_ivfpq`` query depends on."""
-    import numpy as np
-
+    The training core shared by :func:`pq_train` (raw vectors),
+    :func:`ann_topk_ivfpq` and :class:`IvfIndex`'s PQ path (cell
+    residuals). ``iters=0`` keeps the init codebooks (the first k
+    sample rows' subvectors) — on integer-valued quantized vectors
+    that degenerate-but-deterministic state is exactly SQL-replayable,
+    which the oracle-backed ``s_cosine_topk_ivfpq`` query depends on."""
     n, dim = X.shape
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
@@ -385,43 +399,83 @@ def _pq_fit(X, m: int, k: int, iters: int):
     return books
 
 
+def _pq_codes(X, books) -> pd.Series:
+    """PQ codes of the (n, dim) vectors ``X``: code b is the L2-nearest
+    centroid of codebook b to the b-th subvector block, as
+    ``argmin |c|^2 - 2 x·c`` (``|x|^2`` is constant per row), ties to
+    the lowest code. One ``list[int]`` per row."""
+    m, _, sub = books.shape
+    bnorm2 = (books**2).sum(-1)  # (m, k)
+    codes = np.empty((len(X), m), dtype=np.int32)
+    for b in range(m):
+        Xb = X[:, b * sub : (b + 1) * sub]
+        d = bnorm2[b][None, :] - 2.0 * (Xb @ books[b].T)
+        codes[:, b] = d.argmin(1)
+    return pd.Series([list(map(int, c)) for c in codes])
+
+
 def pq_encode(
     embeddings: DataFrame,
     codebooks,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Map-only PQ encoding: (id[, keep_cols...], codes array<int>) —
-    codes[b] is the L2-nearest codebook centroid of the b-th subvector
-    block. The one corpus-sized stage; Arrow-vectorized, no shuffle.
-    ``keep_cols`` pass through untouched (the IVF-PQ composite keeps
-    ``list_id`` alongside the codes)."""
-    import numpy as np
-
-    m, k, sub = codebooks.shape
-    bnorm2 = (codebooks**2).sum(-1)  # (m, k)
-    B = codebooks
+    """Map-only PQ encoding: (id, codes array<int>) — codes[b] is the
+    L2-nearest codebook centroid of the b-th subvector block
+    (:func:`_pq_codes`). The one corpus-sized stage; Arrow-vectorized,
+    no shuffle."""
 
     @pandas_udf("array<int>")
     def _enc(vecs: pd.Series) -> pd.Series:
-        X = np.array([list(map(float, v)) for v in vecs])
-        if not len(X):
+        if len(vecs) == 0:
             return pd.Series([], dtype=object)
-        n = len(X)
-        codes = np.empty((n, m), dtype=np.int32)
-        for b in range(m):
-            Xb = X[:, b * sub : (b + 1) * sub]
-            # argmin ||x-c||^2 = argmin (|c|^2 - 2 x·c); |x|^2 constant
-            d = bnorm2[b][None, :] - 2.0 * (Xb @ B[b].T)
-            codes[:, b] = d.argmin(1)
-        return pd.Series([list(map(int, c)) for c in codes])
+        return _pq_codes(np.stack([np.asarray(v, dtype=np.float64) for v in vecs]), codebooks)
 
-    return embeddings.select(
-        col(id_col),
-        *[col(c) for c in keep_cols],
-        _enc(col(vec_col)).alias("codes"),
-    )
+    return embeddings.select(col(id_col), _enc(col(vec_col)).alias("codes"))
+
+
+def _adc_table(books, query_vec: list[float]):
+    """(m, k) ADC table: entry [b][j] = q_b · codebook[b][j], the query's
+    b-th subvector against each centroid of block b."""
+    m, kk, sub = books.shape
+    q = np.asarray(query_vec, dtype=np.float64)
+    T = np.empty((m, kk))
+    for b in range(m):
+        T[b] = books[b] @ q[b * sub : (b + 1) * sub]
+    return T
+
+
+def _adc_scores(T, cs: pd.Series):
+    """ADC score per row of PQ codes: the sum of its m table lookups."""
+    codes = np.array([list(c) for c in cs], dtype=np.int64)
+    if not len(codes):
+        return np.empty(0)
+    return T[np.arange(len(T))[None, :], codes].sum(1)
+
+
+def _adc_rerank(
+    scored: DataFrame,
+    query_vec: list[float],
+    k: int,
+    id_col: str,
+    vec_col: str,
+    rerank_with: DataFrame | None,
+    rerank_factor: int,
+) -> DataFrame:
+    """The search tail over an ADC ``score`` column, ties to the lower
+    id: the top ``k`` rows of ``scored``, or — given ``rerank_with``,
+    the full vectors — its top ``k × rerank_factor`` ids re-scored by
+    the exact inner product (a broadcast semi-join touching k·factor
+    rows, never the corpus) and cut to ``k``."""
+    n_cand = k if rerank_with is None else max(k, k * rerank_factor)
+    cand = scored.orderBy(col("score").desc(), col(id_col)).limit(n_cand)
+    if rerank_with is None:
+        return cand
+    qarr = F.array(*[lit(float(v)) for v in query_vec])
+    exact = rerank_with.join(
+        F.broadcast(cand.select(id_col)), id_col, "left_semi"
+    ).select(col(id_col), dot(col(vec_col), qarr).alias("score"))
+    return exact.orderBy(col("score").desc(), col(id_col)).limit(k)
 
 
 def pq_topk(
@@ -443,40 +497,17 @@ def pq_topk(
     within a tight neighborhood PQ ranks coarsely — production systems
     therefore retrieve a ``k × rerank_factor`` candidate set by ADC
     and re-score JUST those against the full vectors. Pass the
-    original embeddings as ``rerank_with`` to get that second stage:
-    the exact pass touches k·factor rows (a broadcast semi-join
-    against the candidate ids), never the corpus.
+    original embeddings as ``rerank_with`` to get that second stage
+    (:func:`_adc_rerank`).
     """
-    import numpy as np
-
-    m, kk, sub = codebooks.shape
-    q = np.asarray(query_vec, dtype=float)
-    T = np.empty((m, kk))
-    for b in range(m):
-        T[b] = codebooks[b] @ q[b * sub : (b + 1) * sub]
+    T = _adc_table(codebooks, query_vec)
 
     @pandas_udf("double")
     def _score(cs: pd.Series) -> pd.Series:
-        C = np.array([list(c) for c in cs], dtype=np.int64)
-        if not len(C):
-            return pd.Series([], dtype=float)
-        return pd.Series(T[np.arange(m)[None, :], C].sum(1))
+        return pd.Series(_adc_scores(T, cs))
 
-    n_cand = k if rerank_with is None else max(k, k * rerank_factor)
-    cand = (
-        codes.select(col(id_col), _score(col("codes")).alias("score"))
-        .orderBy(col("score").desc(), col(id_col))
-        .limit(n_cand)
-    )
-    if rerank_with is None:
-        return cand
-    qarr = F.array(*[lit(float(v)) for v in query_vec])
-    exact = rerank_with.join(
-        F.broadcast(cand.select(id_col)), id_col, "left_semi"
-    ).select(
-        col(id_col), _dot(col(vec_col), qarr).alias("score")
-    )
-    return exact.orderBy(col("score").desc(), col(id_col)).limit(k)
+    scored = codes.select(col(id_col), _score(col("codes")).alias("score"))
+    return _adc_rerank(scored, query_vec, k, id_col, vec_col, rerank_with, rerank_factor)
 
 
 def ann_topk_ivfpq(
@@ -496,10 +527,13 @@ def ann_topk_ivfpq(
     """One-shot IVF-PQ ANN (FAISS IVFPQ shape): IVF cells prune WHICH
     vectors a query touches, PQ codes compress WHAT gets scored.
 
-    Pipeline: stride-sampled centroids (same deterministic init as
-    :func:`ann_topk_ivf`) → assign → keep only the ``nprobe`` probed
-    cells → PQ-encode JUST those (map-only) → ADC score = m table
-    lookups per candidate → top ``k × rerank_factor`` → exact
+    Pipeline: one sample of the first ``max(8 × n_centroids,
+    pq_sample)`` vectors by id → centroids stride the whole sample
+    (every ``len/n_centroids``-th row, so :func:`ann_topk_ivf`'s init
+    when ``pq_sample <= 8 × n_centroids``) and codebooks train on its
+    first ``pq_sample`` rows → assign → keep only the ``nprobe``
+    probed cells → PQ-encode JUST those (map-only) → ADC score = m
+    table lookups per candidate → top ``k × rerank_factor`` → exact
     inner-product rerank against the candidates' full vectors → top k.
     Returns (id, score) with score = exact inner product of the
     reranked survivors; feed unit-normalized (or consistently-scaled)
@@ -513,32 +547,12 @@ def ann_topk_ivfpq(
     (trained codebooks, residual encoding) live on the persisted
     :class:`IvfIndex` PQ path and in ``PQ_RECALL_r09.json``.
     """
-    import numpy as np
-
-    sample = (
-        embeddings.orderBy(id_col)
-        .select(id_col, vec_col)
-        .limit(max(n_centroids * 8, n_centroids, pq_sample))
-        .collect()
+    sample = _sample(
+        embeddings, (id_col,), max(n_centroids * 8, pq_sample), id_col, vec_col
     )
-    step = max(len(sample) // n_centroids, 1)
-    centroids = [
-        [float(x) for x in row[vec_col]] for row in sample[::step][:n_centroids]
-    ]
-    X = np.array(
-        [list(map(float, r[vec_col])) for r in sample[:pq_sample]]
-    )
-    books = _pq_fit(X, pq_m, pq_k, pq_iters)
-
-    def pysim(c: list[float]) -> float:
-        d = sum(a * b for a, b in zip(query_vec, c))
-        nq = sum(a * a for a in query_vec) ** 0.5
-        nc = sum(a * a for a in c) ** 0.5
-        return d / (nq * nc) if nq and nc else 0.0
-
-    probes = sorted(range(len(centroids)), key=lambda i: -pysim(centroids[i]))[
-        :nprobe
-    ]
+    centroids = _stride(sample, n_centroids)
+    books = _pq_fit(np.array(sample[:pq_sample]), pq_m, pq_k, pq_iters)
+    probes = _probe(centroids, query_vec, nprobe)
     assigned = ivf_assign(embeddings, centroids, id_col, vec_col)
     # Materialize the probed working set once: it feeds BOTH the
     # PQ-encode/ADC candidate branch and the exact rerank branch, and
@@ -560,114 +574,6 @@ def ann_topk_ivfpq(
     )
 
 
-def pq_recall_report(
-    embeddings: DataFrame,
-    n_queries: int = 20,
-    k: int = 10,
-    m: int = 8,
-    n_centroids: int = 16,
-    rerank_factor: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> dict:
-    """Measure recall@k of ADC and ADC+exact-rerank against the exact
-    cosine top-k (the ``s_cosine_topk_bruteforce`` ranking) on the
-    SAME corpus — the PQ evidence seam (VERDICT r4 #6 / r5 #6).
-
-    Vectors are unit-normalized first (ADC approximates the inner
-    product, so cosine ranking needs unit inputs — the documented
-    contract of :func:`pq_topk`); the first ``n_queries`` vectors by
-    id serve as queries; ground truth is the exact inner-product
-    top-k over the normalized corpus, computed with the same JVM
-    ``aggregate``/``zip_with`` dot product the brute-force query uses.
-    Returns ``{"recall_adc": ..., "recall_rerank": ..., "n_queries",
-    "k", "corpus_size"}`` with recalls averaged over queries.
-    """
-    nrm = F.sqrt(_dot(col(vec_col), col(vec_col)))
-    # Zero-norm vectors have no cosine direction: dividing by the norm
-    # would send NaN/Inf symbols through pq_train/pq_encode and silently
-    # skew the recall numbers (ADVICE r6) — exclude them up front.
-    unit = (
-        embeddings.filter(nrm > 0)
-        .select(
-            col(id_col),
-            F.transform(col(vec_col), lambda x: x / nrm).alias(vec_col),
-        )
-        .persist()
-    )
-    try:
-        corpus_size = unit.count()
-        books = pq_train(unit, m=m, k=n_centroids, id_col=id_col, vec_col=vec_col)
-        codes = pq_encode(unit, books, id_col=id_col, vec_col=vec_col).persist()
-        queries = (
-            unit.orderBy(id_col).limit(n_queries).collect()
-        )
-        hits_adc = hits_rr = 0
-        for q in queries:
-            qvec = [float(x) for x in q[vec_col]]
-            qarr = F.array(*[F.lit(v) for v in qvec])
-            truth = {
-                r[id_col]
-                for r in unit.select(
-                    col(id_col), _dot(col(vec_col), qarr).alias("score")
-                )
-                .orderBy(col("score").desc(), col(id_col))
-                .limit(k)
-                .collect()
-            }
-            adc = {
-                r[id_col]
-                for r in pq_topk(codes, books, qvec, k=k, id_col=id_col).collect()
-            }
-            rr = {
-                r[id_col]
-                for r in pq_topk(
-                    codes,
-                    books,
-                    qvec,
-                    k=k,
-                    id_col=id_col,
-                    rerank_with=unit,
-                    rerank_factor=rerank_factor,
-                    vec_col=vec_col,
-                ).collect()
-            }
-            hits_adc += len(adc & truth)
-            hits_rr += len(rr & truth)
-        denom = len(queries) * k
-        return {
-            "recall_adc": hits_adc / denom,
-            "recall_rerank": hits_rr / denom,
-            "n_queries": len(queries),
-            "k": k,
-            "m": m,
-            "n_centroids": n_centroids,
-            "rerank_factor": rerank_factor,
-            "corpus_size": corpus_size,
-        }
-    finally:
-        unit.unpersist()
-        try:
-            codes.unpersist()
-        except NameError:
-            pass
-
-
-def _nearest_centroid(X, centroids):
-    """numpy cosine-argmax cell assignment — the driver-side mirror of
-    :func:`ivf_assign`'s UDF (same formula and tie-break), used to
-    compute residuals for PQ codebook training."""
-    import numpy as np
-
-    C = np.asarray(centroids, dtype=np.float64)
-    cn = np.sqrt((C * C).sum(axis=1))
-    cn[cn == 0.0] = 1.0
-    en = np.sqrt((X * X).sum(axis=1))
-    en[en == 0.0] = 1.0
-    sims = (X @ C.T) / (en[:, None] * cn[None, :])
-    return np.argmax(sims, axis=1)
-
-
 def _ivfpq_encode(
     assigned: DataFrame,
     pq_meta: dict,
@@ -680,13 +586,9 @@ def _ivfpq_encode(
     the index was built with ``pq_residual``). The float vector is
     dropped here — the cells store m small ints per vector, which is
     the IVFPQ storage win."""
-    import numpy as np
-
     books = np.asarray(pq_meta["codebooks"], dtype=np.float64)
-    m, k, sub = books.shape
     residual = bool(pq_meta.get("residual"))
     C = np.asarray(centroids, dtype=np.float64)
-    bnorm2 = (books**2).sum(-1)  # (m, k)
 
     @pandas_udf("array<int>")
     def _enc(lists: pd.Series, vecs: pd.Series) -> pd.Series:
@@ -695,12 +597,7 @@ def _ivfpq_encode(
         X = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
         if residual:
             X = X - C[lists.to_numpy(dtype=np.int64)]
-        codes = np.empty((len(X), m), dtype=np.int32)
-        for b in range(m):
-            Xb = X[:, b * sub : (b + 1) * sub]
-            d = bnorm2[b][None, :] - 2.0 * (Xb @ books[b].T)
-            codes[:, b] = d.argmin(1)
-        return pd.Series([list(map(int, c)) for c in codes])
+        return _pq_codes(X, books)
 
     return assigned.select(
         col(id_col),
@@ -770,8 +667,7 @@ class IvfIndex:
     def _data_path(self, meta: dict) -> str:
         import os
 
-        # pre-r8 indexes recorded no data_dir and used a fixed "data"
-        return os.path.join(self.root, meta.get("data_dir", "data"))
+        return os.path.join(self.root, meta["data_dir"])
 
     # ------------------------------------------------------------ build
 
@@ -794,20 +690,22 @@ class IvfIndex:
         """Train (or deterministically sample) centroids and write the
         fully-assigned corpus partitioned by list id.
 
-        Default (``kmeans_iters=0``) centroids stride a sample ordered
-        by ``md5(id)`` — deterministic but UNBIASED: ordering by the
-        raw id would take the head of the table, and ids always
-        correlate with ingest time or content in real corpora, so the
-        frozen centroids would represent only the oldest data and
-        every later append would crowd a few cells (VERDICT r7 #2).
-        ``kmeans_iters > 0`` refines with distributed Lloyd's.
+        Default (``kmeans_iters=0``) centroids stride the first
+        ``8 × n_centroids`` rows of a sample ordered by ``md5(id)`` —
+        deterministic but UNBIASED: ordering by the raw id would take
+        the head of the table, and ids always correlate with ingest
+        time or content in real corpora, so the frozen centroids would
+        represent only the oldest data and every later append would
+        crowd a few cells (VERDICT r7 #2). ``kmeans_iters > 0`` refines
+        with distributed Lloyd's.
 
         ``pq_m`` switches the index to the IVF-PQ composite (FAISS
         IVFPQ, VERDICT r8 #1): cells store ``m`` uint8-range PQ codes
         per vector INSTEAD of the float vector — the only storage
         shape that keeps a 100 TB embedding corpus searchable in
         cluster memory. Codebooks train driver-side (numpy Lloyd's,
-        ``pq_iters``) on the same md5-ordered unbiased sample; with
+        ``pq_iters``) on the first ``pq_sample_size`` rows of the same
+        md5-ordered sample — one collect serves both; with
         ``pq_residual`` (faiss default) they train on and encode the
         residual ``x − centroid[cell]``, which centers every cell's
         codes on the same distribution and buys most of IVFPQ's recall
@@ -821,37 +719,19 @@ class IvfIndex:
 
         from ..operators.upsert import table_write_lock
 
+        n_head = n_centroids * 8 if kmeans_iters <= 0 else 0
+        n_rows = max(n_head, pq_sample_size if pq_m is not None else 0)
+        order = (F.md5(col(id_col).cast("string")), col(id_col))
+        sample = _sample(embeddings, order, n_rows, id_col, vec_col) if n_rows else []
         if kmeans_iters > 0:
             centroids = kmeans_fit(
                 embeddings, n_centroids, kmeans_iters, id_col, vec_col
             )
         else:
-            sample = (
-                embeddings.orderBy(
-                    F.md5(col(id_col).cast("string")), col(id_col)
-                )
-                .select(id_col, vec_col)
-                .limit(max(n_centroids * 8, n_centroids))
-                .collect()
-            )
-            step = max(len(sample) // n_centroids, 1)
-            centroids = [
-                [float(x) for x in row[vec_col]]
-                for row in sample[::step][:n_centroids]
-            ]
+            centroids = _stride(sample[:n_head], n_centroids)
         pq_meta = None
         if pq_m is not None:
-            import numpy as np
-
-            rows = (
-                embeddings.orderBy(
-                    F.md5(col(id_col).cast("string")), col(id_col)
-                )
-                .select(id_col, vec_col)
-                .limit(pq_sample_size)
-                .collect()
-            )
-            X = np.array([list(map(float, r[vec_col])) for r in rows])
+            X = np.array(sample[:pq_sample_size])
             if pq_residual:
                 X = X - np.asarray(centroids, dtype=np.float64)[
                     _nearest_centroid(X, centroids)
@@ -938,118 +818,54 @@ class IvfIndex:
     ) -> DataFrame:
         """Top-k over the ``nprobe`` nearest cells.
 
-        Flat index: exact cosine over the probed cells' stored vectors.
-        PQ index (built with ``pq_m``): ADC — the query builds an
-        m × k dot-product table (plus a per-cell ``q·centroid`` offset
-        when the codes are residuals) and every stored vector scores as
-        m table lookups; no float vectors are read at all. Because ADC
-        ranks coarsely within tight neighborhoods, pass the original
-        embeddings as ``rerank_with`` to re-score the top
-        ``k × rerank_factor`` ADC candidates exactly (a broadcast
-        semi-join touching k·factor rows, never the corpus) — the
-        production IVFPQ search shape. ADC scores approximate the
-        INNER PRODUCT; feed unit-normalized vectors at build and query
-        time for cosine ranking.
+        Flat index: exact cosine over the probed cells' stored vectors
+        (id, list_id, cosine), zero-norm vectors excluded as in
+        :func:`ann_topk_ivf`. PQ index (built with ``pq_m``): ADC — the
+        query builds an m × k dot-product table (plus a per-cell
+        ``q·centroid`` offset when the codes are residuals) and every
+        stored vector scores as m table lookups; no float vectors are
+        read at all. Because ADC ranks coarsely within tight
+        neighborhoods, pass the original embeddings as ``rerank_with``
+        to re-score the top ``k × rerank_factor`` ADC candidates
+        exactly (:func:`_adc_rerank`) — the production IVFPQ search
+        shape. ADC scores approximate the INNER PRODUCT; feed
+        unit-normalized vectors at build and query time for cosine
+        ranking. ADC/rerank scores are dot products (no division), so
+        the PQ path has no zero norm to guard.
 
         The ``list_id IN (probes)`` filter is a hive partition filter —
         Spark prunes every other cell's files at planning time, so the
         scan cost is O(probed cells), not O(corpus). The meta is read
         ONCE, so the centroids/codebooks probed and the data dir
         scanned are a consistent published triple even if a rebuild
-        lands mid-call. Zero-norm corpus vectors are excluded on the
-        flat path: their cosine is 0/0 = NaN, which Spark sorts as the
-        LARGEST double, so one zero vector would head every top-k
-        (ADVICE r7); ADC/rerank scores are dot products (no division),
-        so the PQ path has no NaN to guard."""
+        lands mid-call."""
         meta = self._meta()
-        centroids, vec_col, id_col = (
-            meta["centroids"], meta["vec_col"], meta["id_col"]
+        id_col, vec_col = meta["id_col"], meta["vec_col"]
+        probes = _probe(meta["centroids"], query_vec, nprobe)
+        cells = spark.read.parquet(self._data_path(meta)).filter(
+            col("list_id").isin(probes)
         )
-
-        def pysim(c: list[float]) -> float:
-            d = sum(a * b for a, b in zip(query_vec, c))
-            nq = sum(a * a for a in query_vec) ** 0.5
-            nc = sum(a * a for a in c) ** 0.5
-            return d / (nq * nc) if nq and nc else 0.0
-
-        probes = sorted(
-            range(len(centroids)), key=lambda i: -pysim(centroids[i])
-        )[:nprobe]
-        if "pq" in meta:
-            return self._topk_pq(
-                spark, meta, probes, query_vec, k, rerank_with, rerank_factor
-            )
-        qarr = F.array(*[lit(float(v)) for v in query_vec])
-        qnorm = sum(v * v for v in query_vec) ** 0.5
-        scored = (
-            spark.read.parquet(self._data_path(meta))
-            .filter(col("list_id").isin(probes))
-            .filter(F.sqrt(_dot(col(vec_col), col(vec_col))) > 0)
-            .select(
-                id_col,
-                "list_id",
-                (
-                    _dot(col(vec_col), qarr)
-                    / (F.sqrt(_dot(col(vec_col), col(vec_col))) * lit(qnorm))
-                ).alias("cosine"),
-            )
-        )
-        return scored.orderBy(col("cosine").desc(), col(id_col)).limit(k)
-
-    def _topk_pq(
-        self,
-        spark,
-        meta: dict,
-        probes: list[int],
-        query_vec: list[float],
-        k: int,
-        rerank_with: DataFrame | None,
-        rerank_factor: int,
-    ) -> DataFrame:
-        """ADC search over the probed cells' PQ codes (see topk)."""
-        import numpy as np
-
-        id_col = meta["id_col"]
+        if "pq" not in meta:
+            return _cosine_topk(cells, query_vec, k, id_col, vec_col, "list_id")
         books = np.asarray(meta["pq"]["codebooks"], dtype=np.float64)
-        m, kk, sub = books.shape
-        residual = bool(meta["pq"].get("residual"))
-        q = np.asarray(query_vec, dtype=np.float64)
-        T = np.empty((m, kk))
-        for b in range(m):
-            T[b] = books[b] @ q[b * sub : (b + 1) * sub]
+        T = _adc_table(books, query_vec)
         # residual codes store x − c(cell): q·x ≈ q·c(cell) + ADC(codes)
-        C = np.asarray(meta["centroids"], dtype=np.float64)
-        offsets = C @ q if residual else np.zeros(len(C))
+        residual = bool(meta["pq"].get("residual"))
+        offsets = np.asarray(meta["centroids"], dtype=np.float64) @ np.asarray(
+            query_vec, dtype=np.float64
+        )
 
         @pandas_udf("double")
         def _score(lists: pd.Series, cs: pd.Series) -> pd.Series:
-            codes = np.array([list(c) for c in cs], dtype=np.int64)
-            if not len(codes):
-                return pd.Series([], dtype=float)
-            s = T[np.arange(m)[None, :], codes].sum(1)
+            s = _adc_scores(T, cs)
             if residual:
                 s = s + offsets[lists.to_numpy(dtype=np.int64)]
             return pd.Series(s)
 
-        scored = (
-            spark.read.parquet(self._data_path(meta))
-            .filter(col("list_id").isin(probes))
-            .select(
-                id_col,
-                "list_id",
-                _score(col("list_id"), col("codes")).alias("score"),
-            )
+        scored = cells.select(
+            id_col, "list_id", _score(col("list_id"), col("codes")).alias("score")
         )
-        n_cand = k if rerank_with is None else max(k, k * rerank_factor)
-        cand = scored.orderBy(col("score").desc(), col(id_col)).limit(n_cand)
-        if rerank_with is None:
-            return cand
-        qarr = F.array(*[lit(float(v)) for v in query_vec])
-        vec_col = meta["vec_col"]
-        exact = rerank_with.join(
-            F.broadcast(cand.select(id_col)), id_col, "left_semi"
-        ).select(col(id_col), _dot(col(vec_col), qarr).alias("score"))
-        return exact.orderBy(col("score").desc(), col(id_col)).limit(k)
+        return _adc_rerank(scored, query_vec, k, id_col, vec_col, rerank_with, rerank_factor)
 
     # --------------------------------------------------------- maintain
 
@@ -1113,15 +929,11 @@ class IvfIndex:
         from ..operators.upsert import table_write_lock
 
         with table_write_lock(self.root, timeout=timeout):
-            live = os.path.basename(self._data_path(self._meta()))
+            live = self._meta()["data_dir"]
             removed = []
             for d in sorted(os.listdir(self.root)):
                 full = os.path.join(self.root, d)
-                if (
-                    d != live
-                    and (d == "data" or d.startswith("data_"))
-                    and os.path.isdir(full)
-                ):
+                if d != live and d.startswith("data_") and os.path.isdir(full):
                     shutil.rmtree(full)
                     removed.append(d)
             return removed

@@ -994,7 +994,7 @@ def _lsh_oracle_sql(dim: int = 64, n_planes: int = 4, multiprobe: int = 2, k: in
     Plane literals are generated from the same seeded gaussians
     (llm.ann.plane_matrix(quantize=True)); every dot is an exact
     integer, so sign bits, bucket ids, probes, and cosines reproduce
-    bit-for-bit.
+    bit-for-bit. Zero-norm vectors are not scored, as in ann_topk_lsh.
     """
     P = plane_matrix(dim, n_planes, quantize=True)
     plane_lits = [
@@ -1021,6 +1021,7 @@ def _lsh_oracle_sql(dim: int = 64, n_planes: int = 4, multiprobe: int = 2, k: in
     SELECT b.vec_id, b.bucket, {cosine} AS cosine
     FROM bucketed b, qb
     WHERE b.vec_id <> 0 AND b.bucket IN ({probes})
+      AND sqrt(list_dot_product(b.q, b.q)) > 0
     ORDER BY cosine DESC, b.vec_id ASC
     LIMIT {k}
     """

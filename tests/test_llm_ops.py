@@ -895,7 +895,7 @@ def test_pq_recall_floor_on_real_embeddings(spark):
     sustains 0.955 there and 1.0 at sf0.01. The floor asserted on
     every suite run: 8-bit codebooks + exact rerank over a 10× ADC
     candidate set must recover ≥ 0.9 of the true top-10."""
-    from doin_fine_ance__spark.llm.ann import pq_recall_report
+    from tools.pq_recall import pq_recall_report
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     rep = pq_recall_report(emb, n_queries=10, n_centroids=256, rerank_factor=10)
@@ -1179,7 +1179,7 @@ def test_pq_recall_excludes_zero_norm_vectors(spark):
 
     from pyspark.sql import functions as F
 
-    from doin_fine_ance__spark.llm.ann import pq_recall_report
+    from tools.pq_recall import pq_recall_report
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     dim = len(emb.first()["embedding"])
@@ -1266,7 +1266,7 @@ def test_ivf_index_build_probe_append_stats(spark, tmp_path):
     existing corpus is untouched; (d) stats reports the drift signal."""
     from pyspark.sql import functions as F
 
-    from doin_fine_ance__spark.llm.ann import IvfIndex, _dot
+    from doin_fine_ance__spark.llm.ann import IvfIndex, dot
 
     emb = (
         spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -1283,8 +1283,8 @@ def test_ivf_index_build_probe_append_stats(spark, tmp_path):
         r["vec_id"]
         for r in emb.select(
             "vec_id",
-            (_dot(F.col("embedding"), qarr)
-             / (F.sqrt(_dot(F.col("embedding"), F.col("embedding"))) * F.lit(qn))
+            (dot(F.col("embedding"), qarr)
+             / (F.sqrt(dot(F.col("embedding"), F.col("embedding"))) * F.lit(qn))
              ).alias("cosine"),
         )
         .orderBy(F.col("cosine").desc(), "vec_id")
@@ -1475,7 +1475,9 @@ def test_ivf_topk_excludes_zero_norm_vectors(spark, tmp_path):
     """ADVICE r7: a zero vector's cosine is 0/0 = NaN, and Spark sorts
     NaN as the LARGEST double — without the scoring guard one zero
     vector heads every descending top-k (IvfIndex.topk and the
-    one-shot ann_topk_ivf alike)."""
+    one-shot ann_topk_ivf alike). Under ANSI the division raises
+    DIVIDE_BY_ZERO instead: ann_topk_lsh did, since a zero vector's
+    sign bits are all set and bucket 3 of 2 planes is probed here."""
     import math
 
     from doin_fine_ance__spark.llm.ann import IvfIndex, ann_topk_ivf
@@ -1492,6 +1494,28 @@ def test_ivf_topk_excludes_zero_norm_vectors(spark, tmp_path):
     got2 = ann_topk_ivf(emb, [1.0, 1.0], k=40, n_centroids=2, nprobe=2).collect()
     assert got2 and 0 not in [r["vec_id"] for r in got2]
     assert all(not math.isnan(r["cosine"]) for r in got2)
+    got3 = ann_topk_lsh(emb, [1.0, 1.0], k=40, n_planes=2).collect()
+    assert got3 and 0 not in [r["vec_id"] for r in got3]
+    assert all(not math.isnan(r["cosine"]) for r in got3)
+
+
+def test_ivfpq_build_collects_its_sample_once(spark, tmp_path):
+    """IvfIndex.build(pq_m=...) draws the centroid stride and the PQ
+    training rows from one md5-ordered collect, so it runs exactly the
+    jobs of a flat build (a second collect of the PQ rows made it 4)."""
+    from doin_fine_ance__spark.llm.ann import IvfIndex
+
+    emb = _embeddings_df(spark)
+    sc = spark.sparkContext
+    jobs = {}
+    for name, kw in (("flat", {}), ("pq", {"pq_m": 8, "pq_k": 16})):
+        sc.setJobGroup(f"ivf_build_{name}", "IvfIndex.build", False)
+        try:
+            IvfIndex.build(emb, str(tmp_path / name), n_centroids=8, **kw)
+            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(f"ivf_build_{name}"))
+        finally:
+            sc.setJobGroup(None, None, False)
+    assert jobs == {"flat": 3, "pq": 3}
 
 
 @pytest.mark.slow
@@ -1590,7 +1614,7 @@ def test_ivfpq_index_build_search_rerank(spark, tmp_path):
     recovers the true neighborhood (planted twin first, ≥8/10 of the
     exact top-10) and is deterministic; (d) codebooks are published in
     the same meta as centroids + data dir (one atomic triple)."""
-    from doin_fine_ance__spark.llm.ann import IvfIndex, _dot
+    from doin_fine_ance__spark.llm.ann import IvfIndex
 
     rows, query = _clustered_unit_rows()
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")

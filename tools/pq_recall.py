@@ -3,11 +3,13 @@
 Two measurements on the driver-generated embeddings table, written to
 one JSON file the judge can diff round-over-round:
 
-- flat PQ (tables of codes, no cell pruning): recall@10 of ADC and
-  ADC+exact-rerank vs the exact cosine top-10, across codebook sizes —
-  unchanged from PQ_RECALL_r06 so the series stays comparable;
+- flat PQ (tables of codes, no cell pruning; ``pq_recall_report``):
+  recall@10 of ADC and ADC+exact-rerank vs the exact cosine top-10,
+  across codebook sizes — unchanged from PQ_RECALL_r06 so the series
+  stays comparable;
 - the persisted IVF-PQ composite (``IvfIndex.build(pq_m=...)``,
-  residual-encoded codes per cell, ADC over probed cells only), swept
+  residual-encoded codes per cell, ADC over probed cells only;
+  ``ivfpq_recall_report``), swept
   over nprobe, with the flat-IVF (same centroids, full vectors) recall
   at the same nprobe recorded as the cell-pruning ceiling — separating
   "lost to the coarse quantizer" from "lost to PQ distortion".
@@ -29,6 +31,17 @@ import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from pyspark.sql import functions as F  # noqa: E402
+from pyspark.sql.functions import col  # noqa: E402
+
+from doin_fine_ance__spark.llm.ann import (  # noqa: E402
+    IvfIndex,
+    dot,
+    pq_encode,
+    pq_topk,
+    pq_train,
+)
 
 
 def overlapping_embeddings(spark, n=200_000, dim=64, n_modes=32, mix_pct=50, seed=9):
@@ -69,6 +82,99 @@ def overlapping_embeddings(spark, n=200_000, dim=64, n_modes=32, mix_pct=50, see
     )
 
 
+def unit_vectors(embeddings, id_col: str = "vec_id", vec_col: str = "embedding"):
+    """The corpus unit-normalized and persisted (the caller unpersists).
+    ADC approximates the inner product, so cosine ranking needs unit
+    inputs. Zero-norm vectors have no cosine direction: dividing by the
+    norm would send NaN/Inf symbols through PQ training and encoding
+    and silently skew the recall numbers (ADVICE r6), so they are
+    excluded."""
+    nrm = F.sqrt(dot(col(vec_col), col(vec_col)))
+    return (
+        embeddings.filter(nrm > 0)
+        .select(col(id_col), F.transform(col(vec_col), lambda x: x / nrm).alias(vec_col))
+        .persist()
+    )
+
+
+def queries_with_truth(unit, n_queries: int, k: int, id_col: str, vec_col: str):
+    """The first ``n_queries`` vectors by id as (query, truth) pairs:
+    truth is the id set of the exact inner-product top-k over ``unit``
+    (the ``s_cosine_topk_bruteforce`` ranking on unit vectors), by the
+    same JVM ``aggregate``/``zip_with`` dot product that query uses."""
+    cases = []
+    for q in unit.orderBy(id_col).limit(n_queries).collect():
+        qvec = [float(x) for x in q[vec_col]]
+        qarr = F.array(*[F.lit(v) for v in qvec])
+        truth = {
+            r[id_col]
+            for r in unit.select(col(id_col), dot(col(vec_col), qarr).alias("score"))
+            .orderBy(col("score").desc(), col(id_col))
+            .limit(k)
+            .collect()
+        }
+        cases.append((qvec, truth))
+    return cases
+
+
+def recalls(searches: dict, cases, k: int, id_col: str) -> dict:
+    """recall@k per named search (query vector → DataFrame of ids):
+    hits against each case's truth, averaged over the cases."""
+    hits = dict.fromkeys(searches, 0)
+    for qvec, truth in cases:
+        for name, search in searches.items():
+            hits[name] += len({r[id_col] for r in search(qvec).collect()} & truth)
+    return {name: h / (len(cases) * k) for name, h in hits.items()}
+
+
+def pq_recall_report(
+    embeddings,
+    n_queries: int = 20,
+    k: int = 10,
+    m: int = 8,
+    n_centroids: int = 16,
+    rerank_factor: int = 10,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> dict:
+    """Measure recall@k of flat-PQ ADC and ADC+exact-rerank against the
+    exact cosine top-k on the SAME unit-normalized corpus — the PQ
+    evidence seam (VERDICT r4 #6 / r5 #6). Returns ``{"recall_adc",
+    "recall_rerank", "n_queries", "k", "m", "n_centroids",
+    "rerank_factor", "corpus_size"}`` with recalls averaged over
+    queries."""
+    unit = unit_vectors(embeddings, id_col, vec_col)
+    codes = None
+    try:
+        corpus_size = unit.count()
+        books = pq_train(unit, m=m, k=n_centroids, id_col=id_col, vec_col=vec_col)
+        codes = pq_encode(unit, books, id_col=id_col, vec_col=vec_col).persist()
+        cases = queries_with_truth(unit, n_queries, k, id_col, vec_col)
+        rec = recalls(
+            {
+                "recall_adc": lambda q: pq_topk(codes, books, q, k=k, id_col=id_col),
+                "recall_rerank": lambda q: pq_topk(
+                    codes, books, q, k=k, id_col=id_col, rerank_with=unit,
+                    rerank_factor=rerank_factor, vec_col=vec_col,
+                ),
+            },
+            cases, k, id_col,
+        )
+        return {
+            **rec,
+            "n_queries": len(cases),
+            "k": k,
+            "m": m,
+            "n_centroids": n_centroids,
+            "rerank_factor": rerank_factor,
+            "corpus_size": corpus_size,
+        }
+    finally:
+        unit.unpersist()
+        if codes is not None:
+            codes.unpersist()
+
+
 def ivfpq_recall_report(
     spark,
     embeddings,
@@ -83,20 +189,7 @@ def ivfpq_recall_report(
     """recall@k of the persisted IVF-PQ index (ADC and ADC+rerank) and
     of the flat IVF index with the SAME deterministic centroids (the
     cell-pruning ceiling), per nprobe, vs exact cosine top-k."""
-    from pyspark.sql import functions as F
-
-    from doin_fine_ance__spark.llm.ann import IvfIndex, _dot
-
-    col = F.col
-    nrm = F.sqrt(_dot(col("embedding"), col("embedding")))
-    unit = (
-        embeddings.filter(nrm > 0)
-        .select(
-            "vec_id",
-            F.transform(col("embedding"), lambda x: x / nrm).alias("embedding"),
-        )
-        .persist()
-    )
+    unit = unit_vectors(embeddings)
     tmp = tempfile.mkdtemp(dir="/dev/shm")
     try:
         corpus_size = unit.count()
@@ -107,53 +200,28 @@ def ivfpq_recall_report(
         flat_idx = IvfIndex.build(
             unit, os.path.join(tmp, "flat"), n_centroids=n_centroids
         )
-        queries = unit.orderBy("vec_id").limit(n_queries).collect()
-        truths = {}
-        for qr in queries:
-            qvec = [float(x) for x in qr["embedding"]]
-            qarr = F.array(*[F.lit(v) for v in qvec])
-            truths[qr["vec_id"]] = {
-                r["vec_id"]
-                for r in unit.select(
-                    "vec_id", _dot(col("embedding"), qarr).alias("s")
-                )
-                .orderBy(col("s").desc(), "vec_id")
-                .limit(k)
-                .collect()
-            }
+        cases = queries_with_truth(unit, n_queries, k, "vec_id", "embedding")
         out = []
         for nprobe in nprobes:
-            hits_adc = hits_rr = hits_flat = 0
             t0 = time.time()
-            for qr in queries:
-                qvec = [float(x) for x in qr["embedding"]]
-                truth = truths[qr["vec_id"]]
-                adc = {
-                    r["vec_id"]
-                    for r in pq_idx.topk(spark, qvec, k=k, nprobe=nprobe).collect()
-                }
-                rr = {
-                    r["vec_id"]
-                    for r in pq_idx.topk(
-                        spark, qvec, k=k, nprobe=nprobe,
+            rec = recalls(
+                {
+                    "recall_adc": lambda q: pq_idx.topk(spark, q, k=k, nprobe=nprobe),
+                    "recall_rerank": lambda q: pq_idx.topk(
+                        spark, q, k=k, nprobe=nprobe,
                         rerank_with=unit, rerank_factor=rerank_factor,
-                    ).collect()
-                }
-                flat = {
-                    r["vec_id"]
-                    for r in flat_idx.topk(spark, qvec, k=k, nprobe=nprobe).collect()
-                }
-                hits_adc += len(adc & truth)
-                hits_rr += len(rr & truth)
-                hits_flat += len(flat & truth)
-            denom = len(queries) * k
+                    ),
+                    "recall_ivf_flat_ceiling": lambda q: flat_idx.topk(
+                        spark, q, k=k, nprobe=nprobe
+                    ),
+                },
+                cases, k, "vec_id",
+            )
             out.append(
                 {
                     "nprobe": nprobe,
-                    "recall_adc": hits_adc / denom,
-                    "recall_rerank": hits_rr / denom,
-                    "recall_ivf_flat_ceiling": hits_flat / denom,
-                    "n_queries": len(queries),
+                    **rec,
+                    "n_queries": len(cases),
                     "k": k,
                     "n_centroids": n_centroids,
                     "pq_m": pq_m,
@@ -184,7 +252,6 @@ def main() -> None:
         else (2, 4, 8, 16)
     )
 
-    from doin_fine_ance__spark.llm.ann import pq_recall_report
     from doin_fine_ance__spark.session import get_spark
 
     spark = get_spark("pq-recall")
